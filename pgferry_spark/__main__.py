@@ -104,7 +104,7 @@ def cmd_migrate(args) -> int:
 
         if not shutil.which("psql"):
             raise SystemExit(
-                "postgres:// target needs either psycopg or the psql client"
+                "postgres:// target needs the psql client"
             )
         u = urlsplit(cfg.target_dsn)
         # parse the authority by hand: libpq URIs allow a percent-encoded

@@ -59,13 +59,6 @@ def stopword_hits(col: Column, lang: str = "en") -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    n = token_count(col)
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        stopword_hits(col, lang).cast("double") / n
-    )
-
-
 def lang_id(col: Column) -> Column:
     """Pick the language whose stopword list scores the most hits; ties and
     zero-hit docs fall back to 'und' (undetermined). Deterministic tie-break:

@@ -123,18 +123,6 @@ def mysql_time_to_interval_literal(col: Column) -> Column:
     return F.when(col.isNull() | (h == ""), F.lit(None).cast("string")).otherwise(lit)
 
 
-def mysql_time_to_dt_interval(col: Column) -> Column:
-    """F8 (typed variant) — MySQL TIME → DayTimeIntervalType via
-    make_dt_interval, sign applied to every component."""
-    neg = F.regexp_extract(col, _TIME_RE, 1) == "-"
-    h = F.regexp_extract(col, _TIME_RE, 2).cast("int")
-    m = F.regexp_extract(col, _TIME_RE, 3).cast("int")
-    s = F.regexp_extract(col, _TIME_RE, 4).cast("double")
-    sgn = F.when(neg, F.lit(-1)).otherwise(F.lit(1))
-    iv = F.make_dt_interval(F.lit(0), sgn * h, sgn * m, sgn.cast("double") * s)
-    return F.when(col.isNull() | (F.regexp_extract(col, _TIME_RE, 2) == ""), F.lit(None).cast("interval day to second")).otherwise(iv)
-
-
 def zero_date_to_null(col: Column, strict: bool = False) -> Column:
     """F9 — MySQL zero dates '0000-00-00[ 00:00:00]' → NULL (default) or
     error (source_mysql.go:796-814). Operates on the *string* form: the read
@@ -194,11 +182,6 @@ def mysql_spatial_to_ewkb(col: Column) -> Column:
         .when(~order.isin("00", "01"), bad.cast("binary"))
         .otherwise(F.unhex(out_hex))
     )
-
-
-def mysql_spatial_strip_srid(col: Column) -> Column:
-    """F10 (bytea mode) — keep SRID+WKB bytes as-is (identity)."""
-    return col
 
 
 def mssql_uniqueidentifier_to_uuid(col: Column) -> Column:

@@ -126,28 +126,6 @@ def keep_best(
 # -- MinHash + LSH -----------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    num_hashes: int = 12,
-    shingle: int = 3,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(id, signature array<string>) — MinHash over the document's shingle set.
-
-    ``shingle`` > 1 hashes word n-grams (order-sensitive: documents sharing
-    vocabulary but not phrasing do NOT collide — essential when the corpus
-    has a narrow vocabulary); ``shingle=1`` degrades to the unigram token
-    set (bag-of-words similarity).
-    """
-    sig = _minhash_agg(df, content_col, id_col, num_hashes, shingle, hash_fn)
-    return sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature"),
-    )
-
-
 def _minhash_agg(
     df: DataFrame,
     content_col: str,

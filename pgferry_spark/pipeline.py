@@ -7,17 +7,20 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
  2. advisory passes (unsupported types hard-gate, generated cols,
     skipped indexes, collations) → PlanReport
  3. target schema prepare + CREATE TABLE DDL (constraint-free, UNLOGGED)
- 4. movement: chunk plan → partitioned read → transform projection →
-    orphan cleanup (anti-join, FK delete/set-null rules) → write
+ 4. movement: chunk plan → one loop over batches of pending chunks, each
+    batch a partitioned read → transform projection → orphan cleanup
+    (anti-join, FK delete/set-null rules) → write → chunks recorded
  5. validation: per-table row-count comparison
  6. post-migrate constraint replay (SET LOGGED → PK → indexes → FKs →
     sequences → checks → triggers) + hooks at 4 phases
- 7. checkpoint/resume around the movement phase
+ 7. checkpoint/resume around the movement phase: a resumed table first
+    purges its pending chunks' key ranges with ONE ``delete_where``, then
+    re-moves exactly those chunks
 
 The **target backend** is pluggable: `execute(sql)` + `write(df, table)` +
-`count(table)`. Production is JDBC/COPY against PostgreSQL; tests use a
-local spool target. The reference's `workers` semaphore becomes Spark's
-task scheduler over the chunk partitions.
+`count(table)` + `delete_where(table, predicate)`. Production is JDBC/COPY
+against PostgreSQL; tests use a local spool target. The reference's
+`workers` semaphore becomes Spark's task scheduler over the chunk partitions.
 
 `single_tx` snapshot mode (reference migrate.go:149-259) is the one
 semantic it is impossible to distribute: one REPEATABLE READ transaction
@@ -53,6 +56,7 @@ class TargetBackend(Protocol):
     def execute(self, sql: str) -> None: ...
     def write(self, df: DataFrame, table: str, append: bool = False) -> int: ...
     def count(self, table: str) -> int: ...
+    def delete_where(self, table: str, predicate: str) -> None: ...
 
 
 class SourceBackend(Protocol):
@@ -114,6 +118,9 @@ class MigrationPipeline:
         # movement write, self-FK snapshot, parent anti-joins, and validation
         self._transformed_cache: dict[str, DataFrame] = {}
         self._cleaned_cache: dict[str, DataFrame] = {}
+        # tables some other table's FK references (set by run()): a fresh
+        # one-batch move keeps its read cached as the parent frame
+        self._referenced: frozenset[str] = frozenset()
         # advisor outputs: source row counts measured at plan time (reused by
         # validation), parents whose FK anti-joins should broadcast
         self._source_counts: dict[str, int] = {}
@@ -277,8 +284,18 @@ class MigrationPipeline:
         (reference post.go:475-538). When ``df`` is one chunk batch of a
         larger table the caller must pass the full-table snapshot via
         ``self_snapshot``; anti-joining a batch against itself would delete
-        valid rows whose parent lives in another batch. Row counting is one
-        before/after pair for the whole FK set, not per FK."""
+        valid rows whose parent lives in another batch. Removed rows are
+        ``df``'s rows minus the cleaned rows when a DELETE-rule FK applied,
+        else 0 (SET NULL keeps every row)."""
+        cleaned, any_delete_rule = self._apply_fk_rules(df, table, parents, self_snapshot)
+        return cleaned, (df.count() - cleaned.count()) if any_delete_rule else 0
+
+    def _apply_fk_rules(
+        self, df: DataFrame, table: Table, parents: dict[str, DataFrame],
+        self_snapshot: DataFrame | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """``df`` with every FK's anti-join applied, and whether any of them
+        was a DELETE rule (the only rule that drops rows)."""
         snapshot = self_snapshot if self_snapshot is not None else df
         any_delete_rule = False
         for fk in table.foreign_keys:
@@ -296,10 +313,7 @@ class MigrationPipeline:
             else:
                 any_delete_rule = True
                 df = clean_orphans_delete(df, parent_df, fk.columns, fk.ref_columns)
-        removed = (snapshot.count() - df.count()) if any_delete_rule and self_snapshot is None else 0
-        if any_delete_rule and self_snapshot is not None:
-            removed = -1  # caller derives the count from write-side totals
-        return df, removed
+        return df, any_delete_rule
 
     def _full_transformed(self, table: Table) -> DataFrame:
         """Full-table source read → transforms, persisted and cached so the
@@ -309,12 +323,17 @@ class MigrationPipeline:
         with self._cache_lock:
             df = self._transformed_cache.get(table.pg_name)
             if df is None:
-                df = apply_transforms(
-                    self.source.read_table(self.spark, table, None),
-                    table, self.source.kind, self.cfg.type_mapping,
-                ).persist()
+                df = self._read_transformed(table, None)
                 self._transformed_cache[table.pg_name] = df
             return df
+
+    def _read_transformed(self, table: Table, predicates: list[str] | None) -> DataFrame:
+        """Source read → transforms, persisted: counted, cleaned and written
+        from one computation."""
+        return apply_transforms(
+            self.source.read_table(self.spark, table, predicates),
+            table, self.source.kind, self.cfg.type_mapping,
+        ).persist()
 
     def cleaned_source_df(self, table: Table, parents: dict[str, DataFrame]) -> DataFrame:
         """The table exactly as the movement phase writes it: full source
@@ -324,93 +343,87 @@ class MigrationPipeline:
         cached = self._cleaned_cache.get(table.pg_name)
         if cached is not None:
             return cached
-        cleaned, _ = self.clean_orphans(self._full_transformed(table), table, parents)
+        cleaned, _ = self._apply_fk_rules(self._full_transformed(table), table, parents)
         self._cleaned_cache[table.pg_name] = cleaned
         return cleaned
 
     def move_table(self, table: Table, parents: dict[str, DataFrame]) -> TableRunResult:
-        """Move one table with **chunk-granular restartability**: chunk
-        predicates are processed in batches of ``workers×4``; each batch is
-        one distributed read→transform→write job, and every chunk in the
-        batch is marked complete only after the batch's write commits.
+        """Move one table as ONE loop over batches of its pending chunks,
+        ``workers×4`` chunks a batch; each batch is one distributed
+        read→transform→clean→write job, and every chunk in the batch is
+        marked complete only after the batch's write commits. An unchunked
+        table is one batch of one chunk, read without predicates.
+
+        A fresh table that fits in one batch is read once: that persisted
+        read is also its self-FK snapshot and, when another table's FK
+        references it, the cached parent frame. Otherwise a self-FK table
+        anti-joins each batch against a full-table snapshot, and each
+        batch's read is released after its write.
 
         Resume is **idempotent by delete-then-insert**: the production sinks
         commit per partition, so a crash mid-batch can leave some partitions
         committed with no chunk recorded. A resumed run re-plans the
-        identical chunks (guarded by the compatibility fingerprint), DELETEs
-        every not-yet-recorded chunk's key range from the target, and
-        re-writes exactly those chunks — count-exact, no duplicate rows even
-        when the crash landed between a partition commit and the checkpoint
-        flush (BASELINE.md restartability target).
+        identical chunks (guarded by the compatibility fingerprint), purges
+        the key ranges of every not-yet-recorded chunk with ONE
+        ``delete_where`` (adjacent ranges merged — after a crash the pending
+        chunks are one contiguous tail, so one range), and re-writes exactly
+        those chunks — count-exact, no duplicate rows even when the crash
+        landed between a partition commit and the checkpoint flush
+        (BASELINE.md restartability target).
         """
-        if self.checkpoint.is_table_done(table.pg_name):
-            return TableRunResult(table.pg_name, 0, 0, complete_this_run=False)
+        name = table.pg_name
+        if self.checkpoint.is_table_done(name):
+            return TableRunResult(name, 0, 0, complete_this_run=False)
         plan = self.chunk_plan_for(table)
         preds = plan.predicates()
-        has_self_fk = any(fk.ref_pg_table == table.pg_name for fk in table.foreign_keys)
-
-        def prepared(
-            predicates: list[str] | None, self_snap: DataFrame | None
-        ) -> tuple[DataFrame, DataFrame, int]:
-            base = self.source.read_table(self.spark, table, predicates)
-            base = apply_transforms(
-                base, table, self.source.kind, self.cfg.type_mapping
-            ).persist()  # counted + cleaned + written: one computation
-            cleaned, removed = self.clean_orphans(base, table, parents, self_snapshot=self_snap)
-            return base, cleaned, removed
-
-        if preds is None or len(preds) <= 1:
-            base, df, removed = prepared(preds, None)
-            rows = self.target.write(df, table.pg_name)
-            self.checkpoint.begin_table(table.pg_name, max(1, len(plan.chunks)))
-            self.checkpoint.mark_table_done(table.pg_name, rows)
-            # the written DataFrame IS the cleaned full table: cache it for
-            # parent/validation reuse instead of re-reading the source
-            self._transformed_cache.setdefault(table.pg_name, base)
-            self._cleaned_cache.setdefault(table.pg_name, df)
-            return TableRunResult(table.pg_name, rows, len(plan.chunks), removed)
-
-        done = self.checkpoint.completed_indices(table.pg_name)
-        self.checkpoint.begin_table(table.pg_name, len(preds))
-        todo = [(i, p) for i, p in enumerate(preds) if i not in done]
-        if done and todo:
+        done = self.checkpoint.completed_indices(name)
+        self.checkpoint.begin_table(name, len(plan.chunks))
+        todo = [i for i in range(len(plan.chunks)) if i not in done]
+        if done and todo and preds is not None:
             # partitions of an unrecorded chunk may have committed before the
-            # crash — purge each pending chunk's key range so re-writes land
-            # exactly once (reference records each chunk after its own COPY
-            # transaction; per-range DELETE is the idempotent equivalent)
-            pg_key = table.column(plan.chunk_key).pg_name if plan.chunk_key else None
-            for i, _ in todo:
-                chunk = plan.chunks[i]
-                if chunk.predicate(pg_key) is not None:
-                    self._delete_range(table.pg_name, chunk, pg_key)
-        # self-FK cleanup must see the whole pre-clean table, not the batch
-        self_snap = self._full_transformed(table) if has_self_fk else None
-        batch_size = max(1, self.cfg.effective_workers() * 4)
+            # crash — purge the pending key ranges so re-writes land exactly
+            # once (reference records each chunk after its own COPY
+            # transaction; the range DELETE is the idempotent equivalent)
+            pg_key = table.column(plan.chunk_key).pg_name
+            self.target.delete_where(name, plan.merged_predicate(todo, pg_key))
+        size = max(1, self.cfg.effective_workers() * 4)
+        batches = [todo[s : s + size] for s in range(0, len(todo), size)]
+        whole = not done and len(batches) == 1
+        keep = whole and name in self._referenced
+        self_snap = None
+        if not whole and any(fk.ref_pg_table == name for fk in table.foreign_keys):
+            # self-FK cleanup must see the whole pre-clean table, not the batch
+            self_snap = self._full_transformed(table)
         rows_total, removed_total = 0, 0
-        batch_rows_in = 0
-        appending = bool(done)  # resumed: prior chunks already landed
-        for start in range(0, len(todo), batch_size):
-            batch = todo[start : start + batch_size]
-            base, df, removed = prepared([p for _, p in batch], self_snap)
-            rows = self.target.write(df, table.pg_name, append=appending)
-            if removed < 0:  # self-FK path: derive removals from write totals
-                batch_rows_in += base.count()
-                removed = 0
-            base.unpersist()
-            appending = True
+        for b, batch in enumerate(batches):
+            base = self._read_transformed(
+                table, None if preds is None else [preds[i] for i in batch]
+            )
+            if keep:
+                with self._cache_lock:  # released by run() with the other caches
+                    self._transformed_cache[name] = base
+            try:
+                df, removed = self.clean_orphans(base, table, parents, self_snapshot=self_snap)
+                # append once a batch landed, this run or the crashed one
+                rows = self.target.write(df, name, append=bool(done) or b > 0)
+            finally:
+                if not keep:
+                    base.unpersist()
             rows_total += rows
             removed_total += removed
             # chunks are marked after the batch write returns; a crash inside
-            # the write is repaired by the delete-then-insert pass above on
+            # the write is repaired by the delete-then-insert purge above on
             # the next resume. Rows land on the first chunk of the batch so
             # checkpoint row totals stay exact.
-            for n, (i, _) in enumerate(batch):
-                self.checkpoint.mark_chunk_done(table.pg_name, i, rows if n == 0 else 0)
-        if has_self_fk and not done:
-            removed_total = batch_rows_in - rows_total
-        self.checkpoint.mark_table_done(table.pg_name, rows_total)
+            for n, i in enumerate(batch):
+                self.checkpoint.mark_chunk_done(name, i, rows if n == 0 else 0)
+        if keep:
+            # the written DataFrame IS the cleaned full table: the parent
+            # frame for this table's children, no second source read
+            self._cleaned_cache[name] = df
+        self.checkpoint.mark_table_done(name, rows_total)
         return TableRunResult(
-            table.pg_name, rows_total, len(preds), removed_total,
+            name, rows_total, len(plan.chunks), removed_total,
             complete_this_run=not done,
         )
 
@@ -485,25 +498,26 @@ class MigrationPipeline:
                 raise first_exc
             return results
 
-    def _delete_range(self, table: str, chunk, pg_key: str) -> None:
-        """Purge one chunk's key range from the target. ``delete_where``
-        receives the predicate over the BARE normalized column name (valid
-        in both Spark SQL and fold-to-lowercase PostgreSQL); the raw-SQL
-        fallback quotes identifiers pg-style."""
-        if hasattr(self.target, "delete_where"):
-            self.target.delete_where(table, chunk.predicate(pg_key))
-        else:
-            qualified = f"{_q(self.cfg.target_schema)}.{_q(table)}"
-            self.target.execute(
-                f"DELETE FROM {qualified} WHERE {chunk.predicate(_q(pg_key))}"
-            )
-
     # -- the full sequence ---------------------------------------------------
 
     def run(self) -> MigrationResult:
         t0 = time.monotonic()
         result = MigrationResult()
+        try:
+            self._run_steps(result)
+        finally:
+            # every exit, a failed wave included, releases the run's
+            # persisted reads and the source's connection
+            if hasattr(self.source, "close"):
+                self.source.close()  # single_tx: ends the snapshot transaction
+            for df in self._transformed_cache.values():
+                df.unpersist()
+            self._transformed_cache.clear()
+            self._cleaned_cache.clear()
+        result.elapsed_sec = time.monotonic() - t0
+        return result
 
+    def _run_steps(self, result: MigrationResult) -> None:
         schema = self.source.introspect()
         tables = self.select_tables(schema)
         objects = self.source.source_objects()
@@ -555,12 +569,12 @@ class MigrationPipeline:
             # only tables some FK actually references are retained, and the
             # retained DataFrame is the CLEANED form (what was written), so
             # grandchildren are checked against surviving parent rows only
-            referenced = {
+            self._referenced = referenced = frozenset(
                 fk.ref_pg_table
                 for t in tables
                 for fk in t.foreign_keys
                 if fk.ref_pg_table != t.pg_name
-            }
+            )
             ordered = _parents_first(tables)
             parent_dfs: dict[str, DataFrame] = {}
             for wave in _dependency_waves(ordered):
@@ -631,14 +645,6 @@ class MigrationPipeline:
         self.checkpoint.flush()
         if result.ok:
             self.checkpoint.delete()
-        if hasattr(self.source, "close"):
-            self.source.close()  # single_tx: ends the snapshot transaction
-        for df in self._transformed_cache.values():
-            df.unpersist()
-        self._transformed_cache.clear()
-        self._cleaned_cache.clear()
-        result.elapsed_sec = time.monotonic() - t0
-        return result
 
 
 def _q(name: str) -> str:

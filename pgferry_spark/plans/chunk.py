@@ -74,6 +74,19 @@ class ChunkPlan:
             return None
         return [p for p in preds if p is not None]
 
+    def merged_predicate(self, indices: list[int], key: str) -> str:
+        """One predicate over the chunks at ``indices`` (ascending), each
+        run of adjacent chunks merged into one key range."""
+        runs: list[Chunk] = []
+        for i in indices:
+            c = self.chunks[i]
+            if runs and runs[-1].hi == c.lo:
+                runs[-1] = Chunk(runs[-1].lo, c.hi, c.is_last)
+            else:
+                runs.append(c)
+        preds = [c.predicate(key) for c in runs]
+        return preds[0] if len(preds) == 1 else " OR ".join(f"({p})" for p in preds)
+
 
 def chunk_key_for_table(
     pk_columns: list[str],

@@ -107,11 +107,6 @@ def load_tables(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> dict[st
     return {t: read_parquet_memo(spark, os.path.join(sf_dir, f"{t}.parquet")) for t in tables}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None:
-    for name, df in load_tables(spark, sf_dir, tables).items():
-        df.createOrReplaceTempView(name)
-
-
 def chunked_parquet_read(
     spark: SparkSession,
     path: str,

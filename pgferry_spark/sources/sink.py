@@ -7,9 +7,8 @@ protocol from each executor via ``foreachPartition``.
 
 Each partition COPYs inside ONE transaction, so a partition (= chunk) either
 lands fully or not at all — the property the checkpoint/resume layer needs
-(SURVEY §7 hard-part 5). Three writers, same shape:
+(SURVEY §7 hard-part 5). Two writers, same shape:
 
-* ``copy_partition_writer`` — psycopg wire path (gated: not installed here);
 * ``psql_partition_writer`` / ``PsqlTarget`` — COPY FROM STDIN through the
   ``psql`` client subprocess: a REAL PostgreSQL COPY execution (one psql
   invocation = one transaction per partition), used by the integration
@@ -20,21 +19,12 @@ lands fully or not at all — the property the checkpoint/resume layer needs
 from __future__ import annotations
 
 import csv
-import io
 import os
 import subprocess
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-
-try:  # pragma: no cover - psycopg not installed in the test container
-    import psycopg  # type: ignore
-
-    HAVE_PSYCOPG = True
-except Exception:  # pragma: no cover
-    psycopg = None
-    HAVE_PSYCOPG = False
 
 
 def pg_cell_text(v) -> str | None:
@@ -65,40 +55,6 @@ def _copy_escape(s: str) -> str:
     )
 
 
-def _rows_to_copy_text(rows: Iterator, ncols: int) -> io.StringIO:
-    """Serialize rows to COPY TEXT format (tab-separated, \\N for NULL)."""
-    buf = io.StringIO()
-    for row in rows:
-        out = []
-        for v in row:
-            cell = pg_cell_text(v)
-            out.append("\\N" if cell is None else _copy_escape(cell))
-        buf.write("\t".join(out) + "\n")
-    buf.seek(0)
-    return buf
-
-
-def copy_partition_writer(dsn: str, table: str, columns: list[str]):
-    """Return a ``foreachPartition`` function that COPYs the partition into
-    PostgreSQL inside one transaction."""
-
-    def write(rows: Iterator) -> None:
-        if not HAVE_PSYCOPG:
-            raise RuntimeError(
-                "psycopg not available — use the JDBC writer (sources.jdbc.write_table) "
-                "or the spool sink (spool_partition_writer) in this environment"
-            )
-        with psycopg.connect(dsn) as conn:  # pragma: no cover
-            with conn.cursor() as cur:
-                cols = ", ".join(f'"{c}"' for c in columns)
-                with cur.copy(f'COPY {table} ({cols}) FROM STDIN') as cp:
-                    for row in rows:
-                        cp.write_row(row)
-            conn.commit()
-
-    return write
-
-
 def spool_partition_writer(spool_dir: str):
     """Test-environment stand-in: write each partition to one CSV spool file
     (same per-partition transactional shape, observable on local disk)."""
@@ -115,12 +71,6 @@ def spool_partition_writer(spool_dir: str):
         return iter([])
 
     return write_partition_index
-
-
-def copy_to_postgres(df: DataFrame, dsn: str, table: str) -> None:
-    """Distributed COPY: one transaction per partition."""
-    columns = df.columns
-    df.foreachPartition(copy_partition_writer(dsn, table, columns))
 
 
 def spool_to_dir(df: DataFrame, spool_dir: str) -> int:

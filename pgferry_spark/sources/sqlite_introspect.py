@@ -163,20 +163,5 @@ def introspect_source_objects(path: str) -> SourceObjects:
         con.close()
 
 
-def read_table_rows(path: str, table: Table, chunk_predicate: str | None = None):
-    """Driver-side row fetch for the single-connection SQLite path (the
-    reference caps SQLite at 1 worker; at Spark scale a JDBC sqlite driver
-    replaces this). Yields tuples in catalog column order."""
-    con = open_readonly(path)
-    try:
-        cols = ", ".join(_q(c.source_name) for c in table.columns)
-        sql = f"SELECT {cols} FROM {_q(table.source_name)}"
-        if chunk_predicate:
-            sql += f" WHERE {chunk_predicate}"
-        yield from con.execute(sql)
-    finally:
-        con.close()
-
-
 def _q(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'

@@ -65,6 +65,14 @@ def test_predicates():
     ]
 
 
+def test_merged_predicate_joins_adjacent_chunks():
+    plan = plan_table_chunks("t", "id", 1, 500, 100)  # 5 chunks
+    assert plan.merged_predicate([2, 3, 4], "id") == "id >= 201 AND id <= 500"
+    assert plan.merged_predicate([0, 1, 3], "id") == (
+        "(id >= 1 AND id < 201) OR (id >= 301 AND id < 401)"
+    )
+
+
 def test_chunk_key_eligibility():
     types = {
         "id": "bigint",

@@ -493,11 +493,146 @@ def test_resume_after_partition_commit_without_chunk_record(spark, tmp_path):
     # the torn batch's rows are on disk but not in the checkpoint
     assert spark.read.parquet(os.path.join(out, "big")).count() == 400
 
-    result = build(SpoolTarget(spark, out)).run()
+    resumed = SpoolTarget(spark, out)
+    result = build(resumed).run()
     assert result.ok
     final = spark.read.parquet(os.path.join(out, "big"))
     assert final.count() == 500
     assert final.select("id").distinct().count() == 500  # no duplicates
+    # the six pending chunks are adjacent: one purge covers them all
+    assert [s for s in resumed.ddl if s.startswith("DELETE FROM big")] == [
+        "DELETE FROM big WHERE id >= 201 AND id <= 500"
+    ]
+
+
+def _fk_db(path, script, rows):
+    """SQLite file from a DDL script and ``{table: [row tuples]}``."""
+    con = sqlite3.connect(path)
+    con.executescript(script)
+    for table, values in rows.items():
+        marks = ",".join("?" * len(values[0]))
+        con.executemany(f"INSERT INTO {table} VALUES ({marks})", values)
+    con.commit()
+    con.close()
+    return path
+
+
+def _chunked_pipeline(spark, db, target, ckpt=None, source=None):
+    """chunk_size=10 and one SQLite worker: batches of 4 chunks (40 ids)."""
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=db, target_dsn="spool://x",
+        target_schema="app", chunk_size=10, workers=1, resume=ckpt is not None,
+    )
+    pipe = MigrationPipeline(
+        spark, cfg, source or SqliteSource(db), target,
+        map_sqlite_type, map_sqlite_default,
+    )
+    if ckpt is not None:
+        pipe.checkpoint = CheckpointManager(ckpt, flush_items=1)
+    return pipe
+
+
+class _CrashingTarget(SpoolTarget):
+    """Raises instead of the ``crash_on``-th write of ``table``."""
+
+    def __init__(self, *a, table: str, crash_on: int, **kw):
+        super().__init__(*a, **kw)
+        self.table, self.crash_on, self.writes = table, crash_on, 0
+
+    def write(self, df, table, append=False):
+        if table == self.table:
+            self.writes += 1
+            if self.writes == self.crash_on:
+                raise RuntimeError("simulated crash")
+        return super().write(df, table, append=append)
+
+
+_NODE = "CREATE TABLE node (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES node(id));"
+
+
+def test_resumed_self_fk_table_reports_removed_orphans(spark, tmp_path):
+    """A resumed chunked self-FK table counts the orphans its re-moved
+    batches dropped: ids 70 and 95 (chunks 6 and 9) point nowhere; id 30
+    is an orphan of the batch the crashed run already landed."""
+    dangling = {30: 999, 70: 888, 95: 777}
+    db = _fk_db(str(tmp_path / "node.db"), _NODE, {
+        "node": [(i, dangling.get(i, i - 1 or None)) for i in range(1, 101)],
+    })
+    ckpt, out = str(tmp_path / "ckpt.json"), str(tmp_path / "out")
+    crashing = _CrashingTarget(spark, out, table="node", crash_on=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _chunked_pipeline(spark, db, crashing, ckpt).run()
+
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, out), ckpt).run()
+    assert result.ok
+    res = result.tables[0]
+    assert (res.rows_written, res.orphans_removed) == (58, 2)
+    assert spark.read.parquet(str(tmp_path / "out" / "node")).count() == 97
+
+
+_FAMILY = """
+CREATE TABLE parent (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES parent(id));
+CREATE TABLE child (id INTEGER PRIMARY KEY, parent_id INTEGER NOT NULL REFERENCES parent(id));
+CREATE TABLE grandchild (id INTEGER PRIMARY KEY, child_id INTEGER NOT NULL REFERENCES child(id));
+"""
+
+
+def test_fresh_run_reads_each_table_once(spark, tmp_path):
+    """A fresh table that fits in one batch is read once: that read is its
+    self-FK snapshot and the parent frame its children clean against."""
+    db = _fk_db(str(tmp_path / "family.db"), _FAMILY, {
+        "parent": [(i, i - 1 or None) for i in range(1, 31)],  # 3 chunks
+        "child": [(i, 999 if i == 7 else i % 30 + 1) for i in range(1, 41)],  # 4 chunks
+        "grandchild": [(i, i) for i in range(1, 21)],  # 2 chunks
+    })
+
+    class CountingSource(SqliteSource):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            self.reads = {}
+
+        def read_table(self, spark, table, predicates):
+            self.reads[table.pg_name] = self.reads.get(table.pg_name, 0) + 1
+            return super().read_table(spark, table, predicates)
+
+    src = CountingSource(db)
+    target = SpoolTarget(spark, str(tmp_path / "out"))
+    result = _chunked_pipeline(spark, db, target, source=src).run()
+    assert result.ok
+    assert src.reads == {"parent": 1, "child": 1, "grandchild": 1}
+    rows = {r.table: (r.rows_written, r.orphans_removed) for r in result.tables}
+    # child 7 is an orphan, and so is grandchild 7 that references it
+    assert rows == {"parent": (30, 0), "child": (39, 1), "grandchild": (19, 1)}
+
+
+def test_chunked_child_sums_orphans_across_batches(spark, tmp_path):
+    """A DELETE-rule child moved in 3 batches reports every batch's orphans."""
+    db = _fk_db(str(tmp_path / "orph.db"), _FAMILY, {
+        "parent": [(i, None) for i in range(1, 11)],
+        "child": [(i, 999 if i in (5, 55, 95) else i % 10 + 1) for i in range(1, 101)],
+        "grandchild": [(1, 1)],
+    })
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "out"))).run()
+    assert result.ok
+    child = next(r for r in result.tables if r.table == "child")
+    assert (child.chunks, child.rows_written, child.orphans_removed) == (10, 97, 3)
+
+
+def test_failed_run_releases_persisted_frames(spark, tmp_path):
+    """A target that raises mid-table leaves no persisted frame behind: the
+    parent's self-FK snapshot, the child's cached read and the failing
+    grandchild batch's read are all released."""
+    db = _fk_db(str(tmp_path / "leak.db"), _FAMILY, {
+        "parent": [(i, i - 1 or None) for i in range(1, 101)],  # 3 batches
+        "child": [(i, i) for i in range(1, 41)],  # 1 batch, cached
+        "grandchild": [(i, i % 40 + 1) for i in range(1, 101)],
+    })
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    crashing = _CrashingTarget(spark, str(tmp_path / "out"), table="grandchild", crash_on=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _chunked_pipeline(spark, db, crashing).run()
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 class TestContentDiff:

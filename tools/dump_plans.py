@@ -9,10 +9,12 @@ the doc shows what actually ran, not the static guess.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 from pgferry_spark.session import get_spark
@@ -543,7 +545,7 @@ def main() -> int:
             "```",
             "",
         ]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(ANNOTATED)} plans)")
     return 0

@@ -20,7 +20,7 @@ synthesis, split assignment) is replica-invariant. nation/region stay
 fixed (TPC-H scales neither).
 
 Usage: python tools/make_sf_scale.py [out_dir] [replicas]
-Defaults: /root/repo/.data/sf1, 10.
+Defaults: .data/sf1 in the checkout, 10.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ import sys
 
 import duckdb
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
 
 # key-domain shift per replica (power of 10 > max key; all divisible by 8)
@@ -112,7 +113,7 @@ def table_sql(name: str) -> str:
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.data/sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, ".data", "sf1")
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out, exist_ok=True)
     for name in ("region", "nation", "customer", "supplier", "part",

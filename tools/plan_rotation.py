@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
@@ -38,7 +40,7 @@ def last_green_round() -> dict[str, int]:
     no_oracle row can never go green, and the md5/exact twins carry the
     hash signal."""
     green: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)", path)
         rnd = int(m.group(1)) if m else 0
         data = json.load(open(path))

@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench
 import __spark_entry__ as entry
@@ -27,7 +28,7 @@ from pgferry_spark.session import get_spark
 
 
 def main() -> int:
-    sf1_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.data/sf1"
+    sf1_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, ".data", "sf1")
     sf01_dir = "/root/testdata/sf0.1"
     spark = get_spark("scale_slope")
     spark.sparkContext.setLogLevel("ERROR")

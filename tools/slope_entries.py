@@ -12,7 +12,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 from pgferry_spark.session import get_spark
@@ -20,7 +21,7 @@ from pgferry_spark.session import get_spark
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf1_dir = "/root/repo/.data/sf1"
+    sf1_dir = os.path.join(ROOT, ".data", "sf1")
     if "--sf1" in sys.argv:
         sf1_dir = sys.argv[sys.argv.index("--sf1") + 1]
     sf01_dir = "/root/testdata/sf0.1"

@@ -18,7 +18,7 @@ Reports, per SF:
     per-task memory envelope.
 
 Usage:  python tools/zipnum_slope.py [sf_dir ...]
-        (default: /root/testdata/sf0.1 /root/repo/.data/sf1)
+        (default: the sf0.1 fixtures, then .data/sf1 in the checkout)
 """
 
 from __future__ import annotations
@@ -29,7 +29,8 @@ import sys
 import time
 import tracemalloc
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -125,7 +126,7 @@ def main() -> int:
     )
 
     sf_dirs = sys.argv[1:] or [
-        "/root/testdata/sf0.1", "/root/repo/.data/sf1",
+        "/root/testdata/sf0.1", os.path.join(ROOT, ".data", "sf1"),
     ]
     spark = get_spark("zipnum-slope")
     results = []
