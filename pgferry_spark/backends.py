@@ -63,9 +63,13 @@ def _arrow_type(spark_type):
     return t
 
 
-def spool_batches(spark: SparkSession, schema: StructType, batches) -> DataFrame:
+def spool_batches(
+    spark: SparkSession, schema: StructType, batches, spools: list[str] | None = None,
+) -> DataFrame:
     """Stream driver-fetched row batches into a local parquet spool and
-    return a distributed scan of it.
+    return a distributed scan of it. The spool directory is appended to
+    ``spools``; the caller removes it once the scan is no longer needed
+    (``remove_spools``).
 
     This is the bounded-memory shape for driver-side sources (SQLite,
     single_tx): only ONE batch of rows is ever held in driver memory — each
@@ -80,6 +84,8 @@ def spool_batches(spark: SparkSession, schema: StructType, batches) -> DataFrame
     import pyarrow.parquet as pq
 
     spool = tempfile.mkdtemp(prefix="pgferry_spool_")
+    if spools is not None:
+        spools.append(spool)
     arrow_fields = [
         pa.field(f.name, _arrow_type(f.dataType), nullable=True)
         for f in schema.fields
@@ -104,12 +110,25 @@ def spool_batches(spark: SparkSession, schema: StructType, batches) -> DataFrame
     return spark.read.schema(schema).parquet(spool)
 
 
+def remove_spools(spools: list[str]) -> None:
+    """Delete the spool directories ``spool_batches`` recorded."""
+    import shutil
+
+    while spools:
+        shutil.rmtree(spools.pop(), ignore_errors=True)
+
+
 @dataclass
 class SqliteSource:
     path: str
     snake_case: bool = True
     kind: str = "sqlite"
     fetch_batch: int = 10_000  # rows held in driver memory at a time
+    _spools: list = field(default_factory=list, init=False, repr=False)
+
+    def close(self) -> None:
+        """Remove the parquet spools this source's reads created."""
+        remove_spools(self._spools)
 
     def introspect(self) -> Schema:
         return sq.introspect_schema(self.path, self.snake_case)
@@ -156,7 +175,7 @@ class SqliteSource:
             finally:
                 con.close()
 
-        return spool_batches(spark, schema, batches())
+        return spool_batches(spark, schema, batches(), self._spools)
 
     def count(self, table: Table) -> int:
         con = sq.open_readonly(self.path)
@@ -438,6 +457,7 @@ class SingleTxSource:
     kind: str = "mysql"
     fetch_batch: int = 10_000
     _con: object = field(default=None, repr=False)
+    _spools: list = field(default_factory=list, init=False, repr=False)
 
     def _connection(self):
         if self._con is None:
@@ -448,6 +468,8 @@ class SingleTxSource:
         return self._con
 
     def close(self) -> None:
+        """End the snapshot transaction and remove the reads' spools."""
+        remove_spools(self._spools)
         if self._con is not None:
             try:
                 self._con.rollback()  # read-only tx: end the snapshot
@@ -482,7 +504,7 @@ class SingleTxSource:
                         break
                     yield [tuple(r) for r in rows]
 
-        return spool_batches(spark, schema, batches())
+        return spool_batches(spark, schema, batches(), self._spools)
 
     def count(self, table: Table) -> int:
         cur = self._connection().cursor()

@@ -50,7 +50,12 @@ def train_quality_classifier(
     """Fit the hashed-BoW logistic classifier; returns the fitted
     LogisticRegressionModel (coefficients = n_features floats, broadcast-
     sized by construction).  At 100 TB the labeled frame is a sample —
-    training cost is sample-bound, never corpus-bound."""
+    training cost is sample-bound, never corpus-bound.
+
+    The model comes without its training summary: ``transform``'s UDF
+    closure captures the model, and the summary holds the SparkSession,
+    which Spark 4.1 cannot serialize once an ``Observation`` has run in
+    that session (a migration run observes its row counts)."""
     from pyspark.ml.classification import LogisticRegression
 
     feat = _featurize(labeled, text_col, n_features)
@@ -61,7 +66,9 @@ def train_quality_classifier(
         regParam=float(reg_param),
         standardization=False,
     )
-    return lr.fit(feat)
+    model = lr.fit(feat)
+    model._java_obj.setSummary(labeled.sparkSession._jvm.scala.Option.empty())
+    return model
 
 
 def score_quality(

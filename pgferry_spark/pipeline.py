@@ -9,7 +9,11 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
  3. target schema prepare + CREATE TABLE DDL (constraint-free, UNLOGGED)
  4. movement: chunk plan → one loop over batches of pending chunks, each
     batch a partitioned read → transform projection → orphan cleanup
-    (anti-join, FK delete/set-null rules) → write → chunks recorded
+    (anti-join, FK delete/set-null rules) → write → chunks recorded. The
+    removed-orphan count is observed inside the write job (rows into the
+    batch's persisted read, rows out of the written frame), so counting
+    costs no Spark job; each referenced parent's cleaned frame is built
+    and persisted once per run
  5. validation: per-table row-count comparison
  6. post-migrate constraint replay (SET LOGGED → PK → indexes → FKs →
     sequences → checks → triggers) + hooks at 4 phases
@@ -36,7 +40,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog.model import Schema, SourceObjects, Table
@@ -53,6 +57,14 @@ from .plans.validation import ValidationResult, validate_row_counts
 
 
 class TargetBackend(Protocol):
+    """Where the migration lands. ``write`` must execute ``df`` through a
+    DataFrame write or action (``df.write...save()``, ``.parquet()``,
+    ``.collect()``), never through its RDD (``foreachPartition``,
+    ``df.rdd``): the pipeline reads the batch's row counts from
+    ``Observation``s on ``df`` that only a DataFrame execution fulfils,
+    and waits for them after ``write`` returns. It returns the rows that
+    landed."""
+
     def execute(self, sql: str) -> None: ...
     def write(self, df: DataFrame, table: str, append: bool = False) -> int: ...
     def count(self, table: str) -> int: ...
@@ -114,12 +126,14 @@ class MigrationPipeline:
         self.type_mapper = type_mapper
         self.default_mapper = default_mapper
         self.checkpoint = checkpoint or CheckpointManager("", noop=True)
-        # per-run caches: one persisted source read per table, shared by the
-        # movement write, self-FK snapshot, parent anti-joins, and validation
+        # per-run caches, both persisted and released by run(): one source
+        # read per table, shared by the movement write, self-FK snapshot,
+        # parent anti-joins, and validation; and one cleaned frame per
+        # referenced parent, computed once for all of its children
         self._transformed_cache: dict[str, DataFrame] = {}
         self._cleaned_cache: dict[str, DataFrame] = {}
         # tables some other table's FK references (set by run()): a fresh
-        # one-batch move keeps its read cached as the parent frame
+        # one-batch move keeps its read cached for the parent frame
         self._referenced: frozenset[str] = frozenset()
         # advisor outputs: source row counts measured at plan time (reused by
         # validation), parents whose FK anti-joins should broadcast
@@ -274,9 +288,14 @@ class MigrationPipeline:
         table: Table,
         parents: dict[str, DataFrame],
         self_snapshot: DataFrame | None = None,
-    ) -> tuple[DataFrame, int]:
-        """J1 applied in-flight: anti-join each FK against its parent before
-        the write (same final state as the reference's post-load DELETE).
+        *,
+        append: bool = False,
+        rows_in: Observation | None = None,
+    ) -> tuple[DataFrame, int, int]:
+        """J1 applied in-flight: anti-join each FK against its parent, then
+        land the batch with ``target.write`` (same final state as the
+        reference's post-load DELETE). Returns the cleaned frame, the
+        orphan rows removed, and the rows written.
 
         Self-referential FKs anti-join against the table's own pre-clean
         snapshot — matching SQL DELETE semantics, where the NOT EXISTS
@@ -284,11 +303,23 @@ class MigrationPipeline:
         (reference post.go:475-538). When ``df`` is one chunk batch of a
         larger table the caller must pass the full-table snapshot via
         ``self_snapshot``; anti-joining a batch against itself would delete
-        valid rows whose parent lives in another batch. Removed rows are
-        ``df``'s rows minus the cleaned rows when a DELETE-rule FK applied,
-        else 0 (SET NULL keeps every row)."""
+        valid rows whose parent lives in another batch.
+
+        Removed rows are rows in minus rows out when a DELETE-rule FK
+        applied, else 0 (SET NULL keeps every row). Both counts come from
+        the write job itself: rows out from an ``Observation`` on the
+        written frame, rows in from ``rows_in``, an ``Observation`` the
+        caller placed under ``df``'s persist (``_read_transformed``) — the
+        DELETE rule scans ``df`` twice, and only the cache fill counts it
+        once. Without ``rows_in`` rows in are counted with one more job
+        after the write."""
         cleaned, any_delete_rule = self._apply_fk_rules(df, table, parents, self_snapshot)
-        return cleaned, (df.count() - cleaned.count()) if any_delete_rule else 0
+        if not any_delete_rule:
+            return cleaned, 0, self.target.write(cleaned, table.pg_name, append=append)
+        rows_out = Observation()
+        rows = self.target.write(_count_rows(cleaned, rows_out), table.pg_name, append=append)
+        n_in = df.count() if rows_in is None else rows_in.get["rows"]
+        return cleaned, n_in - rows_out.get["rows"], rows
 
     def _apply_fk_rules(
         self, df: DataFrame, table: Table, parents: dict[str, DataFrame],
@@ -327,38 +358,47 @@ class MigrationPipeline:
                 self._transformed_cache[table.pg_name] = df
             return df
 
-    def _read_transformed(self, table: Table, predicates: list[str] | None) -> DataFrame:
-        """Source read → transforms, persisted: counted, cleaned and written
-        from one computation."""
-        return apply_transforms(
+    def _read_transformed(
+        self, table: Table, predicates: list[str] | None,
+        rows_in: Observation | None = None,
+    ) -> DataFrame:
+        """Source read → transforms, persisted: cleaned and written from one
+        computation. ``rows_in`` counts the rows under the persist, so the
+        first job that fills the cache fulfils it."""
+        df = apply_transforms(
             self.source.read_table(self.spark, table, predicates),
             table, self.source.kind, self.cfg.type_mapping,
-        ).persist()
+        )
+        return (df if rows_in is None else _count_rows(df, rows_in)).persist()
 
     def cleaned_source_df(self, table: Table, parents: dict[str, DataFrame]) -> DataFrame:
         """The table exactly as the movement phase writes it: full source
         read → transforms → orphan cleanup against the (cleaned) parents.
-        Cached per table — consumers (parent cache, validation) share the
-        same lineage over the one persisted transformed read."""
+        The one place parent frames come from: persisted and cached per
+        table, so every child write and validation count reuses one
+        computation over the one persisted transformed read."""
         cached = self._cleaned_cache.get(table.pg_name)
-        if cached is not None:
-            return cached
-        cleaned, _ = self._apply_fk_rules(self._full_transformed(table), table, parents)
-        self._cleaned_cache[table.pg_name] = cleaned
-        return cleaned
+        if cached is None:
+            cached, _ = self._apply_fk_rules(self._full_transformed(table), table, parents)
+            self._cleaned_cache[table.pg_name] = cached = cached.persist()
+        return cached
 
     def move_table(self, table: Table, parents: dict[str, DataFrame]) -> TableRunResult:
         """Move one table as ONE loop over batches of its pending chunks,
         ``workers×4`` chunks a batch; each batch is one distributed
-        read→transform→clean→write job, and every chunk in the batch is
-        marked complete only after the batch's write commits. An unchunked
-        table is one batch of one chunk, read without predicates.
+        read→transform→clean→write job (``clean_orphans`` lands it), and
+        every chunk in the batch is marked complete only after the batch's
+        write commits. An unchunked table is one batch of one chunk, read
+        without predicates. Nothing runs on a batch read before its write:
+        the write's own job fills the read's cache and fulfils the
+        ``rows_in`` observation counted under it.
 
         A fresh table that fits in one batch is read once: that persisted
         read is also its self-FK snapshot and, when another table's FK
-        references it, the cached parent frame. Otherwise a self-FK table
-        anti-joins each batch against a full-table snapshot, and each
-        batch's read is released after its write.
+        references it, the read ``cleaned_source_df`` builds the parent
+        frame from. Otherwise a self-FK table anti-joins each batch against
+        a full-table snapshot, and each batch's read is released after its
+        write.
 
         Resume is **idempotent by delete-then-insert**: the production sinks
         commit per partition, so a crash mid-batch can leave some partitions
@@ -396,16 +436,19 @@ class MigrationPipeline:
             self_snap = self._full_transformed(table)
         rows_total, removed_total = 0, 0
         for b, batch in enumerate(batches):
+            rows_in = Observation()
             base = self._read_transformed(
-                table, None if preds is None else [preds[i] for i in batch]
+                table, None if preds is None else [preds[i] for i in batch], rows_in,
             )
             if keep:
                 with self._cache_lock:  # released by run() with the other caches
                     self._transformed_cache[name] = base
             try:
-                df, removed = self.clean_orphans(base, table, parents, self_snapshot=self_snap)
                 # append once a batch landed, this run or the crashed one
-                rows = self.target.write(df, name, append=bool(done) or b > 0)
+                _, removed, rows = self.clean_orphans(
+                    base, table, parents, self_snapshot=self_snap,
+                    append=bool(done) or b > 0, rows_in=rows_in,
+                )
             finally:
                 if not keep:
                     base.unpersist()
@@ -417,10 +460,6 @@ class MigrationPipeline:
             # checkpoint row totals stay exact.
             for n, i in enumerate(batch):
                 self.checkpoint.mark_chunk_done(name, i, rows if n == 0 else 0)
-        if keep:
-            # the written DataFrame IS the cleaned full table: the parent
-            # frame for this table's children, no second source read
-            self._cleaned_cache[name] = df
         self.checkpoint.mark_table_done(name, rows_total)
         return TableRunResult(
             name, rows_total, len(plan.chunks), removed_total,
@@ -510,10 +549,10 @@ class MigrationPipeline:
             # persisted reads and the source's connection
             if hasattr(self.source, "close"):
                 self.source.close()  # single_tx: ends the snapshot transaction
-            for df in self._transformed_cache.values():
-                df.unpersist()
-            self._transformed_cache.clear()
-            self._cleaned_cache.clear()
+            for cache in (self._cleaned_cache, self._transformed_cache):
+                for df in cache.values():
+                    df.unpersist()
+                cache.clear()
         result.elapsed_sec = time.monotonic() - t0
         return result
 
@@ -645,6 +684,11 @@ class MigrationPipeline:
         self.checkpoint.flush()
         if result.ok:
             self.checkpoint.delete()
+
+
+def _count_rows(df: DataFrame, observation: Observation) -> DataFrame:
+    """``df`` with ``observation`` counting its rows as ``rows``."""
+    return df.observe(observation, F.count(F.lit(1)).alias("rows"))
 
 
 def _q(name: str) -> str:

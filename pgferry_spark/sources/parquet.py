@@ -84,19 +84,21 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
 
 
 def invalidate_parquet_memo(path_prefix: str | None = None) -> int:
-    """Drop memoized plan handles whose path starts with ``path_prefix``
-    (all of them when None). The explicit escape hatch for the one case
-    the read-only contract does not cover (ADVICE r14): a source
-    directory whose FILES changed in-process (e.g. refreshed between two
-    migrations in one long-lived session) — the memoized plan pins the
-    file listing taken at first read, so without invalidation a re-read
-    would return the old files. Returns the number of entries dropped."""
+    """Drop memoized plan handles for ``path_prefix`` and every path under
+    it (all of them when None): ``/data/sf1`` does not drop ``/data/sf10``.
+    The explicit escape hatch for the one case the read-only contract
+    does not cover (ADVICE r14): a source directory whose FILES changed
+    in-process (e.g. refreshed between two migrations in one long-lived
+    session) — the memoized plan pins the file listing taken at first
+    read, so without invalidation a re-read would return the old files.
+    Returns the number of entries dropped."""
     if path_prefix is None:
         n = len(_READONLY_MEMO)
         _READONLY_MEMO.clear()
         return n
     prefix = os.path.abspath(path_prefix)
-    doomed = [k for k in _READONLY_MEMO if k[1].startswith(prefix)]
+    under = os.path.join(prefix, "")
+    doomed = [k for k in _READONLY_MEMO if k[1] == prefix or k[1].startswith(under)]
     for k in doomed:
         del _READONLY_MEMO[k]
     return len(doomed)

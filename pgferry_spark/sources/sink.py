@@ -3,13 +3,16 @@
 The reference streams rows through pgx ``CopyFrom`` (reference
 migrate.go:319-349) — PostgreSQL's fastest ingest path. Spark's JDBC writer
 uses batched INSERTs; for write parity/perf this sink drives the COPY
-protocol from each executor via ``foreachPartition``.
+protocol from each executor through a Python data source writer
+(``df.write.format(...).save()``), a DataFrame write that fulfils the
+pipeline's row-count observations — an RDD action such as
+``foreachPartition`` never does.
 
 Each partition COPYs inside ONE transaction, so a partition (= chunk) either
 lands fully or not at all — the property the checkpoint/resume layer needs
 (SURVEY §7 hard-part 5). Two writers, same shape:
 
-* ``psql_partition_writer`` / ``PsqlTarget`` — COPY FROM STDIN through the
+* ``PsqlCopyDataSource`` / ``PsqlTarget`` — COPY FROM STDIN through the
   ``psql`` client subprocess: a REAL PostgreSQL COPY execution (one psql
   invocation = one transaction per partition), used by the integration
   tests against a throwaway local server;
@@ -19,12 +22,15 @@ lands fully or not at all — the property the checkpoint/resume layer needs
 from __future__ import annotations
 
 import csv
+import itertools
+import json
 import os
 import subprocess
 from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
 
 def pg_cell_text(v) -> str | None:
@@ -80,21 +86,22 @@ def spool_to_dir(df: DataFrame, spool_dir: str) -> int:
     return df.rdd.getNumPartitions()
 
 
-def psql_partition_writer(psql_args: list[str], copy_sql: str):
-    """``foreachPartition`` function COPYing the partition through the psql
-    client: one subprocess = one transaction per partition — the same
-    commit granularity as the psycopg wire path."""
+class _PsqlCopyWriter(DataSourceWriter):
+    """COPYs each partition through the psql client: one subprocess = one
+    transaction per partition — the same commit granularity as the
+    psycopg wire path."""
 
-    def write(rows: Iterator) -> None:
-        rows = iter(rows)
+    def __init__(self, psql_args: list[str], copy_sql: str):
+        self.psql_args, self.copy_sql = psql_args, copy_sql
+
+    def write(self, iterator: Iterator) -> WriterCommitMessage:
+        rows = iter(iterator)
         try:
             first = next(rows)
         except StopIteration:
-            return  # empty partition: no transaction at all
-        import itertools
-
+            return WriterCommitMessage()  # empty partition: no transaction at all
         proc = subprocess.Popen(
-            psql_args + ["-c", copy_sql],
+            self.psql_args + ["-c", self.copy_sql],
             stdin=subprocess.PIPE,
             stdout=subprocess.DEVNULL,
             stderr=subprocess.PIPE,
@@ -113,15 +120,27 @@ def psql_partition_writer(psql_args: list[str], copy_sql: str):
         finally:
             if proc.poll() is None:
                 proc.kill()
+        return WriterCommitMessage()
 
-    return write
+
+class PsqlCopyDataSource(DataSource):
+    """Write-only Python data source: each task COPYs its partition with
+    the options ``psql_args`` (a JSON list) and ``copy_sql``."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "pgferry_psql_copy"
+
+    def writer(self, schema, overwrite: bool) -> DataSourceWriter:
+        return _PsqlCopyWriter(json.loads(self.options["psql_args"]), self.options["copy_sql"])
 
 
 @dataclass
 class PsqlTarget:
     """Target backend executing against a REAL PostgreSQL server through the
     psql client (no Python driver needed): DDL via ``psql -c``, data via
-    per-partition ``COPY FROM STDIN`` subprocesses. Commit granularity and
+    per-partition ``COPY FROM STDIN`` subprocesses run by
+    ``PsqlCopyDataSource``'s writer tasks. Commit granularity and
     DDL transcript order are identical to the psycopg/pgx production path —
     this is the backend the integration tests run end to end."""
 
@@ -174,8 +193,11 @@ class PsqlTarget:
             self.execute(f"TRUNCATE {qualified}")
         before = self.count(table)
         cols = ", ".join(f'"{c}"' for c in df.columns)
-        copy_sql = f"COPY {qualified} ({cols}) FROM STDIN"
-        df.foreachPartition(psql_partition_writer(self._psql(), copy_sql))
+        df.sparkSession.dataSource.register(PsqlCopyDataSource)
+        df.write.format(PsqlCopyDataSource.name()).mode("append").options(
+            psql_args=json.dumps(self._psql()),
+            copy_sql=f"COPY {qualified} ({cols}) FROM STDIN",
+        ).save()
         return self.count(table) - before
 
     def count(self, table: str) -> int:

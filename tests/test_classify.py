@@ -31,6 +31,18 @@ def labeled(spark):
     )
 
 
+def test_scores_in_a_session_that_ran_an_observation(spark, labeled):
+    # an Observation makes the SparkSession unserializable; scoring must
+    # not ship it to the tasks
+    from pyspark.sql import Observation
+
+    seen = Observation()
+    spark.range(3).observe(seen, F.count(F.lit(1)).alias("n")).collect()
+    assert seen.get == {"n": 3}
+    model = train_quality_classifier(labeled, "text", "label")
+    assert len(score_quality(model, labeled, "text", "doc_id").collect()) == 60
+
+
 def test_learns_separable_corpus(spark, labeled):
     model = train_quality_classifier(labeled, "text", "label")
     scored = {r.doc_id: r for r in score_quality(model, labeled, "text", "doc_id").collect()}

@@ -635,6 +635,129 @@ def test_failed_run_releases_persisted_frames(spark, tmp_path):
     assert set(jsc.getPersistentRDDs().keys()) == before
 
 
+_GRANDCHILD_SET_NULL = _FAMILY.replace(
+    "child_id INTEGER NOT NULL REFERENCES child(id));",
+    "child_id INTEGER NOT NULL REFERENCES child(id),"
+    " parent_id INTEGER REFERENCES parent(id) ON DELETE SET NULL);",
+)
+
+
+def _orphan_family(path):
+    """Chunked family, 3 batches per table: a self-FK parent chain with one
+    dangling row (60), a child with 3 dangling rows, and a grandchild whose
+    DELETE-rule FK to the child and SET NULL FK to the parent both dangle
+    in several batches."""
+    return _fk_db(path, _GRANDCHILD_SET_NULL, {
+        "parent": [(i, 999 if i == 60 else i - 1 or None) for i in range(1, 101)],
+        "child": [(i, 888 if i in (9, 49, 89) else i) for i in range(1, 101)],
+        "grandchild": [
+            (i, 777 if i in (5, 45, 85) else i, 555 if i in (7, 47) else i)
+            for i in range(1, 101)
+        ],
+    })
+
+
+def _jobs_in_group(spark, group):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_orphan_counting_runs_no_job_outside_the_write(spark, tmp_path, monkeypatch):
+    """Counting removed orphans costs no Spark job: inside
+    ``clean_orphans`` every job belongs to the target's write."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"clean-orphans-{uuid.uuid4().hex}"
+    clean = MigrationPipeline.clean_orphans
+
+    def spied(self, *a, **kw):
+        sc.setJobGroup(group, "clean_orphans")
+        try:
+            return clean(self, *a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    class GroupedWrites(SpoolTarget):
+        def write(self, df, table, append=False):
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group + "-write", "write")
+            try:
+                return super().write(df, table, append=append)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", outer)
+
+    monkeypatch.setattr(MigrationPipeline, "clean_orphans", spied)
+    db = _orphan_family(str(tmp_path / "spy.db"))
+    result = _chunked_pipeline(spark, db, GroupedWrites(spark, str(tmp_path / "out"))).run()
+    assert result.ok
+    removed = {r.table: r.orphans_removed for r in result.tables}
+    assert removed == {"parent": 1, "child": 4, "grandchild": 7}
+    assert _jobs_in_group(spark, group + "-write") > 0
+    assert _jobs_in_group(spark, group) == 0
+
+
+def test_chunked_family_job_budget(spark, tmp_path):
+    """A whole fresh run of the chunked family (9 batches) stays within a
+    job budget: orphan counts are
+    observed in the write jobs and each parent's cleaned frame is computed
+    once (64 jobs). Counting with two ``count()`` jobs per DELETE batch,
+    each recomputing the unpersisted parent frames, took 153."""
+    db = _orphan_family(str(tmp_path / "budget.db"))
+    j0 = _jobs_in_group(spark, None)
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "out"))).run()
+    assert result.ok
+    assert _jobs_in_group(spark, None) - j0 <= 80
+
+
+def test_grandchild_orphans_exact_with_delete_and_set_null_fks(spark, tmp_path):
+    """Only the DELETE-rule FK removes rows, in all 3 batches: 3 dangling
+    child ids and 4 references to removed child rows (child 60 lost its
+    parent). The 2 dangling parent ids are nulled."""
+    db = _orphan_family(str(tmp_path / "gc.db"))
+    out = str(tmp_path / "out")
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, out)).run()
+    assert result.ok
+    gc = next(r for r in result.tables if r.table == "grandchild")
+    dropped = {5, 45, 85, 9, 49, 89, 60}
+    assert (gc.chunks, gc.orphans_removed, gc.rows_written) == (10, 7, 93)
+    rows = spark.read.parquet(str(tmp_path / "out" / "grandchild")).collect()
+    assert sorted(r["id"] for r in rows) == [i for i in range(1, 101) if i not in dropped]
+    assert sorted(r["id"] for r in rows if r["parent_id"] is None) == [7, 47]
+
+
+def test_empty_table_with_delete_rule_fk_reports_zero(spark, tmp_path):
+    """A zero-row child still resolves its row-count observations."""
+    db = _fk_db(str(tmp_path / "empty.db"), _FAMILY, {
+        "parent": [(i, None) for i in range(1, 11)],
+        "child": [(1, 1)],
+    })
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "out"))).run()
+    assert result.ok
+    assert {r.table: (r.rows_written, r.orphans_removed) for r in result.tables} == {
+        "parent": (10, 0), "child": (1, 0), "grandchild": (0, 0),
+    }
+
+
+def test_spool_directories_removed_after_run(spark, tmp_path, monkeypatch):
+    """SQLite reads spool through temp dirs; a finished run, successful or
+    failed, leaves none behind."""
+    import tempfile
+
+    spool_root = tmp_path / "tmp"
+    spool_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(spool_root))
+    db = _orphan_family(str(tmp_path / "spool.db"))
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "ok"))).run()
+    assert result.ok
+    assert not list(spool_root.glob("pgferry_spool_*"))
+    crashing = _CrashingTarget(spark, str(tmp_path / "bad"), table="grandchild", crash_on=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _chunked_pipeline(spark, db, crashing).run()
+    assert not list(spool_root.glob("pgferry_spool_*"))
+
+
 class TestContentDiff:
     def test_all_four_statuses(self, spark):
         from pgferry_spark.plans.validation import content_diff

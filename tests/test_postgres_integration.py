@@ -9,6 +9,7 @@ insert-after-migrate."""
 
 import os
 import shutil
+import signal
 import sqlite3
 import subprocess
 import uuid
@@ -85,8 +86,14 @@ def _su(cmd: str) -> subprocess.CompletedProcess:
     )
 
 
+# seconds one test may hold the server: a write that never fulfils the
+# pipeline's row-count observations would otherwise block until the
+# whole suite's time limit
+DEADLINE_S = 120
+
+
 @pytest.fixture(scope="module")
-def pgserver():
+def _pg_instance():
     base = f"/tmp/pgferry_itest_{uuid.uuid4().hex[:8]}"
     os.makedirs(base, mode=0o755, exist_ok=True)
     if os.geteuid() == 0:
@@ -106,8 +113,31 @@ def pgserver():
         check=True, capture_output=True,
     )
     yield {"host": base, "port": PG_PORT, "db": "ferry", "user": "postgres"}
-    _su(f"pg_ctl -D {base}/data -m immediate stop")
+    _stop(base)
     shutil.rmtree(base, ignore_errors=True)
+
+
+def _stop(base: str) -> None:
+    _su(f"pg_ctl -D {base}/data -m immediate stop")
+
+
+@pytest.fixture()
+def pgserver(_pg_instance):
+    """The module's server, under a SIGALRM deadline of ``DEADLINE_S``
+    per test: when it expires the server is stopped (ending any COPY
+    still running) and the test fails with ``TimeoutError``."""
+
+    def expire(signum, frame):
+        _stop(_pg_instance["host"])
+        raise TimeoutError(f"postgres integration test exceeded {DEADLINE_S} s")
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.alarm(DEADLINE_S)
+    try:
+        yield _pg_instance
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
 
 
 def _psql_scalar(pg, sql: str) -> str:
@@ -134,6 +164,9 @@ def test_full_migration_into_real_postgres(spark, blog_db, pgserver):
         map_sqlite_type, map_sqlite_default,
     ).run()
     assert result.ok
+    assert {r.table: r.orphans_removed for r in result.tables} == {
+        "users": 0, "posts": 0, "comments": 2,
+    }
 
     # reference expectations: 5/5/10 after the 2 seeded orphans are removed
     assert _psql_scalar(pg, 'SELECT COUNT(*) FROM blog.users') == "5"

@@ -107,6 +107,21 @@ class TestReadOnlyParquetMemo:
         assert df.storageLevel.useMemory is False
         assert df.storageLevel.useDisk is False
 
+    def test_invalidate_matches_whole_path_components(self, spark, tmp_path):
+        # invalidating sf1 drops the tables under sf1, not those of sf10
+        from pgferry_spark.sources.parquet import invalidate_parquet_memo, read_parquet_memo
+
+        paths = {}
+        for sf in ("sf1", "sf10"):
+            paths[sf] = str(tmp_path / sf / "t.parquet")
+            spark.range(3).write.parquet(paths[sf])
+        sf1 = read_parquet_memo(spark, paths["sf1"])
+        sf10 = read_parquet_memo(spark, paths["sf10"])
+        assert invalidate_parquet_memo(str(tmp_path / "sf1")) == 1
+        assert read_parquet_memo(spark, paths["sf10"]) is sf10
+        assert read_parquet_memo(spark, paths["sf1"]) is not sf1
+        assert invalidate_parquet_memo(paths["sf10"]) == 1
+
 
 class TestVerifyStepPersist:
     def test_jaccard_pairs_results_unchanged_by_persist(self, spark):
