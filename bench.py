@@ -381,6 +381,24 @@ INLINE_PRIORITY = [
 LINE_BYTE_BUDGET = 1900
 
 
+def _inline_queries(base: dict, timings: dict, order: list,
+                    budget: int = LINE_BYTE_BUDGET) -> dict:
+    """Medians to inline in ``base``'s line, filled greedily in ``order``.
+
+    An entry whose median would push the compact line past ``budget``
+    bytes is skipped, not a stop: later entries with shorter names may
+    still fit."""
+    queries: dict = {}
+    for name in order:
+        if name not in timings:
+            continue
+        candidate = {**queries, name: timings[name]}
+        line = json.dumps({**base, "queries": candidate}, separators=(",", ":"))
+        if len(line) <= budget:
+            queries = candidate
+    return queries
+
+
 MIGRATION_PKS = {
     "region": "r_regionkey", "nation": "n_nationkey", "customer": "c_custkey",
     "supplier": "s_suppkey", "part": "p_partkey", "orders": "o_orderkey",
@@ -685,16 +703,7 @@ def main() -> int:
     fill_order = list(INLINE_PRIORITY) + [
         n for n in timings if n not in INLINE_PRIORITY
     ]
-    for name in fill_order:
-        if name not in timings:
-            continue
-        candidate = dict(base["queries"])
-        candidate[name] = timings[name]
-        trial = dict(base)
-        trial["queries"] = candidate
-        if len(json.dumps(trial, separators=(",", ":"))) > LINE_BYTE_BUDGET:
-            break
-        base["queries"] = candidate
+    base["queries"] = _inline_queries(base, timings, fill_order)
     print(json.dumps(base, separators=(",", ":")))
     return 0
 

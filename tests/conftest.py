@@ -3,6 +3,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from pgferry_spark.session import CODEGEN_CACHE_ENTRIES
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -13,6 +15,7 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     yield s

@@ -3,7 +3,13 @@
 For each named entry: wall-time split between DataFrame construction
 (driver-side plan building + any eager probes/training the entry runs)
 and the forced action, Spark job/stage counts via the status tracker,
+the number of classes Spark's code generator compiled (``compiles``),
 and 3 bench-protocol repeats (clearCache between; repeat 1 cold).
+
+``compiles`` is the ``CodegenMetrics`` compile-count delta around build
+plus action. Repeat 1 shows the entry's cold compiles; a later repeat
+that still compiles means the entry's generated code changes from call to
+call, so the compiled-class cache cannot serve it.
 
 Optionally dumps `.explain("formatted")` to plans/<tag>/<name>_<suffix>.txt
 so plan claims in OPTIMIZATION_*.md are checkable.
@@ -69,6 +75,8 @@ def main() -> int:
         sc.defaultParallelism
     ).mapInPandas(lambda it: it, "id long").count()
 
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
     probe0 = _cpu_probe_ms()
     for name in args:
         fn = qs[name]
@@ -79,11 +87,13 @@ def main() -> int:
             spark.catalog.clearCache()
             group = f"prof:{name}:{rep}"
             sc.setJobGroup(group, name)
+            c0 = compiled.getCount()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
             n = df.count()
             t2 = time.perf_counter()
+            compiles = compiled.getCount() - c0
             jobs = tracker.getJobIdsForGroup(group)
             n_stages = 0
             for j in jobs:
@@ -97,6 +107,7 @@ def main() -> int:
                     "total_s": round(t2 - t0, 3),
                     "jobs": len(jobs),
                     "stages": n_stages,
+                    "compiles": compiles,
                 }
             )
             if rep == 0:
