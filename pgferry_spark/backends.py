@@ -157,11 +157,12 @@ class SqliteSource:
 
         def batches():
             con = sq.open_readonly(self.path)
+            # plain tuples: the spool reads rows positionally, so building a
+            # sqlite3.Row per row (introspection's factory) is wasted work
+            con.row_factory = None
             try:
-                cols = ", ".join(
-                    '"' + c.source_name.replace('"', '""') + '"' for c in table.columns
-                )
-                src = '"' + table.source_name.replace('"', '""') + '"'
+                cols = ", ".join(sq.quote_ident(c.source_name) for c in table.columns)
+                src = sq.quote_ident(table.source_name)
                 for p in preds:  # sequential over chunks: 1 connection total
                     sql = f"SELECT {cols} FROM {src}"
                     if p:
@@ -171,7 +172,7 @@ class SqliteSource:
                         rows = cur.fetchmany(self.fetch_batch)
                         if not rows:
                             break
-                        yield [tuple(r) for r in rows]
+                        yield rows
             finally:
                 con.close()
 
@@ -180,16 +181,16 @@ class SqliteSource:
     def count(self, table: Table) -> int:
         con = sq.open_readonly(self.path)
         try:
-            return con.execute(f'SELECT COUNT(*) FROM "{table.source_name}"').fetchone()[0]
+            return con.execute(f"SELECT COUNT(*) FROM {sq.quote_ident(table.source_name)}").fetchone()[0]
         finally:
             con.close()
 
     def min_max(self, table: Table, key_source_name: str):
         con = sq.open_readonly(self.path)
         try:
+            key = sq.quote_ident(key_source_name)
             row = con.execute(
-                f'SELECT MIN("{key_source_name}"), MAX("{key_source_name}") '
-                f'FROM "{table.source_name}"'
+                f"SELECT MIN({key}), MAX({key}) FROM {sq.quote_ident(table.source_name)}"
             ).fetchone()
             return row[0], row[1]
         finally:

@@ -2,21 +2,26 @@
 
 The reference emits ``DELETE ... WHERE (fk cols NOT NULL) AND NOT EXISTS
 (parent)`` / ``UPDATE ... SET fk = NULL`` to PostgreSQL (reference
-post.go:475-538). Spark-first, this is a **null-aware left anti join**
-restricted to rows where all FK columns are non-null (MATCH SIMPLE: a row
-with ANY NULL fk component is never an orphan).
+post.go:475-538): one probe of the parent's key column per FK. Spark-first,
+both cleanup rules are ONE left join of the child against the parent's
+distinct key set, so the child is scanned once: the DELETE rule keeps rows
+that have a NULL FK component (MATCH SIMPLE: never an orphan) or matched a
+key, and the SET NULL rule nulls the FK columns of the rest.
+``find_orphans`` is the null-aware left anti join behind the audit.
 
-Scale notes: the parent side is projected to just the referenced key columns
-and distinct-ed before the join, so for a typical dimension parent Spark's
-AQE will broadcast it — no shuffle of the (huge) child. For same-magnitude
-parents this degrades gracefully to a shuffled anti join on the key.
+Scale notes: the key set is the parent projected to just the referenced
+columns and distinct-ed, so for a typical dimension parent Spark's AQE
+broadcasts it — no shuffle of the (huge) child. For same-magnitude
+parents this degrades gracefully to a shuffled join on the key. A caller
+that cleans many child batches against one parent builds the key set once
+(:func:`parent_keys`, persisted) and passes it as ``keys``.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -24,10 +29,11 @@ def _non_null_cond(df: DataFrame, cols: list[str]):
     return reduce(lambda a, b: a & b, (F.col(c).isNotNull() for c in cols))
 
 
-def _parent_keys(parent: DataFrame, ref_cols: list[str]) -> DataFrame:
-    """Distinct parent key tuples, projected through fresh aliases — the
-    rename produces new attribute ids so a SELF-referential cleanup (child
-    is parent) doesn't trip Spark's ambiguous-self-join analysis."""
+def parent_keys(parent: DataFrame, ref_cols: list[str]) -> DataFrame:
+    """Distinct parent key tuples as ``__ref_0 .. __ref_{n-1}``, the shape
+    the cleanup rules' ``keys`` argument takes. The rename produces new
+    attribute ids so a SELF-referential cleanup (child is parent) doesn't
+    trip Spark's ambiguous-self-join analysis."""
     return parent.select(
         *[F.col(r).alias(f"__ref_{i}") for i, r in enumerate(ref_cols)]
     ).dropDuplicates()
@@ -40,38 +46,53 @@ def _keys_cond(child: DataFrame, parent_keys: DataFrame, fk_cols: list[str]):
     )
 
 
+def _join_keys(
+    child: DataFrame, parent: DataFrame | None, fk_cols: list[str],
+    ref_cols: list[str], keys: DataFrame | None,
+) -> tuple[DataFrame, Column]:
+    """``child`` left-joined to the parent's key set (``keys``, or built
+    from ``parent``), and the condition that a row matched a key. Keys are
+    distinct, so the join keeps every child row exactly once; a row with a
+    NULL FK component matches nothing."""
+    if keys is None:
+        keys = parent_keys(parent, ref_cols)
+    joined = child.join(keys, on=_keys_cond(child, keys, fk_cols), how="left")
+    return joined, keys["__ref_0"].isNotNull()
+
+
 def find_orphans(
     child: DataFrame, parent: DataFrame, fk_cols: list[str], ref_cols: list[str]
 ) -> DataFrame:
     """Rows of ``child`` whose fully-non-null FK tuple has no match in
     ``parent`` (MATCH SIMPLE semantics)."""
-    parent_keys = _parent_keys(parent, ref_cols)
+    keys = parent_keys(parent, ref_cols)
     candidates = child.filter(_non_null_cond(child, fk_cols))
     return candidates.join(
-        parent_keys, on=_keys_cond(candidates, parent_keys, fk_cols), how="left_anti"
+        keys, on=_keys_cond(candidates, keys, fk_cols), how="left_anti"
     )
 
 
 def clean_orphans_delete(
-    child: DataFrame, parent: DataFrame, fk_cols: list[str], ref_cols: list[str]
+    child: DataFrame, parent: DataFrame | None, fk_cols: list[str],
+    ref_cols: list[str], *, keys: DataFrame | None = None,
 ) -> DataFrame:
     """DELETE-rule cleanup: drop orphan rows, keep rows with any NULL FK
-    component and all matched rows."""
-    parent_keys = _parent_keys(parent, ref_cols)
-    has_nulls = child.filter(~_non_null_cond(child, fk_cols))
-    matched = child.filter(_non_null_cond(child, fk_cols)).join(
-        parent_keys,
-        on=_keys_cond(child, parent_keys, fk_cols),
-        how="left_semi",
+    component and all matched rows. One left join against the parent's
+    key set, so the child is scanned once. ``keys`` is a pre-built
+    :func:`parent_keys` set (``parent`` is then not read)."""
+    joined, matched = _join_keys(child, parent, fk_cols, ref_cols, keys)
+    return joined.filter(matched | ~_non_null_cond(child, fk_cols)).select(
+        *[child[c] for c in child.columns]
     )
-    return matched.unionByName(has_nulls)
 
 
 def clean_orphans_set_null(
-    child: DataFrame, parent: DataFrame, fk_cols: list[str], ref_cols: list[str]
+    child: DataFrame, parent: DataFrame | None, fk_cols: list[str],
+    ref_cols: list[str], *, keys: DataFrame | None = None,
 ) -> DataFrame:
     """SET NULL-rule cleanup (FKs declared ON DELETE SET NULL): orphan rows
-    keep their non-FK columns but the FK columns become NULL.
+    keep their non-FK columns but the FK columns become NULL. One left
+    join, like :func:`clean_orphans_delete`, and ``keys`` likewise.
 
     Join strategy is deliberately NOT hinted: for a dimension-sized parent
     AQE broadcasts the distinct key set on its own; for a same-magnitude
@@ -79,10 +100,8 @@ def clean_orphans_set_null(
     distinct keys would OOM the driver/executors, so the strategy is left
     to AQE exactly as in :func:`clean_orphans_delete` (VERDICT r6 finding
     #2; reference post.go:475-538 runs server-side and has no analogue)."""
-    parent_keys = _parent_keys(parent, ref_cols)
-    cond = _keys_cond(child, parent_keys, fk_cols)
-    joined = child.join(parent_keys, on=cond, how="left")
-    is_orphan = _non_null_cond(child, fk_cols) & parent_keys[f"__ref_{0}"].isNull()
+    joined, matched = _join_keys(child, parent, fk_cols, ref_cols, keys)
+    is_orphan = _non_null_cond(child, fk_cols) & ~matched
     out_cols = []
     for c in child.columns:
         if c in fk_cols:

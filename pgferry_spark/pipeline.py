@@ -8,12 +8,14 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
     skipped indexes, collations) → PlanReport
  3. target schema prepare + CREATE TABLE DDL (constraint-free, UNLOGGED)
  4. movement: chunk plan → one loop over batches of pending chunks, each
-    batch a partitioned read → transform projection → orphan cleanup
-    (anti-join, FK delete/set-null rules) → write → chunks recorded. The
-    removed-orphan count is observed inside the write job (rows into the
-    batch's persisted read, rows out of the written frame), so counting
-    costs no Spark job; each referenced parent's cleaned frame is built
-    and persisted once per run
+    batch a partitioned read → transform projection → orphan cleanup (one
+    left join per FK against the parent's key set, FK delete/set-null
+    rules) → write → chunks recorded. Each batch write is one pass over
+    its read. The removed-orphan count is observed inside the write job
+    (rows into the batch read, rows out of the written frame), so counting
+    costs no Spark job; each referenced parent's key set (the distinct
+    referenced key tuples of its cleaned rows) is built and persisted once
+    per run
  5. validation: per-table row-count comparison
  6. post-migrate constraint replay (SET LOGGED → PK → indexes → FKs →
     sequences → checks → triggers) + hooks at 4 phases
@@ -49,7 +51,7 @@ from .ddl import build_post_migrate_plan, create_schema_sql, create_table_sql, c
 from .catalog.parsers import parse_enum_values
 from .functions.apply import apply_transforms
 from .hooks import run_hooks
-from .operators.orphans import clean_orphans_delete, clean_orphans_set_null
+from .operators.orphans import clean_orphans_delete, clean_orphans_set_null, parent_keys
 from .plan_report import PlanReport, build_plan_report
 from .plans.checkpoint import CheckpointManager, compatibility_fingerprint
 from .plans.chunk import plan_table_chunks
@@ -126,15 +128,17 @@ class MigrationPipeline:
         self.type_mapper = type_mapper
         self.default_mapper = default_mapper
         self.checkpoint = checkpoint or CheckpointManager("", noop=True)
-        # per-run caches, both persisted and released by run(): one source
-        # read per table, shared by the movement write, self-FK snapshot,
-        # parent anti-joins, and validation; and one cleaned frame per
-        # referenced parent, computed once for all of its children
+        # per-run caches, both persisted and released by run(): one
+        # full-table source read per table that needs one (self-FK
+        # snapshot, parent key sets, validation recount), and one set of
+        # distinct key tuples per (referenced table, referenced columns),
+        # built from its cleaned rows once for every batch of every child
         self._transformed_cache: dict[str, DataFrame] = {}
-        self._cleaned_cache: dict[str, DataFrame] = {}
-        # tables some other table's FK references (set by run()): a fresh
-        # one-batch move keeps its read cached for the parent frame
-        self._referenced: frozenset[str] = frozenset()
+        self._key_sets: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
+        # referenced table -> the column tuples other tables' FKs reference
+        # (set by run()): a fresh one-batch move keeps its read cached for
+        # the key sets
+        self._referenced: dict[str, set[tuple[str, ...]]] = {}
         # advisor outputs: source row counts measured at plan time (reused by
         # validation), parents whose FK anti-joins should broadcast
         self._source_counts: dict[str, int] = {}
@@ -286,34 +290,34 @@ class MigrationPipeline:
         self,
         df: DataFrame,
         table: Table,
-        parents: dict[str, DataFrame],
-        self_snapshot: DataFrame | None = None,
+        self_keys: dict[tuple[str, ...], DataFrame] | None = None,
         *,
         append: bool = False,
         rows_in: Observation | None = None,
     ) -> tuple[DataFrame, int, int]:
-        """J1 applied in-flight: anti-join each FK against its parent, then
-        land the batch with ``target.write`` (same final state as the
-        reference's post-load DELETE). Returns the cleaned frame, the
+        """J1 applied in-flight: left-join each FK against its parent's key
+        set (``_key_sets``, the distinct key tuples of the parent's cleaned
+        rows), then land the batch with ``target.write`` (same final state
+        as the reference's post-load DELETE). Returns the cleaned frame, the
         orphan rows removed, and the rows written.
 
-        Self-referential FKs anti-join against the table's own pre-clean
+        Self-referential FKs check against the table's own pre-clean
         snapshot — matching SQL DELETE semantics, where the NOT EXISTS
         subquery evaluates against the pre-delete state of the WHOLE table
-        (reference post.go:475-538). When ``df`` is one chunk batch of a
-        larger table the caller must pass the full-table snapshot via
-        ``self_snapshot``; anti-joining a batch against itself would delete
-        valid rows whose parent lives in another batch.
+        (reference post.go:475-538). When ``df`` is the whole table its own
+        keys are that snapshot. When ``df`` is one chunk batch of a larger
+        table the caller must pass the full-table snapshot's key sets,
+        by referenced columns, as ``self_keys``; checking a batch against
+        itself would delete valid rows whose parent lives in another batch.
 
         Removed rows are rows in minus rows out when a DELETE-rule FK
         applied, else 0 (SET NULL keeps every row). Both counts come from
         the write job itself: rows out from an ``Observation`` on the
         written frame, rows in from ``rows_in``, an ``Observation`` the
-        caller placed under ``df``'s persist (``_read_transformed``) — the
-        DELETE rule scans ``df`` twice, and only the cache fill counts it
-        once. Without ``rows_in`` rows in are counted with one more job
-        after the write."""
-        cleaned, any_delete_rule = self._apply_fk_rules(df, table, parents, self_snapshot)
+        caller placed on ``df``'s read (``_read_transformed``), under its
+        persist when the plan scans ``df`` twice. Without ``rows_in`` rows
+        in are counted with one more job after the write."""
+        cleaned, any_delete_rule = self._apply_fk_rules(df, table, self_keys)
         if not any_delete_rule:
             return cleaned, 0, self.target.write(cleaned, table.pg_name, append=append)
         rows_out = Observation()
@@ -322,39 +326,43 @@ class MigrationPipeline:
         return cleaned, n_in - rows_out.get["rows"], rows
 
     def _apply_fk_rules(
-        self, df: DataFrame, table: Table, parents: dict[str, DataFrame],
-        self_snapshot: DataFrame | None = None,
+        self, df: DataFrame, table: Table,
+        self_keys: dict[tuple[str, ...], DataFrame] | None = None,
     ) -> tuple[DataFrame, bool]:
-        """``df`` with every FK's anti-join applied, and whether any of them
-        was a DELETE rule (the only rule that drops rows)."""
-        snapshot = self_snapshot if self_snapshot is not None else df
+        """``df`` with every FK's cleanup join applied, and whether any of
+        them was a DELETE rule (the only rule that drops rows). An FK whose
+        parent has no key set (not migrated) is skipped."""
+        snapshot = df
         any_delete_rule = False
         for fk in table.foreign_keys:
-            parent_df = (
-                snapshot if fk.ref_pg_table == table.pg_name else parents.get(fk.ref_pg_table)
-            )
-            if parent_df is None:
-                continue
-            if fk.ref_pg_table in self._broadcast_parents and fk.ref_pg_table != table.pg_name:
-                # advisor measured this parent under the broadcast threshold:
-                # ship it to every executor so the child never shuffles
-                parent_df = F.broadcast(parent_df)
+            ref = tuple(fk.ref_columns)
+            if fk.ref_pg_table == table.pg_name:
+                keys = self_keys[ref] if self_keys else parent_keys(snapshot, fk.ref_columns)
+            else:
+                keys = self._key_sets.get((fk.ref_pg_table, ref))
+                if keys is None:
+                    continue
+                if fk.ref_pg_table in self._broadcast_parents:
+                    # advisor measured this parent under the broadcast
+                    # threshold: ship its keys to every executor so the
+                    # child never shuffles
+                    keys = F.broadcast(keys)
             if fk.delete_rule.upper() == "SET NULL":
-                df = clean_orphans_set_null(df, parent_df, fk.columns, fk.ref_columns)
+                df = clean_orphans_set_null(df, None, fk.columns, fk.ref_columns, keys=keys)
             else:
                 any_delete_rule = True
-                df = clean_orphans_delete(df, parent_df, fk.columns, fk.ref_columns)
+                df = clean_orphans_delete(df, None, fk.columns, fk.ref_columns, keys=keys)
         return df, any_delete_rule
 
     def _full_transformed(self, table: Table) -> DataFrame:
         """Full-table source read → transforms, persisted and cached so the
-        self-FK snapshot, parent cache, and validation all share ONE read
-        (the reference reads each table once and validates from COPY row
-        counts, validate.go:34-135 — this is the Spark analogue)."""
+        self-FK snapshot, parent key sets, and validation recount all share
+        ONE read (the reference reads each table once and validates from
+        COPY row counts, validate.go:34-135 — this is the Spark analogue)."""
         with self._cache_lock:
             df = self._transformed_cache.get(table.pg_name)
             if df is None:
-                df = self._read_transformed(table, None)
+                df = self._read_transformed(table, None).persist()
                 self._transformed_cache[table.pg_name] = df
             return df
 
@@ -362,43 +370,42 @@ class MigrationPipeline:
         self, table: Table, predicates: list[str] | None,
         rows_in: Observation | None = None,
     ) -> DataFrame:
-        """Source read → transforms, persisted: cleaned and written from one
-        computation. ``rows_in`` counts the rows under the persist, so the
-        first job that fills the cache fulfils it."""
+        """Source read → transforms, not persisted: the caller persists a
+        read it scans more than once. ``rows_in`` counts the rows read, so
+        the first job that scans the read (or fills its cache) fulfils it."""
         df = apply_transforms(
             self.source.read_table(self.spark, table, predicates),
             table, self.source.kind, self.cfg.type_mapping,
         )
-        return (df if rows_in is None else _count_rows(df, rows_in)).persist()
+        return df if rows_in is None else _count_rows(df, rows_in)
 
-    def cleaned_source_df(self, table: Table, parents: dict[str, DataFrame]) -> DataFrame:
-        """The table exactly as the movement phase writes it: full source
-        read → transforms → orphan cleanup against the (cleaned) parents.
-        The one place parent frames come from: persisted and cached per
-        table, so every child write and validation count reuses one
-        computation over the one persisted transformed read."""
-        cached = self._cleaned_cache.get(table.pg_name)
-        if cached is None:
-            cached, _ = self._apply_fk_rules(self._full_transformed(table), table, parents)
-            self._cleaned_cache[table.pg_name] = cached = cached.persist()
-        return cached
+    def _build_key_sets(self, table: Table) -> None:
+        """Persist the distinct key tuples of ``table``'s cleaned rows, one
+        set per column tuple other tables' FKs reference. Built once per
+        run, after ``table`` moved; every batch of every child and the
+        validation recount clean against them."""
+        cleaned, _ = self._apply_fk_rules(self._full_transformed(table), table)
+        with self._cache_lock:
+            for ref in self._referenced.get(table.pg_name, ()):
+                self._key_sets[(table.pg_name, ref)] = parent_keys(cleaned, list(ref)).persist()
 
-    def move_table(self, table: Table, parents: dict[str, DataFrame]) -> TableRunResult:
+    def move_table(self, table: Table) -> TableRunResult:
         """Move one table as ONE loop over batches of its pending chunks,
         ``workers×4`` chunks a batch; each batch is one distributed
         read→transform→clean→write job (``clean_orphans`` lands it), and
         every chunk in the batch is marked complete only after the batch's
         write commits. An unchunked table is one batch of one chunk, read
-        without predicates. Nothing runs on a batch read before its write:
-        the write's own job fills the read's cache and fulfils the
-        ``rows_in`` observation counted under it.
+        without predicates. Nothing runs on a batch read before its write,
+        and the write makes one pass over it: the write's own job scans the
+        read and fulfils the ``rows_in`` observation counted on it.
 
-        A fresh table that fits in one batch is read once: that persisted
-        read is also its self-FK snapshot and, when another table's FK
-        references it, the read ``cleaned_source_df`` builds the parent
-        frame from. Otherwise a self-FK table anti-joins each batch against
-        a full-table snapshot, and each batch's read is released after its
-        write.
+        A batch read is persisted only when it is read twice: a fresh table
+        that fits in one batch keeps its read when another table's FK
+        references it (``_build_key_sets`` builds the key sets from it), and
+        when it has a self-FK (the read is its own snapshot). Otherwise a
+        self-FK table checks each batch against the key sets of a full-table
+        snapshot, built once before the first batch and released after the
+        last.
 
         Resume is **idempotent by delete-then-insert**: the production sinks
         commit per partition, so a crash mid-batch can leave some partitions
@@ -429,37 +436,46 @@ class MigrationPipeline:
         size = max(1, self.cfg.effective_workers() * 4)
         batches = [todo[s : s + size] for s in range(0, len(todo), size)]
         whole = not done and len(batches) == 1
+        self_refs = {tuple(fk.ref_columns) for fk in table.foreign_keys if fk.ref_pg_table == name}
         keep = whole and name in self._referenced
-        self_snap = None
-        if not whole and any(fk.ref_pg_table == name for fk in table.foreign_keys):
+        persist = keep or (whole and bool(self_refs))
+        self_keys = None
+        if self_refs and not whole:
             # self-FK cleanup must see the whole pre-clean table, not the batch
-            self_snap = self._full_transformed(table)
+            snapshot = self._full_transformed(table)
+            self_keys = {ref: parent_keys(snapshot, list(ref)).persist() for ref in self_refs}
         rows_total, removed_total = 0, 0
-        for b, batch in enumerate(batches):
-            rows_in = Observation()
-            base = self._read_transformed(
-                table, None if preds is None else [preds[i] for i in batch], rows_in,
-            )
-            if keep:
-                with self._cache_lock:  # released by run() with the other caches
-                    self._transformed_cache[name] = base
-            try:
-                # append once a batch landed, this run or the crashed one
-                _, removed, rows = self.clean_orphans(
-                    base, table, parents, self_snapshot=self_snap,
-                    append=bool(done) or b > 0, rows_in=rows_in,
+        try:
+            for b, batch in enumerate(batches):
+                rows_in = Observation()
+                base = self._read_transformed(
+                    table, None if preds is None else [preds[i] for i in batch], rows_in,
                 )
-            finally:
-                if not keep:
-                    base.unpersist()
-            rows_total += rows
-            removed_total += removed
-            # chunks are marked after the batch write returns; a crash inside
-            # the write is repaired by the delete-then-insert purge above on
-            # the next resume. Rows land on the first chunk of the batch so
-            # checkpoint row totals stay exact.
-            for n, i in enumerate(batch):
-                self.checkpoint.mark_chunk_done(name, i, rows if n == 0 else 0)
+                if persist:
+                    base = base.persist()
+                if keep:
+                    with self._cache_lock:  # released by run() with the other caches
+                        self._transformed_cache[name] = base
+                try:
+                    # append once a batch landed, this run or the crashed one
+                    _, removed, rows = self.clean_orphans(
+                        base, table, self_keys,
+                        append=bool(done) or b > 0, rows_in=rows_in,
+                    )
+                finally:
+                    if persist and not keep:
+                        base.unpersist()
+                rows_total += rows
+                removed_total += removed
+                # chunks are marked after the batch write returns; a crash
+                # inside the write is repaired by the delete-then-insert purge
+                # above on the next resume. Rows land on the first chunk of
+                # the batch so checkpoint row totals stay exact.
+                for n, i in enumerate(batch):
+                    self.checkpoint.mark_chunk_done(name, i, rows if n == 0 else 0)
+        finally:
+            for keys in (self_keys or {}).values():
+                keys.unpersist()
         self.checkpoint.mark_table_done(name, rows_total)
         return TableRunResult(
             name, rows_total, len(plan.chunks), removed_total,
@@ -483,8 +499,7 @@ class MigrationPipeline:
         return max(1, self.cfg.effective_workers())
 
     def _move_wave(
-        self, wave: list[Table], parent_dfs: dict[str, DataFrame],
-        sink: list[TableRunResult] | None = None,
+        self, wave: list[Table], sink: list[TableRunResult] | None = None,
     ) -> list[TableRunResult]:
         """Move one dependency wave — tables whose FK parents have all
         landed — concurrently when allowed, preserving ``wave`` order in
@@ -496,7 +511,7 @@ class MigrationPipeline:
 
         def _one(table: Table) -> TableRunResult:
             t0 = time.perf_counter()
-            res = self.move_table(table, parent_dfs)
+            res = self.move_table(table)
             res.seconds = round(time.perf_counter() - t0, 3)
             return res
 
@@ -549,7 +564,7 @@ class MigrationPipeline:
             # persisted reads and the source's connection
             if hasattr(self.source, "close"):
                 self.source.close()  # single_tx: ends the snapshot transaction
-            for cache in (self._cleaned_cache, self._transformed_cache):
+            for cache in (self._key_sets, self._transformed_cache):
                 for df in cache.values():
                     df.unpersist()
                 cache.clear()
@@ -604,28 +619,25 @@ class MigrationPipeline:
                     )
             run_hooks(self.cfg.hooks, "before_data", self.cfg.target_schema, self.target.execute)
 
-            # parents load first so FK cleanup can consume their DataFrames;
-            # only tables some FK actually references are retained, and the
-            # retained DataFrame is the CLEANED form (what was written), so
+            # parents load first so FK cleanup can consume their key sets;
+            # only tables some FK actually references get them, and they
+            # hold the keys of the CLEANED rows (what was written), so
             # grandchildren are checked against surviving parent rows only
-            self._referenced = referenced = frozenset(
-                fk.ref_pg_table
-                for t in tables
-                for fk in t.foreign_keys
-                if fk.ref_pg_table != t.pg_name
-            )
-            ordered = _parents_first(tables)
-            parent_dfs: dict[str, DataFrame] = {}
-            for wave in _dependency_waves(ordered):
+            self._referenced = {}
+            for t in tables:
+                for fk in t.foreign_keys:
+                    if fk.ref_pg_table != t.pg_name:
+                        self._referenced.setdefault(fk.ref_pg_table, set()).add(
+                            tuple(fk.ref_columns)
+                        )
+            for wave in _dependency_waves(_parents_first(tables)):
                 # completed tables append to result.tables as they land,
                 # so a wave failure still leaves the report reflecting
                 # every table that actually moved (ADVICE r14)
-                self._move_wave(wave, parent_dfs, sink=result.tables)
+                self._move_wave(wave, sink=result.tables)
                 for table in wave:
-                    if table.pg_name in referenced:
-                        parent_dfs[table.pg_name] = self.cleaned_source_df(
-                            table, parent_dfs
-                        )
+                    if table.pg_name in self._referenced:
+                        self._build_key_sets(table)
             run_hooks(self.cfg.hooks, "after_data", self.cfg.target_schema, self.target.execute)
             if self.cfg.mode == "data_only":
                 for t in tables:
@@ -641,7 +653,8 @@ class MigrationPipeline:
                 def expected_count(name: str) -> int:
                     t = by_name[name]
                     if not any(
-                        fk.ref_pg_table in parent_dfs or fk.ref_pg_table == t.pg_name
+                        (fk.ref_pg_table, tuple(fk.ref_columns)) in self._key_sets
+                        or fk.ref_pg_table == t.pg_name
                         for fk in t.foreign_keys
                     ):
                         # the advisor already counted this table at plan time
@@ -658,7 +671,8 @@ class MigrationPipeline:
                         return res.rows_written
                     # resumed/skipped tables: recompute from the source so
                     # prior-run orphan removals still validate correctly
-                    return self.cleaned_source_df(t, parent_dfs).count()
+                    cleaned, _ = self._apply_fk_rules(self._full_transformed(t), t)
+                    return cleaned.count()
 
                 result.validation = validate_row_counts(
                     [t.pg_name for t in tables],
@@ -702,7 +716,7 @@ def _dependency_waves(ordered: list[Table]) -> list[list[Table]]:
     FK-free schemas (the parquet-lake case) collapse to ONE wave. A cycle
     leaves no table ready; the fallback emits the next table alone in
     ``ordered`` order — exactly the sequential loop's behavior (the
-    missing parent is skipped by ``clean_orphans``'s ``parents.get``)."""
+    missing parent has no key set, and ``_apply_fk_rules`` skips its FK)."""
     names = {t.pg_name for t in ordered}
     done: set[str] = set()
     remaining = list(ordered)

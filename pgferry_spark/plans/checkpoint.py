@@ -173,12 +173,16 @@ class CheckpointManager:
                 self._flush_locked()
 
     def mark_table_done(self, table: str, rows: int) -> None:
+        """Mark ``table`` complete. ``rows`` is its row total when no chunk
+        was recorded; otherwise the chunks' accumulated total stands, which
+        for a resumed table includes the rows earlier runs landed."""
         if self.noop:
             return
         with self._lock:
             st = self.tables.setdefault(table, TableState())
             st.full_table_done = True
-            st.rows = rows
+            if not st.completed_chunks:
+                st.rows = rows
             self._pending += 1
             self._flush_locked()
 

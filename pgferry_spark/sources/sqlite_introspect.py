@@ -62,7 +62,7 @@ def _has_autoincrement(con: sqlite3.Connection, table: str, column: str) -> bool
 def introspect_table(con: sqlite3.Connection, name: str, snake_case: bool) -> Table:
     cols: list[Column] = []
     pk_cols: list[tuple[int, str]] = []
-    for r in con.execute(f"PRAGMA table_xinfo({_q(name)})"):
+    for r in con.execute(f"PRAGMA table_xinfo({quote_ident(name)})"):
         if r["hidden"] == 1:  # hidden columns of virtual tables
             continue
         is_generated = r["hidden"] in (2, 3)  # VIRTUAL / STORED generated
@@ -88,12 +88,12 @@ def introspect_table(con: sqlite3.Connection, name: str, snake_case: bool) -> Ta
         primary_key = Index("PRIMARY", "PRIMARY", ordered, is_primary=True, unique=True)
 
     indexes: list[Index] = []
-    for ir in con.execute(f"PRAGMA index_list({_q(name)})"):
+    for ir in con.execute(f"PRAGMA index_list({quote_ident(name)})"):
         if ir["origin"] == "pk":
             continue
         idx_cols = []
         has_expr = False
-        for ic in con.execute(f"PRAGMA index_info({_q(ir['name'])})"):
+        for ic in con.execute(f"PRAGMA index_info({quote_ident(ir['name'])})"):
             if ic["name"] is None:
                 has_expr = True
             else:
@@ -110,7 +110,7 @@ def introspect_table(con: sqlite3.Connection, name: str, snake_case: bool) -> Ta
 
     fks: list[ForeignKey] = []
     by_id: dict[int, dict] = {}
-    for fr in con.execute(f"PRAGMA foreign_key_list({_q(name)})"):
+    for fr in con.execute(f"PRAGMA foreign_key_list({quote_ident(name)})"):
         ent = by_id.setdefault(
             fr["id"],
             {"table": fr["table"], "from": [], "to": [],
@@ -163,5 +163,6 @@ def introspect_source_objects(path: str) -> SourceObjects:
         con.close()
 
 
-def _q(name: str) -> str:
+def quote_ident(name: str) -> str:
+    """SQLite identifier quoting: embedded double quotes are doubled."""
     return '"' + name.replace('"', '""') + '"'

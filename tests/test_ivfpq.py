@@ -102,14 +102,13 @@ def test_ann_recall_arithmetic(spark):
     assert (row["k_exact"], row["n_hits"], row["recall"]) == (10, 5, 0.5)
 
 
-def test_ann_recall_construction_launches_no_jobs(spark, vecs):
+def test_ann_recall_construction_launches_no_jobs(spark, vecs, jobs_in_group):
     # lazy end to end: building the scorecard plan must not trigger a job
-    before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    before = jobs_in_group(None)
     exact = vecs.limit(10).select("vec_id")
     approx = vecs.limit(10).select("vec_id")
     S.ann_recall(exact, approx)
-    after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    assert list(before) == list(after)
+    assert jobs_in_group(None) == before
 
 
 def test_lsh_knn_join_no_cartesian_and_bucket_recall(spark, vecs):

@@ -60,6 +60,53 @@ class TestOrphans:
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
+    def test_delete_rule_equals_semi_join_plus_null_rows(self, spark):
+        """Seeded property: the one-join DELETE rule keeps exactly the
+        multiset ``semi-join ∪ NULL-FK rows`` (the two-scan spelling it
+        replaced), on a composite FK with NULLs on both sides, duplicate
+        child rows and duplicate parent keys; a pre-built key set gives the
+        same rows."""
+        import random
+        from collections import Counter
+
+        fk, ref = ["fk_a", "fk_b"], ["pa", "pb"]
+
+        def val(rng):
+            return None if rng.random() < 0.2 else rng.randint(0, 3)
+
+        for seed in range(8):
+            rng = random.Random(seed)
+            parent_rows = [(val(rng), val(rng)) for _ in range(rng.randint(0, 12))]
+            parent_rows += parent_rows[: rng.randint(0, len(parent_rows))]
+            child_rows = [(rng.randint(0, 5), val(rng), val(rng)) for _ in range(30)]
+            child_rows += child_rows[: rng.randint(0, 10)]
+            parent = spark.createDataFrame(parent_rows, "pa: long, pb: long")
+            child = spark.createDataFrame(child_rows, "cid: long, fk_a: long, fk_b: long")
+
+            non_null = F.col("fk_a").isNotNull() & F.col("fk_b").isNotNull()
+            keys = orphans.parent_keys(parent, ref)
+            matched = child.filter(non_null).join(
+                keys,
+                (child["fk_a"] == keys["__ref_0"]) & (child["fk_b"] == keys["__ref_1"]),
+                "left_semi",
+            )
+            want = Counter(map(tuple, matched.unionByName(child.filter(~non_null)).collect()))
+            got = orphans.clean_orphans_delete(child, parent, fk, ref)
+            assert Counter(map(tuple, got.collect())) == want, seed
+            prebuilt = orphans.clean_orphans_delete(child, None, fk, ref, keys=keys)
+            assert Counter(map(tuple, prebuilt.collect())) == want, seed
+
+    def test_delete_rule_scans_child_once(self, spark, tmp_path):
+        """The DELETE rule is one join: its optimized plan reads the child
+        once (the semi-join ∪ NULL-rows spelling read it twice)."""
+        parent, child, parent2 = parent_child(spark)
+        child.write.parquet(str(tmp_path / "child"))
+        child = spark.read.parquet(str(tmp_path / "child"))
+        got = orphans.clean_orphans_delete(child, parent2, ["fk_a", "fk_b"], ["pa", "pb"])
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("] parquet") == 1, plan
+        assert sorted(r["cid"] for r in got.collect()) == [10, 11, 12]
+
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),

@@ -107,7 +107,7 @@ class TestPlanShapes:
         assert result.ok
         assert src.reads == {"customer": 1, "orders": 1, "events": 1}
 
-    def test_migration_schedules_few_jobs(self, spark, tmp_path):
+    def test_migration_schedules_few_jobs(self, spark, tmp_path, jobs_in_group):
         """Planning/accounting must come from parquet footer metadata, not
         Spark jobs: one listing job per table plus the write itself. The
         round-1 pipeline scheduled ~15 jobs/table (min-max probe, count-
@@ -120,11 +120,6 @@ class TestPlanShapes:
         from pgferry_spark.pipeline import MigrationPipeline
         from pgferry_spark.types import map_parquet_default, map_parquet_type
 
-        tracker = spark.sparkContext._jsc.sc().statusTracker()
-
-        def njobs():
-            return len(tracker.getJobIdsForGroup(None))
-
         src = ParquetSource(
             spark, SF,
             tables=("customer", "orders", "events"),
@@ -134,13 +129,13 @@ class TestPlanShapes:
             source_type="parquet", source_dsn=SF, target_dsn="spool://x",
             target_schema="tpch",
         )
-        j0 = njobs()
+        j0 = jobs_in_group(None)
         result = MigrationPipeline(
             spark, cfg, src, SpoolTarget(spark, str(tmp_path / "jobs_out")),
             map_parquet_type, map_parquet_default,
         ).run()
         assert result.ok
-        assert njobs() - j0 <= 4 * 3  # 3 tables
+        assert len(jobs_in_group(None) - j0) <= 4 * 3  # 3 tables
 
     def test_footer_stats_match_spark_aggregates(self, spark):
         """The footer-metadata shortcuts must agree exactly with the
@@ -219,7 +214,7 @@ class TestRound3PlanShapes:
         assert "Window" not in plan
         assert "Join" not in plan
 
-    def test_lsh_construction_launches_zero_jobs(self, spark):
+    def test_lsh_construction_launches_zero_jobs(self, spark, jobs_in_group):
         """Building the LSH bucket table / near-dup plan must not run a
         driver action (the old df.first() dimension probe was a blocking
         job scheduled before the main job)."""
@@ -227,11 +222,10 @@ class TestRound3PlanShapes:
         from pgferry_spark.sources.parquet import read_parquet
 
         e = read_parquet(spark, SF + "/embeddings.parquet")
-        tracker = spark.sparkContext._jsc.sc().statusTracker()
-        j0 = len(tracker.getJobIdsForGroup(None))
+        j0 = jobs_in_group(None)
         similarity.lsh_bucket_table(e, "embedding", "vec_id")
         dedup.embedding_near_dup_pairs_lsh(e, "embedding", "vec_id")
-        assert len(tracker.getJobIdsForGroup(None)) == j0
+        assert jobs_in_group(None) == j0
 
     def test_capped_winnow_whitelist_broadcasts(self, spark):
         """The df-cap whitelist must reach the fingerprint table as a
