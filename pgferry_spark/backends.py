@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .catalog.identifiers import mssql_ident, mysql_ident
 from .catalog.model import Schema, SourceObjects, Table
 from .catalog.parsers import sqlite_normalize_affinity
 from .sources import sqlite_introspect as sq
@@ -460,6 +461,9 @@ class SingleTxSource:
     _con: object = field(default=None, repr=False)
     _spools: list = field(default_factory=list, init=False, repr=False)
 
+    def _q(self, name: str) -> str:
+        return (mssql_ident if self.kind == "mssql" else mysql_ident)(name)
+
     def _connection(self):
         if self._con is None:
             self._con = self.connect()
@@ -487,14 +491,16 @@ class SingleTxSource:
     def read_table(
         self, spark: SparkSession, table: Table, predicates: list[str] | None
     ) -> DataFrame:
-        schema = self.read_schemas[table.pg_name]
+        # ``table`` may be narrowed to some columns: read only their fields
+        full = self.read_schemas[table.pg_name]
+        schema = StructType([full[c.pg_name] for c in table.columns])
         preds = predicates if predicates else [None]
         con = self._connection()
 
         def batches():
-            cols = ", ".join(c.source_name for c in table.columns)
+            cols = ", ".join(self._q(c.source_name) for c in table.columns)
             for p in preds:  # sequential chunks, one shared connection
-                sql = f"SELECT {cols} FROM {table.source_name}"
+                sql = f"SELECT {cols} FROM {self._q(table.source_name)}"
                 if p:
                     sql += f" WHERE {p}"
                 cur = con.cursor()
@@ -509,14 +515,12 @@ class SingleTxSource:
 
     def count(self, table: Table) -> int:
         cur = self._connection().cursor()
-        cur.execute(f"SELECT COUNT(*) FROM {table.source_name}")
+        cur.execute(f"SELECT COUNT(*) FROM {self._q(table.source_name)}")
         return cur.fetchone()[0]
 
     def min_max(self, table: Table, key_source_name: str):
         cur = self._connection().cursor()
-        cur.execute(
-            f"SELECT MIN({key_source_name}), MAX({key_source_name}) "
-            f"FROM {table.source_name}"
-        )
+        key = self._q(key_source_name)
+        cur.execute(f"SELECT MIN({key}), MAX({key}) FROM {self._q(table.source_name)}")
         row = cur.fetchone()
         return row[0], row[1]

@@ -15,8 +15,10 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
     (rows into the batch read, rows out of the written frame), so counting
     costs no Spark job; each referenced parent's key set (the distinct
     referenced key tuples of its cleaned rows) is built and persisted once
-    per run
- 5. validation: per-table row-count comparison
+    per run, from a key-only read unless a fresh one-batch read is at hand
+ 5. validation: per-table row-count comparison with the source COUNT(*),
+    or for an FK table with the rows its writes landed across runs (the
+    checkpoint's totals), so validation reads no source row
  6. post-migrate constraint replay (SET LOGGED → PK → indexes → FKs →
     sequences → checks → triggers) + hooks at 4 phases
  7. checkpoint/resume around the movement phase: a resumed table first
@@ -39,7 +41,7 @@ from __future__ import annotations
 
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable, Protocol
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -87,11 +89,9 @@ class TableRunResult:
     table: str
     rows_written: int
     chunks: int
+    # rows_written and orphans_removed count this run's writes only (0 for a
+    # skipped table); the checkpoint holds the cross-run row total
     orphans_removed: int = 0
-    # True when every chunk was written by THIS run (not skipped/resumed):
-    # rows_written is then the complete cleaned row count and validation can
-    # trust it without a second source read
-    complete_this_run: bool = True
     # wall seconds for this table's movement (read+transform+write+cleanup);
     # the reference logs per-table progress every 10s (migrate.go:469-473) —
     # this is the batch-run equivalent a operator reads post-hoc
@@ -128,11 +128,10 @@ class MigrationPipeline:
         self.type_mapper = type_mapper
         self.default_mapper = default_mapper
         self.checkpoint = checkpoint or CheckpointManager("", noop=True)
-        # per-run caches, both persisted and released by run(): one
-        # full-table source read per table that needs one (self-FK
-        # snapshot, parent key sets, validation recount), and one set of
-        # distinct key tuples per (referenced table, referenced columns),
-        # built from its cleaned rows once for every batch of every child
+        # per-run caches, both persisted and released by run(): the read of
+        # a fresh one-batch referenced table, kept for its key sets, and one
+        # set of distinct key tuples per (referenced table, referenced
+        # columns), built from its cleaned rows for every batch of every child
         self._transformed_cache: dict[str, DataFrame] = {}
         self._key_sets: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
         # referenced table -> the column tuples other tables' FKs reference
@@ -232,8 +231,8 @@ class MigrationPipeline:
         ``_source_counts`` so validation reuses it instead of re-counting),
         row width estimated from declared column types, and — only for
         children of at least ``advisor_skew_min_rows`` rows — a measured
-        ``skew_profile`` of each single-column FK key (one column-pruned
-        scan; below the threshold no reducer can straggle long enough to
+        ``skew_profile`` of each single-column FK key (one key-only read of
+        that column; below the threshold no reducer can straggle long enough to
         justify the diagnostic job).
 
         Application: ``spark.sql.shuffle.partitions`` sized for the largest
@@ -260,8 +259,7 @@ class MigrationPipeline:
                     and len(fk.columns) == 1
                 ):
                     top = skew_profile(
-                        self.source.read_table(self.spark, t, None).select(fk.columns[0]),
-                        fk.columns[0], top=1,
+                        self._key_read(t, {fk.columns[0]}), fk.columns[0], top=1,
                     ).collect()
                     if top:
                         share = float(top[0]["share"])
@@ -354,17 +352,12 @@ class MigrationPipeline:
                 df = clean_orphans_delete(df, None, fk.columns, fk.ref_columns, keys=keys)
         return df, any_delete_rule
 
-    def _full_transformed(self, table: Table) -> DataFrame:
-        """Full-table source read → transforms, persisted and cached so the
-        self-FK snapshot, parent key sets, and validation recount all share
-        ONE read (the reference reads each table once and validates from
-        COPY row counts, validate.go:34-135 — this is the Spark analogue)."""
-        with self._cache_lock:
-            df = self._transformed_cache.get(table.pg_name)
-            if df is None:
-                df = self._read_transformed(table, None).persist()
-                self._transformed_cache[table.pg_name] = df
-            return df
+    def _key_read(self, table: Table, columns: set[str]) -> DataFrame:
+        """Whole-table source read → transforms of ``table`` narrowed to
+        ``columns`` (pg names), so the source fetches nothing else (the
+        reference's J1 DELETE likewise probes only key columns)."""
+        narrowed = replace(table, columns=[c for c in table.columns if c.pg_name in columns])
+        return self._read_transformed(narrowed, None)
 
     def _read_transformed(
         self, table: Table, predicates: list[str] | None,
@@ -382,11 +375,20 @@ class MigrationPipeline:
     def _build_key_sets(self, table: Table) -> None:
         """Persist the distinct key tuples of ``table``'s cleaned rows, one
         set per column tuple other tables' FKs reference. Built once per
-        run, after ``table`` moved; every batch of every child and the
-        validation recount clean against them."""
-        cleaned, _ = self._apply_fk_rules(self._full_transformed(table), table)
+        run, after ``table`` moved, from the read ``move_table`` kept for a
+        fresh one-batch table, else from a key-only read of the referenced
+        columns and those ``table``'s own FK cleanup needs."""
+        refs = self._referenced.get(table.pg_name, ())
+        df = self._transformed_cache.get(table.pg_name)  # the wave is over: no lock
+        if df is None:
+            cols = {c for ref in refs for c in ref}
+            for fk in table.foreign_keys:
+                own = fk.ref_columns if fk.ref_pg_table == table.pg_name else []
+                cols.update(fk.columns + own)
+            df = self._key_read(table, cols)
+        cleaned, _ = self._apply_fk_rules(df, table)
         with self._cache_lock:
-            for ref in self._referenced.get(table.pg_name, ()):
+            for ref in refs:
                 self._key_sets[(table.pg_name, ref)] = parent_keys(cleaned, list(ref)).persist()
 
     def move_table(self, table: Table) -> TableRunResult:
@@ -403,9 +405,9 @@ class MigrationPipeline:
         that fits in one batch keeps its read when another table's FK
         references it (``_build_key_sets`` builds the key sets from it), and
         when it has a self-FK (the read is its own snapshot). Otherwise a
-        self-FK table checks each batch against the key sets of a full-table
-        snapshot, built once before the first batch and released after the
-        last.
+        self-FK table checks each batch against the key sets of a key-only
+        whole-table read, built once before the first batch and released
+        after the last.
 
         Resume is **idempotent by delete-then-insert**: the production sinks
         commit per partition, so a crash mid-batch can leave some partitions
@@ -420,7 +422,7 @@ class MigrationPipeline:
         """
         name = table.pg_name
         if self.checkpoint.is_table_done(name):
-            return TableRunResult(name, 0, 0, complete_this_run=False)
+            return TableRunResult(name, 0, 0)
         plan = self.chunk_plan_for(table)
         preds = plan.predicates()
         done = self.checkpoint.completed_indices(name)
@@ -442,7 +444,7 @@ class MigrationPipeline:
         self_keys = None
         if self_refs and not whole:
             # self-FK cleanup must see the whole pre-clean table, not the batch
-            snapshot = self._full_transformed(table)
+            snapshot = self._key_read(table, {c for ref in self_refs for c in ref})
             self_keys = {ref: parent_keys(snapshot, list(ref)).persist() for ref in self_refs}
         rows_total, removed_total = 0, 0
         try:
@@ -477,10 +479,7 @@ class MigrationPipeline:
             for keys in (self_keys or {}).values():
                 keys.unpersist()
         self.checkpoint.mark_table_done(name, rows_total)
-        return TableRunResult(
-            name, rows_total, len(plan.chunks), removed_total,
-            complete_this_run=not done,
-        )
+        return TableRunResult(name, rows_total, len(plan.chunks), removed_total)
 
     def _table_parallelism(self) -> int:
         """How many tables may move concurrently (guide §2.6: overlap
@@ -648,37 +647,28 @@ class MigrationPipeline:
 
             if self.cfg.validation == "row_count":
                 by_name = {t.pg_name: t for t in tables}
-                results_by_name = {r.table: r for r in result.tables}
 
                 def expected_count(name: str) -> int:
                     t = by_name[name]
-                    if not any(
+                    if any(
                         (fk.ref_pg_table, tuple(fk.ref_columns)) in self._key_sets
                         or fk.ref_pg_table == t.pg_name
                         for fk in t.foreign_keys
                     ):
-                        # the advisor already counted this table at plan time
-                        if name in self._source_counts:
-                            return self._source_counts[name]
-                        return self.source.count(t)
-                    # FK tables: the expected count is the cleaned row count.
-                    # A fresh complete run already computed it on the source
-                    # side of the write — reuse it instead of a second read
-                    # (the reference validates source COUNT vs target COUNT;
-                    # rows_written here is the source-derived plan count).
-                    res = results_by_name.get(name)
-                    if res is not None and res.complete_this_run:
-                        return res.rows_written
-                    # resumed/skipped tables: recompute from the source so
-                    # prior-run orphan removals still validate correctly
-                    cleaned, _ = self._apply_fk_rules(self._full_transformed(t), t)
-                    return cleaned.count()
+                        # FK tables: the rows the writes landed across runs,
+                        # as the checkpoint totals them (orphans are gone)
+                        return self.checkpoint.tables[name].rows
+                    # the advisor already counted this table at plan time
+                    if name in self._source_counts:
+                        return self._source_counts[name]
+                    return self.source.count(t)
 
                 result.validation = validate_row_counts(
                     [t.pg_name for t in tables],
                     expected_count,
                     self.target.count,
-                    max_workers=1,  # expected_count launches Spark jobs; keep serial
+                    # no Spark job here, but single_tx counts on one connection
+                    max_workers=1,
                 )
 
             run_hooks(self.cfg.hooks, "before_fk", self.cfg.target_schema, self.target.execute)

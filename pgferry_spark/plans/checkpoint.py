@@ -175,14 +175,15 @@ class CheckpointManager:
     def mark_table_done(self, table: str, rows: int) -> None:
         """Mark ``table`` complete. ``rows`` is its row total when no chunk
         was recorded; otherwise the chunks' accumulated total stands, which
-        for a resumed table includes the rows earlier runs landed."""
-        if self.noop:
-            return
+        for a resumed table includes the rows earlier runs landed. Noop mode
+        keeps only the total, in memory, and marks nothing done."""
         with self._lock:
             st = self.tables.setdefault(table, TableState())
-            st.full_table_done = True
             if not st.completed_chunks:
                 st.rows = rows
+            if self.noop:
+                return
+            st.full_table_done = True
             self._pending += 1
             self._flush_locked()
 

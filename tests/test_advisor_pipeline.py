@@ -125,3 +125,36 @@ def test_validation_reuses_advisor_counts(spark, skewed_db, tmp_path, restore_co
     assert result.ok
     assert pipe._source_counts == {"dims": 20, "facts": 200}
     assert result.validation and all(v.ok for v in result.validation)
+
+
+def test_skew_probe_reads_only_the_fk_column(spark, skewed_db, tmp_path, restore_conf, monkeypatch):
+    """The advisor's skew profile of ``facts.dim_id`` asks the source for
+    that one column, not the whole table, and still measures the hot key."""
+    reads, probe = [], []
+
+    class ReadLog(SqliteSource):
+        def read_table(self, spark, table, predicates):
+            reads.append((table.pg_name, [c.pg_name for c in table.columns]))
+            return super().read_table(spark, table, predicates)
+
+    advise = MigrationPipeline.plan_advice
+
+    def spied(self, tables):
+        n = len(reads)
+        try:
+            return advise(self, tables)
+        finally:
+            probe.extend(reads[n:])
+
+    monkeypatch.setattr(MigrationPipeline, "plan_advice", spied)
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=skewed_db, target_dsn="spool://x",
+        target_schema="adv", advisor_skew_min_rows=0, advisor_broadcast_threshold=1,
+    )
+    result = MigrationPipeline(
+        spark, cfg, ReadLog(skewed_db), SpoolTarget(spark, str(tmp_path / "target")),
+        map_sqlite_type, map_sqlite_default,
+    ).run()
+    assert result.ok
+    assert probe == [("facts", ["dim_id"])]
+    assert result.report.advice["joins"]["facts->dims"]["strategy"] == "salted_shuffle"

@@ -91,8 +91,11 @@ def test_delete_on_success_and_noop_mode(tmp_path):
 
     noop = CheckpointManager(path, noop=True)
     noop.mark_chunk_done("t", 0, 1)
+    noop.mark_table_done("t", rows=7)
     noop.flush()
     assert not os.path.exists(path)  # zero file I/O when disabled
+    # the row total stays in memory for validation; nothing is skippable
+    assert noop.tables["t"].rows == 7 and not noop.is_table_done("t")
 
 
 def test_thread_safety(tmp_path):

@@ -376,7 +376,8 @@ def test_self_referential_fk_cleaned(spark, tmp_path):
 
 def test_resumed_run_validates_with_prior_orphans(spark, blog_db, tmp_path):
     """A resume that skips a table whose earlier run removed orphans must
-    still validate (expected counts recomputed, not taken from run state)."""
+    still validate: the expected count is the rows the checkpoint says
+    landed, not the source's row count."""
     ckpt = str(tmp_path / "rv.json")
     pipe1, target = make_pipeline(spark, blog_db, tmp_path, resume=True)
     pipe1.checkpoint = CheckpointManager(ckpt)
@@ -398,10 +399,11 @@ def test_resumed_run_validates_with_prior_orphans(spark, blog_db, tmp_path):
         }
     )
     seeded = CheckpointManager(ckpt, fingerprint=fp)
-    for t in ("users", "posts", "comments"):
-        seeded.mark_table_done(t, rows=0)
+    for t, rows in (("users", 5), ("posts", 5), ("comments", 10)):
+        seeded.mark_table_done(t, rows=rows)
     result2 = pipe2.run()
     assert result2.ok  # validation passes: comments expected 10, not 12
+    assert {v.table: v.source_rows for v in result2.validation}["comments"] == 10
     assert all(r.rows_written == 0 for r in result2.tables)
 
 
@@ -637,6 +639,105 @@ def test_fresh_run_reads_each_table_once(spark, tmp_path):
     rows = {r.table: (r.rows_written, r.orphans_removed) for r in result.tables}
     # child 7 is an orphan, and so is grandchild 7 that references it
     assert rows == {"parent": (30, 0), "child": (39, 1), "grandchild": (19, 1)}
+
+
+_NOTED_FAMILY = """
+CREATE TABLE parent (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES parent(id), note TEXT);
+CREATE TABLE child (id INTEGER PRIMARY KEY, parent_id INTEGER NOT NULL REFERENCES parent(id), note TEXT);
+CREATE TABLE grandchild (id INTEGER PRIMARY KEY, child_id INTEGER NOT NULL REFERENCES child(id), note TEXT);
+"""
+
+
+def _crashed_noted_family(spark, tmp_path):
+    """The family with a payload column, 3 batches per table (child 50
+    dangles, and so grandchild 50 with it), after a run that crashed
+    instead of the grandchild's 2nd batch write: parent and child are done,
+    the grandchild's first batch (ids 1-40) is landed and recorded.
+    Returns the database, checkpoint and target paths."""
+    db = _fk_db(str(tmp_path / "noted.db"), _NOTED_FAMILY, {
+        "parent": [(i, i - 1 or None, f"p{i}") for i in range(1, 101)],
+        "child": [(i, 999 if i == 50 else i, f"c{i}") for i in range(1, 101)],
+        "grandchild": [(i, i, f"g{i}") for i in range(1, 101)],
+    })
+    ckpt, out = str(tmp_path / "ckpt.json"), str(tmp_path / "out")
+    crashing = _CrashingTarget(spark, out, table="grandchild", crash_on=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _chunked_pipeline(spark, db, crashing, ckpt).run()
+    return db, ckpt, out
+
+
+class _ReadLog(SqliteSource):
+    """Records every read as (table, column names, chunked)."""
+
+    def __init__(self, *a, **kw):
+        super().__init__(*a, **kw)
+        self.reads = []
+
+    def read_table(self, spark, table, predicates):
+        self.reads.append((table.pg_name, [c.pg_name for c in table.columns], bool(predicates)))
+        return super().read_table(spark, table, predicates)
+
+
+def test_resume_reads_done_tables_key_only_and_validates_without_reads(
+    spark, tmp_path, monkeypatch,
+):
+    """The resume reads the done parent and child only through their key
+    and FK columns (for the key sets the grandchild cleans against),
+    re-moves the grandchild's 2 pending batches at full width, and
+    validates from the checkpoint's row totals with no source read."""
+    import pgferry_spark.pipeline as P
+
+    db, ckpt, out = _crashed_noted_family(spark, tmp_path)
+    src = _ReadLog(db)
+    validate, during = P.validate_row_counts, []
+
+    def spied(*a, **kw):
+        n = len(src.reads)
+        try:
+            return validate(*a, **kw)
+        finally:
+            during.append(src.reads[n:])
+
+    monkeypatch.setattr(P, "validate_row_counts", spied)
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, out), ckpt, source=src).run()
+    assert result.ok
+    assert during == [[]]
+    full = ["id", "child_id", "note"]
+    assert src.reads == [
+        ("parent", ["id", "parent_id"], False),
+        ("child", ["id", "parent_id"], False),
+        ("grandchild", full, True),
+        ("grandchild", full, True),
+    ]
+    expected = {v.table: v.source_rows for v in result.validation}
+    assert expected == {"parent": 100, "child": 99, "grandchild": 99}
+    assert spark.read.parquet(out + "/grandchild").count() == 99
+
+
+@pytest.mark.parametrize("tamper", ["drop", "duplicate"])
+def test_validation_fails_on_a_batch_changed_behind_the_checkpoint(spark, tmp_path, tamper):
+    """A landed, recorded batch dropped from or duplicated in the target
+    between the crash and the resume fails that table's validation: the
+    target no longer holds the rows the checkpoint says landed."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    db, ckpt, out = _crashed_noted_family(spark, tmp_path)
+    landed = os.path.join(out, "grandchild")
+    batch = pq.read_table(landed)
+    assert batch.num_rows == 40
+    shutil.rmtree(landed)
+    os.makedirs(landed)
+    pq.write_table(
+        batch.slice(0, 0) if tamper == "drop" else pa.concat_tables([batch, batch]),
+        os.path.join(landed, "part-0.parquet"),
+    )
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, out), ckpt).run()
+    assert not result.ok
+    assert [v.table for v in result.validation if not v.ok] == ["grandchild"]
 
 
 def test_chunked_child_sums_orphans_across_batches(spark, tmp_path):

@@ -4,6 +4,7 @@ driver-side sources stream in bounded batches (no full-table driver list)."""
 
 import os
 import sqlite3
+from dataclasses import replace
 
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -112,3 +113,36 @@ def test_spool_batches_empty(spark):
     schema = StructType([StructField("id", LongType())])
     df = spool_batches(spark, schema, iter([]))
     assert df.count() == 0 and df.columns == ["id"]
+
+
+@pytest.mark.parametrize("kind", ["mysql", "mssql"])
+def test_single_tx_quotes_reserved_names_and_reads_narrowed_tables(spark, tmp_path, kind):
+    """Names are quoted for the source's dialect (SQLite accepts both the
+    MySQL backticks and the MSSQL brackets), so a table ``group`` with a
+    column ``order`` counts, probes and reads; a read of the table narrowed
+    to one column gets just that column's read-schema field."""
+    path = str(tmp_path / "reserved.db")
+    con = sqlite3.connect(path)
+    con.execute('CREATE TABLE "group" (id INTEGER PRIMARY KEY, "order" INTEGER, note TEXT)')
+    con.executemany('INSERT INTO "group" VALUES (?,?,?)', [(i, 10 * i, f"n{i}") for i in range(1, 6)])
+    con.commit()
+    con.close()
+    table = _table("group", "id", [("id", "bigint"), ("order", "bigint"), ("note", "text")])
+    read_schema = StructType([
+        StructField("id", LongType()), StructField("order", LongType()),
+        StructField("note", StringType()),
+    ])
+    src = SingleTxSource(
+        connect=lambda: sqlite3.connect(path), schema=Schema(tables=[table]),
+        read_schemas={"group": read_schema}, kind=kind,
+    )
+    try:
+        assert src.count(table) == 5
+        assert src.min_max(table, "order") == (10, 50)
+        df = src.read_table(spark, replace(table, columns=[table.column("order")]), None)
+        assert df.columns == ["order"]
+        assert sorted(r["order"] for r in df.collect()) == [10, 20, 30, 40, 50]
+        full = src.read_table(spark, table, ["id <= 2"])
+        assert full.columns == ["id", "order", "note"] and full.count() == 2
+    finally:
+        src.close()
