@@ -8,16 +8,19 @@ written to BENCH_runs.json — the driver's tail capture holds only ~2 KB,
 so inlining per-query timings makes the line unparseable (BENCH_r03 and
 BENCH_r05 both hit this).
 
-Each query is forced with ``df.count()`` (full compute, no driver-side row
-transfer). Session uses the engine defaults (AQE on, UTC, tuned shuffle
+Timing, warm-up, forcing and host-speed probes come from ``tools/measure.py``:
+each entry is forced with a ``noop`` sink write (its full output plan, every
+column), on the engine's session defaults (AQE on, UTC, tuned shuffle
 partitions).
 
-Repeat-median mode (default): every query runs ``$SPARK_GRAFT_BENCH_REPEATS``
-times (default 3) with the cache cleared between runs (cold-compute basis —
-operators that persist intermediates would otherwise report a warm second
-run); the headline number per query is the MEDIAN and the raw runs ride
-along under "runs".  Container load swings single runs ~2x; the median
-keeps round-over-round comparisons about the code, not the neighbors.
+Repeat-median mode (default): every entry runs ``$SPARK_GRAFT_BENCH_REPEATS``
+times (default 3) with the cache cleared before each run (cold-compute basis
+— operators that persist intermediates would otherwise report a warm second
+run); the headline number per entry is the MEDIAN of construction plus
+action, the raw runs ride along under "runs" and each run's layer record
+(construct_s, action_s, jobs, stages, compiles) under "records".  Container
+load swings single runs ~2x; the median keeps round-over-round comparisons
+about the code, not the neighbors.
 """
 
 from __future__ import annotations
@@ -26,12 +29,11 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry
-from pgferry_spark.session import get_spark
+from tools import measure
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -399,288 +401,106 @@ def _inline_queries(base: dict, timings: dict, order: list,
     return queries
 
 
-MIGRATION_PKS = {
-    "region": "r_regionkey", "nation": "n_nationkey", "customer": "c_custkey",
-    "supplier": "s_suppkey", "part": "p_partkey", "orders": "o_orderkey",
-    "lineitem": None, "events": "event_id",
-}
-
-
-def _probe_worker(_i: int) -> int:
-    """Fixed single-core unit of the multi-core host-speed probe (must
-    be module-level: ProcessPoolExecutor pickles it into the workers)."""
-    import hashlib
-
-    h = b"x"
-    for _ in range(200_000):
-        h = hashlib.md5(h).digest()
-    return h[0]
-
-
-def _migration(spark, sf_dir: str) -> float:
-    import shutil
-    import tempfile
-
-    from pgferry_spark.backends import ParquetSource, SpoolTarget
-    from pgferry_spark.config import MigrationConfig
-    from pgferry_spark.pipeline import MigrationPipeline
-    from pgferry_spark.types import map_parquet_default, map_parquet_type
-
-    out = tempfile.mkdtemp(prefix="bench_migration_")
+def _proc_stat():
+    """(total, idle) jiffies of the whole host, or (None, None)."""
     try:
-        cfg = MigrationConfig(
-            source_type="parquet", source_dsn=sf_dir,
-            target_dsn="spool://bench", target_schema="tpch",
-        )
-        src = ParquetSource(
-            spark, sf_dir, tables=tuple(MIGRATION_PKS),
-            pks={k: v for k, v in MIGRATION_PKS.items() if v},
-        )
-        t0 = time.perf_counter()
-        result = MigrationPipeline(
-            spark, cfg, src, SpoolTarget(spark, out),
-            map_parquet_type, map_parquet_default,
-        ).run()
-        elapsed = time.perf_counter() - t0
-        if not result.ok:
-            raise RuntimeError(f"bench migration failed: {result}")
-        return elapsed
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        with open("/proc/stat") as fh:
+            vals = [int(x) for x in fh.readline().split()[1:]]
+        return sum(vals), vals[3] + (vals[4] if len(vals) > 4 else 0)
+    except (OSError, ValueError, IndexError):
+        return None, None
+
+
+def _capped_drops(spark, sf_dir: str) -> dict:
+    """Drop-rate evidence for the capped bench rows (VERDICT r4 ask #4):
+    how many buckets/rows the max_bucket=3 cap excludes at this SF."""
+    from pyspark.sql import functions as F
+
+    from pgferry_spark.operators.dedup import lsh_bucket_table
+
+    docs = entry._t(spark, sf_dir, "documents")
+    out = {}
+    for name, bdf in (
+        ("lsh_candidate_pairs_capped",
+         lsh_bucket_table(docs, "text", "doc_id", 12, 4, 3, hash_fn="xxhash64")),
+        ("cross_corpus_near_dup_capped",
+         lsh_bucket_table(docs.filter(F.col("doc_id") % 10 != 0), "text", "doc_id", 12, 4, 3)),
+    ):
+        row = bdf.groupBy("band_id", "band_hash").count().agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.sum(F.when(F.col("count") > 3, 1).otherwise(0)).alias("dropped_buckets"),
+            F.sum(F.when(F.col("count") > 3, F.col("count")).otherwise(0)).alias("dropped_rows"),
+        ).collect()[0]
+        out[name] = {
+            "max_bucket": 3,
+            "n_buckets": row["n_buckets"],
+            "dropped_buckets": int(row["dropped_buckets"]),
+            "dropped_rows": int(row["dropped_rows"]),
+        }
+    return out
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.0
-
-    spark = get_spark("pgferry_spark_bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-
-    # JVM/codegen warmup on the smallest table so q1 doesn't pay startup
-    # cost, plus one trivial mapInPandas so the Python worker pool (reused
-    # across queries) spawns before, not inside, the first measured
-    # Python-path query
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
-    # JIT warmup of the dedup family's hot codegen shapes (explode →
-    # wide multi-MIN HashAggregate → band explode → bucket self-join) on a
-    # 200-row synthetic corpus: the first wide-aggregate query otherwise
-    # pays a one-time multi-second C2-compilation bill that lands on
-    # whichever heavy query runs first, swamping its steady-state number
-    from pyspark.sql import functions as _F
-
-    from pgferry_spark.operators.dedup import lsh_candidate_pairs as _lsh_warm
-
-    _tiny = spark.range(200).select(
-        _F.col("id").alias("doc_id"),
-        _F.concat_ws(
-            " ", *[_F.conv(_F.hex((_F.col("id") + i) * 2654435761), 16, 10) for i in range(12)]
-        ).alias("text"),
-    )
-    _lsh_warm(_tiny, "text", "doc_id", 12, 4, 3, hash_fn="xxhash64").count()
-    # the md5 twin JITs different leaf expressions (md5+conv chain) — warm
-    # it too so the first md5-family query (cross_corpus_near_dup) doesn't
-    # absorb the one-time C2 bill
-    _lsh_warm(_tiny, "text", "doc_id", 12, 4, 3, hash_fn="md5").count()
-    # same treatment for the two Arrow-UDF families (blocked-GEMM cosine,
-    # simhash bit vote): their first execution pays Arrow serializer +
-    # worker-side import setup per core
-    from pgferry_spark.operators.dedup import (
-        embedding_near_dup_pairs as _emb_warm,
-        simhash_near_pairs as _sim_warm,
-    )
-
-    _vecs = spark.range(128).select(
-        _F.col("id").alias("vec_id"),
-        _F.transform(
-            _F.sequence(_F.lit(1), _F.lit(8)),
-            lambda i: (_F.pmod(_F.xxhash64(_F.col("id") * i), _F.lit(97)) / 97.0),
-        ).alias("embedding"),
-    )
-    _emb_warm(_vecs, "embedding", "vec_id", threshold=0.99, block_size=64).count()
-    _sim_warm(_tiny, "text", "doc_id", max_hamming=2).count()
-    spark.catalog.clearCache()
-
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+
+    spark = measure.session("pgferry_spark_bench")
+    builders = measure.registry()
+    measure.warm_up(spark, sf_dir)
+    meter = measure.Meter(spark)
+    # host-speed calibration (BASELINE.md §21), at run start and end
+    cpu_probe = {"start_ms": measure.cpu_probe_ms(), "start_mc8_ms": measure.cpu_probe_mc8_ms()}
+
+    records: dict[str, list[dict]] = {}
     runs: dict[str, list[float]] = {}
     timings: dict[str, float] = {}
-
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-    # ambient telemetry (VERDICT r13 Next #8): per-entry loadavg +
-    # whole-system /proc/stat deltas, so a driver-to-driver mover can be
-    # adjudicated ambient-vs-code from the ledger instead of a manual
-    # A/B. cpu_busy_frac ~ our own 32 threads when the box is quiet; a
-    # mover whose rounds show equal busy_frac but inflated wall is
-    # contention, not code.
-    def _proc_stat():
-        try:
-            with open("/proc/stat") as fh:
-                vals = [int(x) for x in fh.readline().split()[1:]]
-            return sum(vals), vals[3] + (vals[4] if len(vals) > 4 else 0)
-        except Exception:
-            return None, None
-
+    # ambient telemetry (VERDICT r13 Next #8): per-entry loadavg and
+    # whole-host busy fraction, so a mover can be adjudicated ambient vs
+    # code from the ledger: equal busy_frac with inflated wall is
+    # contention, not code
     ambient: dict[str, dict] = {}
-
-    # Per-RUN host-speed probe (round 14): a fixed single-core md5 chain
-    # timed once at start and once at end.  The r14 closings showed the
-    # host's EFFECTIVE speed drifting 1.2-1.3× between same-code runs
-    # with zero steal, clean loadavg, and idle-start — invisible to the
-    # per-entry fields above.  A fixed-work probe calibrates it: two
-    # runs whose probe times differ by the same factor as their entry
-    # medians are the same code on a different-speed host.
-    def _cpu_probe_ms() -> float:
-        import hashlib
-        import time as _time
-
-        t0 = _time.perf_counter()
-        h = b"x"
-        for _ in range(200_000):
-            h = hashlib.md5(h).digest()
-        return round((_time.perf_counter() - t0) * 1000, 1)
-
-    # The reading-6 lesson: the single-core probe read FAST (80 ms)
-    # during a run whose 32-thread entries read 1.3× slow — co-tenant
-    # SMT/memory-bandwidth contention hits multi-core throughput
-    # without touching a lone core or /proc/stat steal.  An 8-process
-    # parallel probe of the same fixed work sees it.  The number
-    # includes ProcessPoolExecutor spawn overhead (a few hundred ms),
-    # so its ABSOLUTE value overstates the work; it is comparable
-    # ACROSS runs — same spawn cost every time — which is all the
-    # run-to-run calibration needs.
-    def _cpu_probe_mc_ms(procs: int = 8) -> float | None:
-        import concurrent.futures as _cf
-        import time as _time
-
-        try:
-            t0 = _time.perf_counter()
-            with _cf.ProcessPoolExecutor(max_workers=procs) as ex:
-                list(ex.map(_probe_worker, range(procs)))
-            return round((_time.perf_counter() - t0) * 1000, 1)
-        except Exception:
-            return None
-
-    cpu_probe = {
-        "start_ms": _cpu_probe_ms(),
-        "start_mc8_ms": _cpu_probe_mc_ms(),
-    }
-
-    def _timed_entry(name, body):
+    # the migration (BASELINE.md's headline metric) runs last, after the
+    # queries' straggler caches are released like every other entry's
+    for name in HEADLINE + ["migration_8table"]:
         la = os.getloadavg()[0]
         tot0, idle0 = _proc_stat()
-        rs = body()
+        records[name] = meter.repeats(builders[name], sf_dir, repeats)
         tot1, idle1 = _proc_stat()
         busy = None
         if tot0 is not None and tot1 is not None and tot1 > tot0:
             busy = round(1.0 - (idle1 - idle0) / (tot1 - tot0), 4)
         ambient[name] = {"loadavg1_pre": round(la, 2), "cpu_busy_frac": busy}
-        return rs
-
-    for name in HEADLINE:
-        fn = qs[name]
-
-        def _body(fn=fn):
-            rs = []
-            for _ in range(repeats):
-                # cold-compute basis: operators that persist intermediates
-                # (bucket tables, tf tables) must not hand run 2+ a warm
-                # cache
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                rs.append(round(time.perf_counter() - t0, 3))
-            return rs
-
-        rs = _timed_entry(name, _body)
-        runs[name] = rs
-        timings[name] = round(_median(rs), 3)
-
-    # workload isolation: release any straggler caches before the migration
-    # so its ~100 small jobs aren't scheduled against a heap of dead blocks
-    spark.catalog.clearCache()
-
-    # the movement path — BASELINE.md's headline metric: full 8-table
-    # parquet -> spool migration (introspect, DDL, chunked reads, write,
-    # row-count validation, constraint replay transcript)
-    def _mig_body():
-        rs = []
-        for _ in range(repeats):
-            spark.catalog.clearCache()
-            rs.append(round(_migration(spark, sf_dir), 3))
-        return rs
-
-    rs = _timed_entry("migration_8table", _mig_body)
-    runs["migration_8table"] = rs
-    timings["migration_8table"] = round(_median(rs), 3)
+        runs[name] = [measure.wall(r) for r in records[name]]
+        timings[name] = round(measure.median(runs[name]), 3)
 
     total = round(sum(timings.values()), 3)
     flagship_total = round(sum(timings[n] for n in FLAGSHIP25), 3)
-    # Raw per-repeat runs go to a SIDE file: round 3 inlined them into the
-    # JSON line and the line outgrew the driver's tail capture ("parsed":
-    # null in BENCH_r03). The driver-facing line stays compact (medians +
-    # total only) and is the LAST thing on stdout.
-    # drop-rate evidence for the capped bench rows (VERDICT r4 ask #4):
-    # how many buckets/rows the max_bucket=3 cap excludes at this SF
-    capped_drops = {}
     try:
-        from pyspark.sql import functions as F2
-
-        from pgferry_spark.operators.dedup import lsh_bucket_table
-
-        docs = entry._t(spark, sf_dir, "documents")
-        for name, bdf in (
-            ("lsh_candidate_pairs_capped",
-             lsh_bucket_table(docs, "text", "doc_id", 12, 4, 3,
-                              hash_fn="xxhash64")),
-            ("cross_corpus_near_dup_capped",
-             lsh_bucket_table(docs.filter(F2.col("doc_id") % 10 != 0),
-                              "text", "doc_id", 12, 4, 3)),
-        ):
-            counts = bdf.groupBy("band_id", "band_hash").count()
-            row = counts.agg(
-                F2.count(F2.lit(1)).alias("n_buckets"),
-                F2.sum(F2.when(F2.col("count") > 3, 1).otherwise(0)).alias(
-                    "dropped_buckets"),
-                F2.sum(F2.when(F2.col("count") > 3, F2.col("count"))
-                       .otherwise(0)).alias("dropped_rows"),
-            ).collect()[0]
-            capped_drops[name] = {
-                "max_bucket": 3,
-                "n_buckets": row["n_buckets"],
-                "dropped_buckets": int(row["dropped_buckets"]),
-                "dropped_rows": int(row["dropped_rows"]),
-            }
+        capped_drops = _capped_drops(spark, sf_dir)
     except Exception as exc:  # stats must never sink the bench line
         capped_drops = {"error": str(exc)}
+    cpu_probe["end_ms"] = measure.cpu_probe_ms()
+    cpu_probe["end_mc8_ms"] = measure.cpu_probe_mc8_ms()
 
-    runs_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_runs.json")
-    cpu_probe["end_ms"] = _cpu_probe_ms()
-    cpu_probe["end_mc8_ms"] = _cpu_probe_mc_ms()
+    # Raw per-repeat runs and records go to a SIDE file: round 3 inlined
+    # them into the JSON line and the line outgrew the ~2 KB stdout tail a
+    # round keeps ("parsed": null in BENCH_r03)
+    runs_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_runs.json")
     with open(runs_path, "w") as fh:
         json.dump(
             {"runs": runs, "medians": timings, "repeats": repeats, "sf": sf,
              "flagship25": FLAGSHIP25, "flagship25_total": flagship_total,
              "capped_drop_stats": capped_drops, "ambient": ambient,
-             "cpu_probe": cpu_probe},
+             "cpu_probe": cpu_probe, "records": records},
             fh, indent=1,
         )
     sys.stdout.flush()
     # VERDICT r5 Next #1 + r14 Next #2: the final stdout line must stay
-    # inside the driver's ~2 KB tail capture (BENCH_r05 had "parsed":
-    # null because the 92-entry per-query dict overflowed the buffer),
-    # AND the driver's per_query/scaling tables populate only from a
-    # "queries" dict inside this line.  Resolution: inline the
-    # fixed-priority subset up to LINE_BYTE_BUDGET; the complete
-    # medians + raw repeats stay in BENCH_runs.json.
+    # inside the ~2 KB stdout tail a round keeps, AND a round's
+    # per_query/scaling tables populate only from a "queries" dict inside
+    # this line: inline the fixed-priority subset up to LINE_BYTE_BUDGET
     base = {
         "metric": "headline_queries_total",
         "value": total,
@@ -691,9 +511,8 @@ def main() -> int:
         # entries every round from r7 on
         "flagship25_total": flagship_total,
         "queries": {},
-        # host-speed calibration (BASELINE.md §21): single-core and
-        # 8-process md5 probe at run start/end, so an ambient-suspect
-        # headline is adjudicable from the line alone
+        # single-core and 8-process probe at run start/end, so an
+        # ambient-suspect headline is adjudicable from the line alone
         "cpu_probe_ms": [
             cpu_probe["start_ms"], cpu_probe["end_ms"],
             cpu_probe["start_mc8_ms"], cpu_probe["end_mc8_ms"],

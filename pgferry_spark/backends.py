@@ -19,6 +19,7 @@
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .catalog.identifiers import mssql_ident, mysql_ident
+from .catalog.identifiers import mssql_ident, mysql_ident, pg_ident
 from .catalog.model import Schema, SourceObjects, Table
 from .catalog.parsers import sqlite_normalize_affinity
 from .sources import sqlite_introspect as sq
@@ -162,8 +163,8 @@ class SqliteSource:
             # sqlite3.Row per row (introspection's factory) is wasted work
             con.row_factory = None
             try:
-                cols = ", ".join(sq.quote_ident(c.source_name) for c in table.columns)
-                src = sq.quote_ident(table.source_name)
+                cols = ", ".join(pg_ident(c.source_name) for c in table.columns)
+                src = pg_ident(table.source_name)
                 for p in preds:  # sequential over chunks: 1 connection total
                     sql = f"SELECT {cols} FROM {src}"
                     if p:
@@ -182,16 +183,16 @@ class SqliteSource:
     def count(self, table: Table) -> int:
         con = sq.open_readonly(self.path)
         try:
-            return con.execute(f"SELECT COUNT(*) FROM {sq.quote_ident(table.source_name)}").fetchone()[0]
+            return con.execute(f"SELECT COUNT(*) FROM {pg_ident(table.source_name)}").fetchone()[0]
         finally:
             con.close()
 
     def min_max(self, table: Table, key_source_name: str):
         con = sq.open_readonly(self.path)
         try:
-            key = sq.quote_ident(key_source_name)
+            key = pg_ident(key_source_name)
             row = con.execute(
-                f"SELECT MIN({key}), MAX({key}) FROM {sq.quote_ident(table.source_name)}"
+                f"SELECT MIN({key}), MAX({key}) FROM {pg_ident(table.source_name)}"
             ).fetchone()
             return row[0], row[1]
         finally:
@@ -377,6 +378,10 @@ def _parquet_footer_min_max(path: str, column: str):
         return None
 
 
+# a double-quoted PostgreSQL identifier (group 1) or a string literal
+_PG_QUOTED = re.compile(r'"((?:[^"]|"")*)"|\'(?:[^\']|\'\')*\'')
+
+
 @dataclass
 class SpoolTarget:
     spark: SparkSession
@@ -413,9 +418,11 @@ class SpoolTarget:
         return n if n is not None else self.spark.read.parquet(self._path(table)).count()
 
     def delete_where(self, table: str, predicate: str) -> None:
-        """Idempotent-resume support: drop rows matching the predicate —
-        the parquet-spool twin of a SQL target's ``DELETE FROM .. WHERE``
-        (rewrite-on-delete, like any immutable-file table format)."""
+        """Idempotent-resume support: drop rows matching the PostgreSQL
+        predicate — the parquet-spool twin of a SQL target's ``DELETE FROM
+        .. WHERE`` (rewrite-on-delete, like any immutable-file table
+        format). Spark SQL reads ``"x"`` as a string literal, so each
+        double-quoted identifier is re-quoted with backticks first."""
         import shutil
 
         from pyspark.sql import functions as F
@@ -423,8 +430,12 @@ class SpoolTarget:
         path = self._path(table)
         if not os.path.exists(path):
             return
+        spark_sql = _PG_QUOTED.sub(
+            lambda m: m[0] if m[1] is None else mysql_ident(m[1].replace('""', '"')),
+            predicate,
+        )
         tmp = path + "__delete_tmp"
-        self.spark.read.parquet(path).filter(~F.expr(predicate)).write.mode(
+        self.spark.read.parquet(path).filter(~F.expr(spark_sql)).write.mode(
             "overwrite"
         ).parquet(tmp)
         shutil.rmtree(path)

@@ -90,6 +90,17 @@ def mssql_ident(name: str) -> str:
     return "[" + name.replace("]", "]]") + "]"
 
 
+def source_ident(kind: str, name: str) -> str:
+    """Quote a column for SQL that a source of ``kind`` evaluates: Spark SQL
+    (a parquet source's filters) and MySQL quote with backticks, MSSQL with
+    brackets, SQLite like PostgreSQL."""
+    if kind in ("parquet", "mysql"):
+        return mysql_ident(name)
+    if kind == "mssql":
+        return mssql_ident(name)
+    return pg_ident(name)
+
+
 def truncate_identifier(name: str, max_len: int = PG_MAX_IDENT) -> str:
     """Deterministically shorten an identifier to ``max_len`` by replacing the
     tail with an 8-hex-digit FNV-1a-32 content hash, so two long names that

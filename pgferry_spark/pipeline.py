@@ -47,6 +47,7 @@ from typing import Callable, Protocol
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog.identifiers import pg_ident, source_ident
 from .catalog.model import Schema, SourceObjects, Table
 from .config import MigrationConfig
 from .ddl import build_post_migrate_plan, create_schema_sql, create_table_sql, create_enum_type_sql
@@ -215,12 +216,15 @@ class MigrationPipeline:
         key = chunk_key_for_table(pk_cols, col_types)
         if key is None:
             return plan_table_chunks(table.pg_name, None, None, None, self.cfg.chunk_size)
-        # predicates execute against the SOURCE database, so the chunk key in
-        # the predicate text must be the source column name, not the
-        # normalized pg_name (they differ whenever snake_casing renames)
+        # predicates execute against the SOURCE, so the chunk key in the
+        # predicate text is the source column name (not the normalized
+        # pg_name, which differs whenever snake_casing renames), quoted in
+        # the source's dialect (a key may be a reserved word)
         src_name = table.column(key).source_name
         lo, hi = self.source.min_max(table, src_name)
-        return plan_table_chunks(table.pg_name, src_name, lo, hi, self.cfg.chunk_size)
+        return plan_table_chunks(
+            table.pg_name, source_ident(self.source.kind, src_name), lo, hi, self.cfg.chunk_size,
+        )
 
     def plan_advice(self, tables: list[Table]):
         """Measure → advise → apply, before the movement phase (closes the
@@ -291,7 +295,7 @@ class MigrationPipeline:
         self_keys: dict[tuple[str, ...], DataFrame] | None = None,
         *,
         append: bool = False,
-        rows_in: Observation | None = None,
+        rows_in: Observation,
     ) -> tuple[DataFrame, int, int]:
         """J1 applied in-flight: left-join each FK against its parent's key
         set (``_key_sets``, the distinct key tuples of the parent's cleaned
@@ -313,15 +317,13 @@ class MigrationPipeline:
         the write job itself: rows out from an ``Observation`` on the
         written frame, rows in from ``rows_in``, an ``Observation`` the
         caller placed on ``df``'s read (``_read_transformed``), under its
-        persist when the plan scans ``df`` twice. Without ``rows_in`` rows
-        in are counted with one more job after the write."""
+        persist when the plan scans ``df`` twice."""
         cleaned, any_delete_rule = self._apply_fk_rules(df, table, self_keys)
         if not any_delete_rule:
             return cleaned, 0, self.target.write(cleaned, table.pg_name, append=append)
         rows_out = Observation()
         rows = self.target.write(_count_rows(cleaned, rows_out), table.pg_name, append=append)
-        n_in = df.count() if rows_in is None else rows_in.get["rows"]
-        return cleaned, n_in - rows_out.get["rows"], rows
+        return cleaned, rows_in.get["rows"] - rows_out.get["rows"], rows
 
     def _apply_fk_rules(
         self, df: DataFrame, table: Table,
@@ -432,8 +434,9 @@ class MigrationPipeline:
             # partitions of an unrecorded chunk may have committed before the
             # crash — purge the pending key ranges so re-writes land exactly
             # once (reference records each chunk after its own COPY
-            # transaction; the range DELETE is the idempotent equivalent)
-            pg_key = table.column(plan.chunk_key).pg_name
+            # transaction; the range DELETE is the idempotent equivalent).
+            # The target holds pg names: the chunk key is the one-column PK
+            pg_key = pg_ident(table.primary_key.columns[0])
             self.target.delete_where(name, plan.merged_predicate(todo, pg_key))
         size = max(1, self.cfg.effective_workers() * 4)
         batches = [todo[s : s + size] for s in range(0, len(todo), size)]
@@ -613,7 +616,7 @@ class MigrationPipeline:
                 # load (reference post.go:542-554, main.go:350-402)
                 for t in tables:
                     self.target.execute(
-                        f"ALTER TABLE {_q(self.cfg.target_schema)}.{_q(t.pg_name)} "
+                        f"ALTER TABLE {pg_ident(self.cfg.target_schema)}.{pg_ident(t.pg_name)} "
                         "DISABLE TRIGGER ALL"
                     )
             run_hooks(self.cfg.hooks, "before_data", self.cfg.target_schema, self.target.execute)
@@ -641,7 +644,7 @@ class MigrationPipeline:
             if self.cfg.mode == "data_only":
                 for t in tables:
                     self.target.execute(
-                        f"ALTER TABLE {_q(self.cfg.target_schema)}.{_q(t.pg_name)} "
+                        f"ALTER TABLE {pg_ident(self.cfg.target_schema)}.{pg_ident(t.pg_name)} "
                         "ENABLE TRIGGER ALL"
                     )
 
@@ -693,10 +696,6 @@ class MigrationPipeline:
 def _count_rows(df: DataFrame, observation: Observation) -> DataFrame:
     """``df`` with ``observation`` counting its rows as ``rows``."""
     return df.observe(observation, F.count(F.lit(1)).alias("rows"))
-
-
-def _q(name: str) -> str:
-    return '"' + name.replace('"', '""') + '"'
 
 
 def _dependency_waves(ordered: list[Table]) -> list[list[Table]]:

@@ -1,6 +1,6 @@
-"""JDBC source/sink builders — the movement layer of the migration pipeline.
+"""JDBC source builders — the read side of the migration pipeline.
 
-Maps the reference's read/write path onto Spark JDBC:
+Maps the reference's read path onto Spark JDBC:
 
 * S1/S2 — ``read_table`` builds a partitioned read whose ``predicates`` list
   is exactly the chunk plan (reference chunk.go:73-94); one Spark partition
@@ -10,7 +10,8 @@ Maps the reference's read/write path onto Spark JDBC:
   query (reference migrate.go:492-531): MySQL spatial → ``ST_AsWKB``
   SRID-prefixed concat, MSSQL ``hierarchyid.ToString()``, sql_variant CAST.
 * S6 — DSN/session normalization: UTC session time zone, utf8mb4.
-* K1 — JDBC batched-insert writer (the COPY-protocol sink lives in sink.py).
+
+The write side (K1) is the COPY-protocol sink in sink.py.
 
 No database server exists in the test environment, so these builders are
 exercised by unit tests over their generated options/SQL; the integration
@@ -115,11 +116,9 @@ def read_table(
 ) -> DataFrame:
     """Partitioned JDBC read: chunk predicates → one partition per chunk."""
     query = build_source_select(table, source_kind, cfg)
-    reader = spark.read.format("jdbc").options(**src.options())
     preds = plan.predicates() if plan else None
     if preds:
-        # Spark's predicates API requires dbtable; wrap the projection query.
-        reader = reader.option("dbtable", f"({query}) AS t")
+        # Spark's predicates API requires a table; wrap the projection query.
         jdbc_opts = src.options()
         return spark.read.jdbc(
             url=jdbc_opts.pop("url"),
@@ -127,27 +126,5 @@ def read_table(
             predicates=preds,
             properties=jdbc_opts,
         )
-    return reader.option("query", query).load()
+    return spark.read.format("jdbc").options(**src.options()).option("query", query).load()
 
-
-def write_table(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    batch_size: int = 10_000,
-    properties: dict[str, str] | None = None,
-) -> None:
-    """K1 (JDBC variant) — batched-insert writer. Each partition writes in
-    its own connection/transaction, giving chunk-level idempotence when the
-    chunk plan equals the partitioning."""
-    writer = (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batch_size))
-        .option("isolationLevel", "READ_COMMITTED")
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.mode(mode).save()

@@ -10,21 +10,17 @@ pipeline's row-count observations — an RDD action such as
 
 Each partition COPYs inside ONE transaction, so a partition (= chunk) either
 lands fully or not at all — the property the checkpoint/resume layer needs
-(SURVEY §7 hard-part 5). Two writers, same shape:
-
-* ``PsqlCopyDataSource`` / ``PsqlTarget`` — COPY FROM STDIN through the
-  ``psql`` client subprocess: a REAL PostgreSQL COPY execution (one psql
-  invocation = one transaction per partition), used by the integration
-  tests against a throwaway local server;
-* ``spool_partition_writer`` — serverless CSV spool stand-in.
+(SURVEY §7 hard-part 5). ``PsqlCopyDataSource`` / ``PsqlTarget`` COPY FROM
+STDIN through the ``psql`` client subprocess: a REAL PostgreSQL COPY
+execution (one psql invocation = one transaction per partition), used by the
+integration tests against a throwaway local server. Without a server, the
+pipeline lands in ``backends.SpoolTarget``'s parquet spool instead.
 """
 
 from __future__ import annotations
 
-import csv
 import itertools
 import json
-import os
 import subprocess
 from dataclasses import dataclass
 from typing import Iterator
@@ -59,31 +55,6 @@ def _copy_escape(s: str) -> str:
         .replace("\n", "\\n")
         .replace("\r", "\\r")
     )
-
-
-def spool_partition_writer(spool_dir: str):
-    """Test-environment stand-in: write each partition to one CSV spool file
-    (same per-partition transactional shape, observable on local disk)."""
-
-    def write_partition_index(idx: int, rows: Iterator) -> Iterator:
-        os.makedirs(spool_dir, exist_ok=True)
-        tmp = os.path.join(spool_dir, f"part-{idx:05d}.csv.tmp")
-        final = os.path.join(spool_dir, f"part-{idx:05d}.csv")
-        with open(tmp, "w", newline="") as f:
-            w = csv.writer(f)
-            for row in rows:
-                w.writerow(list(row))
-        os.replace(tmp, final)  # atomic per-partition commit
-        return iter([])
-
-    return write_partition_index
-
-
-def spool_to_dir(df: DataFrame, spool_dir: str) -> int:
-    """Spool each partition atomically to ``spool_dir``; returns #partitions."""
-    writer = spool_partition_writer(spool_dir)
-    df.rdd.mapPartitionsWithIndex(writer).count()
-    return df.rdd.getNumPartitions()
 
 
 class _PsqlCopyWriter(DataSourceWriter):

@@ -16,7 +16,7 @@ from __future__ import annotations
 import re
 import sqlite3
 
-from ..catalog.identifiers import normalize_identifier
+from ..catalog.identifiers import normalize_identifier, pg_ident
 from ..catalog.model import Column, ForeignKey, Index, Schema, SourceObjects, Table
 
 
@@ -62,7 +62,7 @@ def _has_autoincrement(con: sqlite3.Connection, table: str, column: str) -> bool
 def introspect_table(con: sqlite3.Connection, name: str, snake_case: bool) -> Table:
     cols: list[Column] = []
     pk_cols: list[tuple[int, str]] = []
-    for r in con.execute(f"PRAGMA table_xinfo({quote_ident(name)})"):
+    for r in con.execute(f"PRAGMA table_xinfo({pg_ident(name)})"):
         if r["hidden"] == 1:  # hidden columns of virtual tables
             continue
         is_generated = r["hidden"] in (2, 3)  # VIRTUAL / STORED generated
@@ -88,12 +88,12 @@ def introspect_table(con: sqlite3.Connection, name: str, snake_case: bool) -> Ta
         primary_key = Index("PRIMARY", "PRIMARY", ordered, is_primary=True, unique=True)
 
     indexes: list[Index] = []
-    for ir in con.execute(f"PRAGMA index_list({quote_ident(name)})"):
+    for ir in con.execute(f"PRAGMA index_list({pg_ident(name)})"):
         if ir["origin"] == "pk":
             continue
         idx_cols = []
         has_expr = False
-        for ic in con.execute(f"PRAGMA index_info({quote_ident(ir['name'])})"):
+        for ic in con.execute(f"PRAGMA index_info({pg_ident(ir['name'])})"):
             if ic["name"] is None:
                 has_expr = True
             else:
@@ -110,7 +110,7 @@ def introspect_table(con: sqlite3.Connection, name: str, snake_case: bool) -> Ta
 
     fks: list[ForeignKey] = []
     by_id: dict[int, dict] = {}
-    for fr in con.execute(f"PRAGMA foreign_key_list({quote_ident(name)})"):
+    for fr in con.execute(f"PRAGMA foreign_key_list({pg_ident(name)})"):
         ent = by_id.setdefault(
             fr["id"],
             {"table": fr["table"], "from": [], "to": [],
@@ -161,8 +161,3 @@ def introspect_source_objects(path: str) -> SourceObjects:
         return SourceObjects(views=views, routines=[], triggers=triggers)
     finally:
         con.close()
-
-
-def quote_ident(name: str) -> str:
-    """SQLite identifier quoting: embedded double quotes are doubled."""
-    return '"' + name.replace('"', '""') + '"'

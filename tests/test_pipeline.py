@@ -503,7 +503,7 @@ def test_resume_after_partition_commit_without_chunk_record(spark, tmp_path):
     assert final.select("id").distinct().count() == 500  # no duplicates
     # the six pending chunks are adjacent: one purge covers them all
     assert [s for s in resumed.ddl if s.startswith("DELETE FROM big")] == [
-        "DELETE FROM big WHERE id >= 201 AND id <= 500"
+        'DELETE FROM big WHERE "id" >= 201 AND "id" <= 500'
     ]
 
 
@@ -550,6 +550,28 @@ class _CrashingTarget(SpoolTarget):
 
 
 _NODE = "CREATE TABLE node (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES node(id));"
+
+
+@pytest.mark.parametrize("key, pg_key", [("order", "order"), ("OrderId", "order_id")])
+def test_resume_with_a_reserved_or_renamed_chunk_key(spark, tmp_path, key, pg_key):
+    """The chunk key is quoted in each dialect that evaluates it: a reserved
+    word (``order``) reads from SQLite and purges from the target, and a key
+    that snake-casing renames purges under its target name on resume."""
+    db = _fk_db(str(tmp_path / "k.db"), f'CREATE TABLE t ("{key}" INTEGER PRIMARY KEY, v TEXT);', {
+        "t": [(i, f"v{i}") for i in range(1, 101)],
+    })
+    ckpt, out = str(tmp_path / "ckpt.json"), str(tmp_path / "out")
+    crashing = _CrashingTarget(spark, out, table="t", crash_on=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _chunked_pipeline(spark, db, crashing, ckpt).run()
+
+    resumed = SpoolTarget(spark, out)
+    assert _chunked_pipeline(spark, db, resumed, ckpt).run().ok
+    assert [s for s in resumed.ddl if s.startswith("DELETE")] == [
+        f'DELETE FROM t WHERE "{pg_key}" >= 41 AND "{pg_key}" <= 100'
+    ]
+    landed = spark.read.parquet(out + "/t").select(pg_key).collect()
+    assert sorted(r[0] for r in landed) == list(range(1, 101))
 
 
 def test_resumed_self_fk_table_reports_removed_orphans(spark, tmp_path):

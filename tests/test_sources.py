@@ -4,7 +4,6 @@ from pgferry_spark.catalog.model import Column, Table
 from pgferry_spark.plans.chunk import plan_table_chunks
 from pgferry_spark.sources.jdbc import build_source_select, mysql_source, select_expression
 from pgferry_spark.sources.parquet import chunked_parquet_read, read_parquet
-from pgferry_spark.sources.sink import spool_to_dir
 from pgferry_spark.types import TypeMappingConfig
 
 SF = "/root/testdata/sf0.001"
@@ -63,13 +62,3 @@ def test_mysql_source_session_normalization():
     assert "time_zone = '+00:00'" in opts["sessionInitStatement"]
     assert opts["url"] == "jdbc:mysql://h/db"
 
-
-def test_spool_sink_atomic_partition_files(spark, tmp_path):
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id: long, v: string").repartition(4)
-    spool = str(tmp_path / "spool")
-    n = spool_to_dir(df, spool)
-    files = sorted(os.listdir(spool))
-    assert len(files) == n == 4
-    assert all(f.endswith(".csv") for f in files)  # no .tmp leftovers
-    total = sum(len(open(os.path.join(spool, f)).read().strip().splitlines()) for f in files)
-    assert total == 20

@@ -1,5 +1,4 @@
-"""One A/B leg: run named queries under the driver bench protocol in a
-FRESH JVM against an arbitrary repo tree.
+"""One A/B leg: time named entries of an arbitrary repo tree in a FRESH JVM.
 
 Usage:
     python tools/ab_bench.py TREE_DIR QUERY [QUERY ...]
@@ -7,9 +6,11 @@ Usage:
 Each invocation is one leg of an interleaved A/B (BASELINE.md §6/§7/§10/
 §13 drift-adjudication ritual): the caller alternates trees across
 iterations so ambient machine drift hits both trees symmetrically.
-Protocol mirrors bench.py: the tree's own tuned session, 3 in-JVM
-repeats per query with clearCache between (repeat 1 is the cold,
-2-3 the warm envelope), `$SPARK_GRAFT_SF_DIR` data (default sf0.1).
+TREE supplies only the entries and the package; the protocol is this
+checkout's ``tools/measure.py`` (warm-up, noop forcing, 3 repeats with
+the cache cleared before each), so both legs are timed the same way.
+``migration_8table`` is the movement-path entry. Data is
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
 Prints ONE JSON line: {"tree": ..., "runs": {query: [r1, r2, r3]}}.
 """
 
@@ -18,40 +19,25 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure
 
 
 def main() -> int:
     tree = os.path.abspath(sys.argv[1])
-    queries = sys.argv[2:]
     sys.path.insert(0, tree)
     os.chdir(tree)
-
-    import __spark_entry__ as entry
-    from pgferry_spark.session import get_spark
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark()
-    qs = entry.queries()
-    runs: dict[str, list[float]] = {}
-    for name in queries:
-        rs = []
-        if name == "migration_8table":
-            # bench-only composite (the movement-path headline): time the
-            # tree's own bench._migration under the same repeat protocol
-            import bench as tree_bench
-
-            for _ in range(3):
-                spark.catalog.clearCache()
-                rs.append(round(tree_bench._migration(spark, sf_dir), 3))
-        else:
-            fn = qs[name]
-            for _ in range(3):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                rs.append(round(time.perf_counter() - t0, 3))
-        runs[name] = rs
+    spark = measure.session("ab_bench")
+    builders = measure.registry()
+    measure.warm_up(spark, sf_dir)
+    meter = measure.Meter(spark)
+    runs = {
+        name: [measure.wall(r) for r in meter.repeats(builders[name], sf_dir, 3)]
+        for name in sys.argv[2:]
+    }
     print(json.dumps({"tree": tree, "runs": runs}))
     return 0
 

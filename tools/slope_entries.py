@@ -1,55 +1,72 @@
-"""Per-entry scaling slope: run named queries at sf0.1 then sf1 in ONE
-JVM (sf0.1 pass doubles as JIT warmup) and print the 10x-data wall
-ratios — the per-round additions companion to tools/scale_slope.py's
-frozen flagship subset.
+"""Scaling slope: entries at sf0.1 then sf1 (10x data) in ONE JVM, and the
+per-entry wall ratio.
 
-Usage: python tools/slope_entries.py QUERY [QUERY ...] [--sf1 DIR]
+The cheapest in-sandbox evidence for the 100 TB design claims. Linear
+operators land well under 10x (fixed overheads amortize); anything ≳20x
+is a named superlinearity (pair explosion, driver collect,
+single-partition window) to fix or posture-cap. With no QUERY names it
+runs bench.py's frozen flagship-25, ``migration_8table`` included.
+
+Protocol (``tools/measure.py``): warm-up, a first sf0.1 pass that only
+warms each entry's own shapes, then one repeat per entry at sf0.1 and at
+sf1, noop-forced, the cache cleared before each.
+
+Usage: python tools/slope_entries.py [QUERY ...] [--sf1 DIR]
+(default .data/sf1 in the checkout; generate it with tools/make_sf_scale.py)
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-import __spark_entry__ as entry
-from pgferry_spark.session import get_spark
+from tools import measure
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    argv = sys.argv[1:]
     sf1_dir = os.path.join(ROOT, ".data", "sf1")
-    if "--sf1" in sys.argv:
-        sf1_dir = sys.argv[sys.argv.index("--sf1") + 1]
+    if "--sf1" in argv:
+        i = argv.index("--sf1")
+        sf1_dir = argv[i + 1]
+        del argv[i:i + 2]
+    if not argv:
+        import bench
+
+        argv = bench.FLAGSHIP25
     sf01_dir = "/root/testdata/sf0.1"
-    spark = get_spark("slope_entries")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
+    spark = measure.session("slope_entries")
+    builders = measure.registry()
+    measure.warm_up(spark, sf01_dir)
+    meter = measure.Meter(spark)
 
     def run_scale(sf_dir: str) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in args:
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            out[name] = round(time.perf_counter() - t0, 3)
-        return out
+        return {
+            name: measure.wall(meter.repeats(builders[name], sf_dir, 1)[0])
+            for name in argv
+        }
 
-    a = run_scale(sf01_dir)  # warmup + baseline
-    a = run_scale(sf01_dir)  # warm reading
+    run_scale(sf01_dir)  # each entry's own warm-up
+    a = run_scale(sf01_dir)
     b = run_scale(sf1_dir)
     print("| entry | sf0.1 s (warm) | sf1 s | ratio (10x data) |")
     print("|---|---|---|---|")
-    for name in args:
+    flagged = []
+    for name in argv:
         r = round(b[name] / a[name], 1) if a[name] > 0 else float("inf")
-        mark = " **SUPERLINEAR**" if r >= 20 else ""
+        mark = ""
+        if r >= 20:
+            flagged.append(name)
+            mark = " **SUPERLINEAR**"
         print(f"| {name} | {a[name]} | {b[name]} | {r}x{mark} |")
     ta, tb = round(sum(a.values()), 1), round(sum(b.values()), 1)
-    print(f"| **total** | **{ta}** | **{tb}** | "
-          f"**{round(tb / ta, 1)}x** |")
+    print(f"| **total** | **{ta}** | **{tb}** | **{round(tb / ta, 1)}x** |")
+    print(json.dumps({"sf01_total": ta, "sf1_total": tb,
+                      "flagged": flagged, "load1": os.getloadavg()[0]}))
     return 0
 
 

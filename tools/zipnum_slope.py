@@ -24,8 +24,10 @@ Usage:  python tools/zipnum_slope.py [sf_dir ...]
 from __future__ import annotations
 
 import bisect
+import hashlib
 import os
 import sys
+import tempfile
 import time
 import tracemalloc
 
@@ -33,6 +35,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
+
+from tools import measure
 
 
 def build_lines(spark, sf_dir):
@@ -117,9 +121,6 @@ def worst_case_replay(cluster, shard_dir, keys):
 
 
 def main() -> int:
-    import tempfile
-
-    from pgferry_spark.session import get_spark
     from pgferry_spark.sources.zipnum import (
         publish_zipnum_sharded,
         zipnum_bulk_lookup,
@@ -128,7 +129,8 @@ def main() -> int:
     sf_dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1", os.path.join(ROOT, ".data", "sf1"),
     ]
-    spark = get_spark("zipnum-slope")
+    spark = measure.session("zipnum-slope")
+    meter = measure.Meter(spark)
     results = []
     for sf_dir in sf_dirs:
         out = tempfile.mkdtemp(prefix="zipnum_slope_")
@@ -142,26 +144,23 @@ def main() -> int:
             lines.select(F.col("surt").alias("urlkey")).distinct()
             .orderBy(F.md5(F.concat(F.col("urlkey"), F.lit("worst"))))
             .repartition(8)
-        )
-        keys.persist().count()
-        walls = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n = zipnum_bulk_lookup(keys, cluster, out).count()
-            walls.append(round(time.perf_counter() - t0, 3))
+        ).persist()
+        measure.force(keys)
+        # cold then warm pass over the persisted keys: no cache clearing
+        cold, warm = [
+            measure.wall(meter.once(lambda s, d: zipnum_bulk_lookup(keys, cluster, out), sf_dir))
+            for _ in range(2)
+        ]
         keys.unpersist()
         # same deliberately-unsorted order as the Spark run
-        import hashlib
-
         key_list = sorted(
             (r.surt for r in lines.select("surt").distinct().collect()),
             key=lambda k: hashlib.md5((k + "worst").encode()).hexdigest(),
         )
         replay = worst_case_replay(cluster, out, key_list)
         results.append({
-            "sf_dir": sf_dir, "lines": lines.count(),
-            "blocks": len(cluster), "lookup_rows": n,
-            "cold_s": walls[0], "warm_s": walls[1], **replay,
+            "sf_dir": sf_dir, "lines": lines.count(), "blocks": len(cluster),
+            "cold_s": cold, "warm_s": warm, **replay,
         })
     print("| sf | lines | blocks | lookup warm s | lru peak | "
           "task decodes | py peak MB |")
