@@ -1,14 +1,13 @@
 """Concrete source/target backends for the migration pipeline.
 
-* ``SqliteSource`` — real introspection through the stdlib driver (the
-  pragma surface, reference source_sqlite.go) + bounded-memory row
-  streaming: one read connection (the reference's SQLite cap,
-  source_sqlite.go:173) fetches ``fetch_batch`` rows at a time into a
-  parquet spool, and Spark scans the spool distributed. MySQL/MSSQL take
-  the JDBC partitioned path (sources/jdbc.py) instead.
-* ``SingleTxSource`` — the `single_tx` consistent-snapshot path (reference
-  migrate.go:149-259): all tables sequentially through ONE DB-API
-  connection in one transaction, streamed through the same spool.
+* ``SingleTxSource`` — the driver-side cursor source: every table reads
+  sequentially through ONE DB-API connection, streamed ``fetch_batch``
+  rows at a time into a parquet spool that Spark scans distributed. Given
+  a ``begin_sql``, it is the `single_tx` consistent-snapshot path
+  (reference migrate.go:149-259).
+* ``SqliteSource`` — the cursor source over one read-only stdlib
+  connection (the reference's SQLite cap, source_sqlite.go:173), plus real
+  introspection through the pragma surface (reference source_sqlite.go).
 * ``ParquetSource`` — parquet-lake source; fully distributed scans.
 * ``SpoolTarget`` — test/diagnostic target: DDL statements are recorded in
   order (inspectable, like a dry-run transcript), data lands as parquet per
@@ -32,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .catalog.identifiers import mssql_ident, mysql_ident, pg_ident
+from .catalog.identifiers import mysql_ident, source_ident
 from .catalog.model import Schema, SourceObjects, Table
 from .catalog.parsers import sqlite_normalize_affinity
 from .sources import sqlite_introspect as sq
@@ -45,24 +44,6 @@ _AFFINITY_SPARK = {
     "NUMERIC": DoubleType(),
     "BLOB": BinaryType(),
 }
-
-
-def _arrow_type(spark_type):
-    import pyarrow as pa
-
-    mapping = {
-        "bigint": pa.int64(), "int": pa.int32(), "smallint": pa.int16(),
-        "tinyint": pa.int8(), "double": pa.float64(), "float": pa.float32(),
-        "string": pa.string(), "binary": pa.binary(), "boolean": pa.bool_(),
-        "date": pa.date32(), "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-    }
-    t = mapping.get(spark_type.simpleString())
-    if t is None:
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        t = to_arrow_type(spark_type)
-    return t
 
 
 def spool_batches(
@@ -84,12 +65,13 @@ def spool_batches(
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
 
     spool = tempfile.mkdtemp(prefix="pgferry_spool_")
     if spools is not None:
         spools.append(spool)
     arrow_fields = [
-        pa.field(f.name, _arrow_type(f.dataType), nullable=True)
+        pa.field(f.name, to_arrow_type(f.dataType), nullable=True)
         for f in schema.fields
     ]
     arrow_schema = pa.schema(arrow_fields)
@@ -121,16 +103,121 @@ def remove_spools(spools: list[str]) -> None:
 
 
 @dataclass
-class SqliteSource:
-    path: str
-    snake_case: bool = True
-    kind: str = "sqlite"
-    fetch_batch: int = 10_000  # rows held in driver memory at a time
+class SingleTxSource:
+    """The driver-side cursor source: every table reads sequentially
+    through ONE DB-API connection, opened on first use and closed by
+    ``close``. Each ``read_table`` streams ``fetch_batch``-row cursor
+    fetches into a parquet spool (bounded driver memory, distributed
+    downstream scan); counts and MIN/MAX probes run on the same connection.
+
+    With a ``begin_sql`` it is O3, the consistent-snapshot source (reference
+    migrate.go:149-259, `single_tx` mode). A distributed JDBC read opens
+    independent connections per partition and cannot share a transaction —
+    the one reference semantic Spark cannot distribute (SURVEY §7 hard-part
+    1). ``connect`` opens the single connection and ``begin_sql`` starts the
+    snapshot (e.g. MySQL ``START TRANSACTION WITH CONSISTENT SNAPSHOT`` after
+    ``SET TRANSACTION ISOLATION LEVEL REPEATABLE READ``; MSSQL ``SET
+    TRANSACTION ISOLATION LEVEL SNAPSHOT`` + ``BEGIN TRAN``). The pipeline's
+    config matrix already forces ``workers <= 1`` in this mode, so reads are
+    strictly sequential — the same throughput shape as the reference.
+    """
+
+    connect: object  # Callable[[], DB-API connection]
+    schema: Schema
+    read_schemas: dict  # pg_name -> StructType
+    begin_sql: tuple = ()
+    objects: SourceObjects = field(default_factory=SourceObjects)
+    kind: str = "mysql"
+    fetch_batch: int = 10_000
+    _con: object = field(default=None, repr=False)
     _spools: list = field(default_factory=list, init=False, repr=False)
 
+    def _connection(self):
+        if self._con is None:
+            self._con = self.connect()
+            cur = self._con.cursor()
+            for stmt in self.begin_sql:
+                cur.execute(stmt)
+        return self._con
+
+    def _fetchone(self, sql: str):
+        cur = self._connection().cursor()
+        cur.execute(sql)
+        return cur.fetchone()
+
     def close(self) -> None:
-        """Remove the parquet spools this source's reads created."""
+        """End the snapshot transaction, close the connection and remove the
+        reads' spools."""
         remove_spools(self._spools)
+        if self._con is not None:
+            try:
+                self._con.rollback()  # read-only tx: end the snapshot
+            finally:
+                self._con.close()
+                self._con = None
+
+    def introspect(self) -> Schema:
+        return self.schema
+
+    def source_objects(self) -> SourceObjects:
+        return self.objects
+
+    def read_schema(self, table: Table) -> StructType:
+        """Spark read schema of ``table``'s columns (``table`` may be
+        narrowed to some columns: only their fields are read)."""
+        full = self.read_schemas[table.pg_name]
+        return StructType([full[c.pg_name] for c in table.columns])
+
+    def read_table(
+        self, spark: SparkSession, table: Table, predicates: list[str] | None
+    ) -> DataFrame:
+        cols = ", ".join(source_ident(self.kind, c.source_name) for c in table.columns)
+        sql = f"SELECT {cols} FROM {source_ident(self.kind, table.source_name)}"
+        con = self._connection()
+
+        def batches():
+            for p in predicates or [None]:  # sequential chunks, one connection
+                cur = con.cursor()
+                cur.execute(f"{sql} WHERE {p}" if p else sql)
+                while rows := cur.fetchmany(self.fetch_batch):
+                    yield rows
+
+        return spool_batches(spark, self.read_schema(table), batches(), self._spools)
+
+    def count(self, table: Table) -> int:
+        return self._fetchone(
+            f"SELECT COUNT(*) FROM {source_ident(self.kind, table.source_name)}"
+        )[0]
+
+    def min_max(self, table: Table, key_source_name: str):
+        key = source_ident(self.kind, key_source_name)
+        row = self._fetchone(
+            f"SELECT MIN({key}), MAX({key}) FROM {source_ident(self.kind, table.source_name)}"
+        )
+        return row[0], row[1]
+
+
+class SqliteSource(SingleTxSource):
+    """SQLite as a cursor source: one read-only connection per run (the
+    reference's SQLite worker cap of 1, source_sqlite.go:173) serves every
+    read, count and probe. ``begin_sql`` is empty, so no snapshot is taken.
+    Introspection opens its own connection, inside ``introspect``."""
+
+    def __init__(self, path: str, snake_case: bool = True, fetch_batch: int = 10_000):
+        super().__init__(
+            connect=self._open, schema=None, read_schemas={}, kind="sqlite",
+            fetch_batch=fetch_batch,
+        )
+        self.path, self.snake_case = path, snake_case
+
+    def _open(self):
+        # check_same_thread off: validation counts from its pool thread.
+        # Use stays sequential, as a SQLite run has one worker.
+        con = sq.open_readonly(self.path, check_same_thread=False)
+        # plain tuples: the spool reads rows positionally, so building a
+        # sqlite3.Row per row (introspection's factory) is wasted work
+        con.row_factory = None
+        return con
 
     def introspect(self) -> Schema:
         return sq.introspect_schema(self.path, self.snake_case)
@@ -138,7 +225,7 @@ class SqliteSource:
     def source_objects(self) -> SourceObjects:
         return sq.introspect_source_objects(self.path)
 
-    def _read_schema(self, table: Table) -> StructType:
+    def read_schema(self, table: Table) -> StructType:
         """Spark read schema from declared-type affinity (SQLite's dynamic
         typing means the wire values follow affinity, not declarations)."""
         fields = []
@@ -146,57 +233,6 @@ class SqliteSource:
             aff = sqlite_normalize_affinity(c.column_type or c.data_type)
             fields.append(StructField(c.pg_name, _AFFINITY_SPARK[aff], True))
         return StructType(fields)
-
-    def read_table(
-        self, spark: SparkSession, table: Table, predicates: list[str] | None
-    ) -> DataFrame:
-        """Bounded-memory read through ONE connection (the reference's SQLite
-        worker cap of 1, source_sqlite.go:173): rows stream out in
-        ``fetch_batch``-sized cursor fetches to a parquet spool, never a
-        full-table driver list."""
-        schema = self._read_schema(table)
-        preds = predicates if predicates else [None]
-
-        def batches():
-            con = sq.open_readonly(self.path)
-            # plain tuples: the spool reads rows positionally, so building a
-            # sqlite3.Row per row (introspection's factory) is wasted work
-            con.row_factory = None
-            try:
-                cols = ", ".join(pg_ident(c.source_name) for c in table.columns)
-                src = pg_ident(table.source_name)
-                for p in preds:  # sequential over chunks: 1 connection total
-                    sql = f"SELECT {cols} FROM {src}"
-                    if p:
-                        sql += f" WHERE {p}"
-                    cur = con.execute(sql)
-                    while True:
-                        rows = cur.fetchmany(self.fetch_batch)
-                        if not rows:
-                            break
-                        yield rows
-            finally:
-                con.close()
-
-        return spool_batches(spark, schema, batches(), self._spools)
-
-    def count(self, table: Table) -> int:
-        con = sq.open_readonly(self.path)
-        try:
-            return con.execute(f"SELECT COUNT(*) FROM {pg_ident(table.source_name)}").fetchone()[0]
-        finally:
-            con.close()
-
-    def min_max(self, table: Table, key_source_name: str):
-        con = sq.open_readonly(self.path)
-        try:
-            key = pg_ident(key_source_name)
-            row = con.execute(
-                f"SELECT MIN({key}), MAX({key}) FROM {pg_ident(table.source_name)}"
-            ).fetchone()
-            return row[0], row[1]
-        finally:
-            con.close()
 
 
 @dataclass
@@ -441,97 +477,3 @@ class SpoolTarget:
         shutil.rmtree(path)
         os.replace(tmp, path)
         self.ddl.append(f"DELETE FROM {table} WHERE {predicate}")
-
-
-@dataclass
-class SingleTxSource:
-    """O3 — consistent-snapshot source: every table reads sequentially
-    through ONE DB-API connection inside ONE read-only transaction
-    (reference migrate.go:149-259, `single_tx` mode).
-
-    A distributed JDBC read opens independent connections per partition and
-    cannot share a transaction — the one reference semantic Spark cannot
-    distribute (SURVEY §7 hard-part 1). This source is the faithful fallback:
-    ``connect`` opens the single connection, ``begin_sql`` starts the
-    snapshot (e.g. MySQL ``START TRANSACTION WITH CONSISTENT SNAPSHOT`` after
-    ``SET TRANSACTION ISOLATION LEVEL REPEATABLE READ``; MSSQL ``SET
-    TRANSACTION ISOLATION LEVEL SNAPSHOT`` + ``BEGIN TRAN``), and every
-    ``read_table`` streams batches from that connection into a parquet spool
-    (bounded driver memory, distributed downstream scan). The pipeline's
-    config matrix already forces ``workers <= 1`` in this mode, so reads are
-    strictly sequential — the same throughput shape as the reference.
-    """
-
-    connect: object  # Callable[[], DB-API connection]
-    schema: Schema
-    read_schemas: dict  # pg_name -> StructType
-    begin_sql: tuple = ()
-    objects: SourceObjects = field(default_factory=SourceObjects)
-    kind: str = "mysql"
-    fetch_batch: int = 10_000
-    _con: object = field(default=None, repr=False)
-    _spools: list = field(default_factory=list, init=False, repr=False)
-
-    def _q(self, name: str) -> str:
-        return (mssql_ident if self.kind == "mssql" else mysql_ident)(name)
-
-    def _connection(self):
-        if self._con is None:
-            self._con = self.connect()
-            cur = self._con.cursor()
-            for stmt in self.begin_sql:
-                cur.execute(stmt)
-        return self._con
-
-    def close(self) -> None:
-        """End the snapshot transaction and remove the reads' spools."""
-        remove_spools(self._spools)
-        if self._con is not None:
-            try:
-                self._con.rollback()  # read-only tx: end the snapshot
-            finally:
-                self._con.close()
-                self._con = None
-
-    def introspect(self) -> Schema:
-        return self.schema
-
-    def source_objects(self) -> SourceObjects:
-        return self.objects
-
-    def read_table(
-        self, spark: SparkSession, table: Table, predicates: list[str] | None
-    ) -> DataFrame:
-        # ``table`` may be narrowed to some columns: read only their fields
-        full = self.read_schemas[table.pg_name]
-        schema = StructType([full[c.pg_name] for c in table.columns])
-        preds = predicates if predicates else [None]
-        con = self._connection()
-
-        def batches():
-            cols = ", ".join(self._q(c.source_name) for c in table.columns)
-            for p in preds:  # sequential chunks, one shared connection
-                sql = f"SELECT {cols} FROM {self._q(table.source_name)}"
-                if p:
-                    sql += f" WHERE {p}"
-                cur = con.cursor()
-                cur.execute(sql)
-                while True:
-                    rows = cur.fetchmany(self.fetch_batch)
-                    if not rows:
-                        break
-                    yield [tuple(r) for r in rows]
-
-        return spool_batches(spark, schema, batches(), self._spools)
-
-    def count(self, table: Table) -> int:
-        cur = self._connection().cursor()
-        cur.execute(f"SELECT COUNT(*) FROM {self._q(table.source_name)}")
-        return cur.fetchone()[0]
-
-    def min_max(self, table: Table, key_source_name: str):
-        cur = self._connection().cursor()
-        key = self._q(key_source_name)
-        cur.execute(f"SELECT MIN({key}), MAX({key}) FROM {self._q(table.source_name)}")
-        row = cur.fetchone()
-        return row[0], row[1]

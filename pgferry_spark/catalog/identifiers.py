@@ -91,9 +91,10 @@ def mssql_ident(name: str) -> str:
 
 
 def source_ident(kind: str, name: str) -> str:
-    """Quote a column for SQL that a source of ``kind`` evaluates: Spark SQL
-    (a parquet source's filters) and MySQL quote with backticks, MSSQL with
-    brackets, SQLite like PostgreSQL."""
+    """Quote a table or column name for SQL that a source of ``kind``
+    evaluates: Spark SQL (a parquet source's filters) and MySQL quote with
+    backticks, MSSQL with brackets, SQLite and other ANSI sources (e.g.
+    Derby over JDBC) like PostgreSQL."""
     if kind in ("parquet", "mysql"):
         return mysql_ident(name)
     if kind == "mssql":

@@ -856,18 +856,35 @@ def compressibility_entropy(
     would be reduction-order dependent), and the entropy rounds once to
     6 dp. Returns ``(id, n_chars, entropy_bits, est_ratio)``; empty
     docs are absent, mirroring the zlib twin's no-bytes-no-ratio rule.
-    Map-only; per-row cost O(distinct_chars x len)."""
+    Map-only; per-row cost O(len x log len): one fold over the sorted
+    characters counts each run of equal characters and adds its term
+    when the run ends, so the terms add in sorted-distinct order."""
     chars = F.filter(F.split(F.col(text_col), "(?!^)"), lambda c: c != "")
     n = F.size(chars)
-    uniq = F.array_sort(F.array_distinct(chars))
-    terms = F.transform(
-        uniq,
-        lambda c: (
-            lambda p: -p * F.log2(p)
-        )(F.size(F.filter(chars, lambda x: x == c)).cast("double") / n),
-    )
+
+    def run(prev, length, ent, total):
+        return F.struct(
+            prev.alias("prev"), length.alias("run"), ent.alias("ent"), total.alias("n"),
+        )
+
+    def closed(acc):  # entropy with the finished run's term added
+        p = acc["run"].cast("double") / acc["n"]
+        return acc["ent"] + -p * F.log2(p)
+
+    # every lambda reads the sorted array and the size from its arguments:
+    # an expression a lambda body names is re-evaluated per element
     ent = F.round(
-        F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t), 6
+        F.aggregate(
+            F.array_sort(chars),
+            run(F.lit(None).cast("string"), F.lit(0), F.lit(0.0), n),
+            lambda acc, c: F.when(
+                acc["prev"] == c, run(c, acc["run"] + 1, acc["ent"], acc["n"])
+            ).otherwise(
+                run(c, F.lit(1), F.when(acc["run"] > 0, closed(acc)).otherwise(acc["ent"]), acc["n"])
+            ),
+            closed,
+        ),
+        6,
     )
     return (
         df.filter(F.length(F.col(text_col)) > 0)

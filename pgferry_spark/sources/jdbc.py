@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog.identifiers import mssql_ident, mysql_ident
+from ..catalog.identifiers import source_ident
 from ..catalog.model import Column, Table
 from ..plans.chunk import ChunkPlan
 from ..types.config import TypeMappingConfig
@@ -69,21 +69,17 @@ def mysql_source(url: str, **kw) -> JdbcSource:
 def select_expression(col: Column, source_kind: str, cfg: TypeMappingConfig) -> str:
     """Per-column server-side select expression (S4, migrate.go:492-531)."""
     base = col.data_type.lower()
+    ident = source_ident(source_kind, col.source_name)
     if source_kind == "mysql":
-        ident = mysql_ident(col.source_name)
         from ..types.mysql import SPATIAL_TYPES
 
-        if base in SPATIAL_TYPES:
-            if cfg.spatial_mode == "text":
-                return f"ST_AsText({ident}) AS {ident}"
-            if cfg.spatial_mode in ("postgis", "bytea"):
-                # SRID (4-byte LE) ‖ WKB — the same internal layout the
-                # reference reads raw; the EWKB splice happens in the
-                # transform layer (functions.transforms.mysql_spatial_to_ewkb)
-                return ident
+        if base in SPATIAL_TYPES and cfg.spatial_mode == "text":
+            return f"ST_AsText({ident}) AS {ident}"
+        # postgis/bytea read SRID (4-byte LE) ‖ WKB raw — the same internal
+        # layout the reference reads; the EWKB splice happens in the
+        # transform layer (functions.transforms.mysql_spatial_to_ewkb)
         return ident
     if source_kind == "mssql":
-        ident = mssql_ident(col.source_name)
         if base == "hierarchyid":
             return f"{ident}.ToString() AS {ident}"
         if base == "sql_variant":
@@ -92,18 +88,13 @@ def select_expression(col: Column, source_kind: str, cfg: TypeMappingConfig) -> 
             if cfg.spatial_mode == "text":
                 return f"{ident}.STAsText() AS {ident}"
             return f"{ident}.STAsBinary() AS {ident}"
-        return ident
-    return f'"{col.source_name}"'
+    return ident
 
 
 def build_source_select(table: Table, source_kind: str, cfg: TypeMappingConfig) -> str:
     """S1 — explicit ordered column list, never ``*`` (migrate.go:484-490)."""
     exprs = ", ".join(select_expression(c, source_kind, cfg) for c in table.columns)
-    if source_kind == "mysql":
-        return f"SELECT {exprs} FROM {mysql_ident(table.source_name)}"
-    if source_kind == "mssql":
-        return f"SELECT {exprs} FROM {mssql_ident(table.source_name)}"
-    return f'SELECT {exprs} FROM "{table.source_name}"'
+    return f"SELECT {exprs} FROM {source_ident(source_kind, table.source_name)}"
 
 
 def read_table(

@@ -15,16 +15,20 @@ from __future__ import annotations
 
 import re
 import sqlite3
+from urllib.parse import quote
 
 from ..catalog.identifiers import normalize_identifier, pg_ident
 from ..catalog.model import Column, ForeignKey, Index, Schema, SourceObjects, Table
 
 
-def open_readonly(path: str) -> sqlite3.Connection:
-    """Read-only open; ``:memory:`` rejected (reference source_sqlite.go:37-48)."""
+def open_readonly(path: str, **connect_kw) -> sqlite3.Connection:
+    """Read-only open of the file at ``path``; ``:memory:`` rejected
+    (reference source_sqlite.go:37-48). The path is percent-encoded into
+    the URI, so a ``#`` or ``?`` in it names the file rather than starting
+    a fragment or query (which would open, and create, another file)."""
     if path == ":memory:" or path.startswith("file::memory:"):
         raise ValueError("in-memory SQLite databases cannot be migrated")
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+    con = sqlite3.connect(f"file:{quote(path)}?mode=ro", uri=True, **connect_kw)
     con.row_factory = sqlite3.Row
     return con
 

@@ -59,10 +59,9 @@ def probe_connection(source_type: str, dsn: str, timeout: float = 5.0) -> None:
       (standing deviation from the reference's driver-level ping).
     """
     if source_type == "sqlite":
-        import sqlite3
+        from .sources.sqlite_introspect import open_readonly
 
-        path = dsn.split("?", 1)[0]
-        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True, timeout=timeout)
+        con = open_readonly(dsn, timeout=timeout)
         try:
             con.execute("SELECT 1")
         finally:

@@ -75,6 +75,34 @@ def test_jdbc_predicate_prunes_rows(spark, derby_url):
     assert ids[0] == 51 and ids[-1] == 100 and len(ids) == 50
 
 
+def test_jdbc_read_quotes_a_name_with_a_double_quote(spark, tmp_path):
+    """A column named ``we"ird`` is read through a delimited identifier
+    with the quote doubled, chunked and whole."""
+    url = f"jdbc:derby:{tmp_path}/oddnames;create=true"
+    jvm = spark._jvm
+    jvm.java.lang.Class.forName(DRIVER)
+    con = jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        st = con.createStatement()
+        st.executeUpdate('CREATE TABLE "odd" ("id" BIGINT NOT NULL, "we""ird" VARCHAR(10))')
+        st.executeUpdate("""INSERT INTO "odd" VALUES (1, 'a'), (2, 'b'), (3, 'c')""")
+        st.close()
+    finally:
+        con.close()
+    table = Table(source_name="odd", pg_name="odd", columns=[
+        Column(source_name="id", pg_name="id", data_type="bigint",
+               column_type="bigint", nullable=False, ordinal_pos=1),
+        Column(source_name='we"ird', pg_name="we_ird", data_type="varchar",
+               column_type="varchar(10)", nullable=True, ordinal_pos=2),
+    ])
+    src = JdbcSource(url=url, driver=DRIVER)
+    plan = plan_table_chunks("odd", '"id"', 1, 3, chunk_size=2)
+    for p in (None, plan):
+        df = read_table(spark, src, table, "derby", TypeMappingConfig(), plan=p)
+        assert df.columns == ["id", 'we"ird']
+        assert sorted((r[0], r[1]) for r in df.collect()) == [(1, "a"), (2, "b"), (3, "c")]
+
+
 # -- live execution of the MySQL introspection SQL ---------------------------
 #
 # The MySQL catalog queries are INFORMATION_SCHEMA-shaped ANSI SQL; Derby

@@ -663,6 +663,68 @@ def test_fresh_run_reads_each_table_once(spark, tmp_path):
     assert rows == {"parent": (30, 0), "child": (39, 1), "grandchild": (19, 1)}
 
 
+def test_sqlite_run_reads_counts_and_probes_through_one_connection(
+    spark, tmp_path, monkeypatch,
+):
+    """Every read, count and MIN/MAX probe of a SQLite run shares one
+    source connection; introspection opens its own."""
+    import sys
+
+    from pgferry_spark.sources import sqlite_introspect as sq
+
+    db = _fk_db(str(tmp_path / "family.db"), _FAMILY + "CREATE TABLE solo (id INTEGER PRIMARY KEY);", {
+        "parent": [(i, i - 1 or None) for i in range(1, 31)],
+        "child": [(i, i % 30 + 1) for i in range(1, 41)],
+        "grandchild": [(i, i) for i in range(1, 21)],
+        "solo": [(i,) for i in range(1, 26)],
+    })
+    opened, open_readonly = [], sq.open_readonly
+
+    def spy(path, **kw):
+        if sys._getframe(1).f_code.co_name not in (
+            "introspect_schema", "introspect_source_objects",
+        ):
+            opened.append(path)
+        return open_readonly(path, **kw)
+
+    monkeypatch.setattr(sq, "open_readonly", spy)
+    target = SpoolTarget(spark, str(tmp_path / "out"))
+    result = _chunked_pipeline(spark, db, target).run()
+    assert result.ok and len(result.tables) == 4
+    assert opened == [db]
+
+
+def test_sqlite_validation_counts_on_the_pool_thread(spark, tmp_path):
+    """With the advisor off, a table without FK validates against a source
+    COUNT(*) issued from the validation pool's thread, on the connection the
+    run's reads opened on the main thread."""
+    import threading
+
+    db = _fk_db(str(tmp_path / "solo.db"), "CREATE TABLE solo (id INTEGER PRIMARY KEY, v TEXT);", {
+        "solo": [(i, f"v{i}") for i in range(1, 26)],
+    })
+    threads = []
+
+    class Source(SqliteSource):
+        def count(self, table):
+            threads.append(threading.current_thread())
+            return super().count(table)
+
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=db, target_dsn="spool://x",
+        target_schema="app", chunk_size=10, advise=False,
+    )
+    result = MigrationPipeline(
+        spark, cfg, Source(db), SpoolTarget(spark, str(tmp_path / "out")),
+        map_sqlite_type, map_sqlite_default,
+    ).run()
+    assert result.ok
+    assert [(v.table, v.source_rows, v.target_rows) for v in result.validation] == [
+        ("solo", 25, 25)
+    ]
+    assert threads and threading.main_thread() not in threads
+
+
 _NOTED_FAMILY = """
 CREATE TABLE parent (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES parent(id), note TEXT);
 CREATE TABLE child (id INTEGER PRIMARY KEY, parent_id INTEGER NOT NULL REFERENCES parent(id), note TEXT);

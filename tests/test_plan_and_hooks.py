@@ -144,6 +144,22 @@ class TestSqliteIntrospect:
         con.close()
 
 
+@pytest.mark.parametrize("name", ["data#1.db", "a?b.db"])
+def test_path_with_uri_characters_opens_that_file(tmp_path, name):
+    """A ``#`` or ``?`` in the path is part of the file name: introspection
+    and the wizard's probe open that file, read-only, and create no other."""
+    from pgferry_spark.wizard import probe_connection
+
+    path = str(tmp_path / name)
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE t (id INTEGER PRIMARY KEY)")
+    con.close()
+    before = sorted(p.name for p in tmp_path.iterdir())
+    assert [t.source_name for t in sq.introspect_schema(path).tables] == ["t"]
+    probe_connection("sqlite", path)
+    assert sorted(p.name for p in tmp_path.iterdir()) == before
+
+
 def test_diff_schemas_names_every_drift_class():
     from pgferry_spark.catalog.model import Column, Schema, Table
     from pgferry_spark.plan_report import diff_schemas

@@ -115,12 +115,14 @@ def test_spool_batches_empty(spark):
     assert df.count() == 0 and df.columns == ["id"]
 
 
-@pytest.mark.parametrize("kind", ["mysql", "mssql"])
+@pytest.mark.parametrize("kind", ["mysql", "mssql", "sqlite"])
 def test_single_tx_quotes_reserved_names_and_reads_narrowed_tables(spark, tmp_path, kind):
     """Names are quoted for the source's dialect (SQLite accepts both the
     MySQL backticks and the MSSQL brackets), so a table ``group`` with a
-    column ``order`` counts, probes and reads; a read of the table narrowed
-    to one column gets just that column's read-schema field."""
+    column ``order`` counts, probes and reads, all on one connection that
+    ``close`` ends; a read of the table narrowed to one column gets just
+    that column's read-schema field. ``sqlite`` is the SqliteSource, whose
+    read schema comes from column affinity."""
     path = str(tmp_path / "reserved.db")
     con = sqlite3.connect(path)
     con.execute('CREATE TABLE "group" (id INTEGER PRIMARY KEY, "order" INTEGER, note TEXT)')
@@ -132,17 +134,23 @@ def test_single_tx_quotes_reserved_names_and_reads_narrowed_tables(spark, tmp_pa
         StructField("id", LongType()), StructField("order", LongType()),
         StructField("note", StringType()),
     ])
-    src = SingleTxSource(
-        connect=lambda: sqlite3.connect(path), schema=Schema(tables=[table]),
-        read_schemas={"group": read_schema}, kind=kind,
-    )
+    if kind == "sqlite":
+        src = SqliteSource(path)
+    else:
+        src = SingleTxSource(
+            connect=lambda: sqlite3.connect(path), schema=Schema(tables=[table]),
+            read_schemas={"group": read_schema}, kind=kind,
+        )
     try:
         assert src.count(table) == 5
+        con = src._con
         assert src.min_max(table, "order") == (10, 50)
         df = src.read_table(spark, replace(table, columns=[table.column("order")]), None)
         assert df.columns == ["order"]
         assert sorted(r["order"] for r in df.collect()) == [10, 20, 30, 40, 50]
         full = src.read_table(spark, table, ["id <= 2"])
         assert full.columns == ["id", "order", "note"] and full.count() == 2
+        assert con is not None and src._con is con
     finally:
         src.close()
+    assert src._con is None

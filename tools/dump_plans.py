@@ -529,7 +529,10 @@ def main() -> int:
     ]
     for name, (headline, why) in ANNOTATED.items():
         df = qs[name](spark, sf_dir)
-        df.count()  # force execution -> final AQE plan
+        # execute the frame's own plan (the outputs are small at sf0.01):
+        # ``count()`` would run a different QueryExecution, leaving this
+        # one's AQE plan unexecuted (isFinalPlan=false)
+        df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         plan = re.sub(r"#\d+L?", "", plan)  # strip expr ids for stable diffs
         lines = plan.splitlines()
