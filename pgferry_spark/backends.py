@@ -11,8 +11,9 @@
 * ``ParquetSource`` — parquet-lake source; fully distributed scans.
 * ``SpoolTarget`` — test/diagnostic target: DDL statements are recorded in
   order (inspectable, like a dry-run transcript), data lands as parquet per
-  table. Swap for a JDBC/COPY target (sources/sink.py) against PostgreSQL;
-  the pipeline only sees the 3-method protocol.
+  table. Swap for the COPY target (``sources.sink.PsqlTarget``) against
+  PostgreSQL; the pipeline only sees the 5-method ``TargetBackend``
+  protocol.
 """
 
 from __future__ import annotations
@@ -390,6 +391,25 @@ def _parquet_footer_rows(path: str) -> int | None:
         return None
 
 
+def _footer_spark_schema(path: str) -> StructType | None:
+    """The Spark schema a Spark-written parquet file keeps in its footer
+    (``org.apache.spark.sql.parquet.row.metadata``), read on the driver
+    from the first part file; None when there is none. A scan given this
+    schema skips the Spark job a schema-less ``spark.read.parquet`` runs
+    to infer it."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    files = _parquet_files(path)
+    if not files:
+        return None
+    raw = (pq.read_metadata(files[0]).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
 def _parquet_footer_min_max(path: str, column: str):
     """(min, max) of ``column`` from row-group statistics, or None when any
     row group lacks stats for it (then only a data scan is exact)."""
@@ -436,6 +456,22 @@ class SpoolTarget:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    def _scan(self, path: str) -> DataFrame:
+        """Scan of ``path`` with its footer's Spark schema: no job runs to
+        infer one."""
+        schema = _footer_spark_schema(path)
+        return (self.spark.read if schema is None else self.spark.read.schema(schema)).parquet(path)
+
+    def read(self, table: str, schema: StructType) -> DataFrame:
+        """The rows ``table`` holds of ``schema``'s columns, with the types
+        they were written with: a lazy scan of its files that runs no job
+        until used."""
+        from pyspark.sql import functions as F
+
+        return self._scan(self._path(table)).select(
+            *[F.col(mysql_ident(f.name)) for f in schema.fields]
+        )
+
     def write(self, df: DataFrame, table: str, append: bool = False) -> int:
         """Write and report rows from the files that actually landed
         (footer delta) — write-side accounting, like the reference's COPY
@@ -447,18 +483,19 @@ class SpoolTarget:
         post = _parquet_footer_rows(path)
         if post is not None:
             return post - pre
-        return self.spark.read.parquet(path).count() - pre
+        return self._scan(path).count() - pre
 
     def count(self, table: str) -> int:
         n = _parquet_footer_rows(self._path(table))
-        return n if n is not None else self.spark.read.parquet(self._path(table)).count()
+        return n if n is not None else self._scan(self._path(table)).count()
 
     def delete_where(self, table: str, predicate: str) -> None:
         """Idempotent-resume support: drop rows matching the PostgreSQL
         predicate — the parquet-spool twin of a SQL target's ``DELETE FROM
         .. WHERE`` (rewrite-on-delete, like any immutable-file table
-        format). Spark SQL reads ``"x"`` as a string literal, so each
-        double-quoted identifier is re-quoted with backticks first."""
+        format): one job, as the scan takes its schema from the footer.
+        Spark SQL reads ``"x"`` as a string literal, so each double-quoted
+        identifier is re-quoted with backticks first."""
         import shutil
 
         from pyspark.sql import functions as F
@@ -471,7 +508,7 @@ class SpoolTarget:
             predicate,
         )
         tmp = path + "__delete_tmp"
-        self.spark.read.parquet(path).filter(~F.expr(spark_sql)).write.mode(
+        self._scan(path).filter(~F.expr(spark_sql)).write.mode(
             "overwrite"
         ).parquet(tmp)
         shutil.rmtree(path)

@@ -450,13 +450,13 @@ def simhash_near_pairs_from(
 # -- embedding-cosine near-dup ----------------------------------------------
 
 
-def _estimate_rows(df: DataFrame) -> int:
-    """Row-count estimate for block sizing WITHOUT a blocking driver job.
+def _estimate_rows(df: DataFrame) -> int | None:
+    """Row-count estimate from the optimizer's plan statistics (parquet
+    footers / CBO), never a Spark job; None when the plan has none, which
+    callers treat as a large input.
 
     Block layout only needs the right order of magnitude (a 2x-off estimate
-    shifts work between block count and block width, same total GEMM), so
-    prefer the optimizer's plan statistics (parquet footers / CBO) and fall
-    back to an exact count only when no estimate exists."""
+    shifts work between block count and block width, same total GEMM)."""
     try:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         rc = stats.rowCount()
@@ -465,13 +465,49 @@ def _estimate_rows(df: DataFrame) -> int:
             if n > 0:
                 return n
         size = int(str(stats.sizeInBytes()))
-        if 0 < size < (1 << 62):  # default "unknown" is Long.Max-ish
+        # "unknown" is Long.MaxValue, which a projection scales down by its
+        # width ratio: any size from a pebibyte up counts as unknown
+        if 0 < size < (1 << 50):
             # arrays of float dominate these rows; ~8B/element + overhead
             width = max(64, 8 * len(df.columns) * 16)
             return max(1, size // width)
     except Exception:
         pass
-    return df.count()
+    return None
+
+
+def _vector_blocks(
+    df: DataFrame, vec_col: str, id_col: str, block_size: int,
+) -> tuple[DataFrame, int | None]:
+    """``(blk, rows)``: ``df``'s vectors grouped into blocks of about
+    ``block_size`` rows each, and the number of blocks when it is known.
+    With a plan-stats row estimate, ids hash into ``ceil(N / block_size)``
+    blocks (block sizing tolerates a 2x-off estimate). Without one, each
+    input partition is cut by position into runs of ``block_size`` rows
+    (``monotonically_increasing_id`` is the partition index << 33 | the
+    row's index in it), so no block outgrows ``block_size`` whatever the
+    input's size, and no job counts the input."""
+    vecs = df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    )
+    n = _estimate_rows(df)
+    if n is None:
+        pos = F.monotonically_increasing_id()
+        per_partition = -(-(1 << 33) // block_size)
+        blk = F.shiftright(pos, 33) * per_partition + F.floor(
+            pos.bitwiseAND((1 << 33) - 1) / block_size
+        )
+        nblocks = None
+    else:
+        nblocks = max(1, -(-n // block_size))
+        blk = F.pmod(F.xxhash64("id"), F.lit(nblocks))
+    blocks = (
+        vecs.withColumn("blk", blk)
+        .groupBy("blk")
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+    )
+    return blocks, nblocks
 
 
 def embedding_near_dup_pairs(
@@ -484,10 +520,11 @@ def embedding_near_dup_pairs(
     """Exact near-dup pairs by embedding cosine: (id_a, id_b, cosine_sim)
     with id_a < id_b and cosine ≥ ``threshold``.
 
-    Shape: **blocked GEMM**. Vectors are hash-grouped into ``ceil(N /
-    block_size)`` blocks; every block pair (i ≤ j) becomes one task that
-    computes its cosine submatrix with a single vectorized numpy matmul
-    (row-normalize once, ``A @ B.T``) and emits only above-threshold pairs.
+    Shape: **blocked GEMM**. Vectors are grouped into blocks of about
+    ``block_size`` (``_vector_blocks``); every block pair (i ≤ j) is one
+    Python call that computes its cosine submatrix with a single vectorized
+    numpy matmul (row-normalize once, ``A @ B.T``) and emits only
+    above-threshold pairs.
     A naive pairwise ``aggregate``-fold join measured 52 s for 2 M pairs at
     sf0.1 (per-element HOF interpretation); the same work as BLAS is < 2 s,
     and each task streams one Arrow batch in / tiny pairs out.
@@ -499,24 +536,28 @@ def embedding_near_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    n = _estimate_rows(df)  # plan-stats estimate; block sizing tolerates 2x error
-    nblocks = max(1, -(-n // block_size))
-    blocks = (
-        df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(nblocks)))
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-    )
+    spark = df.sparkSession
+    blocks, nblocks = _vector_blocks(df, vec_col, id_col, block_size)
     blocks = blocks.persist()  # built once, joined twice
-    # enumerate block-index pairs driver-side and equi-join twice: the fat
-    # block rows shuffle by key instead of riding a nested-loop broadcast
-    idx = df.sparkSession.createDataFrame(
-        [(i, j) for i in range(nblocks) for j in range(i, nblocks)],
-        "blk_a: long, blk_b: long",
-    )
+    if nblocks is None:
+        # block ids known only once built: pair the ids that exist
+        ids = blocks.select("blk")
+        idx = ids.select(F.col("blk").alias("blk_a")).join(
+            ids.select(F.col("blk").alias("blk_b")), F.col("blk_a") <= F.col("blk_b"),
+        )
+    else:
+        # enumerate block-index pairs (i <= j) in the JVM: no Python task
+        # parallelizes a driver-side list
+        idx = spark.range(0, nblocks, 1, 1).select(
+            F.col("id").alias("blk_a"),
+            F.explode(F.sequence(F.col("id"), F.lit(nblocks - 1).cast("long"))).alias("blk_b"),
+        )
+    # equi-join twice: the fat block rows shuffle by key instead of riding
+    # a nested-loop broadcast. The pairs then shuffle once more, by pair,
+    # into partitions AQE coalesces by size: a few small pairs make one
+    # Python task (the join's own partitions would start one per core or
+    # per cached block partition, most of them empty), many large pairs
+    # stay split at the advisory partition size
     pairs = (
         idx.join(
             blocks.select(F.col("blk").alias("blk_a"), F.col("rows").alias("rows_a")),
@@ -525,6 +566,7 @@ def embedding_near_dup_pairs(
             blocks.select(F.col("blk").alias("blk_b"), F.col("rows").alias("rows_b")),
             "blk_b",
         )
+        .repartition("blk_a", "blk_b")
     )
 
     def emit(batches):
@@ -549,10 +591,13 @@ def embedding_near_dup_pairs(
                     lo, hi = ka[keep], kb[keep]
                     sims = S[ia, ib][keep]
                 else:
-                    # off-diagonal: each pair appears once but hash blocking
-                    # doesn't order ids — canonicalize to (min, max)
-                    lo, hi = np.minimum(ka, kb), np.maximum(ka, kb)
-                    sims = S[ia, ib]
+                    # off-diagonal: each pair appears once but blocking
+                    # doesn't order ids — canonicalize to (min, max); a
+                    # repeated id that positional blocking split is no pair
+                    keep = ka != kb
+                    lo = np.minimum(ka, kb)[keep]
+                    hi = np.maximum(ka, kb)[keep]
+                    sims = S[ia, ib][keep]
                 out.append(
                     pd.DataFrame({"id_a": lo, "id_b": hi, "cosine_sim": sims})
                 )
@@ -1878,10 +1923,11 @@ def cross_corpus_near_dup(
         # (benchmark) side. That contract is not enforceable here, and a
         # forced broadcast of a LARGE left's bands×|left| keys would
         # collect them all to the driver. Guard with the optimizer's
-        # row estimate (no driver job on parquet-backed inputs): above
-        # ~4M keys (~80 MB framed) drop the hint and let the planner /
-        # AQE pick a distributed left-semi instead.
-        if _estimate_rows(left) * bands <= 4_000_000:
+        # row estimate (plan statistics, never a driver job): above ~4M
+        # keys (~80 MB framed), or with no estimate, drop the hint and
+        # let the planner / AQE pick a distributed left-semi instead.
+        est = _estimate_rows(left)
+        if est is not None and est * bands <= 4_000_000:
             keys = F.broadcast(keys)
         rb = rb.join(keys, ["band_id", "band_hash"], "left_semi")
         rb = (

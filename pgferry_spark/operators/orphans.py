@@ -53,9 +53,12 @@ def _join_keys(
     """``child`` left-joined to the parent's key set (``keys``, or built
     from ``parent``), and the condition that a row matched a key. Keys are
     distinct, so the join keeps every child row exactly once; a row with a
-    NULL FK component matches nothing."""
+    NULL FK component matches nothing. ``keys`` joins through a fresh
+    projection (new attribute ids), so two FKs of one child may share a
+    key set without an ambiguous self-join."""
     if keys is None:
         keys = parent_keys(parent, ref_cols)
+    keys = keys.select(*[F.col(c).alias(c) for c in keys.columns])
     joined = child.join(keys, on=_keys_cond(child, keys, fk_cols), how="left")
     return joined, keys["__ref_0"].isNotNull()
 

@@ -14,8 +14,9 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
     its read. The removed-orphan count is observed inside the write job
     (rows into the batch read, rows out of the written frame), so counting
     costs no Spark job; each referenced parent's key set (the distinct
-    referenced key tuples of its cleaned rows) is built and persisted once
-    per run, from a key-only read unless a fresh one-batch read is at hand
+    referenced key tuples of its landed rows) is projected from the
+    target's rows once per run and persisted, so no source row is read
+    for it and no parent is cleaned twice
  5. validation: per-table row-count comparison with the source COUNT(*),
     or for an FK table with the rows its writes landed across runs (the
     checkpoint's totals), so validation reads no source row
@@ -26,9 +27,10 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
     re-moves exactly those chunks
 
 The **target backend** is pluggable: `execute(sql)` + `write(df, table)` +
-`count(table)` + `delete_where(table, predicate)`. Production is JDBC/COPY
-against PostgreSQL; tests use a local spool target. The reference's
-`workers` semaphore becomes Spark's task scheduler over the chunk partitions.
+`count(table)` + `delete_where(table, predicate)` + `read(table, schema)`.
+Production is COPY against PostgreSQL; tests use a local spool target. The
+reference's `workers` semaphore becomes Spark's task scheduler over the
+chunk partitions.
 
 `single_tx` snapshot mode (reference migrate.go:149-259) is the one
 semantic it is impossible to distribute: one REPEATABLE READ transaction
@@ -39,13 +41,13 @@ documented (SURVEY §7 hard-part 1).
 
 from __future__ import annotations
 
-import threading
 import time
 from dataclasses import dataclass, field, replace
 from typing import Callable, Protocol
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .catalog.identifiers import pg_ident, source_ident
 from .catalog.model import Schema, SourceObjects, Table
@@ -68,12 +70,17 @@ class TargetBackend(Protocol):
     ``df.rdd``): the pipeline reads the batch's row counts from
     ``Observation``s on ``df`` that only a DataFrame execution fulfils,
     and waits for them after ``write`` returns. It returns the rows that
-    landed."""
+    landed. ``read`` returns the rows a table holds of ``schema``'s
+    columns, each typed as its field (a target that reads its rows back
+    as text parses them there), as a lazy frame that stays valid for the
+    rest of the run: the referenced tables' key sets are projected from
+    it."""
 
     def execute(self, sql: str) -> None: ...
     def write(self, df: DataFrame, table: str, append: bool = False) -> int: ...
     def count(self, table: str) -> int: ...
     def delete_where(self, table: str, predicate: str) -> None: ...
+    def read(self, table: str, schema: StructType) -> DataFrame: ...
 
 
 class SourceBackend(Protocol):
@@ -129,24 +136,17 @@ class MigrationPipeline:
         self.type_mapper = type_mapper
         self.default_mapper = default_mapper
         self.checkpoint = checkpoint or CheckpointManager("", noop=True)
-        # per-run caches, both persisted and released by run(): the read of
-        # a fresh one-batch referenced table, kept for its key sets, and one
-        # set of distinct key tuples per (referenced table, referenced
-        # columns), built from its cleaned rows for every batch of every child
-        self._transformed_cache: dict[str, DataFrame] = {}
+        # one persisted set of distinct key tuples per (referenced table,
+        # referenced columns), projected from the table's landed rows for
+        # every batch of every child; released by run()
         self._key_sets: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
         # referenced table -> the column tuples other tables' FKs reference
-        # (set by run()): a fresh one-batch move keeps its read cached for
-        # the key sets
+        # (set by run())
         self._referenced: dict[str, set[tuple[str, ...]]] = {}
         # advisor outputs: source row counts measured at plan time (reused by
         # validation), parents whose FK anti-joins should broadcast
         self._source_counts: dict[str, int] = {}
         self._broadcast_parents: frozenset[str] = frozenset()
-        # guards the per-run DataFrame caches when tables move concurrently
-        # (wave-parallel movement, guide §2.6); CheckpointManager carries
-        # its own lock
-        self._cache_lock = threading.Lock()
 
     # -- steps ---------------------------------------------------------------
 
@@ -298,7 +298,7 @@ class MigrationPipeline:
         rows_in: Observation,
     ) -> tuple[DataFrame, int, int]:
         """J1 applied in-flight: left-join each FK against its parent's key
-        set (``_key_sets``, the distinct key tuples of the parent's cleaned
+        set (``_key_sets``, the distinct key tuples of the parent's landed
         rows), then land the batch with ``target.write`` (same final state
         as the reference's post-load DELETE). Returns the cleaned frame, the
         orphan rows removed, and the rows written.
@@ -356,8 +356,9 @@ class MigrationPipeline:
 
     def _key_read(self, table: Table, columns: set[str]) -> DataFrame:
         """Whole-table source read → transforms of ``table`` narrowed to
-        ``columns`` (pg names), so the source fetches nothing else (the
-        reference's J1 DELETE likewise probes only key columns)."""
+        ``columns`` (pg names), so the source fetches nothing else: the
+        pre-clean snapshot of a multi-batch self-FK table and the advisor's
+        skew probe."""
         narrowed = replace(table, columns=[c for c in table.columns if c.pg_name in columns])
         return self._read_transformed(narrowed, None)
 
@@ -375,23 +376,21 @@ class MigrationPipeline:
         return df if rows_in is None else _count_rows(df, rows_in)
 
     def _build_key_sets(self, table: Table) -> None:
-        """Persist the distinct key tuples of ``table``'s cleaned rows, one
-        set per column tuple other tables' FKs reference. Built once per
-        run, after ``table`` moved, from the read ``move_table`` kept for a
-        fresh one-batch table, else from a key-only read of the referenced
-        columns and those ``table``'s own FK cleanup needs."""
+        """Persist the distinct key tuples of ``table``'s landed rows, one
+        set per column tuple other tables' FKs reference, projected from
+        the target's rows of the referenced columns (the reference's J1
+        likewise probes the target parent, post.go:475-538), typed as the
+        type mapping created the target's columns. Built once per run,
+        after ``table``'s wave landed. The landed rows are exactly the
+        cleaned rows, a done table's from an earlier run included, so no
+        source row is read and no FK rule runs twice."""
         refs = self._referenced.get(table.pg_name, ())
-        df = self._transformed_cache.get(table.pg_name)  # the wave is over: no lock
-        if df is None:
-            cols = {c for ref in refs for c in ref}
-            for fk in table.foreign_keys:
-                own = fk.ref_columns if fk.ref_pg_table == table.pg_name else []
-                cols.update(fk.columns + own)
-            df = self._key_read(table, cols)
-        cleaned, _ = self._apply_fk_rules(df, table)
-        with self._cache_lock:
-            for ref in refs:
-                self._key_sets[(table.pg_name, ref)] = parent_keys(cleaned, list(ref)).persist()
+        landed = self.target.read(table.pg_name, StructType([
+            StructField(c, self.type_mapper(table.column(c), self.cfg.type_mapping)[1])
+            for c in sorted({c for ref in refs for c in ref})
+        ]))
+        for ref in refs:
+            self._key_sets[(table.pg_name, ref)] = parent_keys(landed, list(ref)).persist()
 
     def move_table(self, table: Table) -> TableRunResult:
         """Move one table as ONE loop over batches of its pending chunks,
@@ -403,13 +402,11 @@ class MigrationPipeline:
         and the write makes one pass over it: the write's own job scans the
         read and fulfils the ``rows_in`` observation counted on it.
 
-        A batch read is persisted only when it is read twice: a fresh table
-        that fits in one batch keeps its read when another table's FK
-        references it (``_build_key_sets`` builds the key sets from it), and
-        when it has a self-FK (the read is its own snapshot). Otherwise a
-        self-FK table checks each batch against the key sets of a key-only
-        whole-table read, built once before the first batch and released
-        after the last.
+        A batch read is persisted only when it is read twice: a fresh
+        self-FK table that fits in one batch is its own snapshot. Otherwise
+        a self-FK table checks each batch against the key sets of a
+        key-only whole-table read, built once before the first batch and
+        released after the last.
 
         Resume is **idempotent by delete-then-insert**: the production sinks
         commit per partition, so a crash mid-batch can leave some partitions
@@ -442,8 +439,7 @@ class MigrationPipeline:
         batches = [todo[s : s + size] for s in range(0, len(todo), size)]
         whole = not done and len(batches) == 1
         self_refs = {tuple(fk.ref_columns) for fk in table.foreign_keys if fk.ref_pg_table == name}
-        keep = whole and name in self._referenced
-        persist = keep or (whole and bool(self_refs))
+        persist = whole and bool(self_refs)
         self_keys = None
         if self_refs and not whole:
             # self-FK cleanup must see the whole pre-clean table, not the batch
@@ -458,9 +454,6 @@ class MigrationPipeline:
                 )
                 if persist:
                     base = base.persist()
-                if keep:
-                    with self._cache_lock:  # released by run() with the other caches
-                        self._transformed_cache[name] = base
                 try:
                     # append once a batch landed, this run or the crashed one
                     _, removed, rows = self.clean_orphans(
@@ -468,7 +461,7 @@ class MigrationPipeline:
                         append=bool(done) or b > 0, rows_in=rows_in,
                     )
                 finally:
-                    if persist and not keep:
+                    if persist:
                         base.unpersist()
                 rows_total += rows
                 removed_total += removed
@@ -563,13 +556,15 @@ class MigrationPipeline:
             self._run_steps(result)
         finally:
             # every exit, a failed wave included, releases the run's
-            # persisted reads and the source's connection
+            # persisted key sets, the source's connection and the target's
+            # read-back spools
             if hasattr(self.source, "close"):
                 self.source.close()  # single_tx: ends the snapshot transaction
-            for cache in (self._key_sets, self._transformed_cache):
-                for df in cache.values():
-                    df.unpersist()
-                cache.clear()
+            for keys in self._key_sets.values():
+                keys.unpersist()
+            self._key_sets.clear()
+            if hasattr(self.target, "close"):
+                self.target.close()
         result.elapsed_sec = time.monotonic() - t0
         return result
 
@@ -623,8 +618,8 @@ class MigrationPipeline:
 
             # parents load first so FK cleanup can consume their key sets;
             # only tables some FK actually references get them, and they
-            # hold the keys of the CLEANED rows (what was written), so
-            # grandchildren are checked against surviving parent rows only
+            # hold the keys of the LANDED rows (read back from the target),
+            # so grandchildren are checked against surviving parent rows only
             self._referenced = {}
             for t in tables:
                 for fk in t.foreign_keys:

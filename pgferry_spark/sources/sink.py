@@ -13,20 +13,28 @@ lands fully or not at all — the property the checkpoint/resume layer needs
 (SURVEY §7 hard-part 5). ``PsqlCopyDataSource`` / ``PsqlTarget`` COPY FROM
 STDIN through the ``psql`` client subprocess: a REAL PostgreSQL COPY
 execution (one psql invocation = one transaction per partition), used by the
-integration tests against a throwaway local server. Without a server, the
-pipeline lands in ``backends.SpoolTarget``'s parquet spool instead.
+integration tests against a throwaway local server. ``PsqlTarget.read``
+streams ``COPY .. TO STDOUT`` back, parsed into typed columns, for the
+pipeline's parent key sets. Without a server, the pipeline lands in
+``backends.SpoolTarget``'s parquet spool instead.
 """
 
 from __future__ import annotations
 
 import itertools
 import json
+import re
 import subprocess
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+from ..backends import remove_spools, spool_batches
+from ..catalog.identifiers import mysql_ident, pg_ident
 
 
 def pg_cell_text(v) -> str | None:
@@ -55,6 +63,35 @@ def _copy_escape(s: str) -> str:
         .replace("\n", "\\n")
         .replace("\r", "\\r")
     )
+
+
+# rows ``PsqlTarget.read`` holds in driver memory at once
+_READ_BATCH = 10_000
+
+# the backslash escapes COPY ... TO writes in text format
+_COPY_OUT_ESCAPES = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t", "v": "\v"}
+_COPY_OUT_ESCAPE = re.compile(r"\\(.)")
+
+
+def _copy_text_cells(line: str) -> tuple:
+    """One line of COPY text output as a tuple of str cells (None for
+    ``\\N``)."""
+    return tuple(
+        None if cell == "\\N"
+        else _COPY_OUT_ESCAPE.sub(lambda m: _COPY_OUT_ESCAPES.get(m[1], m[1]), cell)
+        for cell in line.split("\t")
+    )
+
+
+def _from_copy_text(f: StructField) -> Column:
+    """Column ``f`` of a spool of COPY text cells, parsed into
+    ``f.dataType`` (a bytea cell is the hex ``PsqlTarget.read`` selects)."""
+    c = F.col(mysql_ident(f.name))
+    if isinstance(f.dataType, BinaryType):
+        c = F.unhex(c)
+    elif not isinstance(f.dataType, StringType):
+        c = c.cast(f.dataType)
+    return c.alias(f.name)
 
 
 class _PsqlCopyWriter(DataSourceWriter):
@@ -120,6 +157,7 @@ class PsqlTarget:
     db: str
     user: str
     schema: str
+    _spools: list = field(default_factory=list, init=False, repr=False)
 
     def _psql(self) -> list[str]:
         args = ["psql", "-X", "-q", "-v", "ON_ERROR_STOP=1"]
@@ -176,3 +214,45 @@ class PsqlTarget:
 
     def delete_where(self, table: str, predicate: str) -> None:
         self.execute(f"DELETE FROM {self._qualified(table)} WHERE {predicate}")
+
+    def read(self, table: str, schema: StructType) -> DataFrame:
+        """The rows ``table`` holds of ``schema``'s columns, each typed as
+        its field: ``COPY (SELECT ..) TO STDOUT`` streamed ``_READ_BATCH``
+        lines at a time into a parquet spool of text cells
+        (``backends.spool_batches``), so driver memory stays bounded, then
+        parsed in the JVM. A bytea column is selected as hex
+        (``encode``), whatever the server's ``bytea_output``, and
+        unhexed; every other value is cast from its text. ``close``
+        removes the spool."""
+        cols = ", ".join(
+            f"encode({pg_ident(f.name)}, 'hex')" if isinstance(f.dataType, BinaryType)
+            else pg_ident(f.name)
+            for f in schema.fields
+        )
+        copy_sql = f"COPY (SELECT {cols} FROM {self._qualified(table)}) TO STDOUT"
+        proc = subprocess.Popen(
+            self._psql() + ["-c", copy_sql],
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+        )
+
+        def batches():
+            try:
+                lines = (line.decode("utf-8").rstrip("\n") for line in proc.stdout)
+                while rows := [
+                    _copy_text_cells(x) for x in itertools.islice(lines, _READ_BATCH)
+                ]:
+                    yield rows
+                err = proc.stderr.read().decode()
+                if proc.wait() != 0:
+                    raise RuntimeError(f"psql COPY TO failed: {err[:500]}")
+            finally:
+                if proc.poll() is None:
+                    proc.kill()
+
+        text = StructType([StructField(f.name, StringType(), True) for f in schema.fields])
+        df = spool_batches(SparkSession.active(), text, batches(), self._spools)
+        return df.select(*[_from_copy_text(f) for f in schema.fields])
+
+    def close(self) -> None:
+        """Remove the spools ``read`` wrote."""
+        remove_spools(self._spools)

@@ -1,6 +1,8 @@
 """Operator semantics tests: orphan cleanup (MATCH SIMPLE parity with
 reference clean_orphans_test.go:8-82), dedup family, similarity search."""
 
+import random
+
 from pyspark.sql import functions as F
 
 from pgferry_spark.operators import dedup, orphans, similarity
@@ -371,6 +373,35 @@ class TestEmbeddingNearDup:
                                                block_size=2).collect()}
         assert one == many
         assert all(a < b for a, b in many)
+
+    def test_input_without_plan_stats_sizes_blocks_without_a_job(
+        self, spark, jobs_in_group,
+    ):
+        # an RDD-backed frame has no plan statistics: instead of a job
+        # counting it, each partition is cut into blocks of block_size
+        # rows, so no block outgrows block_size whatever the input's size
+        rng = random.Random(3)
+        rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(90)]
+        rows += [(90 + i, [x + 0.001 for x in rows[i][1]]) for i in range(10)]
+        e = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
+        no_stats = spark.createDataFrame(e.rdd.repartition(3), e.schema)
+        assert dedup._estimate_rows(no_stats) is None
+        # a projection scales the unknown size down; still unknown
+        assert dedup._estimate_rows(no_stats.select("vec_id")) is None
+        before = jobs_in_group(None)
+        blocks, nblocks = dedup._vector_blocks(no_stats, "embedding", "vec_id", 16)
+        pairs = dedup.embedding_near_dup_pairs(
+            no_stats, "embedding", "vec_id", 0.99, block_size=16,
+        )
+        assert jobs_in_group(None) == before
+        assert nblocks is None
+        sizes = [r[0] for r in blocks.select(F.size("rows")).collect()]
+        assert sum(sizes) == 100 and max(sizes) <= 16
+        got = {(r["id_a"], r["id_b"]): r["cosine_sim"] for r in pairs.collect()}
+        want = {(r["id_a"], r["id_b"]): r["cosine_sim"] for r in
+                dedup.embedding_near_dup_pairs(e, "embedding", "vec_id", 0.99).collect()}
+        assert got == want
+        assert {(i, 90 + i) for i in range(10)} <= set(got)
 
     def test_dedup_keeps_smallest_id(self, spark):
         e = self.embeddings(spark)

@@ -6,6 +6,7 @@ orphan cleanup, PKs and FKs replayed, spot value users.name='Alice')."""
 import sqlite3
 
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 from pgferry_spark.backends import SpoolTarget, SqliteSource
 from pgferry_spark.config import MigrationConfig
@@ -636,8 +637,8 @@ CREATE TABLE grandchild (id INTEGER PRIMARY KEY, child_id INTEGER NOT NULL REFER
 
 def test_fresh_run_reads_each_table_once(spark, tmp_path):
     """A fresh table that fits in one batch is read once: that read is its
-    self-FK snapshot and the source of the key set its children clean
-    against."""
+    self-FK snapshot, and the key set its children clean against comes
+    from the target."""
     db = _fk_db(str(tmp_path / "family.db"), _FAMILY, {
         "parent": [(i, i - 1 or None) for i in range(1, 31)],  # 3 chunks
         "child": [(i, 999 if i == 7 else i % 30 + 1) for i in range(1, 41)],  # 4 chunks
@@ -762,11 +763,11 @@ class _ReadLog(SqliteSource):
         return super().read_table(spark, table, predicates)
 
 
-def test_resume_reads_done_tables_key_only_and_validates_without_reads(
+def test_resume_reads_no_done_table_and_validates_without_reads(
     spark, tmp_path, monkeypatch,
 ):
-    """The resume reads the done parent and child only through their key
-    and FK columns (for the key sets the grandchild cleans against),
+    """The resume reads no row of the done parent and child (the key sets
+    the grandchild cleans against come from the target's landed rows),
     re-moves the grandchild's 2 pending batches at full width, and
     validates from the checkpoint's row totals with no source read."""
     import pgferry_spark.pipeline as P
@@ -787,12 +788,7 @@ def test_resume_reads_done_tables_key_only_and_validates_without_reads(
     assert result.ok
     assert during == [[]]
     full = ["id", "child_id", "note"]
-    assert src.reads == [
-        ("parent", ["id", "parent_id"], False),
-        ("child", ["id", "parent_id"], False),
-        ("grandchild", full, True),
-        ("grandchild", full, True),
-    ]
+    assert src.reads == [("grandchild", full, True), ("grandchild", full, True)]
     expected = {v.table: v.source_rows for v in result.validation}
     assert expected == {"parent": 100, "child": 99, "grandchild": 99}
     assert spark.read.parquet(out + "/grandchild").count() == 99
@@ -839,11 +835,11 @@ def test_chunked_child_sums_orphans_across_batches(spark, tmp_path):
 
 def test_failed_run_releases_persisted_frames(spark, tmp_path):
     """A target that raises mid-table leaves no persisted frame behind: the
-    parent's self-FK snapshot and its key set, the child's cached read and
-    the parents' key sets are all released."""
+    parent's self-FK snapshot and its key set, and the parents' key sets
+    are all released."""
     db = _fk_db(str(tmp_path / "leak.db"), _FAMILY, {
         "parent": [(i, i - 1 or None) for i in range(1, 101)],  # 3 batches
-        "child": [(i, i) for i in range(1, 41)],  # 1 batch, cached
+        "child": [(i, i) for i in range(1, 41)],  # 1 batch
         "grandchild": [(i, i % 40 + 1) for i in range(1, 101)],
     })
     jsc = spark.sparkContext._jsc
@@ -861,17 +857,18 @@ _GRANDCHILD_SET_NULL = _FAMILY.replace(
 )
 
 
-def _orphan_family(path):
-    """Chunked family, 3 batches per table: a self-FK parent chain with one
-    dangling row (60), a child with 3 dangling rows, and a grandchild whose
-    DELETE-rule FK to the child and SET NULL FK to the parent both dangle
-    in several batches."""
+def _orphan_family(path, rows=100):
+    """Chunked family, 3 batches per table (2 at 60 ``rows``): a self-FK
+    parent chain with one dangling row (60), a child with 3 dangling rows
+    (2 at 60 rows), and a grandchild whose DELETE-rule FK to the child and
+    SET NULL FK to the parent both dangle in several batches."""
+    ids = range(1, rows + 1)
     return _fk_db(path, _GRANDCHILD_SET_NULL, {
-        "parent": [(i, 999 if i == 60 else i - 1 or None) for i in range(1, 101)],
-        "child": [(i, 888 if i in (9, 49, 89) else i) for i in range(1, 101)],
+        "parent": [(i, 999 if i == 60 else i - 1 or None) for i in ids],
+        "child": [(i, 888 if i in (9, 49, 89) else i) for i in ids],
         "grandchild": [
             (i, 777 if i in (5, 45, 85) else i, 555 if i in (7, 47) else i)
-            for i in range(1, 101)
+            for i in ids
         ],
     })
 
@@ -916,15 +913,17 @@ def test_orphan_counting_runs_no_job_outside_the_write(
 def test_chunked_family_job_budget(spark, tmp_path, jobs_in_group):
     """A whole fresh run of the chunked family (9 batches) stays within a
     job budget: orphan counts are observed in the write jobs, each
-    parent's key set is built once, and each batch write is one pass over
-    its read (33 jobs). Cleaning against persisted full-width parent
-    frames, with a two-scan DELETE rule and every batch read persisted,
-    took 64; counting with two ``count()`` jobs per DELETE batch took 153."""
+    parent's key set is projected once from its landed rows, and each
+    batch write is one pass over its read (27 jobs). Building each key set
+    from a source re-read with the parent's FK rules run again took 30;
+    cleaning against persisted full-width parent frames, with a two-scan
+    DELETE rule and every batch read persisted, took 64; counting with two
+    ``count()`` jobs per DELETE batch took 153."""
     db = _orphan_family(str(tmp_path / "budget.db"))
     j0 = jobs_in_group(None)
     result = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "out"))).run()
     assert result.ok
-    assert len(jobs_in_group(None) - j0) <= 40
+    assert len(jobs_in_group(None) - j0) <= 29
 
 
 def test_grandchild_orphans_exact_with_delete_and_set_null_fks(spark, tmp_path):
@@ -956,6 +955,25 @@ def test_empty_table_with_delete_rule_fk_reports_zero(spark, tmp_path):
     }
 
 
+def test_two_fks_to_one_parent_share_its_key_set(spark, tmp_path):
+    """Both FKs of ``doc`` reference ``users(id)``, so both join the one
+    key set of ``users``: the DELETE rule drops doc 3, the SET NULL rule
+    nulls doc 2's ``updated_by``."""
+    db = _fk_db(str(tmp_path / "two.db"), """
+        CREATE TABLE users (id INTEGER PRIMARY KEY, name TEXT);
+        CREATE TABLE doc (id INTEGER PRIMARY KEY,
+          created_by INTEGER REFERENCES users(id),
+          updated_by INTEGER REFERENCES users(id) ON DELETE SET NULL);
+    """, {"users": [(1, "a"), (2, "b")], "doc": [(1, 1, 2), (2, 2, 9), (3, 9, 1)]})
+    out = str(tmp_path / "out")
+    result = _chunked_pipeline(spark, db, SpoolTarget(spark, out)).run()
+    assert result.ok
+    doc = next(r for r in result.tables if r.table == "doc")
+    assert (doc.rows_written, doc.orphans_removed) == (2, 1)
+    rows = spark.read.parquet(str(tmp_path / "out" / "doc")).collect()
+    assert sorted(map(tuple, rows)) == [(1, 1, 2), (2, 2, None)]
+
+
 def test_spool_directories_removed_after_run(spark, tmp_path, monkeypatch):
     """SQLite reads spool through temp dirs; a finished run, successful or
     failed, leaves none behind."""
@@ -972,6 +990,167 @@ def test_spool_directories_removed_after_run(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="simulated crash"):
         _chunked_pipeline(spark, db, crashing).run()
     assert not list(spool_root.glob("pgferry_spool_*"))
+
+
+def test_spool_delete_where_runs_one_job(spark, tmp_path, jobs_in_group):
+    """A purge is one Spark job, its rewrite: the scan takes the footer's
+    schema instead of running a job to infer one."""
+    target = SpoolTarget(spark, str(tmp_path / "out"))
+    assert target.write(spark.range(1, 101), "t") == 100
+    before = jobs_in_group(None)
+    target.delete_where("t", '"id" >= 41 AND "id" <= 100')
+    assert len(jobs_in_group(None) - before) == 1
+    ids = target.read("t", StructType([StructField("id", LongType())]))
+    assert sorted(r.id for r in ids.collect()) == list(range(1, 41))
+
+
+_KEYED_FAMILY = """
+CREATE TABLE parent (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES parent(id));
+CREATE TABLE pair (a INTEGER, b INTEGER, parent_id INTEGER NOT NULL REFERENCES parent(id),
+  PRIMARY KEY (a, b));
+CREATE TABLE child (id INTEGER PRIMARY KEY, a INTEGER, b INTEGER,
+  code INTEGER REFERENCES parent(id) ON DELETE SET NULL,
+  FOREIGN KEY (a, b) REFERENCES pair(a, b));
+CREATE TABLE grandchild (id INTEGER PRIMARY KEY, code INTEGER NOT NULL REFERENCES child(code));
+"""
+
+
+def _keyed_family(path, seed):
+    """Seeded family with a composite key and a key column that a SET NULL
+    rule nulls: a self-FK parent (2 dangling rows), ``pair`` keyed by
+    ``(a, b)`` (2 rows whose parent is gone), a chunked child whose
+    composite FK dangles or is NULL and whose ``code`` FK to the parent is
+    nulled when it dangles, and a grandchild referencing ``child(code)``."""
+    import random
+
+    rng = random.Random(seed)
+    dangling = set(rng.sample(range(2, 51), 2))
+    parent = [(i, 900 + i if i in dangling else i - 1 or None) for i in range(1, 51)]
+    gone = sorted(dangling)  # the parent rows the self-FK rule removes
+    pairs = [(a, b, rng.randint(1, 50)) for a in range(1, 9) for b in range(1, 6)]
+    pairs[0], pairs[1] = (1, 1, gone[0]), (1, 2, 777)
+    child = []
+    for i in range(1, 61):
+        a, b = rng.choice([(a, b) for a, b, _ in pairs] + [(99, 1), (None, 3)])
+        child.append((i, a, b, rng.choice([rng.randint(1, 50), 600 + i])))
+    codes = [c[3] for c in child]
+    grandchild = [(i, rng.choice(codes)) for i in range(1, 41)]
+    return _fk_db(path, _KEYED_FAMILY, {
+        "parent": parent, "pair": pairs, "child": child, "grandchild": grandchild,
+    })
+
+
+def _key_rows(df):
+    return {tuple(r) for r in df.collect()}
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_key_sets_from_the_target_equal_key_sets_of_the_cleaned_source(
+    spark, tmp_path, seed,
+):
+    """Each referenced table's key set projected from its landed rows is the
+    key set of its whole source read with its FK rules applied: the
+    composite ``pair(a, b)`` and ``child(code)``, whose dangling codes the
+    SET NULL rule nulled."""
+    from pgferry_spark.operators.orphans import parent_keys
+
+    db = _keyed_family(str(tmp_path / "keyed.db"), seed)
+    pipe = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "out")))
+    assert pipe.run().ok
+    assert pipe._referenced == {"parent": {("id",)}, "pair": {("a", "b")}, "child": {("code",)}}
+    rebuilt = _chunked_pipeline(spark, db, SpoolTarget(spark, str(tmp_path / "unused")))
+    tables = _parents_first(pipe.source.introspect().tables)
+    try:
+        for t in tables:
+            if t.pg_name not in pipe._referenced:
+                continue
+            pipe._build_key_sets(t)
+            cleaned, _ = rebuilt._apply_fk_rules(rebuilt._read_transformed(t, None), t)
+            for ref in pipe._referenced[t.pg_name]:
+                keys = parent_keys(cleaned, list(ref))
+                # collected: a fresh frame per key set, as a persisted one
+                # read back from a target is
+                keys = spark.createDataFrame(keys.collect(), keys.schema)
+                rebuilt._key_sets[(t.pg_name, ref)] = keys
+                assert _key_rows(pipe._key_sets[(t.pg_name, ref)]) == _key_rows(
+                    rebuilt._key_sets[(t.pg_name, ref)]
+                ), (t.pg_name, ref)
+        pairs = _key_rows(pipe._key_sets[("pair", ("a", "b"))])
+        assert len(pairs) < 40 and (1, 2) not in pairs
+        assert (None,) in _key_rows(pipe._key_sets[("child", ("code",))])
+    finally:
+        for keys in pipe._key_sets.values():
+            keys.unpersist()
+        rebuilt.source.close()
+
+
+class _Crash(Exception):
+    pass
+
+
+class _CrashAt(SpoolTarget):
+    """Raises ``_Crash`` before the ``at``-th data write of a run runs or
+    after it lands (``when``), or right after a purge lands."""
+
+    def __init__(self, *a, at: int = 0, when: str, **kw):
+        super().__init__(*a, **kw)
+        self.at, self.when, self.writes = at, when, 0
+
+    def write(self, df, table, append=False):
+        self.writes += 1
+        if (self.writes, self.when) == (self.at, "before"):
+            raise _Crash
+        rows = super().write(df, table, append=append)
+        if (self.writes, self.when) == (self.at, "after"):
+            raise _Crash
+        return rows
+
+    def delete_where(self, table, predicate):
+        super().delete_where(table, predicate)
+        if self.when == "purge":
+            raise _Crash
+
+
+def _landed(spark, out):
+    return {
+        t: sorted(map(tuple, spark.read.parquet(f"{out}/{t}").collect()), key=lambda r: r[0])
+        for t in ("parent", "child", "grandchild")
+    }
+
+
+@pytest.fixture(scope="module")
+def _crash_family(spark, tmp_path_factory):
+    """The 60-row orphan family (2 batches per table, 6 writes) and the
+    rows an uncrashed run lands."""
+    root = tmp_path_factory.mktemp("crash_family")
+    db = _orphan_family(str(root / "family.db"), rows=60)
+    out = str(root / "out")
+    assert _chunked_pipeline(spark, db, SpoolTarget(spark, out)).run().ok
+    return db, _landed(spark, out)
+
+
+@pytest.mark.parametrize("when", ["before", "after"])
+@pytest.mark.parametrize("write", range(1, 7))
+def test_resume_after_a_crash_anywhere_lands_the_uncrashed_rows(
+    spark, tmp_path, _crash_family, write, when,
+):
+    """Crash before or after any write lands, resume (crashing once more
+    right after the resume's purge, when it purges), and the target holds
+    exactly the rows of an uncrashed run. A crash in a table's 2nd batch
+    leaves its 1st recorded, so the resume purges."""
+    db, want = _crash_family
+    ckpt, out = str(tmp_path / "ckpt.json"), str(tmp_path / "out")
+    with pytest.raises(_Crash):
+        _chunked_pipeline(spark, db, _CrashAt(spark, out, at=write, when=when), ckpt).run()
+    purged = False
+    try:
+        result = _chunked_pipeline(spark, db, _CrashAt(spark, out, when="purge"), ckpt).run()
+    except _Crash:
+        purged = True
+        result = _chunked_pipeline(spark, db, SpoolTarget(spark, out), ckpt).run()
+    assert result.ok
+    assert purged == (write % 2 == 0)
+    assert _landed(spark, out) == want
 
 
 class TestContentDiff:

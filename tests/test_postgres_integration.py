@@ -311,3 +311,163 @@ def test_extension_manager_against_live_server(pgserver):
             req = ExtensionRequirement("postgis", "postgis", create_if_missing=flag)
             with pytest.raises(ExtensionError, match="not available on the target"):
                 ensure_required_extensions(run_sql, [req])
+
+
+def _crashing_after(table: str, nth: int) -> type:
+    """A ``PsqlTarget`` that raises once its ``nth`` write of ``table``
+    landed."""
+
+    class Crashing(PsqlTarget):
+        writes = 0
+
+        def write(self, df, name, append=False):
+            rows = super().write(df, name, append=append)
+            if name == table:
+                Crashing.writes += 1
+                if Crashing.writes == nth:
+                    raise RuntimeError("simulated crash")
+            return rows
+
+    return Crashing
+
+
+def _migrate(spark, pg, db, schema, mode, target_cls=PsqlTarget, ckpt=None):
+    """One SQLite -> PostgreSQL run in 2-row chunks, resuming from the
+    checkpoint file ``ckpt`` when given."""
+    from pgferry_spark.plans.checkpoint import CheckpointManager
+
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=db, target_dsn="psql://itest",
+        target_schema=schema, mode=mode, chunk_size=2, workers=1,
+        resume=ckpt is not None,
+    )
+    target = target_cls(
+        host=pg["host"], port=pg["port"], db=pg["db"], user=pg["user"], schema=schema,
+    )
+    checkpoint = CheckpointManager(ckpt, flush_items=1) if ckpt else None
+    return MigrationPipeline(
+        spark, cfg, SqliteSource(db), target,
+        map_sqlite_type, map_sqlite_default, checkpoint=checkpoint,
+    ).run()
+
+
+def test_resume_into_real_postgres_removes_orphans_like_an_uncrashed_run(
+    spark, blog_db, pgserver, tmp_path,
+):
+    """A data_only migration that crashes after the comments' 2nd batch
+    lands (its 1st recorded), then resumes: the users and posts key sets
+    the re-moved comments clean against are read back from PostgreSQL,
+    and the target ends with exactly the rows of an uncrashed run."""
+    pg = pgserver
+
+    def rows(schema):
+        return {
+            t: _psql_scalar(pg, f"SELECT string_agg(t::text, ';' ORDER BY id) FROM {schema}.{t} t")
+            for t in ("users", "posts", "comments")
+        }
+
+    ckpt = str(tmp_path / "ckpt.json")
+    for schema in ("whole", "resumed"):
+        assert _migrate(spark, pg, blog_db, schema, "schema_only").ok
+    assert _migrate(spark, pg, blog_db, "whole", "data_only").ok
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _migrate(spark, pg, blog_db, "resumed", "data_only", _crashing_after("comments", 2), ckpt)
+    # ids 9-12 landed unrecorded, orphans 11 and 12 among them
+    assert _psql_scalar(pg, "SELECT COUNT(*) FROM resumed.comments") == "10"
+    result = _migrate(spark, pg, blog_db, "resumed", "data_only", ckpt=ckpt)
+    assert result.ok
+    comments = next(r for r in result.tables if r.table == "comments")
+    assert (comments.rows_written, comments.orphans_removed) == (2, 2)
+    assert rows("resumed") == rows("whole")
+    assert _psql_scalar(pg, "SELECT string_agg(id::text, ',' ORDER BY id) FROM resumed.comments") == (
+        "1,2,3,4,5,6,7,8,9,10"
+    )
+
+
+def test_resume_keeps_children_of_a_bytea_key(spark, pgserver, tmp_path):
+    """A BLOB primary key lands as bytea and its key set is read back from
+    PostgreSQL as bytes, not as the ``\\x..`` text PostgreSQL prints: after
+    a crash and resume every child of a landed tag survives (DELETE rule)
+    and keeps its SET NULL reference; only the orphan goes."""
+    pg = pgserver
+    db = str(tmp_path / "tags.db")
+    con = sqlite3.connect(db)
+    con.executescript(
+        """
+        CREATE TABLE tag (k BLOB PRIMARY KEY, name TEXT);
+        CREATE TABLE note (
+          id    INTEGER PRIMARY KEY,
+          tag_k BLOB NOT NULL REFERENCES tag(k),
+          alt_k BLOB REFERENCES tag(k) ON DELETE SET NULL
+        );
+        """
+    )
+    tags = [bytes([i, 0, 255, 92]) for i in range(1, 4)]  # 92 is a backslash
+    con.executemany("INSERT INTO tag VALUES (?, ?)", [(k, f"t{i}") for i, k in enumerate(tags)])
+    notes = [(i, tags[i % 3], tags[(i + 1) % 3]) for i in range(1, 12)]
+    notes.append((12, b"\x00", tags[0]))  # orphan: no such tag
+    con.executemany("INSERT INTO note VALUES (?, ?, ?)", notes)
+    con.commit()
+    con.close()
+
+    ckpt = str(tmp_path / "ckpt.json")
+    assert _migrate(spark, pg, db, "tags", "schema_only").ok
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        # ids 9-12 land unrecorded: the resume purges and re-moves them
+        _migrate(spark, pg, db, "tags", "data_only", _crashing_after("note", 2), ckpt)
+    result = _migrate(spark, pg, db, "tags", "data_only", ckpt=ckpt)
+    assert result.ok
+    note = next(r for r in result.tables if r.table == "note")
+    assert note.orphans_removed == 1
+    assert _psql_scalar(
+        pg,
+        "SELECT string_agg(id || ':' || encode(tag_k, 'hex') || ':' || "
+        "coalesce(encode(alt_k, 'hex'), '-'), ',' ORDER BY id) FROM tags.note",
+    ) == ",".join(f"{i}:{k.hex()}:{a.hex()}" for i, k, a in notes[:11])
+
+
+def test_read_parses_values_back_into_their_types(spark, pgserver):
+    """``read`` returns a table's rows typed as the asked-for schema:
+    COPY escapes undone, NULL kept apart from the empty string, bytea as
+    bytes, only the asked-for columns."""
+    from pyspark.sql.types import (
+        BinaryType, BooleanType, DecimalType, LongType, StringType, StructField, StructType,
+    )
+
+    pg = pgserver
+    target = PsqlTarget(
+        host=pg["host"], port=pg["port"], db=pg["db"], user=pg["user"], schema="readback",
+    )
+    target.execute("CREATE SCHEMA readback")
+    target.execute(
+        'CREATE TABLE readback.t ("id" bigint, "txt" text, "bin" bytea, "flag" boolean, '
+        '"amount" numeric(10,2), "skip" text)'
+    )
+    rows = [
+        (1, "tab\there\nnewline\\slash", bytes([0, 255, 92, 10]), True, "12.50", "x"),
+        (2, None, None, None, None, "y"),
+        (3, "", b"", False, "-0.01", "z"),
+    ]
+    target.write(spark.createDataFrame(
+        rows, "id: long, txt: string, bin: binary, flag: boolean, amount: string, skip: string",
+    ), "t")
+    schema = StructType([
+        StructField("id", LongType()), StructField("txt", StringType()),
+        StructField("bin", BinaryType()), StructField("flag", BooleanType()),
+        StructField("amount", DecimalType(10, 2)),
+    ])
+    try:
+        back = target.read("t", schema)
+        assert [(f.name, f.dataType) for f in back.schema] == [
+            (f.name, f.dataType) for f in schema
+        ]
+        from decimal import Decimal
+
+        assert sorted(map(tuple, back.collect())) == [
+            (1, "tab\there\nnewline\\slash", bytearray([0, 255, 92, 10]), True, Decimal("12.50")),
+            (2, None, None, None, None),
+            (3, "", bytearray(), False, Decimal("-0.01")),
+        ]
+    finally:
+        target.close()
+    assert not target._spools
