@@ -1141,11 +1141,11 @@ def _pii_luhn_cards(spark, sf):
 
 
 def _pii_card_gate(spark, sf):
-    """Batch posture of streaming.pii_card_gate_stream (map-only Column
-    expressions, identical on a stream): same deterministic card
-    synthesis as `pii_luhn_cards`, then the redact-mode gate — docs
-    carrying a Luhn-valid number get every card-shaped run masked."""
-    from pgferry_spark.streaming.events import pii_card_gate_stream
+    """`curate.pii_card_gate` (map-only Column expressions): same
+    deterministic card synthesis as `pii_luhn_cards`, then the redact-mode
+    gate — docs carrying a Luhn-valid number get every card-shaped run
+    masked."""
+    from pgferry_spark.operators.curate import pii_card_gate
 
     d = _t(spark, sf, "documents")
     d6 = F.lpad(((F.col("doc_id") * 7919) % 1000000).cast("string"), 6, "0")
@@ -1166,7 +1166,7 @@ def _pii_card_gate(spark, sf):
             F.concat(F.col("text"), F.lit(" pay "), formatted),
         ).otherwise(F.col("text")).alias("text"),
     )
-    return pii_card_gate_stream(carded, "text", mode="redact").select(
+    return pii_card_gate(carded, "text", mode="redact").select(
         "doc_id", "n_valid_cards", "text"
     )
 

@@ -13,7 +13,6 @@ re-expressed Spark-first:
                dedup, similarity search, text analysis)
 * sources/   — chunk-predicate readers (parquet/JDBC) and write sinks
 * multimodal/— binary (image/audio/video) column plumbing over mapInPandas
-* streaming/ — Structured Streaming variants of the event operators
 
 Everything here derives from public knowledge only: the PySpark API and the
 reference repo's observable behavior (cited as ``file:line`` into

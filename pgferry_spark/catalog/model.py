@@ -1,16 +1,12 @@
 """Relational catalog model.
 
 The reference's five catalog structs (reference model.go:1-58) re-expressed as
-Python dataclasses. On the Spark side a ``Table`` materializes as a DataFrame
-plus a ``StructType`` whose per-field ``metadata`` carries the source-type,
-default, extra and collation information that Spark's type system cannot.
+Python dataclasses.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-from pyspark.sql.types import StructField, StructType
 
 
 @dataclass
@@ -80,33 +76,6 @@ class Table:
             if c.pg_name == pg_name:
                 return c
         raise KeyError(pg_name)
-
-    def spark_schema(self, type_mapper) -> StructType:
-        """Materialize as a StructType; ``type_mapper(col) -> (pg_type, DataType)``.
-
-        Per-field metadata carries what Spark's types cannot express
-        (source type, default, extra, collation) — the Spark equivalent of
-        the reference's Column struct (reference model.go:4-19).
-        """
-        fields = []
-        for c in self.columns:
-            pg_type, spark_type = type_mapper(c)
-            fields.append(
-                StructField(
-                    c.pg_name,
-                    spark_type,
-                    nullable=c.nullable,
-                    metadata={
-                        "source_name": c.source_name,
-                        "source_type": c.column_type or c.data_type,
-                        "pg_type": pg_type,
-                        "default": c.default if c.default is not None else "",
-                        "extra": c.extra,
-                        "collation": c.collation,
-                    },
-                )
-            )
-        return StructType(fields)
 
 
 @dataclass

@@ -133,8 +133,7 @@ def hashed_log_odds_scores(
 
 def _token_buckets(d: DataFrame, text_col: str, id_col: str, n_buckets: int):
     """(id, __b) rows: md5-hashed token buckets — the shared feature
-    extractor for weight training, batch scoring, and the streaming
-    quality gate (one feature codebase, every execution mode)."""
+    extractor for weight training and scoring."""
     toks = tokens(F.lower(F.col(text_col)))
     return (
         d.select(F.col(id_col), F.explode_outer(toks).alias("__tok"))
@@ -158,9 +157,8 @@ def hashed_log_odds_weights(
 ) -> DataFrame:
     """The twin's weight table ``(__b, __w)`` — ≤ ``n_buckets`` rows of
     integer micro-unit log-odds, broadcast-sized by construction. Built
-    once from the labeled frame; consumed by batch scoring
-    (:func:`score_with_log_odds`) and the streaming admission gate
-    (``streaming.events.quality_gate_stream``)."""
+    once from the labeled frame; consumed by
+    :func:`score_with_log_odds`."""
     counts = (
         _token_buckets(labeled, text_col, id_col, n_buckets)
         .join(labeled.select(id_col, F.col(label_col).cast("long").alias("__y")), id_col)

@@ -474,6 +474,46 @@ def weighted_sample(
     )
 
 
+def pii_card_gate(
+    docs: DataFrame,
+    text_col: str = "text",
+    mode: str = "redact",
+) -> DataFrame:
+    """Checksum-validated card gate: card-shaped digit runs are extracted,
+    separator-stripped, length-gated, and Luhn-validated
+    (functions.text.card_candidates / luhn_valid — the same expressions
+    the ``pii_luhn_cards`` entry uses). A document carrying at least one
+    Luhn-VALID number is the highest-severity PII case — the regex-only
+    ``pii_scrub`` of :func:`curate_corpus` can't tell it from a
+    phone-shaped run, so this gate runs BEFORE it:
+
+    - ``mode="redact"``: mask every card-shaped run in the offending
+      document with ``<CARD>`` (conservative: once one validated number
+      is present, all card-shaped runs in that doc are suspect) and keep
+      the row, carrying ``n_valid_cards`` for audit;
+    - ``mode="drop"``: quarantine the row entirely (keep only
+      ``n_valid_cards == 0`` docs).
+
+    Map-only Column expressions — no state, no shuffle; at 100 TB it rides
+    the ingest scan inside whole-stage codegen."""
+    from ..functions.text import PII_CARD_RUN, card_candidates, luhn_valid
+
+    cands = card_candidates(F.col(text_col))
+    n_valid = F.size(F.filter(cands, luhn_valid)).cast("int")
+    flagged = docs.withColumn("n_valid_cards", n_valid)
+    if mode == "drop":
+        return flagged.filter(F.col("n_valid_cards") == 0)
+    if mode != "redact":
+        raise ValueError(f"unknown mode: {mode!r} (use 'redact' or 'drop')")
+    return flagged.withColumn(
+        text_col,
+        F.when(
+            F.col("n_valid_cards") > 0,
+            F.regexp_replace(F.col(text_col), PII_CARD_RUN, "<CARD>"),
+        ).otherwise(F.col(text_col)),
+    )
+
+
 def curate_corpus(
     df: DataFrame,
     text_col: str,
@@ -484,9 +524,8 @@ def curate_corpus(
     n_shards: int = 8,
     keeper: str = "min_id",
 ) -> DataFrame:
-    """The full curation DAG as one composition — the batch mirror of the
-    streaming :func:`~pgferry_spark.streaming.events.curate_stream` gate,
-    continued through to training-ready assignments:
+    """The full curation DAG as one composition, from raw documents to
+    training-ready assignments:
 
     1. PII scrub (map-only; the scrubbed text is what everything
        downstream, including the dedup fingerprint, sees);

@@ -526,8 +526,7 @@ def crawl_snapshot_merge(
                        differing batch fp is a replayed stale capture,
                        not churn (round-9 ADVICE: labeling this
                        'changed' overstated churn exactly in the
-                       out-of-order-replay scenario the streaming twin
-                       is built for)
+                       out-of-order-replay scenario)
         carried        not re-crawled; the old capture is carried forward
 
     Status is computed from the WINNING side.  Returns (nurl, id,

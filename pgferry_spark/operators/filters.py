@@ -955,11 +955,9 @@ def dsir_feature_buckets(
     carry: list[str] | None = None,
 ) -> DataFrame:
     """(id, [carry...], __b) hashed unigram+bigram feature buckets — the
-    SHARED feature extractor of the batch trainer/scorer AND the
-    streaming admission gate, so ingest-time scores are calibrated
-    against the batch-trained distribution (one feature codebase, two
-    modes).  ``carry`` rides extra columns through the explode (e.g.
-    the trainer's target flag) so no join-back is needed."""
+    feature extractor of :func:`dsir_importance_weights`.  ``carry``
+    rides extra columns through the explode (e.g. the trainer's target
+    flag) so no join-back is needed."""
     extra = list(carry or [])
     toks = fan_out(df, id_col).select(
         F.col(id_col),

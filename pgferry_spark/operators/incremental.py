@@ -94,52 +94,6 @@ def scd2_history(
     )
 
 
-def lake_upsert(
-    spark,
-    path: str,
-    changes: DataFrame,
-    key_col: str,
-    seq_col: str,
-    op_col: str = "op",
-) -> dict:
-    """MERGE a change batch into a parquet directory in place — the
-    lakehouse upsert without a table format: read the current snapshot,
-    :func:`apply_changes`, write the next snapshot to a temp directory,
-    and swap by rename so readers see the old version or the new one,
-    never a mix (same atomic-swap convention as
-    ``sources/layout.py::compact_parquet``; on an object store the swap
-    becomes an Iceberg/Delta commit, the rewrite shape is identical).
-
-    Returns {rows_before, rows_after, changes_applied}.
-
-    Scale note: this is the FULL-rewrite merge — right when the change
-    batch touches a large fraction of keys or the table is modest. For
-    wide tables with narrow change batches, partition the lake by a key
-    range (write_partitioned) and rewrite only the partitions the batch
-    touches: the apply_changes algebra is unchanged, only the read/write
-    scope narrows. Copy-on-write either way; merge-on-read needs a table
-    format's delete vectors by design."""
-    import os
-    import shutil
-
-    base = spark.read.parquet(path)
-    rows_before = base.count()
-    n_changes = changes.count()
-    merged = apply_changes(base, changes, key_col, seq_col, op_col)
-    tmp = path.rstrip("/") + ".__upsert_tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    old = path.rstrip("/") + ".__upsert_old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "changes_applied": n_changes,
-    }
-
-
 def maintain_grouped_agg(
     old_agg: DataFrame,
     base: DataFrame,

@@ -620,8 +620,7 @@ def distinct_orders_per_flag(lineitem: DataFrame) -> DataFrame:
 
 
 def events_hourly(events: DataFrame) -> DataFrame:
-    """Tumbling-window event aggregation (batch twin of the Structured
-    Streaming operator in streaming/events.py): per hour × event_type."""
+    """Tumbling-window event aggregation: per hour × event_type."""
     return (
         events.groupBy(
             F.window("ts", "1 hour").alias("w"), F.col("event_type")
@@ -680,8 +679,7 @@ def sequence_reset_values(tables: dict[str, tuple[DataFrame, str]]) -> DataFrame
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessionization: a new session starts when a user's
     inter-event gap exceeds ``gap_minutes``. One shuffle on user_id; the
-    session id is a running sum of boundary flags — the batch twin of
-    stateful session windows in streaming.
+    session id is a running sum of boundary flags.
 
     Timestamps compare in exact integer microseconds (unix_micros) so the
     boundary decision is bit-identical across engines.

@@ -198,7 +198,7 @@ def lsh_bucket(vec_col, planes: np.ndarray):
     return bucket
 
 
-def lsh_bucket_batch(planes: np.ndarray):
+def lsh_bucket_batch_lazy(n_planes: int, seed: int = 42, dim: int | None = None):
     """Vectorized twin of :func:`lsh_bucket`: one Arrow-batched pandas UDF
     computing sign-bit signatures as a single ``V @ planes.T`` matmul.
 
@@ -206,34 +206,14 @@ def lsh_bucket_batch(planes: np.ndarray):
     joins): expression-fold signatures get inlined by projection collapse
     into every consumer (n_planes × bands recomputation — the measured
     simhash pathology), while a UDF result column is computed once in its
-    ArrowEvalPython node no matter how many places reference it."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    ArrowEvalPython node no matter how many places reference it.
 
-    weights = (np.uint64(1) << np.arange(planes.shape[0], dtype=np.uint64)).astype(
-        np.float64
-    )
-
-    def _bucket(vs):
-        out = np.zeros(len(vs), dtype=np.int64)
-        if len(vs):
-            V = np.array(list(vs), dtype=np.float64)
-            bits = (V @ planes.T >= 0).astype(np.float64)
-            vals = bits @ weights  # exact: < 2^53 for n_planes <= 53
-            out[:] = vals.astype(np.int64)
-        return pd.Series(out)
-
-    _bucket.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf(_bucket, "long")
-
-
-def lsh_bucket_batch_lazy(n_planes: int, seed: int = 42, dim: int | None = None):
-    """Like :func:`lsh_bucket_batch`, but the hyperplanes are generated
-    INSIDE the executor from ``(dim, n_planes, seed)`` — ``dim`` from the
-    parameter when the caller knows it, else from the first vector of the
-    first Arrow batch.  ``random_hyperplanes`` is deterministic, so every
-    worker derives byte-identical planes and results match the
-    driver-generated formulation exactly.
+    The hyperplanes are generated INSIDE the executor from
+    ``(dim, n_planes, seed)`` — ``dim`` from the parameter when the caller
+    knows it, else from the first vector of the first Arrow batch.
+    ``random_hyperplanes`` is deterministic, so every worker derives
+    byte-identical planes and results match the driver-generated
+    formulation exactly.
 
     The point: operator **construction launches zero Spark jobs**.  The old
     shape probed ``df.select(vec).first()`` for the dimension — a blocking

@@ -566,7 +566,7 @@ def hll_rolling_from_registers(
     """Trailing-window estimates from an existing per-day register table
     ``(day, bucket, register)`` — the query half shared by
     :func:`hll_rolling_distinct` (which builds the registers inline) and
-    the streaming register store (which persists them): each register
+    any caller that keeps them between runs: each register
     row contributes map-only to the ``window_days`` windows it belongs
     to, then bounded max-merge + grouped estimate."""
     contrib = regs.select(

@@ -24,7 +24,8 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
     sequences → checks → triggers) + hooks at 4 phases
  7. checkpoint/resume around the movement phase: a resumed table first
     purges its pending chunks' key ranges with ONE ``delete_where``, then
-    re-moves exactly those chunks
+    re-moves exactly those chunks; a resume whose checkpoint records a
+    landed batch skips step 3, as the crashed run made the schema
 
 The **target backend** is pluggable: `execute(sql)` + `write(df, table)` +
 `count(table)` + `delete_where(table, predicate)` + `read(table, schema)`.
@@ -579,6 +580,7 @@ class MigrationPipeline:
         result.report = report
         self.hard_gate(report)
 
+        landed = False
         if self.cfg.resume:
             payload = {
                 "source_type": self.cfg.source_type,
@@ -593,6 +595,10 @@ class MigrationPipeline:
             self.checkpoint.fingerprint = compatibility_fingerprint(payload)
             self.checkpoint.payload = payload
             self.checkpoint.load()
+            landed = any(
+                st.completed_chunks or st.full_table_done
+                for st in self.checkpoint.tables.values()
+            )
 
         # extensions precede DDL *and* data_only loads: a missing postgis
         # must abort before the first spatial value hits the wire
@@ -602,7 +608,10 @@ class MigrationPipeline:
             advice = self.plan_advice(tables)
             report.advice = advice.report_dict()
 
-        if self.cfg.mode != "data_only":
+        # a landed batch means the schema and its tables already exist:
+        # CREATE SCHEMA would fail ('error'), DROP SCHEMA would lose the rows
+        # the checkpoint counts as landed ('recreate')
+        if self.cfg.mode != "data_only" and not landed:
             self.create_schema_objects(tables)
 
         if self.cfg.mode != "schema_only":

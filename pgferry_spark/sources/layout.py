@@ -174,13 +174,13 @@ def compact_parquet(
     path: str,
     target_mb: int = 128,
 ) -> dict:
-    """Small-file compaction — the lake-maintenance pass every streaming or
-    chunked writer eventually needs: rewrite a parquet directory into
+    """Small-file compaction — the lake-maintenance pass every chunked or
+    appending writer eventually needs: rewrite a parquet directory into
     ``ceil(total_bytes / target)`` files and swap atomically.
 
     Why it matters at 100 TB: a scan's task count (and its scheduler +
     footer-read overhead) is file-bound; a directory of 50k drizzle files
-    from a streaming sink turns a one-stage scan into a metadata storm.
+    from many small appends turns a one-stage scan into a metadata storm.
     Planning here is driver-side FILE METADATA only (no data job); the
     rewrite is one distributed read→repartition→write; the swap is
     directory rename, so readers see the old files or the new files,

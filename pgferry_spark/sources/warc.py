@@ -682,12 +682,11 @@ def wet_export(
 
     ``cid_offset`` shifts the grouping key BEFORE the build, so the
     in-band warcinfo record id (``urn:uuid:info-<cid>``) always equals
-    the emitted ``container_id`` — the batch-stride publisher
-    (:func:`~pgferry_spark.streaming.events.wet_publish_stream`) passes
-    its batch offset here instead of remapping after the bytes are
-    built (round 12, r11 ADVICE: a post-hoc remap left the published
-    id and the embedded id divergent, unrecoverable from bytes
-    alone)."""
+    the emitted ``container_id`` — a publisher that writes several
+    batches passes its batch offset here instead of remapping after the
+    bytes are built (round 12, r11 ADVICE: a post-hoc remap left the
+    published id and the embedded id divergent, unrecoverable from
+    bytes alone)."""
     schema = StructType(
         [
             StructField("container_id", LongType(), False),

@@ -1,9 +1,11 @@
+import pytest
 from pyspark.sql import functions as F
 
 from pgferry_spark.functions import text as T
 from pgferry_spark.operators.curate import (
     dataset_split,
     pack_sequences,
+    pii_card_gate,
     quota_sample,
 )
 
@@ -74,6 +76,33 @@ def test_card_candidates_luhn_filters_phone_shaped_runs(spark):
         F.size(F.filter(T.card_candidates(F.col("s")), T.luhn_valid)).alias("n")
     ).collect()
     assert [r["n"] for r in n_valid] == [0, 1]
+
+
+def test_pii_card_gate_redacts_and_drops(spark):
+    """Only the Luhn-VALID carrier is flagged; phone-shaped runs pass
+    untouched; drop mode quarantines the carrier."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, 10, 0)
+    rows = [
+        (1, t, "pay with 4539 5787 6362 1486 today"),      # valid card
+        (2, t, "call 415 555 0199 123 4 maybe"),           # fails Luhn
+        (3, t, "no digits in sight"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id: long, ts: timestamp, text: string")
+
+    def run(mode):
+        return {r["doc_id"]: r for r in pii_card_gate(docs, mode=mode).collect()}
+
+    got = run("redact")
+    assert got[1]["n_valid_cards"] == 1 and "<CARD>" in got[1]["text"]
+    assert "4539" not in got[1]["text"]
+    assert got[2]["n_valid_cards"] == 0 and got[2]["text"] == rows[1][2]
+    assert got[3]["n_valid_cards"] == 0
+
+    assert set(run("drop")) == {2, 3}
+    with pytest.raises(ValueError, match="unknown mode"):
+        pii_card_gate(docs, mode="mask")
 
 
 def test_curate_corpus_best_keeper_prefers_quality_over_id(spark):

@@ -131,47 +131,6 @@ def test_star_logarithmic_rounds_on_path_graph(spark):
     assert rounds <= math.ceil(math.log2(n)) + 3, rounds
 
 
-def test_lake_upsert_swaps_atomically(spark, tmp_path):
-    from pgferry_spark.operators.incremental import lake_upsert
-
-    path = str(tmp_path / "lake")
-    _base(spark).write.parquet(path)
-    changes = spark.createDataFrame(
-        [
-            (2, "U", 5, "b2", 21.0),
-            (3, "D", 6, "c", 30.0),
-            (9, "I", 7, "new", 90.0),
-        ],
-        "k: long, op: string, seq: long, name: string, bal: double",
-    )
-    stats = lake_upsert(spark, path, changes, "k", "seq")
-    assert stats == {"rows_before": 3, "rows_after": 3, "changes_applied": 3}
-    got = {r["k"]: (r["name"], r["bal"]) for r in spark.read.parquet(path).collect()}
-    assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 9: ("new", 90.0)}
-    # no temp/old residue after the swap
-    import os
-    assert not any("__upsert" in d for d in os.listdir(str(tmp_path)))
-
-
-def test_lake_upsert_second_batch_composes(spark, tmp_path):
-    from pgferry_spark.operators.incremental import lake_upsert
-
-    path = str(tmp_path / "lake2")
-    _base(spark).write.parquet(path)
-    b1 = spark.createDataFrame(
-        [(1, "U", 5, "a2", 11.0)],
-        "k: long, op: string, seq: long, name: string, bal: double",
-    )
-    b2 = spark.createDataFrame(
-        [(1, "D", 8, "a2", 11.0), (2, "U", 9, "b3", 22.0)],
-        "k: long, op: string, seq: long, name: string, bal: double",
-    )
-    lake_upsert(spark, path, b1, "k", "seq")
-    lake_upsert(spark, path, b2, "k", "seq")
-    got = {r["k"]: (r["name"], r["bal"]) for r in spark.read.parquet(path).collect()}
-    assert got == {2: ("b3", 22.0), 3: ("c", 30.0)}
-
-
 def test_maintain_grouped_agg_matches_recompute_with_group_move(spark):
     from pgferry_spark.operators.incremental import (
         apply_changes, maintain_grouped_agg,

@@ -597,7 +597,10 @@ def test_resumed_self_fk_table_reports_removed_orphans(spark, tmp_path):
 
 def test_resumed_table_checkpoint_keeps_earlier_chunk_rows(spark, tmp_path):
     """A resumed chunked table's checkpoint row total includes the rows the
-    crashed run's recorded chunks landed, not only this run's."""
+    crashed run's recorded chunks landed, not only this run's. The full-mode
+    resume runs no schema DDL: the crashed run made the schema and its
+    tables, so CREATE SCHEMA would fail and a recreate's DROP SCHEMA would
+    lose the landed rows."""
     db = _fk_db(str(tmp_path / "node.db"), _NODE, {
         "node": [(i, i - 1 or None) for i in range(1, 101)],
     })
@@ -605,9 +608,12 @@ def test_resumed_table_checkpoint_keeps_earlier_chunk_rows(spark, tmp_path):
     crashing = _CrashingTarget(spark, out, table="node", crash_on=2)
     with pytest.raises(RuntimeError, match="simulated crash"):
         _chunked_pipeline(spark, db, crashing, ckpt).run()
+    assert any(s.startswith("CREATE SCHEMA") for s in crashing.ddl)
 
-    pipe = _chunked_pipeline(spark, db, SpoolTarget(spark, out), ckpt)
+    resumed = SpoolTarget(spark, out)
+    pipe = _chunked_pipeline(spark, db, resumed, ckpt)
     assert pipe.run().ok
+    assert not [s for s in resumed.ddl if s.startswith(("CREATE SCHEMA", "CREATE TABLE"))]
     assert pipe.checkpoint.tables["node"].rows == 100
     assert spark.read.parquet(out + "/node").count() == 100
 

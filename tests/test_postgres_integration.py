@@ -331,15 +331,16 @@ def _crashing_after(table: str, nth: int) -> type:
     return Crashing
 
 
-def _migrate(spark, pg, db, schema, mode, target_cls=PsqlTarget, ckpt=None):
+def _migrate(spark, pg, db, schema, mode, target_cls=PsqlTarget, ckpt=None, **fields):
     """One SQLite -> PostgreSQL run in 2-row chunks, resuming from the
-    checkpoint file ``ckpt`` when given."""
+    checkpoint file ``ckpt`` when given; ``fields`` sets further config
+    fields."""
     from pgferry_spark.plans.checkpoint import CheckpointManager
 
     cfg = MigrationConfig(
         source_type="sqlite", source_dsn=db, target_dsn="psql://itest",
         target_schema=schema, mode=mode, chunk_size=2, workers=1,
-        resume=ckpt is not None,
+        resume=ckpt is not None, **fields,
     )
     target = target_cls(
         host=pg["host"], port=pg["port"], db=pg["db"], user=pg["user"], schema=schema,
@@ -351,6 +352,14 @@ def _migrate(spark, pg, db, schema, mode, target_cls=PsqlTarget, ckpt=None):
     ).run()
 
 
+def _blog_rows(pg, schema):
+    """Each blog table's rows, in id order, as one string."""
+    return {
+        t: _psql_scalar(pg, f"SELECT string_agg(t::text, ';' ORDER BY id) FROM {schema}.{t} t")
+        for t in ("users", "posts", "comments")
+    }
+
+
 def test_resume_into_real_postgres_removes_orphans_like_an_uncrashed_run(
     spark, blog_db, pgserver, tmp_path,
 ):
@@ -359,13 +368,6 @@ def test_resume_into_real_postgres_removes_orphans_like_an_uncrashed_run(
     the re-moved comments clean against are read back from PostgreSQL,
     and the target ends with exactly the rows of an uncrashed run."""
     pg = pgserver
-
-    def rows(schema):
-        return {
-            t: _psql_scalar(pg, f"SELECT string_agg(t::text, ';' ORDER BY id) FROM {schema}.{t} t")
-            for t in ("users", "posts", "comments")
-        }
-
     ckpt = str(tmp_path / "ckpt.json")
     for schema in ("whole", "resumed"):
         assert _migrate(spark, pg, blog_db, schema, "schema_only").ok
@@ -378,10 +380,39 @@ def test_resume_into_real_postgres_removes_orphans_like_an_uncrashed_run(
     assert result.ok
     comments = next(r for r in result.tables if r.table == "comments")
     assert (comments.rows_written, comments.orphans_removed) == (2, 2)
-    assert rows("resumed") == rows("whole")
+    assert _blog_rows(pg, "resumed") == _blog_rows(pg, "whole")
     assert _psql_scalar(pg, "SELECT string_agg(id::text, ',' ORDER BY id) FROM resumed.comments") == (
         "1,2,3,4,5,6,7,8,9,10"
     )
+
+
+@pytest.mark.parametrize("on_schema_exists", ["error", "recreate"])
+def test_full_mode_resume_into_real_postgres_lands_the_uncrashed_rows(
+    spark, blog_db, pgserver, tmp_path, on_schema_exists,
+):
+    """A full-mode migration that crashes after the comments' 2nd batch
+    lands resumes without the schema step, whose CREATE SCHEMA would fail
+    (``error``) and whose DROP SCHEMA would lose the landed users and
+    posts (``recreate``). The target ends with the rows and foreign keys
+    of an uncrashed run."""
+    pg = pgserver
+    whole, resumed = f"whole_{on_schema_exists}", f"resumed_{on_schema_exists}"
+    ckpt = str(tmp_path / "ckpt.json")
+    opts = {"on_schema_exists": on_schema_exists}
+    assert _migrate(spark, pg, blog_db, whole, "full", **opts).ok
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _migrate(spark, pg, blog_db, resumed, "full", _crashing_after("comments", 2), ckpt, **opts)
+    assert _migrate(spark, pg, blog_db, resumed, "full", ckpt=ckpt, **opts).ok
+    assert _blog_rows(pg, resumed) == _blog_rows(pg, whole)
+
+    def fks(schema):
+        return _psql_scalar(
+            pg,
+            "SELECT COUNT(*) FROM pg_constraint WHERE contype='f' "
+            f"AND conrelid='{schema}.comments'::regclass",
+        )
+
+    assert fks(resumed) == fks(whole) == "2"
 
 
 def test_resume_keeps_children_of_a_bytea_key(spark, pgserver, tmp_path):

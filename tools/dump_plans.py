@@ -284,8 +284,7 @@ ANNOTATED = {
         "(one shuffle, output = files, not docs); bin assignment is a "
         "single cumulative-sum window partitioned by source over "
         "file-count rows. The plan's cost is O(files), independent of "
-        "table bytes — the rewrite it feeds is per-bin parallel "
-        "(LakeTable.compact).",
+        "table bytes — the rewrite it feeds is per-bin parallel.",
     ),
     "hybrid_rrf_topk": (
         "two bounded top-N generators + one window pass + ordered take",
