@@ -3674,10 +3674,11 @@ def _cdx_zipnum_index(spark, sf):
     digest of every line byte that lands in it (block = global rank
     div N — closed-form, so the oracle replays the blocking exactly).
     The physical (offset, length) pointers come from
-    ``cdx_zipnum_pack`` + ``cluster_idx_rows`` and the
-    one-member-per-lookup pruning proof is pinned in
-    tests/test_httpmsg.py-style pytest (tests/test_warc.py::TestZipnum)
-    — a URL lookup over a 300 GB index inflates exactly ONE block."""
+    ``publish_zipnum_sharded`` (official format), and the bounded
+    lookup cost is pinned in pytest
+    (tests/test_warc.py::TestCdxjOfficialFormat) — a URL lookup over a
+    300 GB index inflates only the blocks holding the key, plus at most
+    one leading probe."""
     from pgferry_spark.operators.domains import surt_keys
     from pgferry_spark.sources.warc import attach_warc, warc_record_index
     from pgferry_spark.sources.zipnum import cdx_zipnum_cluster

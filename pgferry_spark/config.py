@@ -50,7 +50,9 @@ class MigrationConfig:
     checkpoint_path: str = ""  # default: <config dir>/.pgferry_spark_checkpoint.json
     # parallelism & chunking
     workers: int = 0  # 0 -> min(cpu, 8); SQLite capped at 1
-    index_workers: int = 0  # 0 -> inherit workers
+    # accepted for config parity with the reference and ignored: the
+    # post-migrate DDL replays sequentially
+    index_workers: int = 0
     chunk_size: int = 100_000
     # physical-plan advisor (plans/advisor.py): size the shuffle confs and
     # broadcast the small FK parents from measured source stats before the
@@ -77,9 +79,6 @@ class MigrationConfig:
         if self.workers > 0:
             return self.workers
         return min(os.cpu_count() or 1, 8)
-
-    def effective_index_workers(self) -> int:
-        return self.index_workers if self.index_workers > 0 else self.effective_workers()
 
 
 _HOOK_PHASES = {"before_data", "after_data", "before_fk", "after_all"}

@@ -2,15 +2,15 @@
 
 The r5 gap: the multimodal pipeline had a REAL pixel path for PNG only;
 JPEG payloads were metadata-parsed (SOF scan) but quarantined with NULL
-output in resize/ahash.  This module closes it for BASELINE JPEG (ITU
+output in ahash.  This module closes it for BASELINE JPEG (ITU
 T.81 SOF0/SOF1, Huffman entropy coding): a spec-conformant grayscale
 encoder (the in-test media generator, like ``encode_png_gray``) and a
 decoder that handles 1-component grayscale and 3-component YCbCr with
 arbitrary sampling factors (4:4:4, 4:2:0, 4:2:2 — chroma is decoded and
 discarded; the pipeline consumes the LUMA plane), restart markers
 included.  Progressive (SOF2), arithmetic coding, and 12-bit precision
-raise ``ValueError`` — those payloads keep the documented quarantine
-path in ``resize_images``.
+raise ``ValueError``, the signal a caller quarantines such payloads
+on.
 
 Every constant below is from the public spec (ITU-T T.81 Annex K:
 example quantization table, typical Huffman tables K.3.3.1/K.3.3.2,
@@ -435,10 +435,10 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
     table build, Huffman entropy decode, dequantize, IDCT, level shift.
     Returns ``(width, height, gray_pixels)`` where the pixels are the
     LUMA plane (component 1 of a YCbCr image; the whole image for
-    grayscale) — what the resize/ahash pipeline consumes.  Supports
+    grayscale) — what the ahash pipeline consumes.  Supports
     SOF0/SOF1 with any sampling factors (chroma blocks are decoded and
     discarded) and restart intervals; progressive/arithmetic/12-bit
-    raise ``ValueError`` (the quarantine path in ``resize_images``)."""
+    raise ``ValueError`` (the quarantine signal)."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: missing SOI marker")
     pos = 2
@@ -619,12 +619,3 @@ def _decode_scan(payload, data_pos, frame, scan, qtables, htables,
             mcu += 1
     out = np.clip(np.round(plane + 128.0), 0, 255).astype(np.uint8)
     return width, height, out[:height, :width].tobytes()
-
-
-def parse_jpeg_pixels(payload: bytes) -> tuple[int, int, int, int, bytes]:
-    """PNG-shaped facade over :func:`decode_jpeg_gray` so callers can
-    treat both codecs uniformly: returns ``(width, height, bit_depth,
-    color_type, gray_pixels)`` with PNG color-type 0 semantics (the luma
-    plane IS the grayscale image)."""
-    w, h, px = decode_jpeg_gray(payload)
-    return w, h, 8, 0, px

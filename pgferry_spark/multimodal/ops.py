@@ -287,6 +287,8 @@ def parse_jpeg_meta(payload: bytes) -> dict:
         (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
         # SOF0..SOF15 except DHT(C4)/JPG(C8)/DAC(CC)
         if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            if pos + 10 > len(payload):
+                raise ValueError(f"truncated SOF header at byte {pos}")
             precision, height, width, ncomp = struct.unpack(
                 ">BHHB", payload[pos + 4 : pos + 10]
             )
@@ -1023,103 +1025,6 @@ def decode_gray_pixels(payload: bytes) -> tuple[int, int, bytes]:
 
         return decode_jpeg_gray(payload)
     raise ValueError("no pixel codec for payload")
-
-
-def resize_pixels_nn(
-    width: int, height: int, pixels: bytes, max_dim: int
-) -> tuple[int, int, bytes]:
-    """Nearest-neighbor downsample of a row-major grayscale buffer to fit
-    ``max_dim`` on the longer side, aspect preserved; images already inside
-    the bound pass through untouched. Pure function — unit-testable without
-    Spark, Arrow-batched by :func:`resize_images`."""
-    longest = max(width, height)
-    if longest <= max_dim:
-        return width, height, pixels
-    new_w = max(1, round(width * max_dim / longest))
-    new_h = max(1, round(height * max_dim / longest))
-    out = bytearray(new_w * new_h)
-    for y in range(new_h):
-        sy = min(height - 1, (y * height) // new_h)
-        row = sy * width
-        for x in range(new_w):
-            out[y * new_w + x] = pixels[row + min(width - 1, (x * width) // new_w)]
-    return new_w, new_h, bytes(out)
-
-
-_RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("byte_len", LongType(), True),
-    ]
-)
-
-
-def resize_images(df: DataFrame, max_dim: int = 224) -> DataFrame:
-    """REAL image resize over Arrow batches: PNG and baseline-JPEG
-    payloads go through the full pixel decode
-    (:func:`decode_gray_pixels` — PNG chunk/CRC/inflate or JPEG
-    Huffman+IDCT), a nearest-neighbor downsample to fit ``max_dim`` on
-    the longer side (:func:`resize_pixels_nn`), and a format-preserving
-    re-encode (:func:`encode_png_gray` / :func:`~pgferry_spark.
-    multimodal.jpeg.encode_jpeg_gray`; a color JPEG re-encodes as its
-    resized LUMA plane — this is a grayscale pipeline). Input payloads
-    already inside the bound pass through byte-identical. Payloads with
-    no pixel codec here (progressive JPEG, MP4, opaque) keep the
-    aspect-scaled metadata from :func:`_decode_bytes` with a NULL
-    payload — the quarantine marker a downstream writer can route on
-    (swap in PIL/libav on a real cluster, nothing else changes)."""
-    from ..utils import fan_out
-
-    from .jpeg import encode_jpeg_gray
-
-    df = fan_out(df, "media_id")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, payloads = [], [], []
-            for p in pdf["payload"]:
-                resized = None
-                if p is not None:
-                    try:
-                        w, h, px = decode_gray_pixels(p)
-                        nw, nh, npx = resize_pixels_nn(w, h, px, max_dim)
-                        if (nw, nh) == (w, h):
-                            resized = (w, h, p)
-                        elif p[:2] == b"\xff\xd8":
-                            resized = (nw, nh, encode_jpeg_gray(nw, nh, npx))
-                        else:
-                            resized = (nw, nh, encode_png_gray(nw, nh, npx))
-                    except (ValueError, struct.error, zlib.error, IndexError):
-                        resized = None
-                if resized is None:
-                    meta = _decode_bytes(p)
-                    w, h = meta["width"], meta["height"]
-                    if w is None:
-                        resized = (None, None, None)
-                    else:
-                        scale = min(1.0, max_dim / max(w, h))
-                        resized = (round(w * scale), round(h * scale), None)
-                widths.append(resized[0])
-                heights.append(resized[1])
-                payloads.append(resized[2])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "media_type": pdf["media_type"].values,
-                    "width": widths,
-                    "height": heights,
-                    "payload": payloads,
-                    "byte_len": [
-                        len(p) if p is not None else None for p in payloads
-                    ],
-                }
-            )
-
-    return df.mapInPandas(resize, schema=_RESIZE_SCHEMA)
 
 
 def frame_sample(df: DataFrame, every_n: int = 5) -> DataFrame:

@@ -34,12 +34,6 @@ def enum_check(col: str, values: list[str]) -> Check:
     return Check(f"{col}_enum", c.isNull() | c.isin(*values))
 
 
-def set_check(col: str, values: list[str]) -> Check:
-    """set CHECK (col <@ ARRAY[...]) over an array column."""
-    c = F.col(col)
-    return Check(f"{col}_set", c.isNull() | F.forall(c, lambda e: e.isin(*values)))
-
-
 def unsigned_check(col: str, base_type: str) -> Check:
     """unsigned range CHECK (col BETWEEN 0 AND max).
 
@@ -72,14 +66,6 @@ def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
     rows = [(chk.name, total[chk.name], total["__total"]) for chk in checks]
     spark = df.sparkSession
     return spark.createDataFrame(rows, "check_name: string, violations: long, total: long")
-
-
-def assert_checks(df: DataFrame, checks: list[Check]) -> None:
-    """Raise if any check has violations (the hard-gate form)."""
-    result = run_checks(df, checks).collect()
-    bad = [(r["check_name"], r["violations"]) for r in result if r["violations"] > 0]
-    if bad:
-        raise ValueError(f"data-quality checks failed: {bad}")
 
 
 def approx_distinct_check(

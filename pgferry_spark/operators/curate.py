@@ -306,9 +306,9 @@ def shard_manifest(
 
     One aggregation shuffle on the shard id (map-side combine makes the
     shuffled volume n_shards rows per task). This is the verification
-    artifact a 100 TB shard write ships with — the writer
-    (:func:`write_training_shards`) produces files; this produces the
-    row/token accounting a trainer checks before consuming them."""
+    artifact a 100 TB shard write ships with — the shard writer
+    produces files; this produces the row/token accounting a trainer
+    checks before consuming them."""
     from ..functions.text import token_count
 
     return (
@@ -364,35 +364,6 @@ def compaction_plan(
     before = F.coalesce(F.sum(F.col(size_col).cast("long")).over(w), F.lit(0))
     return manifest.withColumn(
         "bin", F.floor(before / F.lit(int(target_bytes))).cast("int")
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int = 8,
-) -> None:
-    """Write the corpus as ``n_shards`` deterministic parquet shards:
-    ``path/shard=K/`` each holding exactly the md5-assigned rows of shard
-    K, ordered by md5(id) within the shard.
-
-    ``repartition(n_shards, shard)`` puts each shard's rows in one task
-    (hash collisions between shard ids may co-locate two shards in one
-    task — ``partitionBy`` still splits them into separate directories);
-    ``sortWithinPartitions`` fixes the in-file row order so the write is
-    byte-stable run to run. At 100 TB, raise ``n_shards`` until a shard
-    fits an executor's write buffer — assignment stays stable under
-    resharding only in the trivial K→2K sense, so pick the final shard
-    count once, up front."""
-    h = F.md5(F.col(id_col).cast("string"))
-    (
-        assign_shards(df, id_col, n_shards)
-        .repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions(F.col("shard"), h.asc(), F.col(id_col).asc())
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
     )
 
 
@@ -556,46 +527,6 @@ def curate_corpus(
     )
     split = dataset_split(deduped, id_col, train_pct, val_pct)
     return assign_shards(split, id_col, n_shards)
-
-
-def write_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int = 8,
-) -> None:
-    """JSONL twin of :func:`write_training_shards` — the interchange
-    format tokenizer/training pipelines actually ingest.  Same
-    deterministic md5 shard assignment, same byte-stable within-shard
-    ordering; each ``shard=K/`` directory holds newline-delimited JSON
-    (Spark's distributed text-JSON writer — gzip via
-    ``option("compression", ...)`` when the trainer streams it)."""
-    h = F.md5(F.col(id_col).cast("string"))
-    (
-        assign_shards(df, id_col, n_shards)
-        .repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions(F.col("shard"), h.asc(), F.col(id_col).asc())
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .json(path)
-    )
-
-
-def read_jsonl_shards(
-    spark,
-    path: str,
-    schema: str,
-) -> DataFrame:
-    """Read back a :func:`write_jsonl_shards` layout as a DataFrame —
-    the ingest half of the JSONL interchange round-trip. ``schema`` is
-    REQUIRED (never inferred): at 100 TB schema inference is a full
-    extra pass over every shard, and a drifting inferred type (a column
-    of all-null strings inferred as string vs the writer's long) breaks
-    downstream plans silently. The ``shard`` partition column comes back
-    as a normal column, so shard-pruned reads are a plain
-    ``.filter(F.col("shard") == k)`` that Spark turns into partition
-    pruning."""
-    return spark.read.schema(schema + ", shard int").json(path)
 
 
 def percentile_calibrate(

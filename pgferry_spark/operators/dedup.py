@@ -30,22 +30,6 @@ from ..utils import fan_out as _fan_out
 # -- exact -------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """Keep one representative (min id) per exact content value.
-
-    Window-min, not groupBy + semi-join: one shuffle on the content key and
-    the input computes once, vs an aggregate shuffle plus a join that
-    re-evaluates the upstream plan on both sides."""
-    from pyspark.sql.window import Window
-
-    keep = F.min(id_col).over(Window.partitionBy(content_col))
-    return (
-        df.withColumn("__keep", keep)
-        .filter(F.col(id_col) == F.col("__keep"))
-        .drop("__keep")
-    )
-
-
 def exact_dup_groups(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """(keeper_id, dup_count) per distinct content — the audit view."""
     return (
@@ -61,8 +45,9 @@ def dedup_by_fingerprint(
     id_col: str,
     score_col: str | None = None,
 ) -> DataFrame:
-    """Near-exact dedup on the whitespace/case-normalized md5 fingerprint
-    (same one-shuffle window shape as :func:`dedup_exact`). With
+    """Near-exact dedup on the whitespace/case-normalized md5 fingerprint:
+    one shuffle, a window-min keeper (not groupBy + semi-join, which
+    re-evaluates the upstream plan on both sides). With
     ``score_col``, the keeper is the group's HIGHEST-scoring row (ties to
     the smallest id — :func:`keep_best` semantics) instead of min-id,
     while retaining every column of the kept row; ``id_col`` must be
@@ -94,7 +79,7 @@ def keep_best(
     """Quality-aware dedup keeper: within each duplicate group (rows
     sharing ``key_col``) keep the row MAXIMIZING ``score_col``, ties
     broken toward the smallest id — the curation-grade alternative to
-    the min-id keeper (:func:`dedup_exact`), which throws away quality
+    the min-id keeper (:func:`dedup_by_fingerprint`), which throws away quality
     information when a cluster mixes a clean original with mangled
     copies.
 

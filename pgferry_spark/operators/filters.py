@@ -139,19 +139,6 @@ def blockword_flags(
     return df.select(F.col(id_col), hit.alias("blocked"))
 
 
-def blockword_filter(
-    df: DataFrame,
-    words: tuple[str, ...],
-    text_col: str,
-) -> DataFrame:
-    """Survivors of the word-list gate — the same expression as a
-    direct filter (map-only, no join), keeping every input column."""
-    _check_blockwords(words)
-    ltoks = F.transform(tokens(F.col(text_col)), F.lower)
-    hit = F.arrays_overlap(ltoks, F.array(*[F.lit(w) for w in words]))
-    return df.filter(~hit)
-
-
 # Gopher document-quality rules (Rae et al. 2021, "Scaling Language
 # Models", Appendix A1.1): the eight named per-document gates every
 # Gopher/MassiveWeb-style pipeline applies after repetition filtering.

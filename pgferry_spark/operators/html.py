@@ -546,15 +546,6 @@ def robots_noindex_flags(
     )
 
 
-def robots_gate(
-    df: DataFrame, html_col: str = "html"
-) -> DataFrame:
-    """Drop every document whose page opted out via meta noindex — the
-    crawl-politeness gate, applied before extraction spends a cycle on
-    the page.  Map-only filter."""
-    return df.filter(~F.expr(ROBOTS_NOINDEX_SQL.format(html=html_col)))
-
-
 def extract_links(
     df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -38,7 +38,6 @@ __all__ = [
     "hll_registers",
     "hll_merge",
     "hll_estimate",
-    "hll_cardinality",
     "hll_intersect_estimate",
     "cms_sketch",
     "cms_lookup",
@@ -47,7 +46,6 @@ __all__ = [
     "loghist_counts",
     "loghist_merge",
     "loghist_quantiles",
-    "loghist_splits",
     "cms_join_size",
     "hll_rolling_distinct",
     "hll_rolling_from_registers",
@@ -151,20 +149,6 @@ def hll_estimate(
     if group_cols:
         return regs.groupBy(*[F.col(g) for g in group_cols]).agg(*aggs)
     return regs.agg(*aggs)
-
-
-def hll_cardinality(est: float, n_present: int, p: int = 8) -> float:
-    """Driver-side small-range correction (linear counting when the raw
-    estimate is below 2.5*m and empty buckets remain) — applied OUTSIDE
-    the oracle-checked estimate because ``ln`` is libm-dependent. Pure
-    function; pinned by pytest, not by the SQL oracle."""
-    import math
-
-    m = 1 << p
-    zeros = m - n_present
-    if est <= 2.5 * m and zeros > 0:
-        return m * math.log(m / zeros)
-    return est
 
 
 def hll_intersect_estimate(
@@ -498,29 +482,6 @@ def cms_join_size(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
     )
     per_row = j.groupBy("row").agg(F.sum("__p").alias("dot"))
     return per_row.agg(F.min("dot").cast("long").alias("est_join_size"))
-
-
-def loghist_splits(
-    hist: DataFrame,
-    n_splits: int,
-    group_cols: tuple[str, ...] = (),
-    k: int = 16,
-    decimals: int = 2,
-) -> DataFrame:
-    """Equal-mass range-partition boundaries from a log-histogram: the
-    i/n quantile estimates for i = 1..n-1 — what ``repartitionByRange``
-    derives by SAMPLING the data, read instead off a mergeable few-KB
-    sketch. At 100 TB this turns range-layout planning (writer file
-    boundaries, range-bucketed sort keys) into sketch arithmetic: no
-    sampling job, deterministic, and yesterday's histogram merges with
-    today's delta before re-planning. Each resulting range holds
-    ~total/n rows within the sketch's 1/k relative-value error.
-    Returns ``(*group_cols, q double, est double)`` with n-1 rows per
-    group."""
-    qs = tuple(i / n_splits for i in range(1, n_splits))
-    return loghist_quantiles(
-        hist, qs, group_cols=group_cols, k=k, decimals=decimals
-    )
 
 
 def hll_rolling_distinct(

@@ -1,15 +1,9 @@
-"""Skew-mitigation join helpers.
+"""Skew diagnostics.
 
 AQE's skew-join splitting (on by default in session.py) handles moderate
-skew at runtime; these helpers cover the cases AQE can't:
-
-* ``salted_join`` — explicit salting for a known-pathological key
-  distribution: the skewed (big) side gets a random salt in [0, N), the
-  small side is replicated N× with every salt value, and the join key
-  becomes (key, salt). One hot key's rows spread across N tasks instead
-  of one straggler.
-* ``skew_profile`` — the diagnostic that tells you whether you need it:
-  top-k key frequencies + share of total.
+skew at runtime. ``skew_profile`` is the diagnostic that tells you
+whether a join key is skewed enough to need more: top-k key frequencies
++ share of total.
 """
 
 from __future__ import annotations
@@ -20,8 +14,8 @@ from pyspark.sql import functions as F
 
 def skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
     """(key, cnt, share) for the ``top`` heaviest keys — the pre-join
-    diagnostic that decides whether a join needs :func:`salted_join` /
-    AQE skew handling, run BEFORE burning a shuffle on a skewed key.
+    diagnostic that decides whether a join needs salting or AQE skew
+    handling, run BEFORE burning a shuffle on a skewed key.
 
     Lazy end to end: the total is a 1-row aggregate over the
     already-grouped counts (broadcast back in), not a driver-side
@@ -39,25 +33,3 @@ def skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
         .orderBy(F.col("cnt").desc(), F.col(key).asc())
         .limit(top)
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
-
-    Output columns = big's columns ++ small's non-key columns (the join key
-    survives once, from the big side). Deterministic results; the salt is
-    internal and dropped.
-    """
-    salted_big = big.withColumn(
-        "__salt", (F.abs(F.xxhash64(F.monotonically_increasing_id())) % salt_buckets).cast("int")
-    )
-    salts = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("__salt")
-    replicated_small = small.select(F.col("*"), salts)
-    joined = salted_big.join(replicated_small, on=[on, "__salt"], how=how)
-    return joined.drop("__salt")

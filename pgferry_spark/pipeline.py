@@ -24,8 +24,8 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
     sequences → checks → triggers) + hooks at 4 phases
  7. checkpoint/resume around the movement phase: a resumed table first
     purges its pending chunks' key ranges with ONE ``delete_where``, then
-    re-moves exactly those chunks; a resume whose checkpoint records a
-    landed batch skips step 3, as the crashed run made the schema
+    re-moves exactly those chunks; the first flush follows step 3, so a
+    resume that finds a checkpoint skips step 3
 
 The **target backend** is pluggable: `execute(sql)` + `write(df, table)` +
 `count(table)` + `delete_where(table, predicate)` + `read(table, schema)`.
@@ -580,7 +580,7 @@ class MigrationPipeline:
         result.report = report
         self.hard_gate(report)
 
-        landed = False
+        schema_made = False
         if self.cfg.resume:
             payload = {
                 "source_type": self.cfg.source_type,
@@ -594,11 +594,9 @@ class MigrationPipeline:
             }
             self.checkpoint.fingerprint = compatibility_fingerprint(payload)
             self.checkpoint.payload = payload
-            self.checkpoint.load()
-            landed = any(
-                st.completed_chunks or st.full_table_done
-                for st in self.checkpoint.tables.values()
-            )
+            # the first flush follows the schema DDL, so a checkpoint file
+            # means the schema and its tables already exist
+            schema_made = self.checkpoint.load()
 
         # extensions precede DDL *and* data_only loads: a missing postgis
         # must abort before the first spatial value hits the wire
@@ -608,11 +606,14 @@ class MigrationPipeline:
             advice = self.plan_advice(tables)
             report.advice = advice.report_dict()
 
-        # a landed batch means the schema and its tables already exist:
-        # CREATE SCHEMA would fail ('error'), DROP SCHEMA would lose the rows
-        # the checkpoint counts as landed ('recreate')
-        if self.cfg.mode != "data_only" and not landed:
+        # a resume must not re-run the schema DDL: CREATE SCHEMA would fail
+        # ('error'), DROP SCHEMA would lose the rows the checkpoint counts
+        # as landed ('recreate'). Flushing right after the DDL lets a run
+        # that crashes before its first batch lands resume too.
+        if self.cfg.mode != "data_only" and not schema_made:
             self.create_schema_objects(tables)
+            if self.cfg.resume:
+                self.checkpoint.flush()
 
         if self.cfg.mode != "schema_only":
             if self.cfg.mode == "data_only":
@@ -698,7 +699,13 @@ class MigrationPipeline:
 
 
 def _count_rows(df: DataFrame, observation: Observation) -> DataFrame:
-    """``df`` with ``observation`` counting its rows as ``rows``."""
+    """``df`` with ``observation`` counting its rows as ``rows``.
+
+    Residue: once an ``Observation`` has run, its session can no longer be
+    serialized, because Spark 4.1 keeps the session's
+    ``observationManager`` in a non-transient field. Nothing here
+    serializes a session; a caller that must should do it before the
+    first run."""
     return df.observe(observation, F.count(F.lit(1)).alias("rows"))
 
 

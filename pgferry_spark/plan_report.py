@@ -178,48 +178,3 @@ def build_plan_report(
                     {"table": t.pg_name, "index": idx.name, "reason": reason}
                 )
     return report
-
-
-def diff_schemas(old: Schema, new: Schema) -> dict:
-    """Structural drift between two introspected catalogs — the
-    human-readable EXPLANATION behind a checkpoint-compatibility
-    rejection (plans/checkpoint.py rejects on fingerprint mismatch; this
-    names what moved), and the pre-flight report for re-running a
-    migration against a source that kept changing.
-
-    Returns a dict of sorted lists:
-    ``tables_added`` / ``tables_dropped`` / per-column ``columns_added`` /
-    ``columns_dropped`` (as ``table.column``) / ``retyped``
-    (``table.column: old -> new``) / ``nullability_changed`` /
-    ``defaults_changed``.  Pure driver-side, deterministic ordering."""
-    old_t = {t.pg_name: t for t in old.tables}
-    new_t = {t.pg_name: t for t in new.tables}
-    out = {
-        "tables_added": sorted(set(new_t) - set(old_t)),
-        "tables_dropped": sorted(set(old_t) - set(new_t)),
-        "columns_added": [],
-        "columns_dropped": [],
-        "retyped": [],
-        "nullability_changed": [],
-        "defaults_changed": [],
-    }
-    for name in sorted(set(old_t) & set(new_t)):
-        oc = {c.pg_name: c for c in old_t[name].columns}
-        nc = {c.pg_name: c for c in new_t[name].columns}
-        out["columns_added"] += [f"{name}.{c}" for c in sorted(set(nc) - set(oc))]
-        out["columns_dropped"] += [f"{name}.{c}" for c in sorted(set(oc) - set(nc))]
-        for cname in sorted(set(oc) & set(nc)):
-            o, n = oc[cname], nc[cname]
-            o_type = o.column_type or o.data_type
-            n_type = n.column_type or n.data_type
-            if o_type != n_type:
-                out["retyped"].append(f"{name}.{cname}: {o_type} -> {n_type}")
-            if o.nullable != n.nullable:
-                out["nullability_changed"].append(
-                    f"{name}.{cname}: nullable {o.nullable} -> {n.nullable}"
-                )
-            if (o.default or "") != (n.default or ""):
-                out["defaults_changed"].append(
-                    f"{name}.{cname}: {o.default!r} -> {n.default!r}"
-                )
-    return out

@@ -250,8 +250,7 @@ def advise_migration(
             broadcast_parents.add(parent)
         elif advice.strategy == "salted_shuffle":
             # the pipeline's joins are built declaratively — AQE's runtime
-            # skew split is the right lever there; salted_join stays the
-            # operator-level tool for hand-built hot joins
+            # skew split is the right lever there
             conf["spark.sql.adaptive.enabled"] = "true"
             conf["spark.sql.adaptive.skewJoin.enabled"] = "true"
     return RunAdvice(part, joins, frozenset(broadcast_parents), conf)

@@ -148,50 +148,3 @@ def plan_table_chunks(
     if chunk_key is None:
         return ChunkPlan(table, None, [Chunk(None, None)])
     return ChunkPlan(table, chunk_key, plan_chunks(min_key, max_key, chunk_size))
-
-
-@dataclass(frozen=True)
-class DateChunk:
-    """One half-open date range ``[lo, hi)`` (ISO dates); the final chunk
-    is closed so MAX(date) itself is included — mirrors :class:`Chunk`."""
-
-    lo: str
-    hi: str
-    is_last: bool = True
-
-    def predicate(self, key: str) -> str:
-        op = "<=" if self.is_last else "<"
-        return f"{key} >= DATE '{self.lo}' AND {key} {op} DATE '{self.hi}'"
-
-
-def plan_date_chunks(
-    min_date: str | None, max_date: str | None, days_per_chunk: int = 7
-) -> list[DateChunk]:
-    """Date-keyed chunk planner — the time-partitioned extension of the
-    numeric planner (the reference requires a single NUMERIC PK,
-    reference chunk.go:126-135, so date/timestamp-keyed fact tables fall
-    back to one serial read there; here they stride by calendar days
-    with the same boundary discipline: half-open interiors, closed final
-    chunk, gaps tolerated as short chunks).  Planning is driver-side
-    O(span/days) from one MIN/MAX probe; each chunk becomes one
-    predicate in a partitioned read, which parquet sources turn into
-    partition/row-group pruning when the data is date-partitioned.
-    Empty table (None bounds) → one unbounded chunk signalled by an
-    empty list."""
-    import datetime as _dt
-
-    if min_date is None or max_date is None:
-        return []
-    days = max(1, int(days_per_chunk))
-    lo = _dt.date.fromisoformat(str(min_date))
-    hi = _dt.date.fromisoformat(str(max_date))
-    if lo > hi:
-        raise ValueError(f"min_date {lo} after max_date {hi}")
-    out: list[DateChunk] = []
-    cur = lo
-    step = _dt.timedelta(days=days)
-    while cur + step <= hi:
-        out.append(DateChunk(cur.isoformat(), (cur + step).isoformat(), is_last=False))
-        cur = cur + step
-    out.append(DateChunk(cur.isoformat(), hi.isoformat(), is_last=True))
-    return out

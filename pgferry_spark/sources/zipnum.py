@@ -22,22 +22,21 @@ walk/read (sources/warc.py) — into that second level:
   order-sensitive digest of the block's lines.  Everything is a
   closed-form function of the corpus, so the DuckDB twin replays the
   blocking arithmetic exactly;
-* :func:`cdx_zipnum_pack` — the REAL bytes: each block's lines become
-  one gzip member, block offsets/lengths accumulate into the physical
-  cluster.idx rows; :func:`warc_member_read` then inflates exactly one
-  block per lookup (the pruning-proof test);
-* :func:`zipnum_lookup` — the access path: binary-search the cluster
-  rows, inflate ONE member, scan its lines.
+* :func:`publish_zipnum_sharded` — the REAL bytes, in the official
+  layout: range-partitioned shard files of gzip-member blocks plus the
+  merged cluster.idx whose (offset, length) pointers come from the
+  bytes actually written;
+* :func:`zipnum_bulk_lookup` — the access path: bisect the cluster
+  rows, inflate one member per candidate block, scan its lines
+  (:func:`zipnum_lookup` is its per-key reference).
 
 Scale shape: the only globally-ordered artifact is the CDX index
 (~100-byte rows — ~1% of corpus bytes; the real system publishes it
 totally ordered, so the order is the product, not overhead).  The
-global rank here rides one ``row_number`` window — at 100 TB the same
-blocking runs per range-partitioned shard with a two-pass rank
-(partition line-counts broadcast as offsets), and cluster.idx gains a
-shard column; the per-block arithmetic this module proves is
-unchanged.  Container/payload bytes are never touched: zipnum is an
-index-over-the-index.
+content entries' global rank rides one ``row_number`` window; the
+publisher blocks every-N within each range-partitioned shard, so no
+global window runs there.  Container/payload bytes are never touched:
+zipnum is an index-over-the-index.
 """
 
 from __future__ import annotations
@@ -48,7 +47,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -73,18 +71,6 @@ CDX_LINE_SQL = (
 _CDX_ORDER = ["surt", "container_id", "record_no"]
 
 
-def _with_block_no(cdx: DataFrame, lines_per_block: int) -> DataFrame:
-    """CDX rows + (cdx_line, block_no): block = global rank div N over
-    the total (surt, container, record) order — the deterministic
-    blocking both the content entry and the packer share."""
-    w = Window.orderBy(*[F.col(c) for c in _CDX_ORDER])
-    return (
-        cdx.withColumn("cdx_line", F.expr(CDX_LINE_SQL))
-        .withColumn("__rn", F.row_number().over(w) - 1)
-        .withColumn("block_no", F.expr(f"__rn div {int(lines_per_block)}"))
-    )
-
-
 def cdx_zipnum_cluster(
     cdx: DataFrame, lines_per_block: int = 8
 ) -> DataFrame:
@@ -92,11 +78,17 @@ def cdx_zipnum_cluster(
     ``(block_no, first_surt, last_surt, n_lines, lines_md5)`` —
     ``lines_md5`` is the digest of the block's newline-joined lines in
     rank order, so a green row certifies both the blocking arithmetic
-    AND every byte of every line that lands in the block.  (The
-    physical (offset, length) pointers are gzip-length-dependent and
-    belong to :func:`cdx_zipnum_pack`; the member-read pruning proof
-    pins those in pytest.)"""
-    b = _with_block_no(cdx, lines_per_block)
+    AND every byte of every line that lands in the block.  Block =
+    global rank div N over the total (surt, container, record) order.
+    (The physical (offset, length) pointers are gzip-length-dependent;
+    :func:`publish_zipnum_sharded` writes them for the official
+    format.)"""
+    w = Window.orderBy(*[F.col(c) for c in _CDX_ORDER])
+    b = (
+        cdx.withColumn("cdx_line", F.expr(CDX_LINE_SQL))
+        .withColumn("__rn", F.row_number().over(w) - 1)
+        .withColumn("block_no", F.expr(f"__rn div {int(lines_per_block)}"))
+    )
     return b.groupBy("block_no").agg(
         F.min("surt").alias("first_surt"),
         F.max("surt").alias("last_surt"),
@@ -124,209 +116,43 @@ def encode_zipnum_block(lines: list[str]) -> bytes:
     )
 
 
-_PACK_SCHEMA = StructType(
-    [
-        StructField("block_no", LongType(), False),
-        StructField("first_surt", StringType(), False),
-        StructField("last_surt", StringType(), False),
-        StructField("n_lines", LongType(), False),
-        StructField("block", BinaryType(), False),
-    ]
-)
-
-
-def cdx_zipnum_pack(cdx: DataFrame, lines_per_block: int = 8) -> DataFrame:
-    """The REAL shard bytes: each block's lines (in rank order) become
-    one gzip member via applyInPandas on the block key.  Returns
-    ``(block_no, first_surt, n_lines, block)``; concatenating the
-    blocks in block_no order IS the shard file, and the physical
-    cluster.idx rows are the running (offset = cumsum of previous
-    lengths, length = octet_length(block)) over that order — see
-    :func:`cluster_idx_rows`."""
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__rn")
-        return pd.DataFrame(
-            {
-                "block_no": [int(pdf["block_no"].iloc[0])],
-                "first_surt": [pdf["cdx_line"].iloc[0].split(" ", 1)[0]],
-                "last_surt": [pdf["cdx_line"].iloc[-1].split(" ", 1)[0]],
-                "n_lines": [len(pdf)],
-                "block": [encode_zipnum_block(list(pdf["cdx_line"]))],
-            }
-        )
-
-    b = _with_block_no(cdx, lines_per_block)
-    return b.select("block_no", "__rn", "cdx_line").groupBy(
-        "block_no"
-    ).applyInPandas(pack, schema=_PACK_SCHEMA)
-
-
-def cluster_idx_rows(packed: DataFrame) -> DataFrame:
-    """Physical cluster.idx from the packed blocks: per block the
-    (offset, length) byte pointer into the concatenated shard — offset
-    is the exclusive running sum of block lengths in block_no order.
-    One window over the block table (blocks = lines/N — config-scale
-    next to the corpus)."""
-    w = (
-        Window.orderBy("block_no")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return packed.select(
-        "block_no",
-        "first_surt",
-        "last_surt",
-        "n_lines",
-        (
-            F.sum(F.octet_length("block")).over(w)
-            - F.octet_length("block")
-        ).alias("offset"),
-        F.octet_length("block").cast("long").alias("length"),
-    )
-
-
-def cdx_zipnum_sharded(
-    cdx: DataFrame, n_shards: int, lines_per_block: int = 8
-) -> DataFrame:
-    """The 100 TB blocking path SCALE.md documents: range-partition
-    the CDX on the SURT order into ``n_shards`` shards, sort within
-    each, and block every-N WITHIN the shard — no global window.  The
-    global rank is recovered in two passes: per-shard line counts
-    (a shard-count-sized aggregate, broadcast back as offsets) plus
-    the within-shard rank.  Returns the same block table as
-    :func:`cdx_zipnum_cluster` plus a ``shard`` column; within every
-    shard the blocking arithmetic is identical to the global
-    formulation (tests/test_warc.py::TestZipnum pins the equivalence),
-    and cluster.idx stays config-scale (blocks = lines/N).
-
-    Boundary note: shard boundaries come from Spark's range-partition
-    SAMPLING, so shard membership is not oracle-replayable — the
-    oracle-backed entry rides the global formulation; this function is
-    the posture proof that the same per-block arithmetic distributes.
-    A lookup consults (shard, first/last key) exactly like the
-    single-shard path — blocks within a shard tile it, shards tile the
-    key space."""
-    from pyspark.sql.types import IntegerType
-
-    rank_schema = StructType(
-        [
-            StructField("surt", StringType(), True),
-            StructField("cdx_line", StringType(), True),
-            StructField("shard", IntegerType(), False),
-            StructField("__srn", LongType(), False),
-        ]
-    )
-
-    def rank(batches):
-        # Arrow batches preserve the partition's sorted row order, so a
-        # running counter IS the within-shard rank — zero extra shuffle
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rn = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "surt": pdf["surt"],
-                    "cdx_line": pdf["cdx_line"],
-                    "shard": pid,
-                    "__srn": range(rn, rn + len(pdf)),
-                }
-            )
-            rn += len(pdf)
-            yield out
-
-    lines = (
-        cdx.withColumn("cdx_line", F.expr(CDX_LINE_SQL))
-        .repartitionByRange(n_shards, *_CDX_ORDER)
-        .sortWithinPartitions(*_CDX_ORDER)
-        .select("surt", "cdx_line")
-        .mapInPandas(rank, schema=rank_schema)
-        .withColumn(
-            "block_no", F.expr(f"__srn div {int(lines_per_block)}")
-        )
-    )
-    return lines.groupBy("shard", "block_no").agg(
-        F.min("surt").alias("first_surt"),
-        F.max("surt").alias("last_surt"),
-        F.count(F.lit(1)).alias("n_lines"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("__srn", "cdx_line"))
-                    ),
-                    lambda x: x["cdx_line"],
-                ),
-                "\n",
-            )
-        ).alias("lines_md5"),
-    )
-
-
 def zipnum_lookup(
-    shard: bytes | dict, cluster: list[dict], key: str
+    shards: dict, cluster: list[dict], key: str
 ) -> tuple[list[str], int]:
-    """The access path: binary-search the cluster rows for the block
-    range that can hold the key, inflate exactly that range, filter the
-    lines.  Returns ``(matching lines, blocks_inflated)`` — the counter
-    is the pruning proof's witness that a lookup costs a bounded,
-    near-minimal number of ranged reads.
+    """The per-key access path over official cluster.idx rows
+    (:func:`parse_cluster_idx`: ``first_key`` = ``urlkey<SP>timestamp``,
+    plus ``filename``): bisect for the block range that can hold the
+    key, inflate exactly that range, filter the lines.  Returns
+    ``(matching lines, blocks_inflated)`` — the counter is the pruning
+    proof's witness that a lookup costs a bounded number of ranged
+    reads.  The public cluster.idx carries only each block's FIRST
+    key, so the candidate range is [last block starting <= the key ..
+    last block whose first urlkey == the key]: the cost is (blocks
+    holding the key) + at most one leading probe, and an absent key
+    costs at most one read.
 
-    TWO cluster-row shapes are accepted (round 12):
-
-    * **in-house rows** (:func:`cluster_idx_rows`: ``first_surt`` +
-      ``last_surt``) — two-sided bisect, EXACT pruning: only blocks
-      actually holding the key are inflated (one, except for a hot key
-      straddling a boundary), and an absent key costs ZERO reads;
-    * **official cluster.idx rows** (:func:`parse_cluster_idx`:
-      ``first_key`` = ``urlkey<SP>timestamp``, plus ``filename``) — the
-      public CommonCrawl TSV carries only each block's FIRST key, so
-      the candidate range is [last block starting <= the key .. last
-      block whose first urlkey == the key]; correctness is identical,
-      the cost bound relaxes to (blocks holding the key) + at most one
-      leading probe, and an absent key costs at most one read — the
-      price the official format pays for its 5-column rows.
-
-    Rows are sorted internally by their key column (collect() order is
-    not a guarantee — round-11 ADVICE), and ``shard`` may be a single
-    bytes blob or a ``{filename: bytes}`` dict for multi-shard official
-    layouts (in-house rows address the single blob)."""
+    Rows are sorted internally by their key (collect() order is not a
+    guarantee — round-11 ADVICE); ``shards`` maps each row's
+    ``filename`` to that file's bytes (:func:`read_zipnum_files`)."""
     import bisect
 
     if not cluster:
         return [], 0
-    official = "first_key" in cluster[0]
-
-    def blob(c: dict) -> bytes:
-        if isinstance(shard, dict):
-            return shard[c["filename"]]
-        return shard
-
-    if official:
-        cluster = sorted(
-            cluster, key=lambda c: (c["first_key"], c["filename"], c["offset"])
-        )
-        firsts = [c["first_key"] for c in cluster]
-        # lines sort by 'urlkey<SP>timestamp...'; SP (0x20) is below
-        # every urlkey/digit byte, so string order == (urlkey, ts) order
-        lo = max(bisect.bisect_right(firsts, key + " ") - 1, 0)
-        hi = bisect.bisect_right(firsts, key + " ~") - 1  # '~' > any digit
-        if hi < lo:
-            hi = lo  # key below the first block: probe block 0 only
-    else:
-        cluster = sorted(
-            cluster, key=lambda c: (c["first_surt"], c["last_surt"])
-        )
-        firsts = [c["first_surt"] for c in cluster]
-        lasts = [c["last_surt"] for c in cluster]
-        lo = bisect.bisect_left(lasts, key)
-        hi = bisect.bisect_right(firsts, key) - 1
-        if hi < lo:
-            return [], 0  # key falls between blocks or outside the shard
+    cluster = sorted(
+        cluster, key=lambda c: (c["first_key"], c["filename"], c["offset"])
+    )
+    firsts = [c["first_key"] for c in cluster]
+    # lines sort by 'urlkey<SP>timestamp...'; SP (0x20) is below
+    # every urlkey/digit byte, so string order == (urlkey, ts) order
+    lo = max(bisect.bisect_right(firsts, key + " ") - 1, 0)
+    hi = bisect.bisect_right(firsts, key + " ~") - 1  # '~' > any digit
+    if hi < lo:
+        hi = lo  # key below the first block: probe block 0 only
     out: list[str] = []
     for c in cluster[lo : hi + 1]:
-        rec = warc_member_read(blob(c), int(c["offset"]), int(c["length"]))
+        rec = warc_member_read(
+            shards[c["filename"]], int(c["offset"]), int(c["length"])
+        )
         out += [
             ln
             for ln in rec.decode("utf-8").splitlines()
@@ -534,9 +360,9 @@ def cdxj_zipnum_cluster(
     ``(block_no, first_key, last_key, n_lines, lines_md5)`` — the
     official cluster.idx records only ``first_key``, but digesting
     every line byte per block certifies the blocking arithmetic AND
-    the packed bytes (the :func:`cdx_zipnum_cluster` discipline over
-    the official line format).  The physical (offset, length) pointers
-    belong to :func:`cdxj_zipnum_pack` + :func:`cluster_idx_lines`."""
+    the published bytes (the :func:`cdx_zipnum_cluster` discipline
+    over the official line format).  The physical (offset, length)
+    pointers belong to :func:`publish_zipnum_sharded`."""
     w = Window.orderBy(*[F.col(c) for c in _CDXJ_ORDER])
     b = (
         lines.withColumn("__key", F.expr("surt || ' ' || fetch_ts"))
@@ -561,148 +387,10 @@ def cdxj_zipnum_cluster(
     )
 
 
-_CDXJ_PACK_SCHEMA = StructType(
-    [
-        StructField("block_no", LongType(), False),
-        StructField("first_key", StringType(), False),
-        StructField("n_lines", LongType(), False),
-        StructField("block", BinaryType(), False),
-    ]
-)
-
-
 def _line_key(line: str) -> str:
     """'urlkey<SP>timestamp' — the first two space-separated fields."""
     parts = line.split(" ", 2)
     return parts[0] + " " + parts[1]
-
-
-def cdxj_zipnum_pack(
-    lines: DataFrame, lines_per_block: int = 8
-) -> DataFrame:
-    """Official-format zipnum packing: the CDXJ lines in total key
-    order, every N lines one gzip member; per block its ``first_key``
-    (``urlkey<SP>timestamp`` — the only key the public cluster.idx
-    records).  Same applyInPandas geometry as :func:`cdx_zipnum_pack`;
-    at 100 TB the blocking runs per range-partitioned shard exactly as
-    :func:`cdx_zipnum_sharded` proves."""
-    w = Window.orderBy(*[F.col(c) for c in _CDXJ_ORDER])
-    b = (
-        lines.withColumn("__rn", F.row_number().over(w) - 1)
-        .withColumn("block_no", F.expr(f"__rn div {int(lines_per_block)}"))
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__rn")
-        ls = list(pdf["cdxj_line"])
-        return pd.DataFrame(
-            {
-                "block_no": [int(pdf["block_no"].iloc[0])],
-                "first_key": [_line_key(ls[0])],
-                "n_lines": [len(ls)],
-                "block": [encode_zipnum_block(ls)],
-            }
-        )
-
-    return b.select("block_no", "__rn", "cdxj_line").groupBy(
-        "block_no"
-    ).applyInPandas(pack, schema=_CDXJ_PACK_SCHEMA)
-
-
-def cluster_idx_lines(
-    packed: DataFrame, cdx_filename: str = "cdx-00000.gz"
-) -> DataFrame:
-    """The official cluster.idx TSV rows over the packed blocks:
-    ``urlkey<SP>timestamp \\t filename \\t offset \\t length \\t
-    cluster`` — offset/length are the gzip member's byte range inside
-    the named cdx shard file (exclusive running sum in block order),
-    cluster is the 0-based block sequence.  One window over the
-    config-scale block table."""
-    w = (
-        Window.orderBy("block_no")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return packed.select(
-        "block_no",
-        "first_key",
-        F.concat(
-            F.col("first_key"),
-            F.lit("\t" + cdx_filename + "\t"),
-            (
-                F.sum(F.octet_length("block")).over(w)
-                - F.octet_length("block")
-            ).cast("string"),
-            F.lit("\t"),
-            F.octet_length("block").cast("string"),
-            F.lit("\t"),
-            F.col("block_no").cast("string"),
-        ).alias("cluster_line"),
-    )
-
-
-def write_zipnum_files(
-    packed: DataFrame,
-    out_dir: str,
-    cdx_filename: str = "cdx-00000.gz",
-    cluster_filename: str = "cluster.idx",
-) -> None:
-    """Publish one zipnum shard + its cluster.idx as REAL files in ONE
-    executor pass: the gzip members concatenate in block order into
-    ``cdx_filename`` while the official 5-column TSV rows accumulate
-    their (offset, length) pointers from the bytes ACTUALLY written —
-    the two artifacts cannot diverge.  Atomic publish via unique temp +
-    hard-link (the :func:`~.warc.write_warc_files` discipline): an
-    existing target raises instead of clobbering, and a concurrent
-    reader never sees a torn file.  One shard = one writer — the unit
-    real layouts use (cc-index ships ~300 ``cdx-NNNNN.gz`` files);
-    multi-shard layouts call this once per shard's packed blocks, and
-    ``out_dir`` must be executor-reachable shared storage."""
-    import os
-    import tempfile
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(rows) -> None:
-        rows = sorted(rows, key=lambda r: int(r["block_no"]))
-        if not rows:
-            return
-        fd, tmp_s = tempfile.mkstemp(dir=out_dir, suffix=".inprogress")
-        fdi, tmp_i = tempfile.mkstemp(dir=out_dir, suffix=".inprogress")
-        off = 0
-        with os.fdopen(fd, "wb") as fs, os.fdopen(fdi, "w") as fi:
-            for r in rows:
-                b = bytes(r["block"])
-                fs.write(b)
-                fi.write(
-                    f"{r['first_key']}\t{cdx_filename}\t{off}\t"
-                    f"{len(b)}\t{int(r['block_no'])}\n"
-                )
-                off += len(b)
-        # publish the PAIR or nothing: if the index publish fails after
-        # the shard linked, the fresh shard rolls back so no torn
-        # shard-without-index layout survives (r12 ADVICE); a
-        # byte-identical pre-existing pair — a task retry — is success.
-        linked_fresh: list[str] = []
-        try:
-            for tmpf, name in (
-                (tmp_s, cdx_filename),
-                (tmp_i, cluster_filename),
-            ):
-                p = os.path.join(out_dir, name)
-                if publish_atomic(tmpf, p):  # always unlinks tmpf
-                    linked_fresh.append(p)
-        except BaseException:
-            for p in linked_fresh:
-                os.unlink(p)
-            raise
-        finally:
-            for tmpf in (tmp_s, tmp_i):  # the not-yet-visited temp
-                if os.path.exists(tmpf):
-                    os.unlink(tmpf)
-
-    packed.select("block_no", "first_key", "block").coalesce(
-        1
-    ).foreachPartition(write_part)
 
 
 def publish_zipnum_sharded(
@@ -722,6 +410,12 @@ def publish_zipnum_sharded(
     renumbered globally in key order, and written once.  Returns the
     cluster rows as :func:`zipnum_lookup` consumes them.
 
+    The shards and the index publish together or not at all: if the
+    cluster.idx publish fails (a divergent index already in
+    ``out_dir``), the shards this call linked fresh are unlinked, so
+    no shard-without-index layout survives.  Shards that were already
+    there, byte-identical, stay.
+
     Scale posture: index bytes go executor → storage, one file per
     task, nothing but the slim cluster rows returns to the driver;
     shard key ranges tile the key space (range partitioner), so
@@ -739,6 +433,7 @@ def publish_zipnum_sharded(
             StructField("filename", StringType(), False),
             StructField("offset", LongType(), False),
             StructField("length", LongType(), False),
+            StructField("fresh", BooleanType(), False),
         ]
     )
 
@@ -750,6 +445,7 @@ def publish_zipnum_sharded(
         rows: dict[str, list] = {
             "first_key": [], "filename": [], "offset": [], "length": [],
         }
+        fresh = False
         buf: list[str] = []
         state = {"fd": None, "tmp": None, "off": 0}
 
@@ -780,8 +476,8 @@ def publish_zipnum_sharded(
             state["fd"].close()
             # idempotent under task retry: identical re-publish is
             # success, divergent content raises (r12 ADVICE)
-            publish_atomic(state["tmp"], os.path.join(out_dir, fn))
-        yield pd.DataFrame(rows)
+            fresh = publish_atomic(state["tmp"], os.path.join(out_dir, fn))
+        yield pd.DataFrame(rows).assign(fresh=fresh)
 
     # r15 (guide §2.4): repartitionByRange SAMPLES its input to pick the
     # range boundaries, so the whole ``lines`` subtree (typically the
@@ -807,6 +503,8 @@ def publish_zipnum_sharded(
         (r.asDict() for r in collected),
         key=lambda c: (c["first_key"], c["filename"], c["offset"]),
     )
+    # shard files this call linked (pop runs for every row)
+    linked = {c["filename"] for c in cluster if c.pop("fresh")}
     for i, c in enumerate(cluster):
         c["cluster"] = i  # global sequence in key order (official col 5)
     fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".inprogress")
@@ -816,7 +514,12 @@ def publish_zipnum_sharded(
                 f"{c['first_key']}\t{c['filename']}\t{c['offset']}\t"
                 f"{c['length']}\t{c['cluster']}\n"
             )
-    publish_atomic(tmp, os.path.join(out_dir, cluster_filename))
+    try:
+        publish_atomic(tmp, os.path.join(out_dir, cluster_filename))
+    except BaseException:
+        for fn in linked:
+            os.unlink(os.path.join(out_dir, fn))
+        raise
     return cluster
 
 

@@ -91,50 +91,3 @@ def test_chunk_key_eligibility():
 def test_plan_table_chunks_unchunkable_gives_unbounded():
     plan = plan_table_chunks("t", None, None, None)
     assert plan.predicates() is None
-
-
-class TestDateChunks:
-    def test_tiles_exactly_with_closed_tail(self):
-        from pgferry_spark.plans.chunk import plan_date_chunks
-
-        cs = plan_date_chunks("2024-01-01", "2024-01-20", days_per_chunk=7)
-        assert [(c.lo, c.hi, c.is_last) for c in cs] == [
-            ("2024-01-01", "2024-01-08", False),
-            ("2024-01-08", "2024-01-15", False),
-            ("2024-01-15", "2024-01-20", True),
-        ]
-        assert cs[0].predicate("d") == "d >= DATE '2024-01-01' AND d < DATE '2024-01-08'"
-        assert cs[-1].predicate("d").endswith("d <= DATE '2024-01-20'")
-
-    def test_single_day_and_empty(self):
-        from pgferry_spark.plans.chunk import plan_date_chunks
-
-        cs = plan_date_chunks("2024-03-05", "2024-03-05", days_per_chunk=7)
-        assert [(c.lo, c.hi, c.is_last) for c in cs] == [
-            ("2024-03-05", "2024-03-05", True)
-        ]
-        assert plan_date_chunks(None, None) == []
-
-    def test_every_date_lands_in_exactly_one_chunk(self):
-        import datetime as dt
-
-        from pgferry_spark.plans.chunk import plan_date_chunks
-
-        cs = plan_date_chunks("2024-01-01", "2024-02-14", days_per_chunk=10)
-        d = dt.date(2024, 1, 1)
-        while d <= dt.date(2024, 2, 14):
-            holders = [
-                c for c in cs
-                if c.lo <= d.isoformat()
-                and (d.isoformat() <= c.hi if c.is_last else d.isoformat() < c.hi)
-            ]
-            assert len(holders) == 1, d
-            d += dt.timedelta(days=1)
-
-    def test_inverted_range_rejected(self):
-        import pytest as _pytest
-
-        from pgferry_spark.plans.chunk import plan_date_chunks
-
-        with _pytest.raises(ValueError):
-            plan_date_chunks("2024-02-01", "2024-01-01")

@@ -79,8 +79,6 @@ def test_effective_workers():
     assert MigrationConfig(source_type="mysql", workers=3).effective_workers() == 3
     auto = MigrationConfig(source_type="mysql").effective_workers()
     assert 1 <= auto <= 8
-    cfg = MigrationConfig(source_type="mysql", workers=4, index_workers=2)
-    assert cfg.effective_index_workers() == 2
 
 
 def test_toml_roundtrip_and_hook_paths(tmp_path):

@@ -346,31 +346,6 @@ class TestTrainingShards:
         assert sum(r["tokens"] for r in m) == sum(i % 7 + 1 for i in range(40))
         assert {r["shard"] for r in m} <= set(range(4))
 
-    def test_write_round_trip_and_determinism(self, spark, tmp_path):
-        from pgferry_spark.operators.curate import (
-            assign_shards,
-            write_training_shards,
-        )
-
-        rows = [(i, "doc %d" % i) for i in range(50)]
-        df = spark.createDataFrame(rows, "id: long, text: string")
-        p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-        write_training_shards(df, p1, "id", n_shards=4)
-        write_training_shards(df, p2, "id", n_shards=4)
-
-        back = spark.read.parquet(p1)
-        assert sorted((r["id"], r["text"]) for r in back.collect()) == rows
-        # directory-per-shard layout, shard column recoverable from the path
-        assert sorted({r["shard"] for r in back.select("shard").collect()}) == \
-            sorted({r["shard"] for r in
-                    assign_shards(df, "id", 4).select("shard").collect()})
-        # same input -> same shard assignment on a second write
-        b2 = spark.read.parquet(p2)
-        a1 = sorted((r["id"], r["shard"]) for r in back.collect())
-        a2 = sorted((r["id"], r["shard"]) for r in b2.collect())
-        assert a1 == a2
-
-
 class TestTemperatureSample:
     def _df(self, spark):
         # 60/30/10 natural distribution

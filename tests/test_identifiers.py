@@ -50,68 +50,3 @@ def test_enum_type_name_sorted_content_addressed():
     assert enum_type_name(["b", "a"]) == enum_type_name(["a", "b"])
     assert enum_type_name(["a", "b"]) != enum_type_name(["a", "c"])
     assert enum_type_name(["a", "b"]).startswith("pgferry_enum_")
-
-
-def _schema(fks_by_table):
-    from pgferry_spark.catalog.model import ForeignKey, Schema, Table
-
-    tables = []
-    for name, fks in fks_by_table.items():
-        tables.append(
-            Table(
-                source_name=name, pg_name=name,
-                foreign_keys=[
-                    ForeignKey(
-                        name=f"fk_{name}_{ref}", columns=["x"],
-                        ref_table=ref, ref_pg_table=ref, ref_columns=["id"],
-                    )
-                    for ref in fks
-                ],
-            )
-        )
-    return Schema(tables=tables)
-
-
-def test_delete_order_children_first():
-    from pgferry_spark.catalog.model import delete_order
-
-    # lineitem -> orders -> customer; region <- nation <- customer
-    sch = _schema({
-        "region": [], "nation": ["region"], "customer": ["nation"],
-        "orders": ["customer"], "lineitem": ["orders"],
-    })
-    order, cyclic = delete_order(sch)
-    assert cyclic == []
-    pos = {t: i for i, t in enumerate(order)}
-    assert pos["lineitem"] < pos["orders"] < pos["customer"] < pos["nation"] < pos["region"]
-
-
-def test_delete_order_reports_cycles_and_orders_the_rest():
-    from pgferry_spark.catalog.model import delete_order
-
-    # staff <-> store cycle (the reference's Sakila shape) + a clean chain
-    sch = _schema({
-        "staff": ["store"], "store": ["staff"],
-        "payment": ["staff"], "country": [],
-    })
-    order, cyclic = delete_order(sch)
-    assert cyclic == ["staff", "store"]
-    assert "payment" in order and "country" in order
-    # payment blocks staff but staff is cyclic; payment itself is fine first
-    assert order[0] in ("country", "payment")
-
-
-def test_self_referential_fk_is_not_a_cycle():
-    from pgferry_spark.catalog.model import delete_order
-
-    sch = _schema({"employee": ["employee"]})
-    order, cyclic = delete_order(sch)
-    assert order == ["employee"] and cyclic == []
-
-
-def test_deterministic_tie_break():
-    from pgferry_spark.catalog.model import delete_order
-
-    sch = _schema({"b": [], "a": [], "c": []})
-    order, _ = delete_order(sch)
-    assert order == ["a", "b", "c"]

@@ -1,5 +1,5 @@
 """Baseline JPEG codec (multimodal/jpeg.py): pure stdlib+numpy encode +
-decode, and its wiring into the resize/ahash pixel pipeline.
+decode, and its wiring into the ahash pixel pipeline.
 
 Closes VERDICT r5 Next #7 (the JPEG pixel-decode gap): PNG had a full
 pixel path; JPEG was metadata-only.  Round-trip laws replace external
@@ -21,7 +21,6 @@ from pgferry_spark.multimodal.jpeg import (
     decode_jpeg_gray,
     encode_jpeg_gray,
     encode_jpeg_ycbcr,
-    parse_jpeg_pixels,
 )
 from pgferry_spark.multimodal.ops import (
     decode_gray_pixels,
@@ -178,7 +177,7 @@ class TestRejects:
 
 
 class TestFuzz:
-    # The quarantine contract: resize_images/ahash catch exactly
+    # The quarantine contract: pixel-path callers catch exactly
     # (ValueError, struct.error, IndexError) — a malformed payload must
     # decode, raise one of those, or nothing; never hang, never escape
     # with a different exception type and sink the whole Arrow batch.
@@ -241,12 +240,6 @@ class TestDispatch:
         with pytest.raises(ValueError):
             decode_gray_pixels(b"\x00\x01\x02\x03 opaque blob")
 
-    def test_facade_matches_png_shape(self):
-        img = _gradient(10, 10)
-        jpg = encode_jpeg_gray(10, 10, img.tobytes(), quant=QUANT_UNIT)
-        assert parse_jpeg_pixels(jpg) == (10, 10, 8, 0, img.tobytes())
-
-
 class TestSparkWiring:
     def _media(self, spark, rows):
         return spark.createDataFrame(
@@ -254,35 +247,6 @@ class TestSparkWiring:
             "media_id: long, media_type: string, payload: binary,"
             " mime: string, byte_len: long",
         )
-
-    def test_resize_images_jpeg_branch(self, spark):
-        from pgferry_spark.multimodal.ops import resize_images
-
-        big = _gradient(48, 32)
-        small = _gradient(10, 8)
-        big_jpg = encode_jpeg_gray(48, 32, big.tobytes(), quant=QUANT_UNIT)
-        small_jpg = encode_jpeg_gray(10, 8, small.tobytes(), quant=QUANT_UNIT)
-        prog = bytearray(big_jpg)
-        prog[prog.find(b"\xff\xc0") + 1] = 0xC2  # quarantine candidate
-        media = self._media(
-            spark,
-            [
-                (1, "image", bytes(big_jpg), "image/jpeg", len(big_jpg)),
-                (2, "image", bytes(small_jpg), "image/jpeg", len(small_jpg)),
-                (3, "image", bytes(prog), "image/jpeg", len(prog)),
-            ],
-        )
-        out = {r["media_id"]: r for r in resize_images(media, max_dim=16).collect()}
-        # big JPEG: resized, re-encoded as a DECODABLE baseline JPEG
-        assert (out[1]["width"], out[1]["height"]) == (16, 11)
-        w, h, px = decode_jpeg_gray(bytes(out[1]["payload"]))
-        assert (w, h) == (16, 11) and len(px) == 16 * 11
-        # small JPEG: byte-identical pass-through
-        assert bytes(out[2]["payload"]) == bytes(small_jpg)
-        # progressive: quarantined — scaled metadata (from the SOF scan,
-        # which reads SOF2 frames fine), NULL payload
-        assert out[3]["payload"] is None
-        assert (out[3]["width"], out[3]["height"]) == (16, 11)
 
     def test_attach_real_jpegs_pixelsum_law(self, spark):
         """The generator's decoded-pixel law: constant 8x8 blocks survive

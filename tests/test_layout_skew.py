@@ -1,8 +1,8 @@
-"""Bucketed co-located join (no-Exchange assertion) and skew-salting tests."""
+"""Bucketed co-located join (no-Exchange assertion), skew profile and Z-order key tests."""
 
 from pyspark.sql import functions as F
 
-from pgferry_spark.operators.skew import salted_join, skew_profile
+from pgferry_spark.operators.skew import skew_profile
 from pgferry_spark.sources.layout import exchange_count, write_bucketed
 
 
@@ -33,20 +33,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lines")
-
-
-def test_salted_join_matches_plain_join(spark):
-    big = spark.createDataFrame(
-        [(i, "hot" if i % 10 else f"k{i}") for i in range(2000)], "id: long, key: string"
-    )
-    small = spark.createDataFrame(
-        [("hot", 1.0), ("k10", 2.0), ("k20", 3.0)], "key: string, weight: double"
-    )
-    plain = big.join(small, on="key").select("id", "key", "weight")
-    salted = salted_join(big, small, on="key", salt_buckets=8).select("id", "key", "weight")
-    assert salted.count() == plain.count()
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
 
 
 def test_skew_profile_orders_by_count(spark):
@@ -104,26 +90,6 @@ def test_incremental_dedup_against_bucketed_fingerprint_index(spark):
         spark.sql("DROP TABLE IF EXISTS b_fp_index")
 
 
-def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
-    from pgferry_spark.sources.layout import compact_parquet
-
-    path = str(tmp_path / "drizzle")
-    df = spark.createDataFrame(
-        [(i, f"row {i}") for i in range(5000)], "id: long, s: string"
-    )
-    df.repartition(40).write.parquet(path)  # 40 drizzle files
-
-    stats = compact_parquet(spark, path, target_mb=128)
-    assert stats["files_before"] == 40
-    assert stats["files_after"] == 1  # tiny data -> one target file
-    back = spark.read.parquet(path)
-    assert back.count() == 5000
-    assert sorted(r["id"] for r in back.collect()) == list(range(5000))
-    # no leftover temp/old directories
-    import os
-    assert not any("__compact" in d for d in os.listdir(tmp_path))
-
-
 def test_zorder_key_golden_values(spark):
     from pyspark.sql import functions as F
 
@@ -159,40 +125,6 @@ def test_zorder_key_locality_beats_concatenation(spark):
     # the aligned 2x2 box {0,1}x{0,1} occupies Morton keys 0..3 exactly
     box = [z[(a, b)] for a in (0, 1) for b in (0, 1)]
     assert sorted(box) == [0, 1, 2, 3]
-
-
-def test_zorder_write_files_have_disjoint_key_ranges(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pgferry_spark.sources.layout import zorder_key, zorder_write
-
-    df = spark.range(2000).select(
-        (F.col("id") % 50).alias("x"),
-        (F.col("id") * 7 % 50).alias("y"),
-        F.col("id").alias("payload"),
-    )
-    path = str(tmp_path / "zordered")
-    zorder_write(df, path, "x", "y", n_files=4)
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    ]
-    assert 2 <= len(files) <= 4
-    spans = []
-    for f in files:
-        part = spark.read.parquet(f).select(
-            zorder_key(F.col("x"), F.col("y")).alias("z")
-        )
-        lo, hi = part.agg(F.min("z"), F.max("z")).first()
-        spans.append((lo, hi))
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, f"overlapping file key ranges: {spans}"
-    # round trip: clustering must not lose or duplicate rows
-    assert spark.read.parquet(path).count() == 2000
 
 
 def test_cc_index_table_surtkey_range_layout(spark, tmp_path):
@@ -259,39 +191,3 @@ def test_cc_index_table_surtkey_range_layout(spark, tmp_path):
     assert "ReadSchema" in explained and "fetch_status" not in (
         explained.split("ReadSchema")[1].split("\n")[0]
     )
-
-
-def test_range_write_by_sketch_disjoint_balanced(spark, tmp_path):
-    """Sketch-planned range layout: per-range value spans are disjoint,
-    row masses are ~equal, and the round trip loses nothing — without
-    any RangePartitioner sampling job."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pgferry_spark.sources.layout import range_write_by_sketch
-
-    df = spark.range(4000).select((5.0 + (F.col("id") % 997) * 1.37).alias("v"))
-    path = str(tmp_path / "ranged")
-    splits = range_write_by_sketch(df, path, "v", n_files=4, k=32)
-    assert len(splits) == 3 and splits == sorted(splits)
-
-    back = spark.read.parquet(path)
-    assert back.count() == 4000
-    spans = {
-        r["range"]: (r["lo"], r["hi"], r["n"])
-        for r in back.groupBy("range")
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"),
-             F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert set(spans) == {0, 1, 2, 3}
-    ordered = [spans[i] for i in range(4)]
-    for (_, hi1, _), (lo2, _, _) in zip(ordered, ordered[1:]):
-        assert hi1 <= lo2  # physically disjoint value ranges
-    for _, _, n in ordered:
-        assert abs(n - 1000) < 1000 / 4  # equal mass within sketch error
-    # directories really split by range id
-    assert sorted(
-        d for d in os.listdir(path) if d.startswith("range=")
-    ) == ["range=0", "range=1", "range=2", "range=3"]

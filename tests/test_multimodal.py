@@ -4,7 +4,6 @@ from pgferry_spark.multimodal import (
     attach_fake_media,
     decode_image_meta,
     frame_sample,
-    resize_images,
 )
 
 
@@ -39,12 +38,6 @@ def test_decode_handles_null_payload(spark):
     meta = {r["media_id"]: r for r in decode_image_meta(m).collect()}
     assert meta[0]["width"] is None and meta[0]["checksum"] is None
     assert meta[1]["width"] is not None
-
-
-def test_resize_bounds(spark):
-    m = media_df(spark)
-    out = resize_images(m, max_dim=64).collect()
-    assert all(max(r["width"], r["height"]) <= 64 for r in out)
 
 
 def test_frame_sample_fanout(spark):
@@ -448,47 +441,6 @@ def test_image_near_dup_rejects_non64bit_grid(spark):
     df = spark.createDataFrame([(1,)], "media_id: long")
     with pytest.raises(ValueError, match="64-bit"):
         image_near_dup_pairs(df, grid=4)
-
-
-def test_resize_images_real_pixels(spark):
-    """REAL resize: output payloads are decodable PNGs at the expected
-    dims, nearest-neighbor pixels match the source at mapped coords, and
-    an already-fitting image passes through byte-identical."""
-    from pgferry_spark.multimodal.ops import (
-        attach_real_images, png_pixels, resize_images,
-    )
-
-    base = spark.range(20, 30).toDF("id")
-    media = attach_real_images(base, "id")
-    src = {
-        r["media_id"]: png_pixels(bytes(r["payload"]))
-        for r in media.collect()
-    }
-    out = {r["media_id"]: r for r in resize_images(media, max_dim=10).collect()}
-    assert set(out) == set(src)
-    for mid, (w, h, _, _, px) in src.items():
-        r = out[mid]
-        if max(w, h) <= 10:
-            nw, nh, _, _, npx = png_pixels(bytes(r["payload"]))
-            assert (nw, nh, npx) == (w, h, px)  # pass-through identity
-            continue
-        exp_w = max(1, round(w * 10 / max(w, h)))
-        exp_h = max(1, round(h * 10 / max(w, h)))
-        assert (r["width"], r["height"]) == (exp_w, exp_h)
-        nw, nh, _, _, npx = png_pixels(bytes(r["payload"]))
-        assert (nw, nh) == (exp_w, exp_h)
-        # nearest-neighbor law, spot-checked at every output pixel
-        for y in range(nh):
-            sy = min(h - 1, (y * h) // nh)
-            for x in range(nw):
-                sx = min(w - 1, (x * w) // nw)
-                assert npx[y * nw + x] == px[sy * w + sx]
-
-
-def test_resize_non_png_keeps_scaled_meta_null_payload(spark):
-    out = resize_images(media_df(spark), max_dim=64).collect()
-    assert all(max(r["width"], r["height"]) <= 64 for r in out)
-    assert all(r["payload"] is None for r in out)  # quarantine marker
 
 
 def test_release_cache_empties_cache_manager(spark):

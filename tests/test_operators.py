@@ -126,8 +126,9 @@ def docs_df(spark):
 class TestDedup:
     def test_exact(self, spark):
         d = docs_df(spark)
-        kept = dedup.dedup_exact(d, "text", "doc_id")
-        assert sorted(r["doc_id"] for r in kept.collect()) == [0, 2, 3, 4]
+        groups = dedup.exact_dup_groups(d, "text", "doc_id").collect()
+        assert sorted(r["keeper_id"] for r in groups) == [0, 2, 3, 4]
+        assert {r["keeper_id"]: r["dup_count"] for r in groups}[0] == 2
 
     def test_fingerprint_catches_ws_case(self, spark):
         d = docs_df(spark)

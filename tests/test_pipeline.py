@@ -618,6 +618,26 @@ def test_resumed_table_checkpoint_keeps_earlier_chunk_rows(spark, tmp_path):
     assert spark.read.parquet(out + "/node").count() == 100
 
 
+def test_resume_after_a_crash_in_the_first_write_runs_no_schema_ddl(spark, tmp_path):
+    """A full-mode run that crashes after its schema DDL, before its first
+    batch lands, leaves a checkpoint: the resume runs no CREATE SCHEMA or
+    CREATE TABLE (CREATE SCHEMA fails on a real target) and lands every
+    row."""
+    db = _fk_db(str(tmp_path / "node.db"), _NODE, {
+        "node": [(i, i - 1 or None) for i in range(1, 101)],
+    })
+    ckpt, out = str(tmp_path / "ckpt.json"), str(tmp_path / "out")
+    crashing = _CrashingTarget(spark, out, table="node", crash_on=1)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _chunked_pipeline(spark, db, crashing, ckpt).run()
+    assert any(s.startswith("CREATE SCHEMA") for s in crashing.ddl)
+
+    resumed = SpoolTarget(spark, out)
+    assert _chunked_pipeline(spark, db, resumed, ckpt).run().ok
+    assert not [s for s in resumed.ddl if s.startswith(("CREATE SCHEMA", "CREATE TABLE"))]
+    assert spark.read.parquet(out + "/node").count() == 100
+
+
 def test_sqlite_source_quotes_identifiers(tmp_path):
     """Table names with an embedded double quote count and probe their key
     range like any other."""

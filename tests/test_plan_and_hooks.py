@@ -158,49 +158,3 @@ def test_path_with_uri_characters_opens_that_file(tmp_path, name):
     assert [t.source_name for t in sq.introspect_schema(path).tables] == ["t"]
     probe_connection("sqlite", path)
     assert sorted(p.name for p in tmp_path.iterdir()) == before
-
-
-def test_diff_schemas_names_every_drift_class():
-    from pgferry_spark.catalog.model import Column, Schema, Table
-    from pgferry_spark.plan_report import diff_schemas
-
-    def col(name, typ="int", nullable=True, default=None):
-        return Column(
-            source_name=name, pg_name=name, data_type=typ,
-            column_type=typ, nullable=nullable, default=default,
-        )
-
-    old = Schema(tables=[
-        Table("users", "users", columns=[
-            col("id"), col("email", "varchar(100)"),
-            col("age", "int", nullable=True), col("bal", "int", default="0"),
-        ]),
-        Table("gone", "gone", columns=[col("id")]),
-    ])
-    new = Schema(tables=[
-        Table("users", "users", columns=[
-            col("id"), col("email", "text"),
-            col("age", "int", nullable=False), col("bal", "int", default="1"),
-            col("created_at", "timestamp"),
-        ]),
-        Table("fresh", "fresh", columns=[col("id")]),
-    ])
-    d = diff_schemas(old, new)
-    assert d["tables_added"] == ["fresh"]
-    assert d["tables_dropped"] == ["gone"]
-    assert d["columns_added"] == ["users.created_at"]
-    assert d["columns_dropped"] == []
-    assert d["retyped"] == ["users.email: varchar(100) -> text"]
-    assert d["nullability_changed"] == ["users.age: nullable True -> False"]
-    assert d["defaults_changed"] == ["users.bal: '0' -> '1'"]
-
-
-def test_diff_schemas_identical_is_empty():
-    from pgferry_spark.catalog.model import Column, Schema, Table
-    from pgferry_spark.plan_report import diff_schemas
-
-    s = Schema(tables=[Table("t", "t", columns=[
-        Column(source_name="id", pg_name="id", data_type="int", column_type="int"),
-    ])])
-    d = diff_schemas(s, s)
-    assert all(v == [] for v in d.values())

@@ -415,6 +415,24 @@ def test_full_mode_resume_into_real_postgres_lands_the_uncrashed_rows(
     assert fks(resumed) == fks(whole) == "2"
 
 
+def test_full_mode_resume_after_a_crash_in_the_first_write(
+    spark, blog_db, pgserver, tmp_path,
+):
+    """A full-mode migration that crashes as its first batch lands, before
+    the checkpoint records it, resumes with ``on_schema_exists="error"``:
+    the checkpoint flushed right after the schema DDL tells the resume the
+    schema exists, and the first batch's rewrite truncates the rows that
+    landed. The target ends with the rows of an uncrashed run."""
+    pg = pgserver
+    ckpt = str(tmp_path / "ckpt.json")
+    assert _migrate(spark, pg, blog_db, "whole_first", "full").ok
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _migrate(spark, pg, blog_db, "resumed_first", "full", _crashing_after("users", 1), ckpt)
+    assert _psql_scalar(pg, "SELECT COUNT(*) FROM resumed_first.users") != "0"
+    assert _migrate(spark, pg, blog_db, "resumed_first", "full", ckpt=ckpt).ok
+    assert _blog_rows(pg, "resumed_first") == _blog_rows(pg, "whole_first")
+
+
 def test_resume_keeps_children_of_a_bytea_key(spark, pgserver, tmp_path):
     """A BLOB primary key lands as bytea and its key set is read back from
     PostgreSQL as bytes, not as the ``\\x..`` text PostgreSQL prints: after

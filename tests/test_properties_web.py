@@ -13,7 +13,7 @@ test_domains).
 import struct
 
 import duckdb
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pgferry_spark.multimodal import exif as X
@@ -226,6 +226,7 @@ def test_strip_normalization_contract_on_random_text(s):
 
 @settings(max_examples=150, deadline=None)
 @given(st.binary(min_size=0, max_size=96))
+@example(blob=b"\xff\xc0\x00\x00")  # a JPEG SOF marker cut short
 def test_media_parsers_total_on_random_bytes(blob):
     """Every multimodal parser either parses or raises ValueError on
     arbitrary bytes — never hangs, never allocates unbounded, never

@@ -183,10 +183,7 @@ class TestBlockwords:
     def test_token_equality_not_substring(self, spark):
         """The Scunthorpe property: a listed word embedded inside a
         longer token never trips; exact lowercased tokens do."""
-        from pgferry_spark.operators.filters import (
-            blockword_filter,
-            blockword_flags,
-        )
+        from pgferry_spark.operators.filters import blockword_flags
 
         rows = [
             (1, "a perfectly slow sentence"),      # exact token -> blocked
@@ -201,10 +198,6 @@ class TestBlockwords:
             for r in blockword_flags(df, ("slow",), "text", "doc_id").collect()
         }
         assert got == {1: True, 2: False, 3: True, 4: False, 5: False}
-        kept = sorted(
-            r.doc_id for r in blockword_filter(df, ("slow",), "text").collect()
-        )
-        assert kept == [2, 4, 5]
 
     def test_word_list_validated(self, spark):
         import pytest as _pytest
@@ -855,75 +848,6 @@ class TestCompressionRatio:
         a = sorted((r.doc_id, r.ratio) for r in compression_ratio_stats(df, "text", "doc_id").collect())
         b = sorted((r.doc_id, r.ratio) for r in compression_ratio_stats(df, "text", "doc_id").collect())
         assert a == b
-
-
-def test_write_jsonl_shards_deterministic_layout(spark, tmp_path):
-    import json as _json
-    import os
-
-    from pgferry_spark.operators.curate import write_jsonl_shards
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(100)], "doc_id long, text string"
-    )
-    path = str(tmp_path / "jsonl")
-    write_jsonl_shards(df, path, "doc_id", n_shards=4)
-    shards = sorted(d for d in os.listdir(path) if d.startswith("shard="))
-    assert shards == ["shard=0", "shard=1", "shard=2", "shard=3"]
-    total, lines0 = 0, None
-    for d in shards:
-        rows = []
-        for f in sorted(os.listdir(os.path.join(path, d))):
-            if f.endswith(".json"):
-                with open(os.path.join(path, d, f)) as fh:
-                    rows += [_json.loads(l) for l in fh if l.strip()]
-        total += len(rows)
-        if d == "shard=0":
-            lines0 = [r["doc_id"] for r in rows]
-    assert total == 100
-    # byte-stable: rewriting yields the identical shard-0 order
-    write_jsonl_shards(df, path, "doc_id", n_shards=4)
-    rows2 = []
-    for f in sorted(os.listdir(os.path.join(path, "shard=0"))):
-        if f.endswith(".json"):
-            with open(os.path.join(path, "shard=0", f)) as fh:
-                rows2 += [_json.loads(l)["doc_id"] for l in fh if l.strip()]
-    assert rows2 == lines0
-
-
-def test_jsonl_shards_roundtrip_and_shard_pruning(spark, tmp_path):
-    """write_jsonl_shards -> read_jsonl_shards is lossless (ids, text,
-    shard assignment), and a shard filter prunes to that partition."""
-    from pgferry_spark.operators.curate import (
-        assign_shards,
-        read_jsonl_shards,
-        write_jsonl_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i} body") for i in range(100)], "doc_id long, text string"
-    )
-    path = str(tmp_path / "jsonl_rt")
-    write_jsonl_shards(df, path, "doc_id", n_shards=4)
-
-    back = read_jsonl_shards(spark, path, "doc_id long, text string")
-    assert back.count() == 100
-    got = {r.doc_id: (r.text, r.shard) for r in back.collect()}
-    expect_shards = {
-        r.doc_id: r.shard for r in assign_shards(df, "doc_id", 4).collect()
-    }
-    assert {i: t for i, (t, _) in got.items()} == {
-        i: f"doc {i} body" for i in range(100)
-    }
-    assert {i: s for i, (_, s) in got.items()} == expect_shards
-
-    from pyspark.sql import functions as F
-
-    pruned = back.filter(F.col("shard") == 2)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # partition-directory pruning: the scan lists only shard=2 files
-    assert pruned.count() == sum(1 for s in expect_shards.values() if s == 2)
-    assert "PartitionFilters: [isnotnull(shard" in plan or "shard=2" in plan
 
 
 class TestDsirImportance:

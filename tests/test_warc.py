@@ -1374,197 +1374,6 @@ class TestWarcFileSource:
         assert a == b
 
 
-class TestZipnum:
-    """Round 11: the cluster.idx secondary index — every-N CDX lines
-    per gzip-member block, a URL lookup inflates exactly ONE block."""
-
-    def _cdx(self, spark, n=40):
-        from pgferry_spark.operators.domains import attach_urls, surt_keys
-
-        docs = spark.createDataFrame(
-            [(i, f"src{i % 3}", f"Body {i}.") for i in range(n)],
-            "doc_id: long, source: string, text: string",
-        )
-        idx = W.warc_record_index(W.attach_warc(attach_urls(docs)))
-        return surt_keys(idx, url_col="target_uri").select(
-            "surt", "container_id", "record_no", "rec_offset", "rec_len",
-            "payload_md5",
-        )
-
-    def test_cluster_content_matches_pack(self, spark):
-        """The oracle-backed cluster content and the real packed bytes
-        agree block-for-block: same first keys, same line counts, and
-        inflating each packed block reproduces the digested lines."""
-        import gzip as _gz
-        import hashlib
-
-        from pgferry_spark.sources.zipnum import (
-            cdx_zipnum_cluster,
-            cdx_zipnum_pack,
-        )
-
-        cdx = self._cdx(spark)
-        content = {r.block_no: r for r in cdx_zipnum_cluster(cdx).collect()}
-        packed = {r.block_no: r for r in cdx_zipnum_pack(cdx).collect()}
-        assert set(content) == set(packed) == set(range(5))  # 40/8
-        for bno, c in content.items():
-            p = packed[bno]
-            assert p.first_surt == c.first_surt
-            assert p.n_lines == c.n_lines == 8
-            lines = _gz.decompress(bytes(p.block)).decode().splitlines()
-            assert hashlib.md5(
-                "\n".join(lines).encode()
-            ).hexdigest() == c.lines_md5
-            assert lines == sorted(lines)  # rank order within block
-
-    def test_sharded_blocking_invariants_and_global_equivalence(
-        self, spark
-    ):
-        """The 100 TB path: range-partitioned shards, within-shard
-        two-pass rank, per-shard every-N blocking.  With one shard the
-        output must equal the global formulation exactly; with many,
-        lines are conserved, blocks are full except each shard's last,
-        and shard key ranges tile the SURT order."""
-        from pgferry_spark.sources.zipnum import (
-            cdx_zipnum_cluster,
-            cdx_zipnum_sharded,
-        )
-
-        cdx = self._cdx(spark, n=64)
-        # one shard == the global blocking, digest-for-digest
-        one = {(r.block_no, r.first_surt, r.last_surt, r.n_lines,
-                r.lines_md5)
-               for r in cdx_zipnum_sharded(cdx, 1).drop("shard").collect()}
-        glob = {(r.block_no, r.first_surt, r.last_surt, r.n_lines,
-                 r.lines_md5)
-                for r in cdx_zipnum_cluster(cdx).collect()}
-        assert one == glob
-        # four shards: conservation + within-shard fullness + tiling
-        rows = cdx_zipnum_sharded(cdx, 4).collect()
-        assert sum(r.n_lines for r in rows) == 64
-        by_shard: dict = {}
-        for r in rows:
-            by_shard.setdefault(r.shard, []).append(r)
-        assert len(by_shard) > 1  # genuinely distributed
-        prev_last = None
-        for s in sorted(by_shard):
-            blocks = sorted(by_shard[s], key=lambda r: r.block_no)
-            assert [b.block_no for b in blocks] == list(
-                range(len(blocks))
-            )
-            for b in blocks[:-1]:
-                assert b.n_lines == 8  # only the shard tail is short
-            for a, b in zip(blocks, blocks[1:]):
-                assert a.last_surt <= b.first_surt
-            if prev_last is not None:
-                assert prev_last <= blocks[0].first_surt
-            prev_last = blocks[-1].last_surt
-
-    def test_lookup_total_on_arbitrary_keys(self, spark):
-        """Property: ANY lookup key — present, absent, between blocks,
-        below/above the shard — returns the full-scan-identical result
-        at minimal inflate cost, and never errors."""
-        import gzip as _gz
-
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from pgferry_spark.sources.zipnum import (
-            cdx_zipnum_pack,
-            cluster_idx_rows,
-            zipnum_lookup,
-        )
-
-        cdx = self._cdx(spark, n=24)
-        packed = cdx_zipnum_pack(cdx)
-        blocks = sorted(
-            (r.block_no, bytes(r.block))
-            for r in packed.select("block_no", "block").collect()
-        )
-        shard = b"".join(b for _, b in blocks)
-        cluster = sorted(
-            (r.asDict() for r in cluster_idx_rows(packed).collect()),
-            key=lambda c: c["block_no"],
-        )
-        all_lines = [
-            ln for _, blk in blocks
-            for ln in _gz.decompress(blk).decode().splitlines()
-        ]
-        real_keys = sorted({ln.split(" ", 1)[0] for ln in all_lines})
-
-        @settings(max_examples=120, deadline=None)
-        @given(st.one_of(
-            st.sampled_from(real_keys),
-            st.text(min_size=0, max_size=40),
-        ))
-        def check(key):
-            got, inflated = zipnum_lookup(shard, cluster, key)
-            want = [ln for ln in all_lines
-                    if ln.split(" ", 1)[0] == key]
-            assert got == want
-            assert 0 <= inflated <= len(cluster)
-            if not want:
-                assert inflated <= 1  # an absent key costs at most one probe
-
-        check()
-
-    def test_lookup_inflates_exactly_one_block(self, spark):
-        """The pruning proof: concatenate the packed blocks into the
-        shard, binary-search cluster.idx, inflate ONE member — the
-        returned lines equal a full-scan filter for every key in the
-        corpus, at the cost of one bounded range read."""
-        from pgferry_spark.sources.zipnum import (
-            cdx_zipnum_pack,
-            cluster_idx_rows,
-            zipnum_lookup,
-        )
-
-        cdx = self._cdx(spark)
-        packed = cdx_zipnum_pack(cdx)
-        blocks = sorted(
-            (r.block_no, bytes(r.block))
-            for r in packed.select("block_no", "block").collect()
-        )
-        shard = b"".join(b for _, b in blocks)
-        cluster = sorted(
-            (r.asDict() for r in cluster_idx_rows(packed).collect()),
-            key=lambda c: c["block_no"],
-        )
-        # offsets tile the shard exactly
-        assert cluster[0]["offset"] == 0
-        for a, b in zip(cluster, cluster[1:]):
-            assert b["offset"] == a["offset"] + a["length"]
-        assert cluster[-1]["offset"] + cluster[-1]["length"] == len(shard)
-        # every key: minimal inflates, full-scan-identical result.  The
-        # URL synth collides some captures onto one URL (classes 2/5 —
-        # re-captures), so a key CAN straddle a block boundary; the
-        # minimal cost is the number of blocks actually holding it.
-        import gzip as _gz
-
-        block_lines = [
-            _gz.decompress(blk).decode().splitlines() for _, blk in blocks
-        ]
-        all_lines = [ln for bl in block_lines for ln in bl]
-        keys = {ln.split(" ", 1)[0] for ln in all_lines}
-        assert len(keys) >= 30  # dozens of distinct keys at n=40
-        ones = 0
-        for key in keys:
-            got, inflated = zipnum_lookup(shard, cluster, key)
-            holding = sum(
-                1 for bl in block_lines
-                if any(ln.split(" ", 1)[0] == key for ln in bl)
-            )
-            assert inflated == holding  # never a block the key isn't in
-            assert got == [
-                ln for ln in all_lines if ln.split(" ", 1)[0] == key
-            ]
-            ones += inflated == 1
-        assert ones >= len(keys) - 3  # straddling is the rare case
-        # a key below the first block touches nothing
-        got, inflated = zipnum_lookup(shard, cluster, "!below-everything")
-        assert got == [] and inflated == 0
-
-
 class TestCdxjOfficialFormat:
     """Round 12: the OFFICIAL CommonCrawl wire formats — CDXJ lines
     (``urlkey<SP>timestamp<SP>{json}``) and the cluster.idx TSV — over
@@ -1718,71 +1527,54 @@ class TestCdxjOfficialFormat:
         ).collect()[0]
         assert got.url == nasty
 
-    def _packed(self, spark, n=40):
+    def _lines(self, spark, n=40):
+        from pgferry_spark.sources.zipnum import cdxj_lines
+
+        return cdxj_lines(self._facts(spark, n)).select(
+            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
+        )
+
+    def _packed(self, spark, tmp_path, n=40):
+        """One published shard: its bytes, the cluster rows read back
+        from cluster.idx, every line, and the lines per block."""
         import gzip as _gz
 
         from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
-            cdxj_zipnum_pack,
-            cluster_idx_lines,
-            parse_cluster_idx,
+            publish_zipnum_sharded,
+            read_zipnum_files,
         )
 
-        lines = cdxj_lines(self._facts(spark, n)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
-        packed = cdxj_zipnum_pack(lines)
-        blocks = sorted(
-            (r.block_no, bytes(r.block))
-            for r in packed.select("block_no", "block").collect()
-        )
-        shard = b"".join(b for _, b in blocks)
-        tsv = "\n".join(
-            r.cluster_line
-            for r in sorted(
-                cluster_idx_lines(packed).collect(),
-                key=lambda r: r.block_no,
-            )
-        )
-        cluster = parse_cluster_idx(tsv)
-        all_lines = [
-            ln for _, blk in blocks
-            for ln in _gz.decompress(blk).decode().splitlines()
-        ]
+        d = tmp_path / "packed"
+        publish_zipnum_sharded(self._lines(spark, n), str(d), n_shards=1)
+        shards, cluster = read_zipnum_files(str(d))
+        shard = shards["cdx-00000.gz"]
         block_lines = [
-            _gz.decompress(blk).decode().splitlines() for _, blk in blocks
+            _gz.decompress(
+                shard[c["offset"]: c["offset"] + c["length"]]
+            ).decode().splitlines()
+            for c in cluster
         ]
+        all_lines = [ln for bl in block_lines for ln in bl]
         return shard, cluster, all_lines, block_lines
 
-    def test_cdxj_cluster_content_matches_pack(self, spark):
-        """The oracle-backed cluster CONTENT and the real packed bytes
+    def test_cdxj_cluster_content_matches_pack(self, spark, tmp_path):
+        """The oracle-backed cluster CONTENT and the published bytes
         agree block-for-block over the official lines: same first
-        keys, same counts, and inflating each packed block reproduces
-        the digested lines in key order."""
-        import gzip as _gz
+        keys, same counts, and inflating each published block
+        reproduces the digested lines in key order."""
         import hashlib
 
-        from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
-            cdxj_zipnum_cluster,
-            cdxj_zipnum_pack,
-        )
+        from pgferry_spark.sources.zipnum import cdxj_zipnum_cluster
 
-        lines = cdxj_lines(self._facts(spark, 40)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
-        content = {
-            r.block_no: r for r in cdxj_zipnum_cluster(lines).collect()
-        }
-        packed = {
-            r.block_no: r for r in cdxj_zipnum_pack(lines).collect()
-        }
-        assert set(content) == set(packed) == set(range(5))  # 40/8
-        for bno, c in content.items():
-            p = packed[bno]
-            assert p.first_key == c.first_key
-            assert p.n_lines == c.n_lines == 8
-            ls = _gz.decompress(bytes(p.block)).decode().splitlines()
+        content = cdxj_zipnum_cluster(self._lines(spark, 40)).collect()
+        _, cluster, _, block_lines = self._packed(spark, tmp_path, 40)
+        assert sorted(r.block_no for r in content) == [
+            c["cluster"] for c in cluster
+        ] == list(range(5))  # 40/8
+        for c in content:
+            ls = block_lines[c.block_no]
+            assert cluster[c.block_no]["first_key"] == c.first_key
+            assert len(ls) == c.n_lines == 8
             assert hashlib.md5(
                 "\n".join(ls).encode()
             ).hexdigest() == c.lines_md5
@@ -1790,10 +1582,10 @@ class TestCdxjOfficialFormat:
             assert keys == sorted(keys)
             assert keys[0] == c.first_key and keys[-1] == c.last_key
 
-    def test_cluster_idx_tsv_official_shape(self, spark):
+    def test_cluster_idx_tsv_official_shape(self, spark, tmp_path):
         """5 tab-separated fields, 'urlkey<SP>ts' first key, offsets
         tiling the shard byte-exactly, sequential cluster numbers."""
-        shard, cluster, all_lines, _ = self._packed(spark)
+        shard, cluster, all_lines, _ = self._packed(spark, tmp_path)
         assert [c["cluster"] for c in cluster] == list(range(len(cluster)))
         assert cluster[0]["offset"] == 0
         for a, b in zip(cluster, cluster[1:]):
@@ -1808,7 +1600,7 @@ class TestCdxjOfficialFormat:
         keys = [" ".join(ln.split(" ", 2)[:2]) for ln in all_lines]
         assert keys == sorted(keys)
 
-    def test_official_lookup_total_and_bounded(self, spark):
+    def test_official_lookup_total_and_bounded(self, spark, tmp_path):
         """Property: ANY key over the official firsts-only cluster rows
         returns the full-scan-identical lines; cost is (blocks holding
         the key) + at most one leading probe; an absent key costs at
@@ -1818,7 +1610,7 @@ class TestCdxjOfficialFormat:
 
         from pgferry_spark.sources.zipnum import zipnum_lookup
 
-        shard, cluster, all_lines, block_lines = self._packed(spark)
+        shard, cluster, all_lines, block_lines = self._packed(spark, tmp_path)
         shards = {"cdx-00000.gz": shard}
         real_keys = sorted({ln.split(" ", 1)[0] for ln in all_lines})
 
@@ -1842,13 +1634,13 @@ class TestCdxjOfficialFormat:
 
         check()
 
-    def test_official_lookup_multi_shard_files(self, spark):
+    def test_official_lookup_multi_shard_files(self, spark, tmp_path):
         """cluster rows naming different shard files route each probe
         to the right blob — the 100 TB layout where cdx-00000..NNN are
         separate objects."""
         from pgferry_spark.sources.zipnum import zipnum_lookup
 
-        shard, cluster, all_lines, _ = self._packed(spark)
+        shard, cluster, all_lines, _ = self._packed(spark, tmp_path)
         # split the physical shard at each block boundary into per-file
         # blobs named cdx-<cluster>.gz, offsets rebased to 0
         shards = {}
@@ -1906,70 +1698,6 @@ class TestCdxjOfficialFormat:
                 r.rec_offset, r.filename,
             )
 
-    def test_zipnum_file_loop_roundtrip_and_lookup(self, spark, tmp_path):
-        """The REAL-file loop: write_zipnum_files publishes the shard +
-        cluster.idx in one pass (offsets accumulated from the bytes
-        actually written), read_zipnum_files loads them back, and
-        zipnum_lookup over the on-disk artifacts equals a full scan
-        for every key."""
-        from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
-            cdxj_zipnum_pack,
-            read_zipnum_files,
-            write_zipnum_files,
-            zipnum_lookup,
-        )
-
-        lines = cdxj_lines(self._facts(spark, 40)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
-        packed = cdxj_zipnum_pack(lines)
-        d = tmp_path / "zip"
-        write_zipnum_files(packed, str(d))
-        assert sorted(p.name for p in d.iterdir()) == [
-            "cdx-00000.gz", "cluster.idx",
-        ]
-        shards, cluster = read_zipnum_files(str(d))
-        # offsets tile the shard byte-exactly
-        assert cluster[0]["offset"] == 0
-        for a, b in zip(cluster, cluster[1:]):
-            assert b["offset"] == a["offset"] + a["length"]
-        total = cluster[-1]["offset"] + cluster[-1]["length"]
-        assert total == len(shards["cdx-00000.gz"])
-        all_lines = [
-            ln
-            for r in sorted(
-                ((c["offset"], c["length"]) for c in cluster)
-            )
-            for ln in __import__("gzip").decompress(
-                shards["cdx-00000.gz"][r[0]: r[0] + r[1]]
-            ).decode().splitlines()
-        ]
-        for key in {ln.split(" ", 1)[0] for ln in all_lines}:
-            got, _ = zipnum_lookup(shards, cluster, key)
-            assert got == [
-                ln for ln in all_lines if ln.split(" ", 1)[0] == key
-            ]
-        # identical re-publish (task retry) is idempotent success;
-        # a DIVERGENT shard under the same names still refuses, and
-        # the published pair survives untouched (r12 ADVICE)
-        write_zipnum_files(packed, str(d))
-        before = {
-            p.name: p.read_bytes() for p in d.iterdir()
-        }
-        other = cdxj_zipnum_pack(
-            cdxj_lines(self._facts(spark, 16)).select(
-                "surt", "fetch_ts", "container_id", "record_no",
-                "cdxj_line",
-            )
-        )
-        with pytest.raises(Exception, match="refusing to clobber"):
-            write_zipnum_files(other, str(d))
-        assert {
-            p.name: p.read_bytes() for p in d.iterdir()
-        } == before
-        assert not list(d.glob("*.inprogress*"))
-
     def test_zipnum_pair_publishes_atomically_or_rolls_back(
         self, spark, tmp_path
     ):
@@ -1978,26 +1706,19 @@ class TestCdxjOfficialFormat:
         cluster.idx already present), the freshly-linked shard is
         rolled back — no shard-without-index torn layout survives, and
         a rerun into a cleaned dir succeeds."""
-        from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
-            cdxj_zipnum_pack,
-            write_zipnum_files,
-        )
+        from pgferry_spark.sources.zipnum import publish_zipnum_sharded
 
-        lines = cdxj_lines(self._facts(spark, 24)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
-        packed = cdxj_zipnum_pack(lines)
+        lines = self._lines(spark, 24)
         d = tmp_path / "torn"
         d.mkdir()
         (d / "cluster.idx").write_text("bogus foreign index\n")
         with pytest.raises(Exception, match="refusing to clobber"):
-            write_zipnum_files(packed, str(d))
+            publish_zipnum_sharded(lines, str(d), n_shards=1)
         assert not (d / "cdx-00000.gz").exists()  # shard rolled back
         assert (d / "cluster.idx").read_text() == "bogus foreign index\n"
         assert not list(d.glob("*.inprogress*"))
         (d / "cluster.idx").unlink()
-        write_zipnum_files(packed, str(d))  # rerun now succeeds
+        publish_zipnum_sharded(lines, str(d), n_shards=1)  # rerun succeeds
         assert (d / "cdx-00000.gz").exists()
         assert (d / "cluster.idx").exists()
 
@@ -2011,15 +1732,12 @@ class TestCdxjOfficialFormat:
         import gzip as _gz
 
         from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
             publish_zipnum_sharded,
             read_zipnum_files,
             zipnum_lookup,
         )
 
-        lines = cdxj_lines(self._facts(spark, 64)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
+        lines = self._lines(spark, 64)
         d = tmp_path / "sharded"
         cluster = publish_zipnum_sharded(lines, str(d), n_shards=4)
         files = sorted(p.name for p in d.glob("cdx-*.gz"))
@@ -2083,16 +1801,13 @@ class TestCdxjOfficialFormat:
         zipnum_lookup result for every present key and nothing for
         absent keys."""
         from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
             publish_zipnum_sharded,
             read_zipnum_files,
             zipnum_bulk_lookup,
             zipnum_lookup,
         )
 
-        lines = cdxj_lines(self._facts(spark, 64)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
+        lines = self._lines(spark, 64)
         d = tmp_path / "bulk"
         publish_zipnum_sharded(lines, str(d), n_shards=3)
         shards, cluster = read_zipnum_files(str(d))
@@ -2146,14 +1861,11 @@ class TestCdxjOfficialFormat:
         import random
 
         from pgferry_spark.sources.zipnum import (
-            cdxj_lines,
             publish_zipnum_sharded,
             zipnum_bulk_lookup,
         )
 
-        lines = cdxj_lines(self._facts(spark, 96)).select(
-            "surt", "fetch_ts", "container_id", "record_no", "cdxj_line"
-        )
+        lines = self._lines(spark, 96)
         d = tmp_path / "worst"
         cluster = publish_zipnum_sharded(lines, str(d), n_shards=3)
         assert len(cluster) > 8  # the fixture must out-block the cache
@@ -2457,16 +2169,6 @@ class TestRobotsGate:
         df = spark.createDataFrame(rows, "doc_id: long, html: string")
         got = {r.doc_id: r.noindex for r in robots_noindex_flags(df).collect()}
         assert got == {1: True, 2: False, 3: False, 4: True, 5: True}
-
-    def test_gate_drops_only_noindex(self, spark):
-        from pgferry_spark.operators.html import robots_gate
-
-        rows = [
-            (1, '<meta name="robots" content="noindex"><p>a.</p>'),
-            (2, "<p>keep me.</p>"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id: long, html: string")
-        assert [r.doc_id for r in robots_gate(df).collect()] == [2]
 
     def test_funnel_has_robots_stage(self, spark):
         from pgferry_spark.operators.domains import (

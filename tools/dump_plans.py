@@ -499,8 +499,8 @@ ANNOTATED = {
         "The zipnum blocking ranks ~100-byte CDX rows, never container "
         "bytes; the window is the documented globally-ordered artifact "
         "(the real system publishes a totally ordered index), and "
-        "cdx_zipnum_sharded is the range-partitioned formulation with "
-        "a zero-extra-shuffle two-pass rank.",
+        "publish_zipnum_sharded is the range-partitioned formulation "
+        "that blocks within each shard, with no global window.",
     ),
     "cc_ingest_funnel": (
         "six single-row aggregates over persisted containers",
