@@ -32,7 +32,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entry
 from tools import measure
 
 HEADLINE = [
@@ -416,9 +415,10 @@ def _capped_drops(spark, sf_dir: str) -> dict:
     how many buckets/rows the max_bucket=3 cap excludes at this SF."""
     from pyspark.sql import functions as F
 
+    from pgferry_spark.entries.common import lake_table
     from pgferry_spark.operators.dedup import lsh_bucket_table
 
-    docs = entry._t(spark, sf_dir, "documents")
+    docs = lake_table(spark, sf_dir, "documents")
     out = {}
     for name, bdf in (
         ("lsh_candidate_pairs_capped",

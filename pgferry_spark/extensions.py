@@ -1,8 +1,8 @@
 """Runtime PostgreSQL extension management (reference extensions.go:20-140).
 
-The static plan report (:func:`pgferry_spark.plan_report.required_extensions`)
-predicts which extensions a migration needs; this module is the RUNTIME
-step that runs before any DDL/data movement: probe the target's
+:func:`collect_extension_requirements` decides which extensions a
+migration needs; the static plan report lists their names, and this
+module's RUNTIME step runs before any DDL/data movement: probe the target's
 ``pg_extension`` / ``pg_available_extensions`` catalogs and apply the
 reference's decision table per requirement —
 

@@ -53,25 +53,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise((n - stripped).cast("double") / n)
 
 
-def stopword_hits(col: Column, lang: str = "en") -> Column:
-    words = STOPWORDS[lang]
-    toks = tokens(F.lower(col))
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-
-def lang_id(col: Column) -> Column:
-    """Pick the language whose stopword list scores the most hits; ties and
-    zero-hit docs fall back to 'und' (undetermined). Deterministic tie-break:
-    language-code ascending."""
-    hits = {lang: stopword_hits(col, lang) for lang in sorted(STOPWORDS)}
-    best = F.greatest(*hits.values())
-    expr = F.lit("und")
-    # build reverse-order CASE so the FIRST language in sorted order wins ties
-    for lang in sorted(STOPWORDS, reverse=True):
-        expr = F.when((hits[lang] == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 # -- unicode script profiling -------------------------------------------------
 #
 # Multilingual curation keys on the SCRIPT of a document before any
@@ -175,17 +156,22 @@ def avg_token_len_t(toks: Column) -> Column:
 
 
 def stopword_hits_t(ltoks: Column, lang: str = "en") -> Column:
-    """`stopword_hits` over precomputed LOWERCASE tokens (lowering tokens
-    elementwise equals tokenizing lowered text: \\s+ is case-stable)."""
+    """Stopword hits of ``lang`` among precomputed LOWERCASE tokens
+    (lowering tokens elementwise equals tokenizing lowered text: \\s+ is
+    case-stable)."""
     words = STOPWORDS[lang]
     return F.size(F.filter(ltoks, lambda t: t.isin(*words)))
 
 
 def lang_id_t(ltoks: Column) -> Column:
-    """`lang_id` over precomputed lowercase tokens."""
+    """Pick the language whose stopword list scores the most hits among
+    precomputed lowercase tokens; ties and zero-hit docs fall back to
+    'und' (undetermined). Deterministic tie-break: language-code
+    ascending."""
     hits = {lang: stopword_hits_t(ltoks, lang) for lang in sorted(STOPWORDS)}
     best = F.greatest(*hits.values())
     expr = F.lit("und")
+    # build reverse-order CASE so the FIRST language in sorted order wins ties
     for lang in sorted(STOPWORDS, reverse=True):
         expr = F.when((hits[lang] == best) & (best > 0), F.lit(lang)).otherwise(expr)
     return expr

@@ -248,34 +248,6 @@ def lsh_bucket_batch_lazy(n_planes: int, seed: int = 42, dim: int | None = None)
     return pandas_udf(_bucket, "long")
 
 
-def lsh_bucket_table(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """(id, bucket) assignment table; similar vectors collide with high
-    probability. Partition/bucket by ``bucket`` downstream so probe queries
-    touch one partition.
-
-    When ``dim`` is known the signature is a JVM expression fold (whole-
-    stage codegen, no Python); when it isn't, the signature comes from the
-    lazy Arrow UDF so construction stays job-free instead of probing
-    ``df.first()`` for the dimension."""
-    if dim is not None:
-        planes = random_hyperplanes(dim, n_planes, seed)
-        return df.select(
-            F.col(id_col), lsh_bucket(F.col(vec_col), planes).alias("bucket")
-        )
-    udf = lsh_bucket_batch_lazy(n_planes, seed)
-    return df.select(
-        F.col(id_col),
-        udf(F.col(vec_col).cast("array<double>")).alias("bucket"),
-    )
-
-
 def lsh_topk(
     df: DataFrame,
     vec_col: str,

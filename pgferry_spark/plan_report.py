@@ -15,8 +15,8 @@ from dataclasses import asdict, dataclass, field
 
 from .catalog.model import Schema, SourceObjects
 from .ddl import index_skip_reason
+from .extensions import collect_extension_requirements
 from .types.config import TypeMappingConfig
-from .types.mysql import SPATIAL_TYPES
 
 
 @dataclass
@@ -69,23 +69,6 @@ class PlanReport:
             for edge, j in sorted(self.advice.get("joins", {}).items()):
                 lines.append(f"  - join {edge}: {j['strategy']} ({j['reason']})")
         return "\n".join(lines)
-
-
-def required_extensions(schema: Schema, cfg: TypeMappingConfig) -> list[str]:
-    """citext when ci_as_citext maps >=1 column; postgis when enabled and a
-    spatial column exists (reference extensions.go:20-140)."""
-    exts: list[str] = []
-    if cfg.ci_as_citext and any(
-        c.collation.lower().endswith("_ci") and c.data_type.lower() in ("char", "varchar")
-        for t in schema.tables
-        for c in t.columns
-    ):
-        exts.append("citext")
-    if cfg.use_postgis and any(
-        c.data_type.lower() in SPATIAL_TYPES for t in schema.tables for c in t.columns
-    ):
-        exts.append("postgis")
-    return exts
 
 
 def collation_warnings(schema: Schema, cfg: TypeMappingConfig) -> list[dict]:
@@ -149,7 +132,9 @@ def build_plan_report(
     type_mapper,
 ) -> PlanReport:
     report = PlanReport(
-        required_extensions=required_extensions(schema, cfg),
+        required_extensions=[
+            r.name for r in collect_extension_requirements(schema, cfg)
+        ],
         views=list(objects.views),
         routines=list(objects.routines),
         triggers=list(objects.triggers),

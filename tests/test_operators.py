@@ -231,8 +231,10 @@ class TestSimilarity:
 
     def test_lsh_bucket_groups_similar(self, spark):
         e = self.embeddings(spark)
-        buckets = {r["vec_id"]: r["bucket"] for r in
-                   similarity.lsh_bucket_table(e, "embedding", "vec_id", n_planes=6).collect()}
+        bucket = similarity.lsh_bucket_batch_lazy(6)
+        buckets = {r["vec_id"]: r["bucket"] for r in e.select(
+            "vec_id", bucket(F.col("embedding").cast("array<double>")).alias("bucket")
+        ).collect()}
         assert buckets[0] == buckets[1]  # nearly-parallel vectors collide
         assert buckets[0] != buckets[3]  # antipodal vectors split
 

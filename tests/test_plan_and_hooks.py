@@ -7,7 +7,8 @@ import pytest
 
 from pgferry_spark.catalog.model import Column, Index, Schema, SourceObjects, Table
 from pgferry_spark.hooks import render_hook_sql, run_hooks
-from pgferry_spark.plan_report import build_plan_report, collation_warnings, required_extensions
+from pgferry_spark.extensions import collect_extension_requirements
+from pgferry_spark.plan_report import build_plan_report, collation_warnings
 from pgferry_spark.sources import sqlite_introspect as sq
 from pgferry_spark.types import TypeMappingConfig, map_mysql_type
 
@@ -44,10 +45,18 @@ class TestPlanReport:
         assert [w["column"] for w in rep.collation_warnings] == ["name"]
 
     def test_extensions(self):
-        schema = sample_schema()
-        assert required_extensions(schema, TypeMappingConfig(spatial_mode="postgis")) == ["postgis"]
-        assert required_extensions(schema, TypeMappingConfig(ci_as_citext=True)) == ["citext"]
-        assert required_extensions(schema, TypeMappingConfig()) == []
+        def names(cfg):
+            return [r.name for r in collect_extension_requirements(sample_schema(), cfg)]
+
+        assert names(TypeMappingConfig(spatial_mode="postgis")) == ["postgis"]
+        assert names(TypeMappingConfig(ci_as_citext=True)) == ["citext"]
+        assert names(TypeMappingConfig()) == []
+
+    def test_report_lists_required_extensions(self):
+        # a _ci varchar column and a spatial column, postgis on
+        cfg = TypeMappingConfig(ci_as_citext=True, spatial_mode="postgis")
+        rep = build_plan_report(sample_schema(), SourceObjects(), cfg, map_mysql_type)
+        assert rep.required_extensions == ["citext", "postgis"]
 
     def test_citext_silences_collation_warning(self):
         assert collation_warnings(sample_schema(), TypeMappingConfig(ci_as_citext=True)) == []

@@ -218,12 +218,15 @@ class TestRound3PlanShapes:
         """Building the LSH bucket table / near-dup plan must not run a
         driver action (the old df.first() dimension probe was a blocking
         job scheduled before the main job)."""
+        from pyspark.sql import functions as F
+
         from pgferry_spark.operators import dedup, similarity
         from pgferry_spark.sources.parquet import read_parquet
 
         e = read_parquet(spark, SF + "/embeddings.parquet")
         j0 = jobs_in_group(None)
-        similarity.lsh_bucket_table(e, "embedding", "vec_id")
+        bucket = similarity.lsh_bucket_batch_lazy(8)
+        e.select("vec_id", bucket(F.col("embedding").cast("array<double>")))
         dedup.embedding_near_dup_pairs_lsh(e, "embedding", "vec_id")
         assert jobs_in_group(None) == j0
 
@@ -240,19 +243,28 @@ class TestRound3PlanShapes:
 
     def test_lazy_planes_match_driver_planes(self, spark):
         """Executor-side plane generation must be byte-identical to the
-        driver-side formulation: same buckets with and without dim."""
+        driver-side formulation: the lazy UDF's buckets equal the
+        expression fold's over the driver's planes."""
+        from pyspark.sql import functions as F
+
         from pgferry_spark.operators import similarity
         from pgferry_spark.sources.parquet import read_parquet
 
         e = read_parquet(spark, SF + "/embeddings.parquet")
+        bucket = similarity.lsh_bucket_batch_lazy(8)
         lazy = {
             (r["vec_id"], r["bucket"])
-            for r in similarity.lsh_bucket_table(e, "embedding", "vec_id").collect()
+            for r in e.select(
+                "vec_id",
+                bucket(F.col("embedding").cast("array<double>")).alias("bucket"),
+            ).collect()
         }
+        planes = similarity.random_hyperplanes(64, 8, 42)
         eager = {
             (r["vec_id"], r["bucket"])
-            for r in similarity.lsh_bucket_table(
-                e, "embedding", "vec_id", dim=64
+            for r in e.select(
+                "vec_id",
+                similarity.lsh_bucket(F.col("embedding"), planes).alias("bucket"),
             ).collect()
         }
         assert lazy == eager and len(lazy) > 0

@@ -1,20 +1,26 @@
 """No package def may be reachable only from ``tests/``.
 
-A name-reachability scan over the AST. The roots are every non-test
-caller: the driver contract (``__spark_entry__.py``), ``bench.py``,
-``tools/``, ``perfbench/`` and the package's own module-level code (the
-CLI's ``__main__`` guard, registries, constants). A package def is
-reached when its bare name occurs in a reached body, as a name, an
-attribute or an identifier-shaped string constant (so ``getattr`` names
-count); reached bodies add their names until nothing changes. Imports,
+A reachability scan over the AST. The roots are every non-test caller:
+the driver contract (``__spark_entry__.py``), ``bench.py``, ``tools/``,
+``perfbench/``, the package's own module-level code (the CLI's
+``__main__`` guard, constants), and every builder registered as an
+entry (a def decorated with ``entries.registry.register``). Reached
+bodies add what they reference until nothing changes. Imports,
 ``__all__`` lists and docstrings name a def without calling it, so they
 do not count.
 
+A reference is matched through its module, not by bare name: a plain
+name is the file's own def or what the file imported under that name,
+``mod.attr`` is ``attr`` of the module ``mod`` is bound to, and an
+import that re-exports a def reaches the def it re-exports. So a def
+is not kept alive by a same-named def in another module, nor by a
+string that happens to spell its name (entry names often equal operator
+names). Methods are matched by bare name: an attribute of an object, or
+an identifier-shaped string (a ``getattr`` or ``patch`` name), reaches
+every method so named once its class is reached.
+
 A def no root reaches fails the test, whether tests call it or nothing
-does, unless ``ALLOWED`` keeps it with a reason. The scan matches bare
-names, so it over-approximates: a test-only def that shares its name
-with a live one passes. What it flags is certain: no non-test code
-names the def at all.
+does, unless ``ALLOWED`` keeps it with a reason.
 """
 
 from __future__ import annotations
@@ -27,6 +33,7 @@ REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "pgferry_spark"
 ROOT_FILES = ["__spark_entry__.py", "bench.py"]
 ROOT_DIRS = ["tools", "perfbench"]
+REGISTER = ("entries/registry.py", "register")
 
 _IDENT = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
 
@@ -39,6 +46,9 @@ ALLOWED = {
         "MSSQL catalog introspection; needs a live server",
     "sources/jdbc.py::mysql_source":
         "MySQL source factory; needs a live server",
+    "sources/jdbc.py::read_table":
+        "partitioned JDBC read; only the Derby and live-server tests call"
+        " it, no SourceBackend wires it",
     # called by Spark's Python data source API, not by name
     "sources/sink.py::_PsqlCopyWriter":
         "Spark instantiates it through PsqlCopyDataSource.writer",
@@ -75,9 +85,97 @@ ALLOWED = {
 }
 
 
-def _names(node: ast.AST) -> set[str]:
-    """Names a subtree uses: loads, attributes and identifier-shaped
-    string constants, minus imports, ``__all__`` and docstrings."""
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+def _module_key(dotted: str) -> str | None:
+    """Package-relative file of a dotted ``pgferry_spark`` module."""
+    parts = dotted.split(".")
+    if parts[0] != "pgferry_spark":
+        return None
+    base = PACKAGE.joinpath(*parts[1:])
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path.relative_to(PACKAGE).as_posix()
+    return None
+
+
+def _dotted(key: str) -> str:
+    parts = key[: -len(".py")].split("/")
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(["pgferry_spark", *parts])
+
+
+class Scope:
+    """What the names of one file refer to: its own module-level defs
+    and its imports (anywhere in the file), as targets ``("mod", key)``
+    or ``("def", key, name)``."""
+
+    def __init__(self, tree: ast.Module, key: str | None):
+        self.key = key
+        self.defs = {
+            s.name for s in tree.body
+            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.ClassDef))
+        }
+        self.imports: dict[str, set[tuple]] = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    if a.asname:
+                        mod = _module_key(a.name)
+                        if mod:
+                            self._bind(a.asname, ("mod", mod))
+                    elif a.name.split(".")[0] == "pgferry_spark":
+                        self._bind("pgferry_spark", ("mod", "__init__.py"))
+            elif isinstance(n, ast.ImportFrom):
+                base = self._from_base(n)
+                if base is None:
+                    continue
+                for a in n.names:
+                    sub = _module_key(f"{base}.{a.name}")
+                    mod = _module_key(base)
+                    target = (
+                        ("mod", sub) if sub
+                        else ("def", mod, a.name) if mod else None
+                    )
+                    if target:
+                        self._bind(a.asname or a.name, target)
+
+    def _bind(self, alias: str, target: tuple) -> None:
+        self.imports.setdefault(alias, set()).add(target)
+
+    def _from_base(self, n: ast.ImportFrom) -> str | None:
+        if not n.level:
+            return n.module
+        if self.key is None:
+            return None
+        parts = _dotted(self.key).split(".")
+        if not self.key.endswith("__init__.py"):
+            parts.pop()
+        parts = parts[: len(parts) - (n.level - 1)]
+        return ".".join(parts + ([n.module] if n.module else []))
+
+    def resolve(self, node: ast.AST) -> set[tuple]:
+        if isinstance(node, ast.Name):
+            out = set(self.imports.get(node.id, ()))
+            if self.key and node.id in self.defs:
+                out.add(("def", self.key, node.id))
+            return out
+        if isinstance(node, ast.Attribute):
+            out = set()
+            for t in self.resolve(node.value):
+                if t[0] == "mod":
+                    sub = _module_key(f"{_dotted(t[1])}.{node.attr}")
+                    out.add(("mod", sub) if sub else ("def", t[1], node.attr))
+            return out
+        return set()
+
+
+def _skipped(node: ast.AST) -> set[int]:
+    """Imports, ``__all__`` and docstrings: they name without using."""
     skip: set[int] = set()
     for n in ast.walk(node):
         if isinstance(n, (ast.Import, ast.ImportFrom)):
@@ -95,54 +193,48 @@ def _names(node: ast.AST) -> set[str]:
             and isinstance(body[0].value.value, str)
         ):
             skip.add(id(body[0]))
-    out: set[str] = set()
+    return skip
+
+
+def _refs(node: ast.AST, scope: Scope) -> set[tuple]:
+    """What a subtree references: ``("def", key, name)`` for a resolved
+    module-level def, ``("attr", name)`` for an attribute of an object
+    or an identifier-shaped string (methods match these by bare name)."""
+    skip = _skipped(node)
+    out: set[tuple] = set()
     stack = [node]
     while stack:
         n = stack.pop()
         if id(n) in skip:
             continue
-        if isinstance(n, ast.Name):
-            out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
+        if isinstance(n, (ast.Name, ast.Attribute)):
+            targets = scope.resolve(n)
+            out |= {t for t in targets if t[0] == "def"}
+            if isinstance(n, ast.Attribute) and not targets:
+                out.add(("attr", n.attr))
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
             if _IDENT.fullmatch(n.value):
-                out.update(n.value.split("."))
+                out.update(("attr", p) for p in n.value.split("."))
         stack.extend(ast.iter_child_nodes(n))
     return out
 
 
-def _defs(tree: ast.Module, rel: str):
-    """``(key, name, node)`` per module-level def, class and method;
-    plus the module's top-level statements that are not defs."""
-    defs, top = [], []
-    for stmt in tree.body:
-        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            defs.append((f"{rel}::{stmt.name}", stmt.name, stmt))
-        elif isinstance(stmt, ast.ClassDef):
-            defs.append((f"{rel}::{stmt.name}", stmt.name, stmt))
-            for m in stmt.body:
-                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    defs.append(
-                        (f"{rel}::{stmt.name}.{m.name}", m.name, m)
-                    )
-        else:
-            top.append(stmt)
-    return defs, top
+def _registered(node: ast.AST, scope: Scope) -> bool:
+    return any(
+        isinstance(d, ast.Call)
+        and ("def", *REGISTER) in scope.resolve(d.func)
+        for d in getattr(node, "decorator_list", ())
+    )
 
 
-def _class_names(cls: ast.ClassDef) -> set[str]:
+def _class_refs(cls: ast.ClassDef, scope: Scope) -> set[tuple]:
     """What a class uses apart from its methods: bases, keywords,
     decorators and class-level statements."""
-    out: set[str] = set()
+    out: set[tuple] = set()
     for n in [*cls.bases, *cls.keywords, *cls.decorator_list, *cls.body]:
         if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            out |= _names(n)
+            out |= _refs(n, scope)
     return out
-
-
-def _parse(path: Path) -> ast.Module:
-    return ast.parse(path.read_text(), filename=str(path))
 
 
 def _owner(key: str) -> str | None:
@@ -155,28 +247,83 @@ def _allowed(key: str, allowed) -> bool:
     return key in allowed or key.split("::")[0] in allowed
 
 
-def _reach(defs, used: set[str], allowed) -> set[str]:
-    """Keys of the defs reached from ``used``; allowed defs count as
-    reached, and so does what they use."""
-    used = set(used)
-    live: set[str] = set()
-    grew = True
-    while grew:
-        grew = False
-        for key, name, names in defs:
-            if key in live:
+class Package:
+    """Every package def as ``key -> (refs of its body, is a root)``,
+    the package's module-level refs, and each module's re-exports."""
+
+    def __init__(self):
+        self.defs: dict[str, tuple[set[tuple], bool]] = {}
+        self.top: set[tuple] = set()
+        self.reexports: dict[tuple, set[tuple]] = {}
+        for path in sorted(PACKAGE.rglob("*.py")):
+            rel = path.relative_to(PACKAGE).as_posix()
+            tree = _parse(path)
+            scope = Scope(tree, rel)
+            for alias, targets in scope.imports.items():
+                if alias not in scope.defs:
+                    self.reexports[("def", rel, alias)] = {
+                        t for t in targets if t[0] == "def"
+                    }
+            for stmt in tree.body:
+                if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    self.defs[f"{rel}::{stmt.name}"] = (
+                        _refs(stmt, scope), _registered(stmt, scope)
+                    )
+                elif isinstance(stmt, ast.ClassDef):
+                    self.defs[f"{rel}::{stmt.name}"] = (
+                        _class_refs(stmt, scope), False
+                    )
+                    for m in stmt.body:
+                        if isinstance(m, (ast.FunctionDef,
+                                          ast.AsyncFunctionDef)):
+                            self.defs[f"{rel}::{stmt.name}.{m.name}"] = (
+                                _refs(m, scope), False
+                            )
+                else:
+                    self.top |= _refs(stmt, scope)
+
+    def canonical(self, refs: set[tuple]) -> set[tuple]:
+        """Follow re-exports to the module that defines each def."""
+        out, todo = set(), list(refs)
+        while todo:
+            r = todo.pop()
+            if r in out:
                 continue
-            owner = _owner(key)
-            hit = name in used or (
-                name.startswith("__") and name.endswith("__")
-            )
-            if _allowed(key, allowed) or (
-                hit and (owner is None or owner in live)
-            ):
-                live.add(key)
-                used |= names
-                grew = True
-    return live
+            out.add(r)
+            todo.extend(self.reexports.get(r, ()))
+        return out
+
+    def reach(self, used: set[tuple], allowed) -> set[str]:
+        """Keys of the defs reached from ``used``; roots and allowed
+        defs count as reached, and so does what they use."""
+        used = self.canonical(used | self.top)
+        live: set[str] = set()
+        grew = True
+        while grew:
+            grew = False
+            for key, (refs, root) in self.defs.items():
+                if key in live:
+                    continue
+                rel, qual = key.split("::")
+                owner = _owner(key)
+                if owner is None:
+                    hit = ("def", rel, qual) in used
+                else:
+                    name = qual.split(".")[1]
+                    hit = owner in live and (
+                        ("attr", name) in used
+                        or (name.startswith("__") and name.endswith("__"))
+                    )
+                if root or hit or _allowed(key, allowed):
+                    live.add(key)
+                    used |= self.canonical(refs)
+                    grew = True
+        return live
+
+
+def _file_refs(path: Path) -> set[tuple]:
+    tree = _parse(path)
+    return _refs(tree, Scope(tree, None))
 
 
 def scan(allowed=()) -> dict[str, str]:
@@ -184,34 +331,23 @@ def scan(allowed=()) -> dict[str, str]:
     ``path::Class.method``): ``"live"`` when a non-test root reaches
     it, ``"tests"`` when only tests do, else ``"dead"``. ``allowed``
     keys (or whole ``path`` modules) count as live."""
-    defs = []  # (key, name, names its body uses)
-    used: set[str] = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
-        rel = path.relative_to(PACKAGE).as_posix()
-        d, top = _defs(_parse(path), rel)
-        for key, name, node in d:
-            names = (
-                _class_names(node) if isinstance(node, ast.ClassDef)
-                else _names(node)
-            )
-            defs.append((key, name, names))
-        for stmt in top:
-            used |= _names(stmt)
+    pkg = Package()
     roots = [REPO / f for f in ROOT_FILES]
     for d in ROOT_DIRS:
         roots += sorted((REPO / d).rglob("*.py"))
+    used: set[tuple] = set()
     for path in roots:
-        used |= _names(_parse(path))
+        used |= _file_refs(path)
     tested = set(used)
     for path in sorted((REPO / "tests").rglob("*.py")):
         if path.name != Path(__file__).name:
-            tested |= _names(_parse(path))
+            tested |= _file_refs(path)
 
-    live = _reach(defs, used, allowed)
-    reached = _reach(defs, tested, allowed)
+    live = pkg.reach(used, allowed)
+    reached = pkg.reach(tested, allowed)
     return {
         key: "live" if key in live else "tests" if key in reached else "dead"
-        for key, _, _ in defs
+        for key in pkg.defs
     }
 
 

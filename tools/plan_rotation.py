@@ -9,7 +9,8 @@ ties broken by current position (stable). Usage:
 
     python tools/plan_rotation.py [window_size=50]
 
-Apply by reordering the dict in ``__spark_entry__.queries()`` and updating
+Apply by reordering the head-order list ``HEAD`` in
+``pgferry_spark/entries/__init__.py`` and updating
 ``tests/test_entry_ordering.py``'s constants.
 """
 
